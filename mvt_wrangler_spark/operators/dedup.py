@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -1015,12 +1016,18 @@ def pair_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                 if rv < ru:
                     ru, rv = rv, ru
                 parent[rv] = ru
-        comps: dict[int, list[int]] = {}
-        for node in parent:
-            comps.setdefault(_find(node), []).append(node)
-        rows = [(m, root, len(ms)) for root, ms in comps.items() for m in ms]
-        return pairs.sparkSession.createDataFrame(
-            rows or [], "member_id long, cluster_rep long, cluster_size long")
+        members = list(parent)
+        reps = np.array([_find(m) for m in members], dtype=np.int64)
+        _, inverse, counts = np.unique(reps, return_inverse=True,
+                                       return_counts=True)
+        # an Arrow-backed frame: the JVM decodes the batches itself, where a
+        # list of tuples becomes a Python RDD that a Python worker unpickles
+        # every time a downstream plan runs
+        return pairs.sparkSession.createDataFrame(pa.table({
+            "member_id": pa.array(members, pa.int64()),
+            "cluster_rep": pa.array(reps, pa.int64()),
+            "cluster_size": pa.array(counts[inverse], pa.int64()),
+        }))
 
     for _ in range(max_rounds):
         # no distinct between the stars: small-star re-orients and min-

@@ -11,21 +11,32 @@ Design (scale-first):
     dropped as a dup of A, and batch 3's C collides only with B's buckets,
     C still pairs with A — the same closure a one-shot global clustering
     would find (tested).
-  - Per batch: ONE numpy minhash pass over the batch, batch self-pairs via
-    minhash_lsh_candidates (hot-bucket star fallback included), corpus
-    pairs via an equi-join of batch buckets against the index reduced to
-    min(rep_id) per bucket — O(batch x bands) pairs, no O(bucket^2) blowup
-    no matter how hot a committed bucket is — then ONE pair_clusters
-    closure over both pair sets.
+  - Per batch, ONE Python pass: the batch is pinned together with its
+    minhash band buckets, so the edge build and both commits read the
+    pinned rows and the minhash UDF never runs twice.
+  - STAR edges from one shuffle: the batch's (bucket, id) rows are
+    unioned with the index's (bucket, rep_id) rows, a min over a
+    Window.partitionBy(bucket) finds each bucket's minimum, and every batch
+    member links to the minimum of each of its buckets. A bucket's batch
+    members and committed reps all join one star, so the components (and
+    their min-id keepers) are those of all-pairs bucket cliques plus a
+    corpus join — at most batch x bands edges however hot a bucket is,
+    with no bucket-size pass, no self-join and no hot-bucket fallback
+    (hence no `max_bucket`). A hot bucket's rows sit in the window's row
+    buffer, which spills to disk, so no per-bucket state has to fit in
+    memory. ONE pair_clusters closure over the star edges follows.
   - Keeper rule: cluster representative = min id. `id_col` must be
     monotone with ingest order (true of any ingest-assigned id), which
     makes min-id == first-seen and guarantees a cluster's rep is always a
     committed/kept doc.
+  - Row and kept counts ride the two pins as Observations: no count job.
+  - Both commits are one_file_per_bucket: a batch's commit is small, so the
+    range-sampling job would cost more than the write parallelism it buys.
   - Commits via SnapshotTable(append=True) with caller job_ids: replaying
     a committed batch is a no-op (committed-job-id ledger), and a crash
     between the docs and bands commits replays deterministically — the
-    batch's own rows are self-loops against the corpus, so survivors
-    recompute identically.
+    closure reads only the bands index, which the crash left unchanged, so
+    survivors recompute identically.
 
 Documented divergence from one-shot global dedup (inherent to ANY
 first-seen incremental system): a later row can BRIDGE two already-
@@ -41,14 +52,10 @@ lifts the same keep-first-drop-rest contract to an unbounded stream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.dedup import (
-    minhash_band_buckets,
-    minhash_lsh_candidates,
-    pair_clusters,
-)
+from ..operators.dedup import minhash_band_buckets, pair_clusters
 from ..sources.catalog import SnapshotTable
 
 
@@ -63,66 +70,59 @@ def incremental_neardup_ingest(
     num_hashes: int = 16,
     bands_n: int = 4,
     shingle: int = 5,
-    max_bucket: int = 1000,
 ) -> dict:
     """Ingest one batch; returns {"batch_rows", "kept", "dropped",
     "docs_snapshot", "bands_snapshot"}. See module docstring for semantics.
     `docs` should be keyed/bucketed on `id_col`; `bands` on "bucket"."""
-    # pin the batch: it feeds the band pass, the pair closure, and the two
-    # commits — a nondeterministic source (limit/sample) would otherwise
-    # drop one row set and commit another (same rationale as merge_keys)
-    batch = batch.localCheckpoint(eager=True)
-    batch_ids = batch.select(F.col(id_col).cast("long").alias("member_id"))
+    # pin the batch WITH its band buckets: it feeds the edge build and the
+    # keeper pin — a nondeterministic source (limit/sample) would otherwise
+    # drop one row set and commit another, and an unpinned bucket column
+    # would re-run the minhash UDF per consumer
+    doc_id = F.col(id_col).cast("long")
+    seen = Observation()
+    pinned = (batch.withColumn("__buckets", minhash_band_buckets(
+                  F.col(text_col), num_hashes, bands_n, shingle))
+              .observe(seen, F.count(F.lit(1)).alias("rows"))
+              .localCheckpoint(eager=True))
 
-    batch_buckets = batch.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.explode(
-            minhash_band_buckets(F.col(text_col), num_hashes, bands_n, shingle)
-        ).alias("bucket"),
-    )
+    # star edges: each bucket's minimum over batch members and committed
+    # reps (committed members of a bucket are already clustered under its
+    # rep), linked to every batch member of the bucket
+    members = pinned.select(F.explode("__buckets").alias("bucket"),
+                            doc_id.alias("id"), F.lit(True).alias("new"))
+    if bands.current_snapshot() is not None:
+        members = members.unionByName(bands.read_current(spark).select(
+            "bucket", F.col("rep_id").alias("id"), F.lit(False).alias("new")))
+    edges = (members
+             .withColumn("id_a", F.min("id").over(Window.partitionBy("bucket")))
+             .filter(F.col("new") & (F.col("id") != F.col("id_a")))
+             .select("id_a", F.col("id").alias("id_b")))
 
-    self_pairs = minhash_lsh_candidates(
-        batch, id_col=id_col, text_col=text_col, num_hashes=num_hashes,
-        bands=bands_n, shingle=shingle, max_bucket=max_bucket,
-    )
-    have_index = bands.current_snapshot() is not None
-    if have_index:
-        # one representative per committed bucket is enough for
-        # connectivity: every batch member of the bucket links to it, and
-        # committed members of the bucket are already mutually clustered
-        idx = (bands.read_current(spark)
-               .groupBy("bucket").agg(F.min("rep_id").alias("id_a")))
-        corpus_pairs = (batch_buckets.join(idx, "bucket")
-                        .filter(F.col("id_a") != F.col("id"))
-                        .select("id_a", F.col("id").alias("id_b"))
-                        .distinct())
-        all_pairs = self_pairs.unionByName(corpus_pairs)
-    else:
-        all_pairs = self_pairs
+    clusters = pair_clusters(edges)  # (member_id, cluster_rep, size)
+    # every batch row with its keeper, pinned once: both commits read it
+    kept = Observation()
+    ruled = (pinned
+             .join(clusters.select(F.col("member_id").alias("__member"),
+                                   F.col("cluster_rep").alias("__rep")),
+                   doc_id == F.col("__member"), "left")
+             .withColumn("__rep", F.coalesce("__rep", doc_id))
+             .drop("__member")
+             .observe(kept, F.count_if(doc_id == F.col("__rep")).alias("kept"))
+             .localCheckpoint(eager=True))
 
-    clusters = pair_clusters(all_pairs)  # (member_id, cluster_rep, size)
-    membership = (batch_ids.join(clusters, "member_id", "left")
-                  .select("member_id",
-                          F.coalesce("cluster_rep", F.col("member_id"))
-                          .alias("rep_id"))
-                  .localCheckpoint(eager=True))  # used by 3 jobs below
-    keep_ids = membership.filter(F.col("member_id") == F.col("rep_id"))
-
-    survivors = batch.join(
-        keep_ids.select(F.col("member_id").alias(id_col)), id_col, "left_semi")
-    docs_snap = docs.write_snapshot(survivors, job_id=job_id, append=True)
+    survivors = ruled.filter(doc_id == F.col("__rep")).drop("__buckets", "__rep")
+    docs_snap = docs.write_snapshot(survivors, job_id=job_id, append=True,
+                                    one_file_per_bucket=True)
 
     # EVERY batch row's buckets enter the index, keyed by its keeper —
     # dropped rows' buckets under the keeper's id preserve transitive
     # reachability for future batches (module docstring)
-    new_index = (batch_buckets
-                 .join(membership.withColumnRenamed("member_id", "id"), "id")
-                 .select("bucket", "rep_id").distinct())
+    new_index = ruled.select(F.explode("__buckets").alias("bucket"),
+                             F.col("__rep").alias("rep_id")).distinct()
     bands_snap = bands.write_snapshot(new_index, job_id=f"{job_id}-bands",
-                                      append=True)
+                                      append=True, one_file_per_bucket=True)
 
-    n_batch = batch.count()
-    n_kept = keep_ids.count()
+    n_batch, n_kept = seen.get["rows"], kept.get["kept"]
     return {
         "batch_rows": n_batch,
         "kept": n_kept,

@@ -20,10 +20,21 @@ Layout:
 
 Scale notes (the round-1 write path recomputed the upstream plan once per
 bucket — n_buckets full scans of a 100 TB input):
-  - The data lands in ONE Spark job: repartitionByRange over
-    (__bucket, sort_col) + partitionBy(__bucket). One input scan, and within
-    every bucket the part files are range-disjoint and internally sorted, so
-    bucket order == file order == row order (ordered-archive, S5/W1).
+  - The data lands in ONE Spark write with partitionBy(__bucket): one input
+    scan.
+  - By default a commit stages through repartitionByRange over
+    (__bucket, sort_col) into max(defaultParallelism, n_buckets) tasks: one
+    sampling job, then within every bucket the part files are range-disjoint
+    and internally sorted, so bucket order == file order == row order
+    (ordered-archive, S5/W1).
+  - `one_file_per_bucket=True` (compaction, and the incremental ingest's
+    small per-batch commits) stages through repartition(n_buckets,
+    __bucket) instead: no sampling job and one sorted file per bucket, but
+    at most n_buckets write tasks. Bucket ids are hash-partitioned, so ids
+    collide: 4 buckets land in 2 tasks, 8 in 5, 16 in 10. Callers choose it
+    only where the fixed sampling job costs more than the parallelism.
+  - Every snapshot manifest carries the committed job-id ledger, so a
+    replay check opens the CURRENT manifest only, at any table age.
   - Row counts come from parquet FOOTER metadata (pyarrow), not a re-scan.
   - Bucketing is RANGE by default when `key_max` is known (high key bits),
     so concatenated buckets are globally ordered by the cluster key;
@@ -118,9 +129,18 @@ class SnapshotTable:
             b = F.pmod(key, F.lit(self.n_buckets)).cast("int")  # hash-style
         return df.withColumn("__bucket", b)
 
-    def _committed_job_ids(self) -> set[str]:
-        """Job ids with a committed snapshot manifest — the durable replay
-        ledger (snapshot manifests are immutable and survive compaction)."""
+    def _committed_job_ids(self, snap: dict | None = None) -> set[str]:
+        """Job ids committed up to `snap` (default: the current snapshot) —
+        the durable replay ledger. Every manifest carries its predecessor's
+        ledger plus its own job id (append, replace, merge and compact
+        commits alike), so the lookup opens one manifest however old the
+        table is. Manifests written before the ledger existed fall back to
+        scanning every snapshot manifest."""
+        snap = self.current_snapshot() if snap is None else snap
+        if snap is None:
+            return set()
+        if "job_ids" in snap:
+            return set(snap["job_ids"])
         out = set()
         for fn in os.listdir(f"{self.root}/manifests"):
             if fn.startswith("snapshot-") and fn.endswith(".json"):
@@ -136,12 +156,15 @@ class SnapshotTable:
 
     # -- write path ------------------------------------------------------------
     def write_snapshot(self, df: DataFrame, job_id: str, sort_col: str | None = None,
-                       progress=None, append: bool = False) -> dict:
+                       progress=None, append: bool = False,
+                       one_file_per_bucket: bool = False) -> dict:
         """Stage all buckets in ONE Spark write, finalize per-bucket markers,
         then commit atomically. Returns the committed snapshot manifest.
 
         append=True commits the new buckets ON TOP of the current snapshot's
         (incremental ingest — streaming micro-batches); default replaces.
+        one_file_per_bucket=True skips the range-sampling job and writes one
+        file per bucket from at most n_buckets tasks (module Scale notes).
         """
         os.makedirs(f"{self.root}/manifests/job-{job_id}", exist_ok=True)
         sort_col = sort_col or self.bucket_col
@@ -153,7 +176,7 @@ class SnapshotTable:
             # COMMITTED JOB ID, not by path — compaction rewrites a batch's
             # paths out of the current snapshot, and a path-based check would
             # then re-append the batch's rows as duplicates on replay.
-            if cur is not None and job_id in self._committed_job_ids():
+            if cur is not None and job_id in self._committed_job_ids(cur):
                 return cur
 
         missing = [b for b in range(self.n_buckets)
@@ -169,16 +192,8 @@ class SnapshotTable:
             missing = list(range(self.n_buckets))
         if missing:
             if not os.path.exists(f"{data_dir}/_SUCCESS"):
-                n_out = max(df.sparkSession.sparkContext.defaultParallelism,
-                            self.n_buckets)
-                (
-                    self._bucketed(df)
-                    .repartitionByRange(n_out, "__bucket", sort_col)
-                    .sortWithinPartitions("__bucket", sort_col)
-                    .write.partitionBy("__bucket")
-                    .mode("overwrite")
-                    .parquet(data_dir)
-                )
+                self._stage(self._bucketed(df), data_dir, sort_col,
+                            one_file_per_bucket)
             for b in missing:
                 m = self._finalize_bucket(job_id, b)
                 if progress:
@@ -189,6 +204,22 @@ class SnapshotTable:
             with open(self._marker(job_id, b)) as f:
                 manifests.append(json.load(f))
         return self._commit(job_id, manifests, append=append)
+
+    def _stage(self, df: DataFrame, data_dir: str, sort_col: str,
+               one_file_per_bucket: bool) -> None:
+        """Write `df` (already __bucket-tagged) to data_dir/__bucket=<b>/ in
+        ONE Spark write, every file sorted by (__bucket, sort_col): range-
+        sampled by default, or hash-partitioned by bucket id (no sampling
+        job, one file per bucket, at most n_buckets tasks) when
+        `one_file_per_bucket` (module Scale notes)."""
+        if one_file_per_bucket:
+            staged = df.repartition(self.n_buckets, "__bucket")
+        else:
+            n_out = max(df.sparkSession.sparkContext.defaultParallelism,
+                        self.n_buckets)
+            staged = df.repartitionByRange(n_out, "__bucket", sort_col)
+        (staged.sortWithinPartitions("__bucket", sort_col)
+         .write.partitionBy("__bucket").mode("overwrite").parquet(data_dir))
 
     def _finalize_bucket(self, job_id: str, b: int) -> dict:
         """Derive the per-partition checkpoint from committed files: parquet
@@ -216,14 +247,14 @@ class SnapshotTable:
 
     def _commit(self, job_id: str, manifests: list[dict], append: bool = False) -> dict:
         buckets = list(manifests)
-        if append:
-            prev = self.current_snapshot()
-            if prev is not None:
-                buckets = prev["buckets"] + buckets
+        prev = self.current_snapshot()
+        if append and prev is not None:
+            buckets = prev["buckets"] + buckets
         n = self.current_snapshot_id() + 1
         snap = {
             "snapshot": n,
             "job_id": job_id,
+            "job_ids": sorted(self._committed_job_ids(prev) | {job_id}),
             "append": append,
             "buckets": buckets,
             "total_rows": sum(m["rows"] for m in buckets),
@@ -355,21 +386,10 @@ class SnapshotTable:
         buckets), finalize markers for those buckets, and commit a snapshot
         that keeps every UNAFFECTED bucket entry from the current snapshot.
         The shared machinery under merge_keys and compact."""
-        spark = df.sparkSession
         data_dir = self._job_data_dir(job_id)
         os.makedirs(f"{self.root}/manifests/job-{job_id}", exist_ok=True)
         if not os.path.exists(f"{data_dir}/_SUCCESS"):
-            if one_file_per_bucket:
-                # hash-partition by bucket id: every bucket collapses into
-                # exactly one task => one sorted file
-                staged = (df.repartition(self.n_buckets, "__bucket")
-                          .sortWithinPartitions("__bucket", sort_col))
-            else:
-                n_out = max(spark.sparkContext.defaultParallelism, self.n_buckets)
-                staged = (df.repartitionByRange(n_out, "__bucket", sort_col)
-                          .sortWithinPartitions("__bucket", sort_col))
-            (staged.write.partitionBy("__bucket")
-             .mode("overwrite").parquet(data_dir))
+            self._stage(df, data_dir, sort_col, one_file_per_bucket)
         new_entries = {b: self._finalize_bucket(job_id, b) for b in affected}
         cur = self.current_snapshot()
         kept = [m for m in (cur or {}).get("buckets", [])
@@ -390,7 +410,7 @@ class SnapshotTable:
         cur = self.current_snapshot()
         if cur is None:
             return self.write_snapshot(df, job_id, sort_col=sort_col)
-        if job_id in self._committed_job_ids():
+        if job_id in self._committed_job_ids(cur):
             return cur  # replayed merge: already committed
         spark = df.sparkSession
         sort_col = sort_col or self.bucket_col
@@ -448,7 +468,7 @@ class SnapshotTable:
         cur = self.current_snapshot()
         if cur is None:
             raise FileNotFoundError(f"no committed snapshot at {self.root}")
-        if job_id in self._committed_job_ids():
+        if job_id in self._committed_job_ids(cur):
             return cur  # replayed compaction
         files_per_bucket: dict[int, int] = {}
         for m in cur["buckets"]:
@@ -476,7 +496,7 @@ class SnapshotTable:
         """
         snap = self.current_snapshot()
         live = {os.path.dirname(m["path"]) for m in (snap or {}).get("buckets", [])}
-        committed_jobs = self._committed_job_ids()
+        committed_jobs = self._committed_job_ids(snap)
         removed = []
         for d in sorted(os.listdir(f"{self.root}/data")):
             full = f"{self.root}/data/{d}"

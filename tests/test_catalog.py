@@ -6,6 +6,7 @@ concatenated buckets), append snapshots (streaming ingest), vacuum.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -442,5 +443,79 @@ def test_read_diff_keys_across_merge_boundary(spark):
         assert got == {1000, 1004, 1008}
         # from_id=0 is the whole current table
         assert t.read_diff_keys(spark, 0, ["id"]).count() == 203
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.spark
+def test_replay_ledger_reads_current_manifest_only(spark, table, monkeypatch):
+    """Every manifest carries the committed job-id ledger: after 8 appends
+    a replayed batch is a no-op, the lookup opens ONE snapshot manifest,
+    and a compaction commit keeps the ledger. Manifests written before the
+    ledger existed (no `job_ids` key) still make a replay a no-op, and the
+    next commit carries every earlier job id forward."""
+    import builtins
+
+    from mvt_wrangler_spark.sources import catalog
+
+    def batch(i):
+        return spark.range(i * 50, (i + 1) * 50).select(
+            F.col("id"), (F.col("id") * 37 % 997).alias("tile_id"))
+
+    for i in range(8):
+        table.write_snapshot(batch(i), job_id=f"a{i}", append=True)
+    head = table.current_snapshot()
+    assert head["job_ids"] == sorted(f"a{i}" for i in range(8))
+
+    opened = []
+
+    def counting_open(path, *a, **kw):
+        if os.path.basename(str(path)).startswith("snapshot-"):
+            opened.append(path)
+        return builtins.open(path, *a, **kw)
+
+    monkeypatch.setattr(catalog, "open", counting_open, raising=False)
+    assert "a3" in table._committed_job_ids()
+    assert len(opened) == 1
+    monkeypatch.undo()
+
+    assert table.write_snapshot(batch(3), job_id="a3", append=True) == head
+    assert table.read_current(spark).count() == 400
+
+    table.compact(spark, job_id="c1")
+    assert table.write_snapshot(batch(3), job_id="a3", append=True)["job_id"] == "c1"
+    assert table.read_current(spark).count() == 400
+
+    mdir = f"{table.root}/manifests"
+    for fn in os.listdir(mdir):
+        if fn.startswith("snapshot-"):
+            with open(f"{mdir}/{fn}") as f:
+                snap = json.load(f)
+            del snap["job_ids"]
+            with open(f"{mdir}/{fn}", "w") as f:
+                json.dump(snap, f)
+    pre_ledger = table.current_snapshot()
+    assert table.write_snapshot(batch(3), job_id="a3", append=True) == pre_ledger
+    head = table.write_snapshot(batch(8), job_id="a8", append=True)
+    assert head["job_ids"] == sorted([*(f"a{i}" for i in range(9)), "c1"])
+    assert table.read_current(spark).count() == 450
+
+
+def test_one_file_per_bucket_is_opt_in(spark):
+    """A default commit, hash-bucketed or not, keeps its range-sampled write
+    over max(defaultParallelism, n_buckets) tasks; only an explicit
+    one_file_per_bucket commit collapses each bucket to one file."""
+    root = f"{ROOT}-opt-in"
+    shutil.rmtree(root, ignore_errors=True)
+    t = SnapshotTable(root, n_buckets=2, bucket_col="tile_id")
+    parallelism = spark.sparkContext.defaultParallelism
+    assert parallelism > t.n_buckets
+    try:
+        snap = t.write_snapshot(_df(spark), job_id="ranged", append=True)
+        assert sum(len(m["files"]) for m in snap["buckets"]) >= parallelism
+        snap = t.write_snapshot(_df(spark), job_id="hashed", append=True,
+                                one_file_per_bucket=True)
+        assert [len(m["files"]) for m in snap["buckets"][2:]] == [1, 1]
+        assert t.read_current(spark).count() == 10000
     finally:
         shutil.rmtree(root, ignore_errors=True)

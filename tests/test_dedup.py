@@ -404,7 +404,8 @@ def test_pair_clusters_empty_and_oracle(spark):
 
     empty = spark.createDataFrame([], "id_a long, id_b long")
     out = D.pair_clusters(empty)
-    assert out.columns == ["member_id", "cluster_rep", "cluster_size"]
+    assert out.dtypes == [("member_id", "bigint"), ("cluster_rep", "bigint"),
+                          ("cluster_size", "bigint")]
     assert out.count() == 0
 
     rng = np.random.default_rng(11)
