@@ -11,4 +11,10 @@ plus vectorized Arrow/pandas UDFs (no per-row Python).
 See SURVEY.md for the full reference->Spark operator mapping.
 """
 
+from . import _zipimport
+
 __version__ = "0.1.0"
+
+# Python workers import the package when they unpickle a library UDF, so this
+# also runs in every worker that executes engine code (see _zipimport).
+_zipimport.install()

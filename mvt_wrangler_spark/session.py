@@ -21,15 +21,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with AQE + Arrow enabled.
 
-    Defaults are chosen for the sandbox (local[N]) but the same configs are
-    what we would ship to a 1000-executor cluster: AQE coalescing/skew-join
-    on, Arrow for pandas UDF transport, sane shuffle partitioning.
+    Without `master`/`shuffle_partitions` the session is `local[N]` with N
+    shuffle partitions, N = $SPARK_GRAFT_CPUS or the cores this process may
+    run on. The other configs are what we would ship to a 1000-executor
+    cluster: AQE coalescing/skew-join on, Arrow for pandas UDF transport.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(cores)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = cpus if cpus.isdigit() else "32"
-        shuffle_partitions = max(int(n) * 2, 8)
+        shuffle_partitions = int(cpus) if cpus.isdigit() else cores
 
     b = (
         SparkSession.builder.master(master)

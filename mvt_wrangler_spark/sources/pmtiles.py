@@ -173,7 +173,7 @@ class Header:
                       flags[4], flags[5], *i4, cz, *c2)
 
 
-DEFAULT_LEAF_SIZE = int(os.environ.get("SPARK_GRAFT_PMTILES_LEAF_SIZE", "16384"))
+DEFAULT_LEAF_SIZE = 16384
 
 
 def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
@@ -212,75 +212,80 @@ def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
     peak_buffered = 0
     leaf_mode = False
     last_id = -1
-    with open(tmp_data, "wb") as data_f, open(tmp_leaf, "wb") as leaf_f:
+    try:
+        with open(tmp_data, "wb") as data_f, open(tmp_leaf, "wb") as leaf_f:
 
-        def flush_leaf() -> None:
-            nonlocal leaf_len
-            comp = gzip.compress(encode_directory(entries), 6, mtime=0)
-            root_entries.append((entries[0][0], leaf_len, len(comp), 0))
-            leaf_f.write(comp)
-            leaf_len += len(comp)
-            entries.clear()
+            def flush_leaf() -> None:
+                nonlocal leaf_len
+                comp = gzip.compress(encode_directory(entries), 6, mtime=0)
+                root_entries.append((entries[0][0], leaf_len, len(comp), 0))
+                leaf_f.write(comp)
+                leaf_len += len(comp)
+                entries.clear()
 
-        for row in sorted_df.toLocalIterator():
-            tid = row.tile_id
-            assert tid > last_id, "tile ids must be strictly ascending/unique"
-            last_id = tid
-            blob = bytes(row.data)
-            digest = hashlib.sha1(blob).digest()
-            n_addressed += 1
-            zmin, zmax = min(zmin, row.z), max(zmax, row.z)
-            if entries and digest in blob_offsets \
-                    and blob_offsets[digest][0] == entries[-1][1] \
-                    and entries[-1][0] + entries[-1][3] == tid:
-                # identical blob contiguous in id space: extend the run
-                tid0, off, ln, rl = entries[-1]
-                entries[-1] = (tid0, off, ln, rl + 1)
-                continue
-            if digest in blob_offsets:
-                off, ln = blob_offsets[digest]  # deduplicated content
-            else:
-                off, ln = data_len, len(blob)
-                data_f.write(blob)
-                data_len += ln
-                n_contents += 1
-                if len(blob_offsets) < max_dedup_blobs:
-                    blob_offsets[digest] = (off, ln)
-            entries.append((tid, off, ln, 1))
-            n_entries += 1
-            peak_buffered = max(peak_buffered, len(entries))
-            if not leaf_mode and len(entries) > leaf_size:
-                leaf_mode = True
-            if leaf_mode and len(entries) >= leaf_size:
+            for row in sorted_df.toLocalIterator():
+                tid = row.tile_id
+                if tid <= last_id:
+                    raise ValueError(f"tile ids must be strictly ascending/unique: "
+                                     f"{tid} after {last_id}")
+                last_id = tid
+                blob = bytes(row.data)
+                digest = hashlib.sha1(blob).digest()
+                n_addressed += 1
+                zmin, zmax = min(zmin, row.z), max(zmax, row.z)
+                if entries and digest in blob_offsets \
+                        and blob_offsets[digest][0] == entries[-1][1] \
+                        and entries[-1][0] + entries[-1][3] == tid:
+                    # identical blob contiguous in id space: extend the run
+                    tid0, off, ln, rl = entries[-1]
+                    entries[-1] = (tid0, off, ln, rl + 1)
+                    continue
+                if digest in blob_offsets:
+                    off, ln = blob_offsets[digest]  # deduplicated content
+                else:
+                    off, ln = data_len, len(blob)
+                    data_f.write(blob)
+                    data_len += ln
+                    n_contents += 1
+                    if len(blob_offsets) < max_dedup_blobs:
+                        blob_offsets[digest] = (off, ln)
+                entries.append((tid, off, ln, 1))
+                n_entries += 1
+                peak_buffered = max(peak_buffered, len(entries))
+                if not leaf_mode and len(entries) > leaf_size:
+                    leaf_mode = True
+                if leaf_mode and len(entries) >= leaf_size:
+                    flush_leaf()
+
+            if leaf_mode and entries:
                 flush_leaf()
+        root_dir = root_entries if leaf_mode else entries
 
-        if leaf_mode and entries:
-            flush_leaf()
-    root_dir = root_entries if leaf_mode else entries
-
-    root = gzip.compress(encode_directory(root_dir), 6, mtime=0)
-    meta = gzip.compress(json.dumps(metadata or {}, separators=(",", ":")).encode(),
-                         6, mtime=0)
-    leaf_offset = HEADER_LEN + len(root) + len(meta)
-    hdr = Header(
-        root_offset=HEADER_LEN, root_len=len(root),
-        meta_offset=HEADER_LEN + len(root), meta_len=len(meta),
-        leaf_offset=leaf_offset, leaf_len=leaf_len,
-        data_offset=leaf_offset + leaf_len, data_len=data_len,
-        addressed_tiles=n_addressed, tile_entries=n_entries,
-        tile_contents=n_contents, clustered=True,
-        tile_compression=tile_compression,
-        min_zoom=zmin if n_entries else 0, max_zoom=zmax if n_entries else 0,
-    )
-    with open(path, "wb") as f:
-        f.write(hdr.pack())
-        f.write(root)
-        f.write(meta)
-        for tmp in (tmp_leaf, tmp_data):
-            with open(tmp, "rb") as src:
-                shutil.copyfileobj(src, f, length=1 << 22)  # 4 MiB chunks
-    os.remove(tmp_data)
-    os.remove(tmp_leaf)
+        root = gzip.compress(encode_directory(root_dir), 6, mtime=0)
+        meta = gzip.compress(json.dumps(metadata or {}, separators=(",", ":")).encode(),
+                             6, mtime=0)
+        leaf_offset = HEADER_LEN + len(root) + len(meta)
+        hdr = Header(
+            root_offset=HEADER_LEN, root_len=len(root),
+            meta_offset=HEADER_LEN + len(root), meta_len=len(meta),
+            leaf_offset=leaf_offset, leaf_len=leaf_len,
+            data_offset=leaf_offset + leaf_len, data_len=data_len,
+            addressed_tiles=n_addressed, tile_entries=n_entries,
+            tile_contents=n_contents, clustered=True,
+            tile_compression=tile_compression,
+            min_zoom=zmin if n_entries else 0, max_zoom=zmax if n_entries else 0,
+        )
+        with open(path, "wb") as f:
+            f.write(hdr.pack())
+            f.write(root)
+            f.write(meta)
+            for tmp in (tmp_leaf, tmp_data):
+                with open(tmp, "rb") as src:
+                    shutil.copyfileobj(src, f, length=1 << 22)  # 4 MiB chunks
+    finally:  # a failed write (unsorted ids, a Spark job error) leaves no temp file
+        for tmp in (tmp_data, tmp_leaf):
+            if os.path.exists(tmp):
+                os.remove(tmp)
     return {"tiles": n_addressed, "entries": n_entries,
             "unique_blobs": n_contents, "leaves": len(root_entries),
             "peak_buffered_entries": peak_buffered,

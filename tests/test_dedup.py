@@ -426,6 +426,40 @@ def test_pair_clusters_empty_and_oracle(spark):
 
 
 @pytest.mark.spark
+def test_pair_clusters_union_find_matches_star_loop(spark):
+    """Property: on random graphs built from paths, stars and loose edges,
+    with duplicate (reversed) rows and self-loops, the driver union-find
+    path and the distributed star loop return identical rows."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    ids = st.integers(0, 60)
+    path = st.lists(ids, min_size=2, max_size=12).map(lambda ns: list(zip(ns, ns[1:])))
+    star = st.tuples(ids, st.lists(ids, min_size=1, max_size=8)).map(
+        lambda hub_leaves: [(hub_leaves[0], n) for n in hub_leaves[1]])
+    loose = st.lists(st.tuples(ids, ids), max_size=10)
+
+    @st.composite
+    def graphs(draw):
+        parts = draw(st.lists(st.one_of(path, star, loose), min_size=1, max_size=4))
+        edges = [e for part in parts for e in part]
+        dups = draw(st.lists(st.sampled_from(edges), max_size=5)) if edges else []
+        loops = [(n, n) for n in draw(st.lists(ids, max_size=3))]
+        return edges + [(b, a) for a, b in dups] + loops
+
+    @settings(max_examples=8, deadline=None, database=None)
+    @given(graphs())
+    def check(edges):
+        df = spark.createDataFrame(edges, "id_a long, id_b long")
+        union_find = sorted(tuple(r) for r in D.pair_clusters(df).collect())
+        star_loop = sorted(tuple(r) for r in
+                           D.pair_clusters(df, driver_threshold=0).collect())
+        assert union_find == star_loop
+
+    check()
+
+
+@pytest.mark.spark
 def test_pair_clusters_with_corpus_singletons(spark):
     """Unpaired corpus rows come back as size-1 clusters (their own rep);
     keeping `member_id == cluster_rep` yields exactly uniques + one keeper

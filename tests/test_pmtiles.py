@@ -210,3 +210,14 @@ def test_pmtiles_mixed_root(spark, tmp_path):
     got = {r["tile_id"]: bytes(r["data"])
            for r in P.read_pmtiles(spark, path).collect()}
     assert got == blobs
+
+
+@pytest.mark.spark
+def test_pmtiles_failed_write_leaves_no_temp_files(spark, tmp_path):
+    """Duplicate tile ids fail the write, and neither temp file survives."""
+    rows = [(5, i, 0, 1000 + min(i, 2), bytearray(b"t%d" % i)) for i in range(4)]
+    tiles = spark.createDataFrame(rows, "z int, x bigint, y bigint, tile_id bigint, data binary")
+    path = str(tmp_path / "dup.pmtiles")
+    with pytest.raises(ValueError, match="ascending/unique"):
+        P.write_pmtiles(tiles, path)
+    assert list(tmp_path.iterdir()) == []
