@@ -320,11 +320,8 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "filter_mask", FL.filter_mask_native(program, F.col("lon"), F.col("lat")))
     surv = FL.apply_feature_filter(masked, program)
     surv = tiling.assign_tiles(surv, z=Z, with_local=False)
-    # agg-based dedup: downstream needs only the keeper id per (tile, phash),
-    # so shuffle 4 key columns + min(id) instead of full rows through a
-    # window (min id == the row_number()=1 keeper; identical result set)
-    agg = D.phash_dedup_agg(surv, keys=("z", "x", "y", "phash"), order_col="id")
-    return agg.select(F.col("keeper_id").alias("id"), "x", "y", "phash")
+    return D.phash_dedup(surv, keys=("z", "x", "y", "phash"), order_col="id").select(
+        "id", "x", "y", "phash")
 
 
 def q_tag_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -609,12 +606,11 @@ def q_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full S2 (level 12) + H3-style (res 7) cell ids from unit-sphere xyz
     via the FUSED vectorized-numpy pandas UDF (one Arrow pass emits both
     cells) — with a BIT-EXACT DuckDB twin (the from-xyz encoders are
-    trig-free: divide/sqrt/int ops only, all IEEE-exact). The native
-    codegen column twins remain pytest-covered (bit-equal on sampled
-    points) but lost the bench head-to-head: the unrolled Hilbert chain
-    exceeds JIT method limits and drops to interpreted eval (round-4
-    honest-timing finding), while the numpy kernel walks the curve through
-    a chunked 4096-entry lookup table (6 gathers for 30 levels)."""
+    trig-free: divide/sqrt/int ops only, all IEEE-exact). The UDF beats a
+    pure-Catalyst chain of the same math: the chain's unrolled Hilbert walk
+    exceeds HotSpot's method-size limits and drops to interpreted eval,
+    while the numpy kernel walks the curve through a chunked 4096-entry
+    lookup table (6 gathers for 30 levels)."""
     from pyspark.sql import functions as F
 
     from mvt_wrangler_spark.functions import cells as C

@@ -63,7 +63,6 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import functions as F  # noqa: F401
 
-    from .functions.metrics import observed
     from .plans.pipeline import run_pipeline
     from .session import get_spark
     from .sources.catalog import SnapshotTable

@@ -136,8 +136,8 @@ def s2_cell_from_xyz_np(x: np.ndarray, y: np.ndarray, z: np.ndarray,
                         level: int = 12) -> np.ndarray:
     """S2 cell id (int64) from unit-sphere xyz arrays — the trig-free core
     shared by s2_cell_id and the fused cell encoders. All float ops are
-    IEEE-exact (divide/sqrt/floor), so ids are bit-identical to the native
-    column path (with_s2_cell_from_xyz) and the DuckDB twin (s2_cell_sql).
+    IEEE-exact (divide/sqrt/floor), so ids are bit-identical to the DuckDB
+    twin (s2_cell_sql).
 
     Integer work stays in int64 (numpy's uint64 path mixes to float64 and
     loses SIMD — 4-30x slower, measured round 2); only the final face<<61
@@ -220,16 +220,6 @@ def s2_parent_sql(cell: str, level: int) -> str:
     return f"(({cell} & {-lsb}) | {lsb})"
 
 
-def s2_cell_column(lat: Column, lng: Column, level: int = 12) -> Column:
-    @pandas_udf("long")
-    def _enc(la, ln):
-        import pandas as pd
-
-        return pd.Series(s2_cell_id(la.to_numpy(np.float64), ln.to_numpy(np.float64), level))
-
-    return _enc(lat, lng)
-
-
 # ---------------------------------------------------------------------------
 # H3-style aperture-7 hex index on icosahedron gnomonic faces
 # ---------------------------------------------------------------------------
@@ -277,8 +267,8 @@ H3_MAX_RES = 13  # 5b face + 4b res + 2x20b axial fits int64 through res 13
 
 def _h3_rot_consts(res: int) -> tuple[float, float, float]:
     """(cos, sin, scale) of the res rotation — computed ONCE in Python so the
-    numpy kernel, the native column path, and the SQL oracle embed the exact
-    same double literals (no per-engine trig at runtime)."""
+    numpy kernel and the SQL oracle embed the exact same double literals
+    (no per-engine trig at runtime)."""
     import math
 
     theta = res * float(_ROT7)
@@ -289,7 +279,7 @@ def h3_cell_from_xyz_np(x: np.ndarray, y: np.ndarray, z: np.ndarray,
                         res: int = 7) -> np.ndarray:
     """H3-style cell id (int64) from unit-sphere xyz arrays — the trig-free
     core shared by h3_cell and the fused cell encoders; bit-identical to
-    with_h3_cell_from_xyz and the DuckDB twin (h3_cell_sql).
+    the DuckDB twin (h3_cell_sql).
 
     id layout: [sign 0][face:5][res:4][q+2^19:20][r+2^19:20] (54 bits used).
     """
@@ -303,7 +293,7 @@ def h3_cell_from_xyz_np(x: np.ndarray, y: np.ndarray, z: np.ndarray,
     px = np.einsum("ij,ij->i", Q - c, _H3_E1[face])
     py = np.einsum("ij,ij->i", Q - c, _H3_E2[face])
     # rotate + scale for the target resolution (shared consts: bit-identical
-    # to the native column path and the SQL oracle)
+    # to the SQL oracle)
     ca, sa, scale = _h3_rot_consts(res)
     rx = (px * ca - py * sa) * scale
     ry = (px * sa + py * ca) * scale
@@ -342,9 +332,9 @@ def h3_unpack(cell) -> tuple[int, int, int, int]:
 def _cube_round(qf: np.ndarray, rf: np.ndarray):
     """Nearest hex center in axial coords (standard cube rounding).
 
-    Ties round HALF-UP via floor(x + 0.5) — the same tie-break as the native
-    column path and the SQL oracle (np.round is half-to-EVEN, which would
-    diverge from Spark's F.floor(x+0.5) on exact .5 fractional coords).
+    Ties round HALF-UP via floor(x + 0.5) — the same tie-break as the SQL
+    oracle (np.round is half-to-EVEN, which would diverge from DuckDB's
+    floor(x + 0.5) on exact .5 fractional coords).
     """
     sf = -qf - rf
     q = np.floor(qf + 0.5)
@@ -358,24 +348,13 @@ def _cube_round(qf: np.ndarray, rf: np.ndarray):
     return q.astype(np.int64), r.astype(np.int64)
 
 
-def h3_cell_column(lat: Column, lng: Column, res: int = 7) -> Column:
-    @pandas_udf("long")
-    def _enc(la, ln):
-        import pandas as pd
-
-        return pd.Series(h3_cell(la.to_numpy(np.float64), ln.to_numpy(np.float64), res))
-
-    return _enc(lat, lng)
-
-
 # ---------------------------------------------------------------------------
-# Fused S2+H3 encoders: ONE pandas UDF emitting both cells. Separate
-# s2_cell_column + h3_cell_column calls each pay their own Arrow round trip
-# (2x 16B lat/lng in + 8B out per row) AND each derive the lon/lat ->
-# unit-xyz projection independently (the radians/cos/sin pass). Fusing
-# halves the Arrow traffic (16B in + 16B out vs 48B total) and shares one
-# projection — this was the measured #1 line item of the 120M flagship
-# (round-4 noop-protocol timings).
+# Fused S2+H3 encoders: ONE pandas UDF emitting both cells. One UDF per
+# cell would pay its own Arrow round trip (2x 16B lat/lng in + 8B out per
+# row) AND derive the lon/lat -> unit-xyz projection again (the
+# radians/cos/sin pass). Fusing halves the Arrow traffic (16B in + 16B out
+# vs 48B total) and shares one projection. A pure-Catalyst chain of the same
+# math exceeds HotSpot's method-size limits and runs interpreted.
 # ---------------------------------------------------------------------------
 
 def cells_column(lat: Column, lng: Column, level: int = 12,
@@ -398,7 +377,7 @@ def cells_from_xyz_column(x: Column, y: Column, z: Column, level: int = 12,
                           res: int = 7) -> Column:
     """struct<s2_cell: long, h3_cell: long> from unit-xyz in one Arrow pass.
     Trig-free (divide/sqrt/floor/int ops — IEEE-exact), so ids are
-    bit-identical to the native column chains AND the DuckDB SQL twins."""
+    bit-identical to the numpy kernels AND the DuckDB SQL twins."""
     @pandas_udf("s2_cell long, h3_cell long")
     def _enc(xs, ys, zs):
         import pandas as pd
@@ -426,192 +405,6 @@ def with_cells(df, level: int = 12, res: int = 7, lat: str = "lat",
 
 
 # ---------------------------------------------------------------------------
-# Native (pure-Catalyst) encoders: same math as the numpy kernels above but
-# emitted as chained column projections — whole-stage codegen, no Arrow
-# round trip. A pandas UDF costs ~24B/row of JVM<->Python traffic per call,
-# which saturates a node's memory bus long before its cores; these scale
-# with cores like any other codegen expression. The numpy twins remain the
-# test oracle (tests assert bit-equality on sampled points).
-# ---------------------------------------------------------------------------
-
-def with_s2_cell_native(df, level: int = 12, lat: str = "lat", lng: str = "lng",
-                        out: str = "s2_cell"):
-    """S2 cell id as column math: lat/lng -> xyz, then the from-xyz core."""
-    from pyspark.sql import functions as F
-
-    la, ln = F.radians(F.col(lat)), F.radians(F.col(lng))
-    df = df.withColumns({
-        "__sx": F.cos(la) * F.cos(ln),
-        "__sy": F.cos(la) * F.sin(ln),
-        "__sz": F.sin(la),
-    })
-    return with_s2_cell_from_xyz(df, level, "__sx", "__sy", "__sz", out).drop(
-        "__sx", "__sy", "__sz")
-
-
-def with_s2_cell_from_xyz(df, level: int = 12, x: str = "x", y: str = "y",
-                          z: str = "z", out: str = "s2_cell"):
-    """S2 cell id from unit-sphere xyz columns: face/uv -> st -> ij -> Hilbert.
-
-    Trig-free (division/sqrt/int ops only — all IEEE-exact), so the SQL twin
-    s2_cell_sql computes bit-identical ids from the same xyz doubles.
-    """
-    from pyspark.sql import functions as F
-
-    df = df.withColumns({"__sx": F.col(x), "__sy": F.col(y), "__sz": F.col(z)})
-    ax, ay, az = F.abs(F.col("__sx")), F.abs(F.col("__sy")), F.abs(F.col("__sz"))
-    base = (
-        F.when((ax >= ay) & (ax >= az), F.lit(0))
-        .when(ay >= az, F.lit(1))
-        .otherwise(F.lit(2))
-    )
-    comp = (
-        F.when(base == 0, F.col("__sx")).when(base == 1, F.col("__sy")).otherwise(F.col("__sz"))
-    )
-    df = df.withColumn("__face", F.when(comp < 0, base + 3).otherwise(base))
-    x, y, z, f = F.col("__sx"), F.col("__sy"), F.col("__sz"), F.col("__face")
-    u = (
-        F.when(f == 0, y / x).when(f == 1, -x / y).when(f == 2, -x / z)
-        .when(f == 3, z / x).when(f == 4, z / y).otherwise(-y / z)
-    )
-    v = (
-        F.when(f == 0, z / x).when(f == 1, z / y).when(f == 2, -y / z)
-        .when(f == 3, y / x).when(f == 4, -x / y).otherwise(-x / z)
-    )
-
-    def st(c):
-        return F.when(c >= 0, 0.5 * F.sqrt(1.0 + 3.0 * c)).otherwise(
-            1.0 - 0.5 * F.sqrt(1.0 - 3.0 * c))
-
-    lim = (1 << _MAX_LEVEL) - 1
-    df = df.withColumns({
-        "__si": F.greatest(F.lit(0), F.least(F.lit(lim),
-                F.floor(st(u) * float(1 << _MAX_LEVEL)))).cast("long"),
-        "__sj": F.greatest(F.lit(0), F.least(F.lit(lim),
-                F.floor(st(v) * float(1 << _MAX_LEVEL)))).cast("long"),
-        "__orient": F.col("__face").cast("long").bitwiseAND(F.lit(1)),
-        "__pos": F.lit(0).cast("long"),
-    })
-    # per-level Hilbert step. The 4x4 lookup tables pack into single integer
-    # literals (2 bits/entry) — p = (LUT >> 2*(orient*4 + ij)) & 3 — so each
-    # level is a handful of int ops, not a 16-branch CASE (big CASE chains
-    # blow the JIT method limit and fall back to interpreted eval).
-    # Only `level` iterations are needed: deeper bits are cleared by the
-    # truncation; pre-shift pos to its final position afterwards.
-    lut_ij2pos = sum(int(_IJ_TO_POS[o][ij]) << (2 * (o * 4 + ij))
-                     for o in range(4) for ij in range(4))
-    lut_pos2orient = sum(int(_POS_TO_ORIENT[p]) << (2 * p) for p in range(4))
-    for k in range(_MAX_LEVEL - 1, _MAX_LEVEL - 1 - level, -1):
-        ij = (F.shiftright(F.col("__si"), k).bitwiseAND(F.lit(1)) * 2
-              + F.shiftright(F.col("__sj"), k).bitwiseAND(F.lit(1)))
-        df = df.withColumn("__ij", ij)
-        # variable-distance shift needs the SQL form (F.shiftright takes a
-        # literal count only)
-        df = df.withColumn(
-            "__p",
-            F.expr(f"shiftright(cast({lut_ij2pos} as bigint), cast((__orient * 4 + __ij) * 2 as int)) & 3"),
-        )
-        df = df.withColumns({
-            "__pos": F.shiftleft(F.col("__pos"), 2).bitwiseOR(F.col("__p")),
-            "__orient": F.col("__orient").bitwiseXOR(
-                F.expr(f"shiftright(cast({lut_pos2orient} as bigint), cast(__p * 2 as int)) & 3")),
-        })
-    pos_full = F.shiftleft(F.col("__pos"), 2 * (_MAX_LEVEL - level))
-    cell = F.shiftleft(F.col("__face").cast("long"), 61) \
-        .bitwiseOR(F.shiftleft(pos_full, 1)).bitwiseOR(F.lit(1))
-    if level < _MAX_LEVEL:
-        lsb = 1 << (2 * (_MAX_LEVEL - level))
-        cell = cell.bitwiseAND(F.lit(-lsb).cast("long")).bitwiseOR(F.lit(lsb).cast("long"))
-    return df.withColumn(out, cell).drop(
-        "__sx", "__sy", "__sz", "__face", "__si", "__sj", "__orient", "__pos", "__p", "__ij")
-
-
-def with_h3_cell_native(df, res: int = 7, lat: str = "lat", lng: str = "lng",
-                        out: str = "h3_cell"):
-    """H3-style cell id as column math: lat/lng -> xyz, then from-xyz core."""
-    from pyspark.sql import functions as F
-
-    la, ln = F.radians(F.col(lat)), F.radians(F.col(lng))
-    df = df.withColumns({
-        "__hx3": F.cos(la) * F.cos(ln),
-        "__hy3": F.cos(la) * F.sin(ln),
-        "__hz3": F.sin(la),
-    })
-    return with_h3_cell_from_xyz(df, res, "__hx3", "__hy3", "__hz3", out).drop(
-        "__hx3", "__hy3", "__hz3")
-
-
-def with_h3_cell_from_xyz(df, res: int = 7, x: str = "x", y: str = "y",
-                          z: str = "z", out: str = "h3_cell"):
-    """H3-style cell id from unit-sphere xyz: face argmax -> gnomonic -> hex
-    round. Trig-free at runtime (rotation angles fold to Python literals), so
-    h3_cell_sql is a bit-identical DuckDB twin over the same xyz doubles."""
-    from pyspark.sql import functions as F
-
-    df = df.withColumns({"__hx3": F.col(x), "__hy3": F.col(y), "__hz3": F.col(z)})
-    x, y, z = F.col("__hx3"), F.col("__hy3"), F.col("__hz3")
-    # argmax over the 20 face centers: materialize each dot ONCE as a column
-    # (a CASE over un-materialized dots duplicates every product 20x), then
-    # array_position on the max.
-    dot_cols = {f"__d{i}": x * float(c[0]) + y * float(c[1]) + z * float(c[2])
-                for i, c in enumerate(_H3_CENTERS)}
-    df = df.withColumns(dot_cols)
-    darr = F.array(*[F.col(f"__d{i}") for i in range(len(_H3_CENTERS))])
-    df = df.withColumn(
-        "__hface",
-        (F.array_position(darr, F.array_max(darr)) - 1).cast("int"),
-    ).drop(*dot_cols.keys())
-    # gnomonic projection per face: constants via element_at on array
-    # literals (one index op instead of a 20-branch CASE per constant)
-    fcol = F.col("__hface")
-
-    def pick(vals):
-        return F.element_at(F.array(*[F.lit(float(v)) for v in vals]), fcol + 1)
-
-    cx, cy, cz = (pick(_H3_CENTERS[:, j]) for j in range(3))
-    e1xc, e1yc, e1zc = (pick(_H3_E1[:, j]) for j in range(3))
-    e2xc, e2yc, e2zc = (pick(_H3_E2[:, j]) for j in range(3))
-    dot = x * cx + y * cy + z * cz
-    qx, qy, qz = x / dot - cx, y / dot - cy, z / dot - cz
-    px = qx * e1xc + qy * e1yc + qz * e1zc
-    py = qx * e2xc + qy * e2yc + qz * e2zc
-    ca, sa, scale = _h3_rot_consts(res)
-    rx = (px * ca - py * sa) * scale
-    ry = (px * sa + py * ca) * scale
-    qf = F.lit(float(np.sqrt(3.0) / 3.0)) * rx - ry / 3.0
-    rf = 2.0 / 3.0 * ry
-    df = df.withColumns({"__qf": qf, "__rf": rf, "__sf": -qf - rf})
-    # floor(x + 0.5): HALF-UP ties, matching _cube_round and the SQL oracle
-    # (F.round is HALF_UP too but np.round is half-even; floor(x+0.5) is the
-    # one formulation all three paths state identically)
-    qr = F.floor(F.col("__qf") + 0.5).cast("long")
-    rr = F.floor(F.col("__rf") + 0.5).cast("long")
-    sr = F.floor(F.col("__sf") + 0.5).cast("long")
-    df = df.withColumns({"__q": qr, "__r": rr, "__s": sr})
-    dq = F.abs(F.col("__q") - F.col("__qf"))
-    dr = F.abs(F.col("__r") - F.col("__rf"))
-    ds = F.abs(F.col("__s") - F.col("__sf"))
-    fix_q = (dq > dr) & (dq > ds)
-    fix_r = (~fix_q) & (dr > ds)
-    df = df.withColumns({
-        "__q2": F.when(fix_q, -F.col("__r") - F.col("__s")).otherwise(F.col("__q")),
-    })
-    df = df.withColumns({
-        "__r2": F.when(fix_r, -F.col("__q2") - F.col("__s")).otherwise(F.col("__r")),
-    })
-    off = 1 << 19
-    cell = (
-        F.shiftleft(F.col("__hface").cast("long"), 49)
-        .bitwiseOR(F.lit(res << 45).cast("long"))
-        .bitwiseOR(F.shiftleft(F.col("__q2") + off, 20))
-        .bitwiseOR(F.col("__r2") + off)
-    )
-    return df.withColumn(out, cell).drop(
-        "__hx3", "__hy3", "__hz3", "__hface", "__qf", "__rf", "__sf",
-        "__q", "__r", "__s", "__q2", "__r2")
-
-
-# ---------------------------------------------------------------------------
 # DuckDB SQL twins (for the driver's oracle): the from-xyz encoders are
 # trig-free (division / sqrt / integer ops / argmax over literal-dot columns),
 # every one of which is IEEE-exact in both engines, so these produce
@@ -625,7 +418,7 @@ def _dlit(v: float) -> str:
 
 def s2_cell_sql(level: int = 12, x: str = "x", y: str = "y", z: str = "z",
                 base: str = "__xyz") -> tuple[list[str], str, str]:
-    """Chained-CTE SQL computing the same S2 cell id as with_s2_cell_from_xyz.
+    """Chained-CTE SQL computing the same S2 cell id as s2_cell_from_xyz_np.
 
     Returns (cte_list, final_cte_name, cell_id_expr). The final id is built
     in HUGEINT (DuckDB checks BIGINT shift overflow) then wrapped to signed
@@ -682,7 +475,7 @@ def s2_cell_sql(level: int = 12, x: str = "x", y: str = "y", z: str = "z",
 
 def h3_cell_sql(res: int = 7, x: str = "x", y: str = "y", z: str = "z",
                 base: str = "__xyz") -> tuple[list[str], str, str]:
-    """Chained-CTE SQL computing the same cell id as with_h3_cell_from_xyz.
+    """Chained-CTE SQL computing the same cell id as h3_cell_from_xyz_np.
 
     Returns (cte_list, final_cte_name, cell_id_expr)."""
     dots = ", ".join(

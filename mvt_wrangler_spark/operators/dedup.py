@@ -50,72 +50,6 @@ def phash_dedup(df: DataFrame, keys: tuple[str, ...] = ("z", "x", "y", "phash"),
     )
 
 
-def phash_dedup_agg(df: DataFrame, keys: tuple[str, ...] = ("z", "x", "y", "phash"),
-                    order_col: str = "image_id", extra_aggs: dict | None = None) -> DataFrame:
-    """Keeper-id dedup via groupBy/min — same keeper semantics as phash_dedup
-    but with map-side partial aggregation and a narrow shuffle row (keys +
-    aggregates only, no full-row carry). Use when downstream needs keeper ids
-    and per-group stats rather than the full surviving rows: at 10^12 rows
-    the window variant shuffles every column, this one only the group keys.
-    """
-    aggs = [F.min(order_col).alias(f"keeper_{order_col}"), F.count(F.lit(1)).alias("n_dups")]
-    for name, expr in (extra_aggs or {}).items():
-        aggs.append(expr.alias(name))
-    return df.groupBy(*keys).agg(*aggs)
-
-
-def phash_dedup_packed(df: DataFrame, z: int, order_num: Column | None = None,
-                       phash_bits: int | None = None,
-                       extra_aggs: dict | None = None) -> DataFrame:
-    """Narrow-shuffle twin of phash_dedup_agg — the flagship dedup shape for
-    the 10^12-row scaling scenario (BENCH/BASELINE.md: +11%/both levels).
-
-    Packs the (x, y, phash) group key into ONE long
-    (x << (z+phash_bits) | y << phash_bits | phash) and keeps the keeper id
-    NUMERIC, so a shuffle row is ~2 longs instead of 4 key columns + a
-    string — high-cardinality agg cost on a memory-bus-bound node tracks
-    bytes/row. Exact (not hashed): requires x,y < 2^z (guaranteed by the
-    tile assigner) and 0 <= phash < 2^phash_bits with 2*z + phash_bits <= 63;
-    a row-level raise_error guard fails loudly on domain violations instead
-    of silently colliding.
-
-    order_num: numeric keeper expression (defaults to the numeric form of
-    image_id — exact for numeric ids and for fixed-width zero-padded ids,
-    where numeric min == string min). Output unpacks back to
-    (z, x, y, phash, keeper_num, n_dups [, extras]) — same groups and
-    keepers as phash_dedup_agg (test-pinned).
-    """
-    pb = phash_bits if phash_bits is not None else 63 - 2 * z
-    if 2 * z + pb > 63:
-        raise ValueError(f"2*z + phash_bits = {2 * z + pb} exceeds 63 bits")
-    lim = 1 << pb
-    ph = F.when((F.col("phash") >= lim) | (F.col("phash") < 0),
-                F.raise_error(F.lit(f"phash outside [0, 2^{pb}) — "
-                                    f"packed dedup key would collide"))
-                ).otherwise(F.col("phash"))
-    gk = (F.shiftleft(F.col("x"), z + pb)
-          .bitwiseOR(F.shiftleft(F.col("y"), pb))
-          .bitwiseOR(ph))
-    if order_num is None:
-        order_num = F.coalesce(
-            F.expr("try_cast(image_id AS BIGINT)"),
-            F.expr("try_cast(regexp_extract(image_id, '([0-9]+)$', 1) AS BIGINT)"))
-    aggs = [F.min("__on").alias("keeper_num"), F.count(F.lit(1)).alias("n_dups")]
-    for name, expr in (extra_aggs or {}).items():
-        aggs.append(expr.alias(name))
-    agg = (df.withColumn("__gk", gk).withColumn("__on", order_num)
-           .groupBy("__gk").agg(*aggs))
-    mask = F.lit((1 << z) - 1).cast("long")
-    return agg.select(
-        F.lit(z).cast("int").alias("z"),
-        F.shiftright(F.col("__gk"), z + pb).alias("x"),
-        F.shiftright(F.col("__gk"), pb).bitwiseAND(mask).alias("y"),
-        F.col("__gk").bitwiseAND(F.lit(lim - 1).cast("long")).alias("phash"),
-        "keeper_num", "n_dups",
-        *[name for name in (extra_aggs or {})],
-    )
-
-
 def exact_dedup(df: DataFrame, on: str, order_col: str) -> DataFrame:
     """Exact dedup by column value, deterministic keeper (min order_col)."""
     w = Window.partitionBy(on).orderBy(F.col(order_col).asc())

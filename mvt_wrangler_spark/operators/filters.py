@@ -15,12 +15,14 @@ Reference semantics:
     the same way (transform.rs:159-171).
 
 Spark realization:
-  - geometry side: one Arrow-batched pandas UDF computes a BITMASK of
-    intersecting filter features per point (vectorized winding-number PIP,
-    grid prefilter) — the broadcast-STRtree join of the north rule;
+  - geometry side: a native Catalyst expression computes a BITMASK of
+    intersecting filter features per point (even-odd PIP unrolled per
+    polygon edge behind a bbox test) — the broadcast-STRtree join of the
+    north rule, with no Arrow round trip; general (non-point) geometries
+    take one Arrow-batched pandas UDF instead;
   - predicate side: per filter feature, a layer-name CASE cascade of compiled
     DSL Columns; overall removal = OR over (mask bit i AND rule_i). Pure
-    Catalyst after the single UDF column.
+    Catalyst.
   - tag filter: F.map_filter higher-order function, with the compiled tag
     expr bound to the lambda key — no explode, no shuffle.
 """
@@ -92,39 +94,9 @@ class FilterProgram:
 # Spatial mask: which filter features apply to each point row
 # ---------------------------------------------------------------------------
 
-def filter_mask_column(spark: SparkSession, program: FilterProgram,
-                       lon: Column, lat: Column) -> Column:
-    """Bitmask column: bit i set iff the row's point is inside feature i.
-
-    Broadcast the (tiny) polygon set once; one vectorized PIP per polygon per
-    Arrow batch. Supports up to 63 filter features (the reference's fixture
-    has 3; programs are human-written queries).
-    """
-    n = len(program.features)
-    if n == 0:
-        return F.lit(0).cast("long")
-    if n > 63:
-        raise ValueError("filter programs with >63 features are not supported")
-    payload = [(i, p) for i, feat in enumerate(program.features) for p in feat.polygons]
-    bc = spark.sparkContext.broadcast([(i, p.exterior, [h for h in p.holes]) for i, p in payload])
-
-    @pandas_udf("long")
-    def _mask(plon: pd.Series, plat: pd.Series) -> pd.Series:
-        px = plon.to_numpy(dtype=np.float64)
-        py = plat.to_numpy(dtype=np.float64)
-        out = np.zeros(len(px), dtype=np.int64)
-        for i, ext, holes in bc.value:
-            poly = G.Polygon(ext, holes)
-            inside = G.points_in_polygon(px, py, poly)
-            out |= inside.astype(np.int64) << i
-        return pd.Series(out)
-
-    return _mask(lon, lat)
-
-
 def geom_filter_mask_column(spark: SparkSession, program: FilterProgram,
                             gtype: Column, xs: Column, ys: Column) -> Column:
-    """Bitmask like filter_mask_column but for GENERAL geometries: bit i set
+    """Bitmask like filter_mask_native but for GENERAL geometries: bit i set
     iff the feature's geometry (Point/LineString/Polygon vertex arrays)
     exactly intersects filter feature i's mask (transform.rs:130-143) —
     makes ["type"] (P7) meaningful: non-point features flow through the
@@ -152,29 +124,33 @@ def geom_filter_mask_column(spark: SparkSession, program: FilterProgram,
     return _mask(gtype, xs, ys)
 
 
-def filter_mask_native(program: FilterProgram, lon: Column, lat: Column,
-                       materialize: bool = True) -> Column:
-    """Same bitmask as filter_mask_column, but pure Catalyst column math.
+def filter_mask_native(program: FilterProgram, lon: Column, lat: Column) -> Column:
+    """Bitmask column: bit i set iff the row's point is inside feature i.
 
-    The polygons are compile-time constants, so the even-odd crossing test
-    unrolls per edge into codegen'd arithmetic (one term per edge:
-    ~5-10 edges per filter polygon). No Arrow round trip — a pandas UDF
-    moves ~24 bytes/row across the JVM<->Python boundary, which saturates a
-    node's memory bus before its cores.
+    Pure Catalyst column math: the polygons are compile-time constants, so
+    the even-odd crossing test unrolls per edge into codegen'd arithmetic
+    (one term per edge: ~5-10 edges per filter polygon). No Arrow round
+    trip — a pandas UDF moves ~24 bytes/row across the JVM<->Python
+    boundary, which saturates a node's memory bus before its cores.
+    Supports up to 63 filter features (the reference's fixture has 3;
+    programs are human-written queries).
 
-    materialize=True (default) appends a nondeterministic no-op
-    (`+ floor(rand*0)`), which stops Catalyst from SUBSTITUTING this large
-    expression into every downstream reference — the feature filter
-    references the mask once per filter feature and the tag filter once per
-    map entry, so inlining multiplies the polygon math ~(features x
-    map-entries) times (measured 4x slowdown on the full pipeline). The
-    no-op forces one evaluation per row, exactly like the UDF boundary did
-    implicitly, while keeping the 5x codegen speed of the native kernel.
+    The mask ends in a nondeterministic no-op (`+ floor(rand*0)`), which
+    stops Catalyst from SUBSTITUTING this large expression into every
+    downstream reference — the feature filter references the mask once per
+    filter feature and the tag filter once per map entry, so inlining
+    multiplies the polygon math ~(features x map-entries) times (measured
+    4x slowdown on the full pipeline). The no-op forces one evaluation per
+    row while keeping the codegen speed of the native kernel.
     """
-    n = len(program.features)
-    if n == 0:
+    if not program.features:
         return F.lit(0).cast("long")
-    if n > 63:
+    return _point_mask(program, lon, lat) + F.floor(F.rand(7) * 0).cast("long")
+
+
+def _point_mask(program: FilterProgram, lon: Column, lat: Column) -> Column:
+    """filter_mask_native's polygon math, without the inlining barrier."""
+    if len(program.features) > 63:
         raise ValueError("filter programs with >63 features are not supported")
     mask = F.lit(0).cast("long")
     for i, feat in enumerate(program.features):
@@ -189,8 +165,6 @@ def filter_mask_native(program: FilterProgram, lon: Column, lat: Column,
                 inside = inside & ~_ring_crossings_odd(hole, lon, lat)
             inside_any = inside_any | (bbox_ok & inside)
         mask = mask.bitwiseOR(F.when(inside_any, F.lit(1 << i)).otherwise(F.lit(0)).cast("long"))
-    if materialize:
-        mask = mask + F.floor(F.rand(7) * 0).cast("long")
     return mask
 
 

@@ -1,22 +1,23 @@
-"""End-to-end job: assign -> spatial join -> filter -> dedup -> rollup -> write.
+"""End-to-end job: assign -> spatial join -> filter -> dedup -> rollup.
 
 This is the Spark re-expression of the reference's whole dataflow
 (/root/reference/src/lib.rs:39-101 + src/processing.rs:18-129):
   scan (S1/S2)            -> parquet scan of the images table
-  spatial prefilter (J1)  -> broadcast PIP bitmask (one Arrow UDF column)
+  spatial prefilter (J1)  -> PIP bitmask (native Catalyst column)
   feature filter (P4)     -> df.filter(~compiled_expr)
   tag filter (P5)         -> F.map_filter
   dict re-encode (A1)     -> parquet dictionary encoding at the sink
-  ordered write (S5/W1)   -> repartitionByRange(tile_id).sortWithinPartitions
+  ordered write (S5/W1)   -> the caller's SnapshotTable.write_snapshot
+                             (range buckets on tile_id, sorted within)
   metrics (A3)            -> df.observe named metrics + stats table
 
-One narrow UDF stage + exactly two shuffles (the range partition for the
-ordered sink; the dedup window) — the same stage shape at sf0.001 and 100 TB.
+One narrow stage + exactly two shuffles (the dedup window; the sink's range
+partition) — the same stage shape at sf0.001 and 100 TB.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -35,7 +36,6 @@ class PipelineResult:
     stats: DataFrame
     pyramid: DataFrame
     observation: Observation | None = None
-    metrics: dict = field(default_factory=dict)
 
 
 def run_pipeline(
@@ -45,32 +45,24 @@ def run_pipeline(
     z: int = 10,
     min_z: int = 0,
     dedup: bool = True,
-    dedup_mode: str = "window",
     n_salt: int = 8,
-    output_path: str | None = None,
-    output_partitions: int | None = None,
     with_cells: bool = False,
-    h3_res: int = 7,
-    s2_level: int = 12,
 ) -> PipelineResult:
     """The flagship query (SURVEY §7.2 step 2), generalized."""
     assigned = tiling.assign_tiles(images, z=z)
     if with_cells:
         from ..functions import cells as C
 
-        # fused pandas-UDF encoder by default (best absolute throughput:
-        # one Arrow round trip + one shared lon/lat->xyz pass for both
-        # cells; the fully-fused native chain exceeds HotSpot JIT method
-        # limits); native column twins exist (with_s2_cell_native /
-        # with_h3_cell_native) for UDF-free deployments
-        assigned = C.with_cells(assigned, level=s2_level, res=h3_res,
-                                lat="lat", lng="lon")
+        # fused pandas-UDF encoder: one Arrow round trip + one shared
+        # lon/lat->xyz pass for both cells (a native Catalyst chain of the
+        # same math exceeds HotSpot's method-size limits)
+        assigned = C.with_cells(assigned, lat="lat", lng="lon")
 
     obs = Observation("pipeline")
     assigned = assigned.observe(obs, F.count(F.lit(1)).alias("rows_in"))
 
     if program is not None and program.features:
-        # native codegen mask with the materialize barrier (see
+        # native codegen mask behind an inlining barrier (see
         # filters.filter_mask_native docstring: inlining would multiply the
         # polygon math by features x map-entries)
         masked = assigned.withColumn(
@@ -82,42 +74,13 @@ def run_pipeline(
     else:
         survivors = assigned.withColumn("filter_mask", F.lit(0).cast("long"))
 
-    # dedup_mode="window" keeps the full surviving rows (required by the
-    # archive sink); "agg" shuffles only the group keys + keeper id + per-
-    # group byte stats (map-side combined, ~5 narrow columns instead of every
-    # column); "packed" — the FLAGSHIP shape for keeper-only consumers at
-    # 10^12 rows — further folds the 4-column group key into one long and
-    # keeps the keeper numeric (phash_dedup_packed: +11% at both parallelism
-    # levels, BENCH/BASELINE.md), exact while phash fits 63-2z bits.
-    if not dedup:
-        deduped = survivors
-    elif dedup_mode == "packed":
-        extra = {}
-        if "bytes" in survivors.columns:
-            extra["bytes_in"] = F.sum(F.coalesce(F.length("bytes"), F.lit(0)))
-        deduped = D.phash_dedup_packed(survivors, z=z, extra_aggs=extra)
-    elif dedup_mode == "agg":
-        extra = {}
-        if "bytes" in survivors.columns:
-            extra["bytes_in"] = F.sum(F.coalesce(F.length("bytes"), F.lit(0)))
-        deduped = D.phash_dedup_agg(survivors, extra_aggs=extra)
-    else:
-        deduped = D.phash_dedup(survivors)
-
-    salt_col = "phash" if dedup and dedup_mode in ("agg", "packed") else "image_id"
-    stats = R.tile_stats(deduped, n_salt=n_salt, salt_col=salt_col)
+    # the window dedup keeps the full surviving rows (min image_id per
+    # (tile, phash)), which the archive sink needs
+    deduped = D.phash_dedup(survivors) if dedup else survivors
+    stats = R.tile_stats(deduped, n_salt=n_salt)
     pyramid = R.pyramid_rollup(
         stats.select("z", "x", "y", "n_rows", "bytes_in"), base_z=z, min_z=min_z
     )
-
-    if output_path is not None:
-        nparts = output_partitions or max(spark.sparkContext.defaultParallelism, 8)
-        (
-            deduped.repartitionByRange(nparts, "tile_id")
-            .sortWithinPartitions("tile_id")
-            .write.mode("overwrite")
-            .parquet(output_path)
-        )
 
     return PipelineResult(
         assignments=assigned,

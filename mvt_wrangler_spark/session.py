@@ -43,7 +43,7 @@ def get_spark(
         # Arrow transport for pandas UDFs / mapInPandas (the only Python path).
         # 64k-row batches: the vectorized numpy kernels amortize per-batch
         # Arrow framing + Python dispatch — measured 30% on the 120M compute
-        # scenario vs the old 10k default (round 5 A/B, BENCH/BASELINE.md);
+        # scenario vs the old 10k default;
         # ~3 MB/batch/stream at these row widths, safe for any executor size.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")

@@ -95,29 +95,6 @@ def test_h3_unpack_roundtrip():
         assert C._pack_h3(np.array([face]), res, np.array([q]), np.array([r]))[0] == c
 
 
-@pytest.mark.spark
-def test_cell_columns_match_numpy(spark):
-    import random
-
-    rng = random.Random(5)
-    rows = [(i, rng.uniform(-179, 179), rng.uniform(-84, 84)) for i in range(400)]
-    df = spark.createDataFrame(rows, "id long, lon double, lat double")
-    from pyspark.sql import functions as F
-
-    out = df.select(
-        "id",
-        C.s2_cell_column(F.col("lat"), F.col("lon"), level=12).alias("s2"),
-        C.h3_cell_column(F.col("lat"), F.col("lon"), res=7).alias("h3"),
-    ).collect()
-    lats = np.array([r[2] for r in rows])
-    lons = np.array([r[1] for r in rows])
-    s2 = C.s2_cell_id(lats, lons, 12)
-    h3 = C.h3_cell(lats, lons, 7)
-    got = {r.id: (r.s2, r.h3) for r in out}
-    for i in range(len(rows)):
-        assert got[i] == (s2[i], h3[i])
-
-
 def test_cube_round_half_up_ties():
     """Exact .5 fractional axial coords round HALF-UP (floor(x+0.5)) in the
     numpy kernel — the same formula the native column path and SQL oracle
@@ -139,8 +116,7 @@ def test_cube_round_half_up_ties():
 @pytest.mark.spark
 def test_fused_cells_column_matches_separate(spark):
     """The fused struct encoder (one Arrow pass, shared xyz) is bit-equal to
-    the two standalone columns and to the numpy kernels — from lat/lng AND
-    from unit-xyz."""
+    the numpy kernels — from lat/lng AND from unit-xyz."""
     from pyspark.sql import functions as F
 
     rng = np.random.default_rng(17)
@@ -164,7 +140,7 @@ def test_fused_cells_column_matches_separate(spark):
             .select("id", "s2_cell", "h3_cell").collect()}
     assert flat == got
 
-    # from-xyz fused twin == native codegen columns (trig-free, IEEE-exact)
+    # from-xyz fused twin == the from-xyz numpy kernels (trig-free, IEEE-exact)
     x, y, z = C._xyz(lats, lons)
     xdf = spark.createDataFrame(
         [(i, float(x[i]), float(y[i]), float(z[i])) for i in range(500)],
@@ -172,7 +148,41 @@ def test_fused_cells_column_matches_separate(spark):
     fx = (xdf.withColumn("c", C.cells_from_xyz_column(
             F.col("x"), F.col("y"), F.col("z"), level=12, res=7))
           .select("id", "c.s2_cell", "c.h3_cell").collect())
-    nat = C.with_s2_cell_from_xyz(xdf, level=12, x="x", y="y", z="z", out="s2")
-    nat = C.with_h3_cell_from_xyz(nat, res=7, x="x", y="y", z="z", out="h3")
-    want = {r.id: (r.s2, r.h3) for r in nat.select("id", "s2", "h3").collect()}
+    want_s2 = C.s2_cell_from_xyz_np(x, y, z, 12)
+    want_h3 = C.h3_cell_from_xyz_np(x, y, z, 7)
+    want = {i: (want_s2[i], want_h3[i]) for i in range(500)}
     assert {r.id: (r.s2_cell, r.h3_cell) for r in fx} == want
+
+
+def test_cell_sql_twins_match_numpy():
+    """The DuckDB SQL twins compute bit-identical ids to the numpy kernels
+    from the same unit-xyz doubles: both are trig-free (divide/sqrt/floor
+    and integer ops), which are IEEE-exact in both engines."""
+    import duckdb
+    import pandas as pd
+
+    rng = np.random.default_rng(23)
+    # random points plus the face centers, a pole-adjacent point, the
+    # antimeridian and a cube-corner direction
+    lats = np.concatenate([rng.uniform(-89.9, 89.9, 3000),
+                           [0.0, 0.0, 89.0, -89.0, 0.0, 35.26, 0.0]])
+    lons = np.concatenate([rng.uniform(-180.0, 180.0, 3000),
+                           [0.0, 90.0, 0.0, 0.0, 180.0 - 1e-9, -45.0, -90.0]])
+    x, y, z = C._xyz(lats, lons)
+    con = duckdb.connect()
+    con.register("pts", pd.DataFrame({"id": np.arange(len(x)), "x": x, "y": y, "z": z}))
+
+    def run(sql_twin):
+        ctes, last, expr = sql_twin
+        rows = con.execute(f"WITH {', '.join(ctes)} "
+                           f"SELECT {expr} FROM {last} ORDER BY id").fetchall()
+        return np.array([r[0] for r in rows], dtype=np.int64)
+
+    for level in (4, 12, 30):
+        got = run(C.s2_cell_sql(level=level, base="pts"))
+        want = C.s2_cell_from_xyz_np(x, y, z, level)
+        assert np.array_equal(got, want), (level, np.flatnonzero(got != want)[:5])
+    for res in (0, 7, 13):
+        got = run(C.h3_cell_sql(res=res, base="pts"))
+        want = C.h3_cell_from_xyz_np(x, y, z, res)
+        assert np.array_equal(got, want), (res, np.flatnonzero(got != want)[:5])

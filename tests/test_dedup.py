@@ -230,36 +230,6 @@ def test_knn_join_query_bound_raises(spark):
     assert knn_join(data, queries, k=3, max_queries=50).count() == 150
 
 
-@pytest.mark.spark
-def test_phash_dedup_packed_matches_agg(spark):
-    """The flagship packed dedup (one-long group key, numeric keeper) must
-    produce the same groups + keepers as phash_dedup_agg — zero-padded ids
-    make numeric min == string min."""
-    from mvt_wrangler_spark.functions import tiling
-    from mvt_wrangler_spark.sources import images as I
-
-    df = I.synthetic_images(spark, 3000, with_pixels=False, partitions=4)
-    a = tiling.assign_tiles(df, z=6, with_local=False)
-    # packed mode's contract is a BOUNDED phash domain (the full images table
-    # carries a signed 64-bit hash, which the operator loudly refuses below);
-    # both variants group on the same bounded column for a fair comparison
-    a = a.withColumn("phash", F.pmod("phash", F.lit(1 << 20)))
-    agg = {(r.z, r.x, r.y, r.phash): (int(r.keeper_image_id[3:]), r.n_dups)
-           for r in D.phash_dedup_agg(
-               a, keys=("z", "x", "y", "phash"), order_col="image_id").collect()}
-    packed = {(r.z, r.x, r.y, r.phash): (r.keeper_num, r.n_dups)
-              for r in D.phash_dedup_packed(a, z=6).collect()}
-    assert packed == agg
-    assert len(packed) > 100
-
-    # domain guard: out-of-range phash fails loudly, never collides silently
-    bad = a.withColumn("phash", F.lit(-1).cast("long"))
-    with pytest.raises(Exception, match="packed dedup key"):
-        D.phash_dedup_packed(bad, z=6).collect()
-    with pytest.raises(ValueError, match="exceeds 63"):
-        D.phash_dedup_packed(a, z=6, phash_bits=60)
-
-
 # ---------------------------------------------------------------------------
 # phash hamming near-dup (banding guarantee + popcount refine)
 # ---------------------------------------------------------------------------

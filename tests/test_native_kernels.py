@@ -1,14 +1,13 @@
-"""Native (codegen) kernels match their numpy twins: S2, H3, PIP mask."""
+"""The native (codegen) PIP mask matches its numpy oracle, and its inlining
+barrier holds."""
 
 from __future__ import annotations
 
 import random
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from mvt_wrangler_spark.functions import cells as C
 from mvt_wrangler_spark.operators import filters as FL
 from mvt_wrangler_spark.sources.fixtures import default_filter_geojson
 from tests.oracle import pipeline_oracle as PO
@@ -26,42 +25,11 @@ def pts_df(spark):
 
 
 @pytest.mark.spark
-def test_s2_native_matches_numpy(spark, pts_df):
-    rows, df = pts_df
-    for level in (4, 12, 30):
-        out = C.with_s2_cell_native(df, level=level, lat="lat", lng="lon", out="s2")
-        got = {r.id: r.s2 for r in out.select("id", "s2").collect()}
-        lats = np.array([r[2] for r in rows])
-        lons = np.array([r[1] for r in rows])
-        want = C.s2_cell_id(lats, lons, level)
-        mism = [i for i, r in enumerate(rows) if got[r[0]] != want[i]]
-        assert not mism, (level, mism[:5])
-
-
-@pytest.mark.spark
-def test_h3_native_matches_numpy(spark, pts_df):
-    rows, df = pts_df
-    for res in (0, 7, 13):
-        out = C.with_h3_cell_native(df, res=res, lat="lat", lng="lon", out="h3")
-        got = {r.id: r.h3 for r in out.select("id", "h3").collect()}
-        lats = np.array([r[2] for r in rows])
-        lons = np.array([r[1] for r in rows])
-        want = C.h3_cell(lats, lons, res)
-        mism = [i for i, r in enumerate(rows) if got[r[0]] != want[i]]
-        # F.round is half-up, np.round half-even: exact-.5 hex boundaries may
-        # differ; none should occur for random doubles
-        assert not mism, (res, mism[:5])
-
-
-@pytest.mark.spark
 def test_filter_mask_native_matches_udf(spark, pts_df):
     rows, df = pts_df
     prog = FL.FilterProgram.from_geojson(default_filter_geojson())
     native = {r.id: r.m for r in df.select(
         "id", FL.filter_mask_native(prog, F.col("lon"), F.col("lat")).alias("m")).collect()}
-    udf = {r.id: r.m for r in df.select(
-        "id", FL.filter_mask_column(spark, prog, F.col("lon"), F.col("lat")).alias("m")).collect()}
-    assert native == udf
     masks = PO.filter_masks(
         [{"image_id": r[0], "lon": r[1], "lat": r[2]} for r in rows], prog)
     for r in rows:
@@ -91,8 +59,8 @@ def test_materialize_barrier_limits_expression_inlining(spark):
         F.create_map(F.lit("name"), F.lit("x"),
                      F.lit("name:fr"), F.lit("y")).alias("tags"))
     counts = {}
-    for mat in (False, True):
-        mask = FL.filter_mask_native(prog, F.col("lon"), F.col("lat"), materialize=mat)
+    for mat, build in ((False, FL._point_mask), (True, FL.filter_mask_native)):
+        mask = build(prog, F.col("lon"), F.col("lat"))
         out = FL.apply_tag_filter(
             FL.apply_feature_filter(df.withColumn("filter_mask", mask), prog), prog)
         plan = out._jdf.queryExecution().optimizedPlan().toString()

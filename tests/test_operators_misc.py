@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from mvt_wrangler_spark.functions import metrics as M
 from mvt_wrangler_spark.functions import tiling
-from mvt_wrangler_spark.operators import dedup as D
 from mvt_wrangler_spark.operators import zonal as Z
 from mvt_wrangler_spark.sources import images as I
 
@@ -40,17 +39,6 @@ def test_zonal_stats_matches_numpy(spark):
     for rid, r in rows.items():
         tot = sum(by_key[(rid, zz)].n_px for zz in range(4))
         assert tot == r.w * r.h
-
-
-@pytest.mark.spark
-def test_dedup_agg_matches_window(spark):
-    df = I.synthetic_images(spark, 400, with_pixels=False, partitions=2)
-    a = tiling.assign_tiles(df, z=6, with_local=False)
-    win = {(r.z, r.x, r.y, r.phash): r.image_id
-           for r in D.phash_dedup(a).select("z", "x", "y", "phash", "image_id").collect()}
-    agg = {(r.z, r.x, r.y, r.phash): r.keeper_image_id
-           for r in D.phash_dedup_agg(a).collect()}
-    assert win == agg
 
 
 @pytest.mark.spark
