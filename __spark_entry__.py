@@ -530,6 +530,7 @@ def q_curate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal is the SAME operator the standalone contract queries check; the
     oracle composes the corresponding SQL twins as CTEs over the spiked
     corpus."""
+    from mvt_wrangler_spark import session
     from mvt_wrangler_spark.operators import dedup as D
     from mvt_wrangler_spark.operators import text as T
 
@@ -550,7 +551,7 @@ def q_curate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan+spike union — 24 parquet scans in the plan, i.e. six full corpus
     # passes at scale. One materialized pass is what a real curation
     # pipeline does with its staged corpus.
-    docs = docs.localCheckpoint(eager=True)
+    docs = session.pin(docs)
 
     keeper = (D.exact_dedup(docs, on="text", order_col="doc_id")
               .select("doc_id").withColumn("__k", F.lit(1)))
@@ -1287,6 +1288,7 @@ def _ahash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    from mvt_wrangler_spark import session
     from mvt_wrangler_spark.operators.dedup import phash_hamming_pairs
     from mvt_wrangler_spark.operators.multimodal import ahash64
     from mvt_wrangler_spark.sources import images as I
@@ -1318,24 +1320,18 @@ def _ahash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows)
 
     imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    # Materialize (id, ahash) ONCE per invocation: consumers reference it
-    # several times (hamming_keepers joins df twice; the banding operators
-    # re-materialize only their own slim projection), and an
-    # un-materialized reference re-runs the whole scan->gen->codec->ahash
-    # chain. 16 bytes/row — the guide §8 proxy shape. localCheckpoint,
-    # NOT cache(): CacheManager matches by canonicalized plan, so a cache
-    # would be silently reused by the NEXT invocation of the same query
-    # (cross-run result reuse the bench rules forbid); the checkpoint
-    # re-materializes every run. Repartition-down first: the Python chain
-    # runs wide (_spread), but downstream consumers are slim
-    # row-count-bounded joins, and reading 2x-parallelism checkpoint
-    # blocks per reference costs more task scheduling than 16-byte rows
-    # justify.
+    # Pin (id, ahash) ONCE per invocation: consumers reference it several
+    # times (hamming_keepers joins df twice; the banding operators pin only
+    # their own slim projection), and an unpinned reference re-runs the
+    # whole scan->gen->codec->ahash chain. 16 bytes/row — the guide §8
+    # proxy shape. Repartition-down first: the Python chain runs wide
+    # (_spread), but downstream consumers are slim row-count-bounded joins,
+    # and reading 2x-parallelism pinned blocks per reference costs more
+    # task scheduling than 16-byte rows justify.
     par = max(8, spark.sparkContext.defaultParallelism // 4)
-    return (ahash64(imgs)
-            .select(F.col("image_id").cast("long").alias("id"), "ahash")
-            .repartition(par)
-            .localCheckpoint())
+    return session.pin(ahash64(imgs)
+                       .select(F.col("image_id").cast("long").alias("id"), "ahash")
+                       .repartition(par))
 
 
 def q_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1641,6 +1637,7 @@ def q_cell_cover_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     that survives 100 TB: the cover set broadcasts, the fact side never
     shuffles on geometry. Parent truncation is exact int64 shift/add, so
     the DuckDB twin is bit-identical."""
+    from mvt_wrangler_spark import session
     from mvt_wrangler_spark.functions import cells as C
     from mvt_wrangler_spark.sources.points import synth_xyz
 
@@ -1658,7 +1655,7 @@ def q_cell_cover_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §4.4; asNondeterministic would instead block the region
     # filter's pushdown to the scan). 24 B/row — one encode pass at any
     # scale.
-    d = d.localCheckpoint(eager=True)
+    d = session.pin(d)
     regions = (d.filter(F.pmod(F.col("id"), F.lit(29)) == 0)
                .select(F.col("p5").alias("rcell")).distinct())
     return (d.join(F.broadcast(regions), d.p5 == regions.rcell)

@@ -3,7 +3,6 @@
 Plays the role geo/rstar play in the reference:
   - exact intersects refinement:   /root/reference/src/transform.rs:140-143
   - R-tree bbox prefilter:         /root/reference/src/filtering/data.rs:189-230
-  - bbox-vs-tile predicate:        /root/reference/src/transform.rs:31-45
 
 All kernels are batch-oriented (N points x one polygon in pure numpy) and run
 inside Arrow-batched pandas UDFs — never per-row Python. Polygons are
@@ -72,53 +71,6 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, poly: Polygon) -> np.ndarr
         inside &= ~points_in_ring(px[cand], py[cand], hole)
     out[cand] = inside
     return out
-
-
-def _segments_intersect(a1, a2, b1, b2) -> bool:
-    """Proper/improper 2-segment intersection (orientation test)."""
-
-    def orient(p, q, r):
-        return (q[0] - p[0]) * (r[1] - p[1]) - (q[1] - p[1]) * (r[0] - p[0])
-
-    def on_seg(p, q, r):
-        return min(p[0], q[0]) - 1e-12 <= r[0] <= max(p[0], q[0]) + 1e-12 and \
-               min(p[1], q[1]) - 1e-12 <= r[1] <= max(p[1], q[1]) + 1e-12
-
-    o1, o2 = orient(a1, a2, b1), orient(a1, a2, b2)
-    o3, o4 = orient(b1, b2, a1), orient(b1, b2, a2)
-    if ((o1 > 0) != (o2 > 0) and o1 != 0 and o2 != 0) and ((o3 > 0) != (o4 > 0) and o3 != 0 and o4 != 0):
-        return True
-    for (p, q, r, o) in ((a1, a2, b1, o1), (a1, a2, b2, o2), (b1, b2, a1, o3), (b1, b2, a2, o4)):
-        if o == 0 and on_seg(p, q, r):
-            return True
-    return False
-
-
-def rect_intersects_polygon(minx: float, miny: float, maxx: float, maxy: float, poly: Polygon) -> bool:
-    """Exact rect x polygon intersects (tile envelope vs filter geometry).
-
-    True if: bboxes overlap AND (a vertex is inside the rect, OR a rect
-    corner is inside the polygon, OR any edges cross).
-    """
-    if maxx < poly.minx or poly.maxx < minx or maxy < poly.miny or poly.maxy < miny:
-        return False
-    ex = poly.exterior
-    inside_rect = (ex[:, 0] >= minx) & (ex[:, 0] <= maxx) & (ex[:, 1] >= miny) & (ex[:, 1] <= maxy)
-    if inside_rect.any():
-        return True
-    corners_x = np.array([minx, minx, maxx, maxx])
-    corners_y = np.array([miny, maxy, miny, maxy])
-    if points_in_polygon(corners_x, corners_y, poly).any():
-        return True
-    rect_edges = [
-        ((minx, miny), (maxx, miny)), ((maxx, miny), (maxx, maxy)),
-        ((maxx, maxy), (minx, maxy)), ((minx, maxy), (minx, miny)),
-    ]
-    for i in range(len(ex) - 1):
-        for re1, re2 in rect_edges:
-            if _segments_intersect(ex[i], ex[i + 1], np.array(re1), np.array(re2)):
-                return True
-    return False
 
 
 def segments_cross(ax, ay, bx, by, cx, cy, dx, dy):

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from .. import session
+
 
 def observed(df: DataFrame, name: str, **aggs) -> tuple[DataFrame, Observation]:
     """Attach named aggregates computed during the next action on df."""
@@ -67,9 +69,7 @@ def with_global_rank(df: DataFrame, order_cols: list[str],
     # from SAMPLING, so if Spark's exchange-reuse ever recomputed the two
     # references separately, offsets and local ranks would come from
     # DIFFERENT partitionings and global ranks would be silently wrong.
-    # localCheckpoint(eager) makes the shared lineage physical (same pattern
-    # as pair_clusters / merge_keys).
-    d = d.localCheckpoint(eager=True)
+    d = session.pin(d)
     offs = d.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
     wo = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = (offs.withColumn("__off", F.coalesce(F.sum("__n").over(wo), F.lit(0)))

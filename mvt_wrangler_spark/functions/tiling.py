@@ -142,11 +142,6 @@ def with_pmtiles_tile_id(df: DataFrame, z: int, x: str = "x", y: str = "y", out:
     return df.withColumn(out, F.lit(_zoom_acc(z)).cast("long") + F.col("__hd")).drop("__hd")
 
 
-def parent_tile(x: Column, y: Column, levels: int = 1) -> tuple[Column, Column]:
-    """Pyramid parent coords: x >> levels, y >> levels (groupBy key for rollup)."""
-    return F.shiftright(x, levels), F.shiftright(y, levels)
-
-
 # ---------------------------------------------------------------------------
 # Inverse: tile_id -> (z, x, y)  (numpy; archive readers / tests)
 # ---------------------------------------------------------------------------

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .. import session
+
 P31 = 2147483647          # 2^31 - 1: keeps every product int64-safe (ANSI mode)
 GOLD = 2654435761         # 2^32 / golden ratio (Knuth multiplicative constant)
 
@@ -148,7 +150,7 @@ def minhash_buckets_sql_expr(text: str, num_hashes: int = 16, bands: int = 4,
 
 def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                            num_hashes: int = 16, bands: int = 4, shingle: int = 5,
-                           max_bucket: int = 1000, hot_fallback: bool = True) -> DataFrame:
+                           max_bucket: int = 1000) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding.
 
     band buckets (one numpy UDF pass) -> explode -> size-split:
@@ -161,10 +163,9 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id", text_col: str 
         O(B) output, linear shuffle, and every member stays connected to
         the rep, which is exactly the connectivity dedup clustering needs.
     -> distinct candidate id pairs (a < b; the rep is the bucket minimum, so
-    star pairs are already normalized). hot_fallback=False restores the
-    round-2 drop behavior.
+    star pairs are already normalized).
 
-    `banded` is pinned with localCheckpoint: the plan references it up to 6x
+    `banded` is pinned: the plan references it up to 6x
     (sizes, both self-join sides, the star arm), and an un-materialized
     reference re-executes the WHOLE shingle+minhash Python pass per copy —
     measured 6 ArrowEvalPython/6 scans in the un-pinned plan, and 1.63 s ->
@@ -172,10 +173,10 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id", text_col: str 
     (id, bucket) = 16 B x bands per doc — the guide §8 proxy shape, one
     cheap text pass at any corpus size.
     """
-    banded = df.select(
+    banded = session.pin(df.select(
         F.col(id_col).alias("id"),
         F.explode(minhash_band_buckets(F.col(text_col), num_hashes, bands, shingle)).alias("bucket"),
-    ).localCheckpoint(eager=True)
+    ))
     sizes = banded.groupBy("bucket").agg(F.count(F.lit(1)).alias("__n"),
                                          F.min("id").alias("__rep"))
     ok = sizes.filter((F.col("__n") >= 2) & (F.col("__n") <= max_bucket)).select("bucket")
@@ -186,15 +187,13 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id", text_col: str 
         .filter(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
-    if hot_fallback:
-        hot = sizes.filter(F.col("__n") > max_bucket).select("bucket", "__rep")
-        star = (
-            banded.join(hot, on="bucket")
-            .filter(F.col("id") != F.col("__rep"))
-            .select(F.col("__rep").alias("id_a"), F.col("id").alias("id_b"))
-        )
-        pairs = pairs.unionByName(star)
-    return pairs.distinct()
+    hot = sizes.filter(F.col("__n") > max_bucket).select("bucket", "__rep")
+    star = (
+        banded.join(hot, on="bucket")
+        .filter(F.col("id") != F.col("__rep"))
+        .select(F.col("__rep").alias("id_a"), F.col("id").alias("id_b"))
+    )
+    return pairs.unionByName(star).distinct()
 
 
 def minhash_lsh_sql(table: str = "documents", id_col: str = "doc_id",
@@ -298,7 +297,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "
     dedup shuffle, quadratic-ish bytes on boilerplate-heavy corpora. The
     slim join + two array re-attach joins is 24x faster: the wide arrays
     cross the wire once per SURVIVING candidate side, not once per shared
-    token. `ordered` is pinned with localCheckpoint (the [[with-global-rank]]
+    token. `ordered` is pinned (the [[with-global-rank]]
     exchange-reuse lesson, ADVICE r4): it feeds both join sides and both
     re-attach sides, and sampling-dependent recomputation must not produce
     different df-orders between them.
@@ -308,15 +307,15 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "
     # the join side of `ordered`, and with freq broadcast there is no common
     # exchange for Spark to reuse — unpinned, the Arrow shingle pass runs
     # twice per execution (measured ~2 s warm / ~8 s cold of pure recompute
-    # at sf0.1; the checkpoint is ~8 MB of int64 arrays per 5k docs)
-    docs = df.select(
+    # at sf0.1; the pin is ~8 MB of int64 arrays per 5k docs)
+    docs = session.pin(df.select(
         F.col(id_col).alias("id"),
         shingle_set_column(F.col(text_col), shingle).alias("toks"),
-    ).withColumn("n", F.size("toks").cast("long")).localCheckpoint(eager=True)
+    ).withColumn("n", F.size("toks").cast("long")))
 
     tok = docs.select("id", "n", F.explode("toks").alias("tok"))
     freq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("tdf"))
-    ordered = (
+    ordered = session.pin(
         tok.join(freq, on="tok")
         .groupBy("id")
         .agg(
@@ -324,7 +323,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "
             .alias("otoks"),
             F.first("n").alias("n"),
         )
-    ).localCheckpoint(eager=True)
+    )
     # prefix length p = n - ceil(t*n) + 1, integer-exact:
     # ceil(num*n/den) = (num*n + den - 1) div den
     pre = ordered.select(
@@ -642,9 +641,10 @@ def embedding_neardup_lsh(df: DataFrame, id_col: str = "vec_id",
     # both self-join sides), and un-pinned each copy re-runs the sign-LSH
     # Python pass over the full vector column (4 ArrowEvalPython / 6 scans
     # measured in the un-pinned plan). 16 B x bands per vector.
-    e = df.select(F.col(id_col).alias("id"),
-                  F.explode(embedding_sign_buckets(F.col(vec_col), quant, nbits, bands)
-                            ).alias("bucket")).localCheckpoint(eager=True)
+    e = session.pin(df.select(
+        F.col(id_col).alias("id"),
+        F.explode(embedding_sign_buckets(F.col(vec_col), quant, nbits, bands)
+                  ).alias("bucket")))
     sizes = e.groupBy("bucket").agg(F.count(F.lit(1)).alias("__n"))
     ok = sizes.filter((F.col("__n") >= 2) & (F.col("__n") <= max_bucket)).select("bucket")
     e = e.join(ok, on="bucket")
@@ -714,8 +714,7 @@ SELECT id_a, id_b FROM __s WHERE s > 0 AND s * s * {cos_den} > {cos_num} * na * 
 
 def phash_hamming_pairs(df: DataFrame, id_col: str = "image_id",
                         phash_col: str = "phash", k: int = 3, bands: int = 4,
-                        max_bucket: int = 1000, hot_fallback: bool = True,
-                        materialize_input: bool = True) -> DataFrame:
+                        max_bucket: int = 1000) -> DataFrame:
     """Near-duplicate image pairs by 64-bit perceptual-hash hamming distance.
 
     The image twin of minhash_lsh_candidates: web-scale image dedup keys on
@@ -736,29 +735,26 @@ def phash_hamming_pairs(df: DataFrame, id_col: str = "image_id",
     band is hot is seen only as (rep, a), (rep, b) star candidates, and if
     both are within k of each other but beyond k of the rep, the refine
     drops it — the same bounded-recall trade minhash_lsh_candidates makes.
-    Raise max_bucket (or disable hot_fallback) where full hot-bucket recall
-    matters more than the O(B^2) blowup. Candidates are then refined with
+    Raise max_bucket where full hot-bucket recall matters more than the
+    O(B^2) blowup. Candidates are then refined with
     an exact popcount: every emitted pair satisfies bit_count(a XOR b) <= k
     whichever candidate path found it.
 
     Input must be unique per id (pre-aggregate otherwise). Output:
     (id_a, id_b, hamming), id_a < id_b, distinct.
 
-    materialize_input (default True) localCheckpoints the slim (id, phash)
-    projection before banding: the plan below references it ~6x (band rows
-    for sizes / both join sides / the star arm), and an un-materialized
-    input re-executes its WHOLE upstream per reference — for a
-    decode-and-hash producer that is six image passes per run. The
-    materialized table is 16 bytes/row (the guide §8 proxy shape), i.e.
-    one cheap pass at any corpus size; set False only when the input is a
-    trivially re-computable scan.
+    The slim (id, phash) projection is pinned before banding: the plan
+    below references it ~6x (band rows for sizes / both join sides / the
+    star arm), and an unpinned input re-executes its WHOLE upstream per
+    reference — for a decode-and-hash producer that is six image passes
+    per run. The pinned table is 16 bytes/row (the guide §8 proxy shape),
+    i.e. one cheap pass at any corpus size.
     """
     if not 1 <= k < bands:
         raise ValueError(f"banding guarantee needs 1 <= k < bands, got k={k} bands={bands}")
     if 64 % bands:
         raise ValueError(f"bands must divide 64, got {bands}")
-    if materialize_input:
-        df = df.select(id_col, phash_col).localCheckpoint()
+    df = session.pin(df.select(id_col, phash_col))
     width = 64 // bands
     mask = (1 << width) - 1
     # arithmetic shift + mask == unsigned bit extraction, and restates 1:1 in
@@ -782,15 +778,14 @@ def phash_hamming_pairs(df: DataFrame, id_col: str = "image_id",
         .select(F.col("a.id").alias("id_a"), F.col("a.ph").alias("ph_a"),
                 F.col("b.id").alias("id_b"), F.col("b.ph").alias("ph_b"))
     )
-    if hot_fallback:
-        hot = sizes.filter(F.col("__n") > max_bucket)
-        star = (
-            banded.join(hot, on="bucket")
-            .filter(F.col("id") != F.col("__rep"))
-            .select(F.col("__rep").alias("id_a"), F.col("__rep_ph").alias("ph_a"),
-                    F.col("id").alias("id_b"), F.col("ph").alias("ph_b"))
-        )
-        cand = cand.unionByName(star)
+    hot = sizes.filter(F.col("__n") > max_bucket)
+    star = (
+        banded.join(hot, on="bucket")
+        .filter(F.col("id") != F.col("__rep"))
+        .select(F.col("__rep").alias("id_a"), F.col("__rep_ph").alias("ph_a"),
+                F.col("id").alias("id_b"), F.col("ph").alias("ph_b"))
+    )
+    cand = cand.unionByName(star)
     # refine BEFORE the pair dedup (guide §2.3 — shuffle fewer bytes): the
     # popcount is free codegen per candidate occurrence, so filtering
     # hamming > k first shrinks the distinct's exchange by the refine
@@ -858,7 +853,7 @@ def pair_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     "Connected Components in MapReduce and Beyond", SOCC'14 — public) as a
     driver loop over DataFrame stages, the kmeans_fit pattern. Each round is
     two grouped min-aggregations + joins keyed on node id; the edge set is
-    localCheckpoint'ed per round (truncates the compounding lazy DAG — see
+    pinned per round (truncates the compounding lazy DAG — see
     kmeans_fit/knn expanding-ring note). Converges to per-component stars
     centered on the min id in O(log^2 n) rounds even on adversarial path
     graphs, where plain min-label propagation needs O(diameter) rounds.
@@ -903,7 +898,7 @@ def pair_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
 
     def _checkpoint_with_sig(e: DataFrame):
         """Materialize the round's edge set and its convergence signature in
-        ONE job: the (count, hash-sum) rides the localCheckpoint pass as an
+        ONE job: the (count, hash-sum) rides the pin's job as an
         Observation instead of a second aggregation job. At sf0.1 the loop is
         driver-pacing dominated (~3 visible jobs/round in round 4); this
         halves the per-round action count. Decimal accumulator: summing raw
@@ -911,19 +906,19 @@ def pair_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
         from pyspark.sql import Observation
 
         obs = Observation()
-        chk = e.observe(
+        chk = session.pin(e.observe(
             obs, F.count(F.lit(1)).alias("c"),
             F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).localCheckpoint(eager=True)
-        got = obs.get  # the eager checkpoint job already completed the plan
+        ))
+        got = obs.get  # the pin's job already completed the plan
         return chk, (got["c"], got["h"])
 
     edges, sig = _checkpoint_with_sig(_canon(
         pairs.select(F.col(id_a).cast("long").alias("u"),
                      F.col(id_b).cast("long").alias("v"))))
     # Scale-adaptive: the canonical edge count is already known from the
-    # checkpoint signature. A SMALL graph (post-collapse hash graphs, the
-    # tail of an LSH pass) pays ~10 driver-paced rounds x fixed job latency
+    # signature the pin observed. A SMALL graph (post-collapse hash graphs,
+    # the tail of an LSH pass) pays ~10 driver-paced rounds x fixed job latency
     # in the star loop — while a bounded union-find over collected edges is
     # exact, deterministic, and instant. The collect is bounded by
     # driver_threshold edges (16 B each; default 64k = 1 MB) — the same
@@ -1062,8 +1057,8 @@ def phash_hamming_clusters(df: DataFrame, id_col: str = "image_id",
     # banding, AND the final expansion join — unpinned, the whole upstream
     # hash chain (decode + ahash here) recomputes for each reference
     # (measured 3x at sf0.1; the [[with-global-rank]] exchange-reuse lesson)
-    ph_slim = df.select(F.col(id_col).cast("long").alias("member_id"),
-                        F.col(phash_col).alias("ph")).localCheckpoint(eager=True)
+    ph_slim = session.pin(df.select(F.col(id_col).cast("long").alias("member_id"),
+                                    F.col(phash_col).alias("ph")))
     groups = (ph_slim.groupBy("ph")
               .agg(F.count(F.lit(1)).alias("cnt"),
                    F.min("member_id").alias("minid")))
@@ -1094,7 +1089,7 @@ def phash_hamming_clusters(df: DataFrame, id_col: str = "image_id",
                         | (F.col("cnt") >= 2))
              .filter(ham(F.col("__rep_ph"), F.col("ph")) <= F.lit(k))
              .select(F.col("__repid").alias("u"), F.col("minid").alias("v")))
-    edges = e_norm.unionByName(e_hot).distinct().localCheckpoint(eager=True)
+    edges = session.pin(e_norm.unionByName(e_hot).distinct())
 
     cross = edges.filter(F.col("u") != F.col("v"))
     selfmark = edges.filter(F.col("u") == F.col("v")).select(F.col("u").alias("minid"))

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import session
+
 
 def funnel(events: DataFrame, steps: list[str], id_col: str = "user_id",
            ts_col: str = "ts", type_col: str = "event_type",
@@ -44,10 +46,9 @@ def funnel(events: DataFrame, steps: list[str], id_col: str = "user_id",
     # isin pre-filter keeps the pinned volume at exactly the step-typed
     # rows the walk consumes (a 100-type event table would otherwise pin
     # every row); it pushes to the scan, so the one pass stays pruned.
-    base = (events.filter(F.col(type_col).isin(steps))
-            .select(F.col(id_col).alias("__id"),
-                    F.col(type_col).alias("__t"), k.alias("__k"))
-            .localCheckpoint(eager=True))
+    base = session.pin(events.filter(F.col(type_col).isin(steps))
+                       .select(F.col(id_col).alias("__id"),
+                               F.col(type_col).alias("__t"), k.alias("__k")))
     acc = (base.filter(F.col("__t") == steps[0])
            .groupBy("__id").agg(F.min("__k").alias("k1")))
     for i, s in enumerate(steps[1:], start=2):
@@ -55,12 +56,11 @@ def funnel(events: DataFrame, steps: list[str], id_col: str = "user_id",
                .join(acc.select("__id", f"k{i-1}"), "__id")
                .filter(F.col("__k") > F.col(f"k{i-1}"))
                .groupBy("__id").agg(F.min("__k").alias(f"k{i}")))
-        # lazy pin: `acc` is referenced by nxt AND the next accumulator
-        # join, and because nxt embeds acc the duplication otherwise
-        # compounds per step (acc_{i-1} appears 2^(n-i) times — 7 scans for
-        # a 3-step funnel). A lazy localCheckpoint materializes it once
-        # inside the next job with no extra action.
-        acc = acc.join(nxt, "__id", "left").localCheckpoint(eager=False)
+        # pin: `acc` is referenced by nxt AND the next accumulator join, and
+        # because nxt embeds acc the duplication otherwise compounds per
+        # step (acc_{i-1} appears 2^(n-i) times — 7 scans for a 3-step
+        # funnel)
+        acc = session.pin(acc.join(nxt, "__id", "left"))
     n = len(steps)
     sel = [F.col("__id").alias(id_col)]
     sel += [F.expr(f"k{i} DIV 1000").alias(f"t{i}_us") for i in range(1, n + 1)]

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import session
+
 
 def pagerank_int(edges: DataFrame, iters: int = 2, alpha_num: int = 85,
                  alpha_den: int = 100, scale: int = 1_000_000,
@@ -41,25 +43,23 @@ def pagerank_int(edges: DataFrame, iters: int = 2, alpha_num: int = 85,
     directed edges (pre-distinct the input; duplicate edges double-count).
     int64-safe for scale * alpha_num * max_in_degree < 2^63.
 
-    The loop-invariant tables (edges, nodes, degrees) are materialized ONCE
-    (localCheckpoint, the standard move for iterative graph algorithms):
+    The loop-invariant tables (edges, nodes, degrees) are pinned ONCE
+    (session.pin, the standard move for iterative graph algorithms):
     without it every iteration's plan re-embeds — and re-EXECUTES — the
     upstream edge derivation per reference (the contract query's 2-iter
     plan carried 28 copies of the lineitem/orders scans). pr is
-    additionally checkpointed every `checkpoint_every` iterations, so plan
+    additionally pinned every `checkpoint_every` iterations, so plan
     lineage (and analysis time) stays bounded at real link-graph iteration
     counts instead of growing linearly (kmeans_fit / pair_clusters make
     the same per-round truncation).
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .localCheckpoint())
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionByName(e.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint()
+    e = session.pin(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+    nodes = session.pin(e.select(F.col("src").alias("node"))
+                        .unionByName(e.select(F.col("dst").alias("node")))
+                        .distinct())
+    deg = session.pin(e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
     base = scale - scale * alpha_num // alpha_den
     pr = nodes.withColumn("pr", F.lit(scale).cast("long"))
     for i in range(iters):
@@ -74,7 +74,7 @@ def pagerank_int(edges: DataFrame, iters: int = 2, alpha_num: int = 85,
                       (F.lit(base) + F.coalesce("s", F.lit(0)))
                       .cast("long").alias("pr")))
         if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            pr = pr.localCheckpoint()
+            pr = session.pin(pr)
     return pr
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .. import session
 from ..functions import geometry as G
 
 
@@ -194,16 +195,14 @@ def partitioned_pip_join(points: DataFrame, polys: DataFrame, z: int = 9, *,
     # duplicate (id, lon, lat) rows refine once and re-expand by count at
     # the end (rows with equal key are identical, so this is lossless);
     # rows sharing an id with different coordinates stay distinct groups
-    mult = (points.select(F.col(id_col).alias("__id"),
-                          F.col(lon_col).alias("__lon"),
-                          F.col(lat_col).alias("__lat"))
-            .groupBy("__id", "__lon", "__lat")
-            # materialized once: referenced by the candidate path AND the
-            # final multiplicity join-back — un-materialized, the point
-            # scan + dedup groupBy execute twice per run. Slim rows
-            # (id + 2 doubles + count), the guide §8 proxy shape.
-            .agg(F.count(F.lit(1)).alias("__mult"))
-            .localCheckpoint())
+    # pinned: referenced by the candidate path AND the final multiplicity
+    # join-back — unpinned, the point scan + dedup groupBy execute twice
+    # per run. Slim rows (id + 2 doubles + count), the guide §8 proxy shape.
+    mult = session.pin(points.select(F.col(id_col).alias("__id"),
+                                     F.col(lon_col).alias("__lon"),
+                                     F.col(lat_col).alias("__lat"))
+                       .groupBy("__id", "__lon", "__lat")
+                       .agg(F.count(F.lit(1)).alias("__mult")))
     pt = mult.withColumns({
         "__tx": T.tile_x(F.col("__lon"), z),
         "__ty": T.tile_y(F.col("__lat"), z),
@@ -409,13 +408,8 @@ def knn_join_cells(data: DataFrame, queries: DataFrame, k: int, z: int = 7,
         F.col("x").alias("__cx"), F.col("y").alias("__cy"),
         F.pmod(F.xxhash64(F.col("__did")), F.lit(n_salt)).alias("__salt"),
     )
-    # localCheckpoint, not persist(): the expanding-ring loop references d
-    # every round, so it must be materialized — but a persist() is matched
-    # by canonicalized plan in the CacheManager and would be silently
-    # REUSED by the next invocation of the same query (cross-run result
-    # reuse the bench rules forbid, and it was never unpersisted). The
-    # checkpoint re-materializes per invocation.
-    d = d.localCheckpoint()
+    # the expanding-ring loop references d every round
+    d = session.pin(d)
     remaining = tiling.assign_tiles(
         queries.select(F.col(query_id).alias("__qid"),
                        F.col(lon_col).alias("lon"), F.col(lat_col).alias("lat")),
@@ -484,17 +478,17 @@ def knn_join_cells(data: DataFrame, queries: DataFrame, k: int, z: int = 7,
                   .withColumn("__safe", safe)
                   .withColumn("__done", (F.col("__n") >= k)
                               & (F.col("__kth2") <= F.col("__safe") * F.col("__safe"))))
-        # localCheckpoint (eager) truncates the per-round plan lineage: the
-        # rounds would otherwise chain into one compounding DAG whose
-        # re-analysis/persist OOMs the driver after a few doublings. The
-        # checkpointed frames are tiny (<= k rows/query; shrinking queries).
-        done_ids = status.filter(F.col("__done")).select("__qid").localCheckpoint()
-        finals.append(res.join(done_ids, on="__qid")
-                      .select("__qid", "rank", "__did", "dist2").localCheckpoint())
+        # pinned per round: the rounds would otherwise chain into one
+        # compounding DAG whose re-analysis OOMs the driver after a few
+        # doublings. The pinned frames are tiny (<= k rows/query;
+        # shrinking queries).
+        done_ids = session.pin(status.filter(F.col("__done")).select("__qid"))
+        finals.append(session.pin(res.join(done_ids, on="__qid")
+                                  .select("__qid", "rank", "__did", "dist2")))
         # anti-join (NOT status-filter): a query with ZERO in-box candidates
         # has no status row but must keep expanding
-        remaining = remaining.join(done_ids, on="__qid",
-                                   how="left_anti").localCheckpoint()
+        remaining = session.pin(remaining.join(done_ids, on="__qid",
+                                               how="left_anti"))
         if remaining.isEmpty():
             break
         w *= 2
@@ -869,20 +863,18 @@ def partitioned_intersects_join(feats: DataFrame, polys: DataFrame, z: int = 9, 
         F.col(fxs_col).alias("__fxs"), F.col(fys_col).alias("__fys"))
     # ONE aggregation consolidates what used to be three separate passes
     # over the feature input (cover source, dropDuplicates for the vertex
-    # rows, multiplicity count), materialized once with localCheckpoint:
-    # per-branch column pruning makes the three copies non-identical, so
-    # exchange reuse does NOT fire (verified in the plan) and without the
-    # checkpoint the upstream feature derivation still executes three
-    # times. The checkpoint is one pass over the unique-feature table —
-    # at corpus scale the same cost class as the shuffle the groupBy
-    # already pays. (Duplicate ids carry identical geometry by contract,
-    # so first() is exact.)
-    g = (f.groupBy("__fid")
-         .agg(F.count(F.lit(1)).alias("__mult"),
-              F.first("__gt").alias("__gt"),
-              F.first("__fxs").alias("__fxs"),
-              F.first("__fys").alias("__fys"))
-         .localCheckpoint())
+    # rows, multiplicity count), pinned once: per-branch column pruning
+    # makes the three copies non-identical, so exchange reuse does NOT
+    # fire (verified in the plan) and without the pin the upstream feature
+    # derivation still executes three times. The pin is one pass over the
+    # unique-feature table — at corpus scale the same cost class as the
+    # shuffle the groupBy already pays. (Duplicate ids carry identical
+    # geometry by contract, so first() is exact.)
+    g = session.pin(f.groupBy("__fid")
+                    .agg(F.count(F.lit(1)).alias("__mult"),
+                         F.first("__gt").alias("__gt"),
+                         F.first("__fxs").alias("__fxs"),
+                         F.first("__fys").alias("__fys")))
     fcov = _cover(
         g.withColumns({"__minx": F.array_min("__fxs"), "__maxx": F.array_max("__fxs"),
                        "__miny": F.array_min("__fys"), "__maxy": F.array_max("__fys")}),

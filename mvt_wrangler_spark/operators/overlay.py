@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import session
+
 # ---------------------------------------------------------------------------
 # exact predicates (shared column expressions)
 # ---------------------------------------------------------------------------
@@ -203,7 +205,7 @@ def ring_validity(rings: DataFrame, key_col: str = "gkey",
     # (5 parquet scans measured in q_ring_valid's plan). One materialized
     # pass of (key, xs, ys) rows; the 4 edge-explode re-derivations from
     # the pinned arrays are cheap codegen.
-    rings = rings.localCheckpoint(eager=True)
+    rings = session.pin(rings)
     edges = ring_edges(rings, key_col, xs_col, ys_col)
     k = cell_size.bit_length() - 1
     nonadj = ((F.col("eid_a") < F.col("eid_b"))

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import session
+
 
 def tile_stats(df: DataFrame, n_salt: int = 0, salt_col: str = "image_id",
                extra_aggs: dict | None = None) -> DataFrame:
@@ -52,19 +54,19 @@ def pyramid_rollup(base: DataFrame, base_z: int, min_z: int = 0) -> DataFrame:
     associative, so grouping base straight to each level equals the
     level-by-level chain bit for bit.
 
-    The base is materialized ONCE (localCheckpoint): the naive
+    The base is pinned ONCE (session.pin): the naive
     chain-then-union plan re-executes the expensive base aggregation once
     PER LEVEL (level k's union branch embeds k cascaded groupBys all the
     way down to the raw scan — 11 scans / 66 exchanges in the zoom-10
     contract query's physical plan), turning a log-depth pyramid into a
     quadratic one. base after its groupBy is bounded by 4^base_z rows
-    regardless of corpus size, so the checkpoint is cheap at any scale,
+    regardless of corpus size, so the pin is cheap at any scale,
     and every coarser level then derives from that bounded table in one
     explode + single aggregation (map-side combine collapses each
     partition to its distinct coarse keys before the one exchange).
     """
     agg_cols = [c for c in base.columns if c not in ("z", "x", "y")]
-    b = base.localCheckpoint()
+    b = session.pin(base)
     if min_z > base_z - 1:
         return b
     # ALL coarser levels in one explode + ONE groupBy instead of a groupBy
@@ -115,10 +117,10 @@ def morans_i(tiles: DataFrame, x_col: str = "x", y_col: str = "y",
 
     The tile table is referenced three times (global scalars, the neighbor
     explode, the join-back side); it is bounded by 4^z rows whatever the
-    corpus size, so it is materialized once (localCheckpoint) instead of
+    corpus size, so it is pinned once (session.pin) instead of
     re-running the upstream per-tile aggregation per reference.
     """
-    tiles = tiles.localCheckpoint()
+    tiles = session.pin(tiles)
     c = F.col(cnt_col)
     g = tiles.agg(
         F.count(F.lit(1)).alias("__n"),
@@ -179,7 +181,7 @@ def getis_ord_gi(tiles: DataFrame, x_col: str = "x", y_col: str = "y",
     Like morans_i, the (bounded, <= 4^z rows) tile table is materialized
     once — it feeds the scalars, the 9-offset explode, and the join back.
     """
-    tiles = tiles.localCheckpoint()
+    tiles = session.pin(tiles)
     c = F.col(cnt_col)
     g = tiles.agg(
         F.count(F.lit(1)).alias("__n"),

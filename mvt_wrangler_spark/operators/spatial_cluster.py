@@ -45,9 +45,9 @@ from math import isqrt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import session
 from .dedup import pair_clusters_with_corpus
 
-_STENCIL = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
 
 # packed cell id stride: coordinates are tile-local (< 2^31), so
 # cx * 2^31 + cy is collision-free and fits int64 for any cx < 2^32.
@@ -78,37 +78,6 @@ def _half_offsets(eps: int, c: int) -> list[tuple[int, int]]:
     return out
 
 
-def grid_cluster_pairs(pts: DataFrame, eps: int, id_col: str = "id",
-                       x_col: str = "px", y_col: str = "py") -> DataFrame:
-    """(id_a, id_b) pairs with id_a < id_b and distance² <= eps².
-
-    Point-level pair enumeration (eps-grid 9-stencil hash join + exact
-    refine). Kept as the explicit-pairs API and the small-scale oracle;
-    `grid_cluster` itself no longer materializes point pairs — dense data
-    makes this O(n · neighbors) output the bottleneck (measured 9.75M
-    pairs for 600k points at sf0.1)."""
-    cx = F.expr(f"{x_col} DIV {eps}")
-    cy = F.expr(f"{y_col} DIV {eps}")
-    a = pts.select(F.col(id_col).alias("id_a"), F.col(x_col).alias("__ax"),
-                   F.col(y_col).alias("__ay"), cx.alias("__cx"),
-                   cy.alias("__cy"))
-    # probe side: each point appears once per stencil cell it should meet
-    b = pts.select(F.col(id_col).alias("id_b"), F.col(x_col).alias("__bx"),
-                   F.col(y_col).alias("__by"), cx.alias("__bcx"),
-                   cy.alias("__bcy"))
-    offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                     for dx, dy in _STENCIL])
-    b = (b.withColumn("__o", F.explode(offs))
-         .select("id_b", "__bx", "__by",
-                 (F.col("__bcx") + F.col("__o.dx")).alias("__cx"),
-                 (F.col("__bcy") + F.col("__o.dy")).alias("__cy")))
-    d2 = ((F.col("__ax") - F.col("__bx")) * (F.col("__ax") - F.col("__bx"))
-          + (F.col("__ay") - F.col("__by")) * (F.col("__ay") - F.col("__by")))
-    return (a.join(b, on=["__cx", "__cy"])
-            .filter((F.col("id_a") < F.col("id_b")) & (d2 <= eps * eps))
-            .select("id_a", "id_b").distinct())
-
-
 def grid_cluster(pts: DataFrame, eps: int, id_col: str = "id",
                  x_col: str = "px", y_col: str = "py",
                  max_rounds: int = 50) -> DataFrame:
@@ -123,19 +92,18 @@ def grid_cluster(pts: DataFrame, eps: int, id_col: str = "id",
     # re-executes the upstream scan + cell math. Both are slim proxy
     # tables (q: id + 2 coords + 2 cells = ~40 B/row, one pass — the same
     # cost class as one shuffle of the input; cells: bounded by the
-    # occupied-cell count), so materialize each once per invocation.
-    q = pts.select(F.col(id_col).cast("long").alias("__id"),
-                   F.col(x_col).cast("long").alias("__x"),
-                   F.col(y_col).cast("long").alias("__y"),
-                   F.expr(f"{x_col} DIV {c}").cast("long").alias("__cx"),
-                   F.expr(f"{y_col} DIV {c}").cast("long").alias("__cy")) \
-        .localCheckpoint()
-    cells = (q.groupBy("__cx", "__cy")
-             .agg(F.min("__x").alias("__minx"), F.max("__x").alias("__maxx"),
-                  F.min("__y").alias("__miny"), F.max("__y").alias("__maxy"))
-             .withColumn("__cell",
-                         F.col("__cx") * F.lit(_PACK) + F.col("__cy"))
-             .localCheckpoint())
+    # occupied-cell count), so pin each once per invocation.
+    q = session.pin(pts.select(
+        F.col(id_col).cast("long").alias("__id"),
+        F.col(x_col).cast("long").alias("__x"),
+        F.col(y_col).cast("long").alias("__y"),
+        F.expr(f"{x_col} DIV {c}").cast("long").alias("__cx"),
+        F.expr(f"{y_col} DIV {c}").cast("long").alias("__cy")))
+    cells = session.pin(
+        q.groupBy("__cx", "__cy")
+        .agg(F.min("__x").alias("__minx"), F.max("__x").alias("__maxx"),
+             F.min("__y").alias("__miny"), F.max("__y").alias("__maxy"))
+        .withColumn("__cell", F.col("__cx") * F.lit(_PACK) + F.col("__cy")))
 
     offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
                      for dx, dy in _half_offsets(eps, c)])

@@ -393,8 +393,7 @@ VALUE_STRUCT_DDL = "struct<t:int,s:string,i:bigint,f:double,fs:string,b:boolean>
 FEATURE_SCHEMA_TYPED = ("z int, x bigint, y bigint, tile_id bigint, "
                         + _FEATURE_COLS.format(tags=VALUE_STRUCT_DDL))
 
-def decode_tiles(tiles: DataFrame, typed: bool = False,
-                 vectorized: bool = True) -> DataFrame:
+def decode_tiles(tiles: DataFrame, typed: bool = False) -> DataFrame:
     """Inverse of encode_tiles: MVT blobs -> one row per feature (the S2+S3
     READ path: the engine consumes archives it — or any MVT writer — wrote,
     which closes the reference's decode -> transform -> re-encode loop,
@@ -409,12 +408,11 @@ def decode_tiles(tiles: DataFrame, typed: bool = False,
     stream order, ring_lens the per-ring vertex counts (holes and Multi*
     parts round-trip — spec 4.3.4.4/4.3.4.5).
 
-    vectorized=True (default) runs mapInArrow: one numpy varint parse per
-    Arrow batch, pointer-jumped field/command walks, Arrow-native Map/List
-    output (functions/mvt_np.py) — no per-feature Python objects anywhere.
+    One mapInArrow pass: one numpy varint parse per Arrow batch,
+    pointer-jumped field/command walks, Arrow-native Map/List output
+    (functions/mvt_np.py) — no per-feature Python objects anywhere.
     Batches outside the pure-varint contract fall back to the scalar
-    flattener automatically. vectorized=False forces the scalar twin
-    end-to-end (the pytest cross-check, and the round-2 behavior)."""
+    flattener automatically."""
     from ..functions import mvt_np
 
     schema = FEATURE_SCHEMA_TYPED if typed else FEATURE_SCHEMA
@@ -425,8 +423,6 @@ def decode_tiles(tiles: DataFrame, typed: bool = False,
                 continue
             blobs = batch.column("data").to_pylist()
             try:
-                if not vectorized:
-                    raise mvt_np.VarintFallback
                 flat = mvt_np.flatten_np(blobs)
             except mvt_np.VarintFallback:
                 flat = mvt_np.flatten_scalar(blobs)

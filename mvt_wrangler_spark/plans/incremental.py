@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import session
 from ..operators.dedup import minhash_band_buckets, pair_clusters
 from ..sources.catalog import SnapshotTable
 
@@ -80,10 +81,10 @@ def incremental_neardup_ingest(
     # would re-run the minhash UDF per consumer
     doc_id = F.col(id_col).cast("long")
     seen = Observation()
-    pinned = (batch.withColumn("__buckets", minhash_band_buckets(
-                  F.col(text_col), num_hashes, bands_n, shingle))
-              .observe(seen, F.count(F.lit(1)).alias("rows"))
-              .localCheckpoint(eager=True))
+    pinned = session.pin(
+        batch.withColumn("__buckets", minhash_band_buckets(
+            F.col(text_col), num_hashes, bands_n, shingle))
+        .observe(seen, F.count(F.lit(1)).alias("rows")))
 
     # star edges: each bucket's minimum over batch members and committed
     # reps (committed members of a bucket are already clustered under its
@@ -101,14 +102,14 @@ def incremental_neardup_ingest(
     clusters = pair_clusters(edges)  # (member_id, cluster_rep, size)
     # every batch row with its keeper, pinned once: both commits read it
     kept = Observation()
-    ruled = (pinned
-             .join(clusters.select(F.col("member_id").alias("__member"),
-                                   F.col("cluster_rep").alias("__rep")),
-                   doc_id == F.col("__member"), "left")
-             .withColumn("__rep", F.coalesce("__rep", doc_id))
-             .drop("__member")
-             .observe(kept, F.count_if(doc_id == F.col("__rep")).alias("kept"))
-             .localCheckpoint(eager=True))
+    ruled = session.pin(
+        pinned
+        .join(clusters.select(F.col("member_id").alias("__member"),
+                              F.col("cluster_rep").alias("__rep")),
+              doc_id == F.col("__member"), "left")
+        .withColumn("__rep", F.coalesce("__rep", doc_id))
+        .drop("__member")
+        .observe(kept, F.count_if(doc_id == F.col("__rep")).alias("kept")))
 
     survivors = ruled.filter(doc_id == F.col("__rep")).drop("__buckets", "__rep")
     docs_snap = docs.write_snapshot(survivors, job_id=job_id, append=True,

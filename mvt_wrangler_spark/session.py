@@ -1,16 +1,19 @@
-"""SparkSession builder with the engine's scale-oriented defaults.
+"""SparkSession builder with the engine's scale-oriented defaults, and the
+engine's one pin policy.
 
 The reference's runtime knobs (num_cpus readers + rayon pool, bounded
 channels — /root/reference/src/processing.rs:12,24) map in Spark to
 parallelism + AQE configs; we set them once here so every entry point
 (tests, bench, CLI, driver hooks) runs with the same physical profile.
+Every frame the engine materializes goes through `pin`, so how a frame is
+pinned is decided here too.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -25,6 +28,8 @@ def get_spark(
     shuffle partitions, N = $SPARK_GRAFT_CPUS or the cores this process may
     run on. The other configs are what we would ship to a 1000-executor
     cluster: AQE coalescing/skew-join on, Arrow for pandas UDF transport.
+    The driver heap is 2 GB; `extra={"spark.driver.memory": ...}` or
+    spark-submit's `--driver-memory` sets another.
     """
     cores = len(os.sched_getaffinity(0))
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(cores)
@@ -59,8 +64,42 @@ def get_spark(
             "SPARK_GRAFT_LOCAL_DIR",
             "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else "/tmp"))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "2g")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize `df` once; the returned frame reads the stored rows.
+
+    The engine pins a frame that its plan reads more than once. Unpinned,
+    every reference re-runs the frame's whole upstream, Python UDF passes
+    included (each duplicated ArrowEvalPython node executes), and a
+    nondeterministic upstream (sampling, limit, range boundaries) can hand
+    different rows to different readers. In driver loops (pair_clusters,
+    knn rings, pagerank) the pin also cuts the lineage, so plans do not
+    compound round over round.
+
+    A local checkpoint, not persist(): the CacheManager matches cached data
+    by canonicalized plan, so a persisted frame would be silently reused by
+    the next invocation of the same query (cross-run result reuse), and
+    nothing would unpersist it. The checkpoint re-materializes per call.
+
+    Eager: the checkpoint job runs here, so an Observation attached just
+    before the pin (`pin(df.observe(obs, ...))`) is complete when pin
+    returns and costs no second job, and every reader sees the one
+    materialization. The price is that an operator that pins runs a Spark
+    job while its DataFrame is being built.
+
+    Caveats:
+      * the blocks have no replica and the lineage is cut: a lost executor
+        loses them, and jobs that read them fail instead of recomputing;
+      * storage grows with the width of the pinned frame. Most pins are
+        slim (id, key) proxies, but ring_validity pins whole (key, xs, ys)
+        coordinate arrays;
+      * the blocks are freed when the returned frame is garbage-collected,
+        not when its last reader is done (funnel pins one frame per step).
+    """
+    return df.localCheckpoint(eager=True)

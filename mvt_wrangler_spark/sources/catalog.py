@@ -62,6 +62,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import session
+
 
 _SPEC_UNSET = object()  # distinguishes "caller passed nothing" from any value
 
@@ -419,7 +421,7 @@ class SnapshotTable:
         # nondeterministic input plan (limit/sample/rand) would otherwise
         # delete one key set and insert another — silent row loss. The batch
         # is the INCREMENT (small), not the table, so materializing is cheap.
-        df = df.localCheckpoint(eager=True)
+        df = session.pin(df)
         # MERGE INTO semantics require a UNIQUE source key: two batch rows
         # sharing a key have no defined winner (Iceberg/Delta raise "multiple
         # source rows matched"), and silently inserting both would leave the

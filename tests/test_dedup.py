@@ -105,10 +105,6 @@ def test_minhash_hot_bucket_star_fallback(spark):
     tiny = spark.createDataFrame(rows[:20], "doc_id long, text string")
     assert D.minhash_lsh_candidates(tiny, max_bucket=1000).count() == 20 * 19 // 2
 
-    # round-2 behavior still available
-    dropped = D.minhash_lsh_candidates(docs, max_bucket=100, hot_fallback=False)
-    assert not any(r.id_a == 0 for r in dropped.collect())
-
 
 @pytest.mark.spark
 def test_minhash_and_simhash_similarity_behavior(spark):

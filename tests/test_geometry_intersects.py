@@ -94,6 +94,26 @@ def test_polygon_with_hole_linestring():
     assert not got[0] and got[1]
 
 
+def _segments_intersect(a1, a2, b1, b2) -> bool:
+    """Proper/improper 2-segment intersection (orientation test)."""
+
+    def orient(p, q, r):
+        return (q[0] - p[0]) * (r[1] - p[1]) - (q[1] - p[1]) * (r[0] - p[0])
+
+    def on_seg(p, q, r):
+        return min(p[0], q[0]) - 1e-12 <= r[0] <= max(p[0], q[0]) + 1e-12 and \
+               min(p[1], q[1]) - 1e-12 <= r[1] <= max(p[1], q[1]) + 1e-12
+
+    o1, o2 = orient(a1, a2, b1), orient(a1, a2, b2)
+    o3, o4 = orient(b1, b2, a1), orient(b1, b2, a2)
+    if ((o1 > 0) != (o2 > 0) and o1 != 0 and o2 != 0) and ((o3 > 0) != (o4 > 0) and o3 != 0 and o4 != 0):
+        return True
+    for (p, q, r, o) in ((a1, a2, b1, o1), (a1, a2, b2, o2), (b1, b2, a1, o3), (b1, b2, a2, o4)):
+        if o == 0 and on_seg(p, q, r):
+            return True
+    return False
+
+
 def _brute_intersects(gtype, rings, poly):
     """Independent scalar reference: feature (list of rings) vs filter
     polygon-with-holes `intersects` — per-vertex / per-edge Python loops
@@ -117,8 +137,8 @@ def _brute_intersects(gtype, rings, poly):
         for a, b in edges:
             for pring in [poly.exterior] + poly.holes:
                 for i in range(len(pring) - 1):
-                    if G._segments_intersect(np.array(a), np.array(b),
-                                             pring[i], pring[i + 1]):
+                    if _segments_intersect(np.array(a), np.array(b),
+                                           pring[i], pring[i + 1]):
                         return True
     # (3) filter exterior vertex inside the feature (even-odd over ALL rings)
     if is_poly:

@@ -7,6 +7,7 @@ through the shared session."""
 
 from __future__ import annotations
 
+import re
 import sys
 
 import pytest
@@ -93,20 +94,43 @@ PYTHON_PASS_BUDGET = [
 ]
 
 
+def _python_passes(plan: str) -> int:
+    """ArrowEvalPython nodes in a formatted plan: count the details-section
+    headers ("(N) ArrowEvalPython") so each physical node counts once."""
+    return len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M))
+
+
 @pytest.mark.spark
 @pytest.mark.parametrize("name,budget", PYTHON_PASS_BUDGET)
 def test_single_python_pass_shape(spark, name, budget):
-    import re
-
     import __spark_entry__ as e
 
     df = e.queries()[name](spark, SF_DIR)
-    plan = formatted_plan(df)
-    # count the details-section headers ("(N) ArrowEvalPython") so each
-    # physical node is counted exactly once
-    n = len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M))
+    n = _python_passes(formatted_plan(df))
     assert n <= budget, (
         f"{name}: {n} ArrowEvalPython nodes (budget {budget}) — a pinned "
-        f"input lost its localCheckpoint or a match UDF lost its "
+        f"input lost its session.pin or a match UDF lost its "
         f"asNondeterministic marker; every extra node re-executes the "
         f"whole Python pass")
+
+
+# The budget above reads the plan AFTER the pins, where a pinned frame is a
+# Scan ExistingRDD, so a Python pass duplicated inside the pinned subplan
+# would pass it. Here a recording pin keeps the plan each pin materializes.
+@pytest.mark.spark
+@pytest.mark.parametrize("name", ["cell_cover_join", "minhash_lsh"])
+def test_single_python_pass_under_each_pin(spark, monkeypatch, name):
+    import __spark_entry__ as e
+    from mvt_wrangler_spark import session
+
+    real_pin, plans = session.pin, []
+
+    def recording_pin(df):
+        plans.append(formatted_plan(df))
+        return real_pin(df)
+
+    monkeypatch.setattr(session, "pin", recording_pin)
+    e.queries()[name](spark, SF_DIR)
+    assert plans, f"{name}: no frame went through session.pin"
+    assert [_python_passes(p) for p in plans] == [1] * len(plans), (
+        f"{name}: every pinned frame must run its Python pass exactly once")

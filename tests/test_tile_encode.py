@@ -120,9 +120,10 @@ def test_encode_tiles_general_geometries_and_raw_compression(spark):
         assert is_gz == (comp == "gzip")
 
 
-def _mixed_archive_df(spark):
-    """Tiles DataFrame whose blobs carry typed values + multi-ring/Multi*
-    geometries (built straight from the wire-format builders)."""
+def _mixed_archive_rows():
+    """(z, x, y, tile_id, n_features, blob) tiles whose blobs carry typed
+    values + multi-ring/Multi* geometries (built straight from the
+    wire-format builders)."""
     import gzip as _gz
 
     from mvt_wrangler_spark.functions import mvt
@@ -145,23 +146,45 @@ def _mixed_archive_df(spark):
     blob2 = _gz.compress(mvt.encode_tile(
         [mvt.encode_layer("mix", keys, vals, [f_mls, f_mp]),
          mvt.encode_layer("other", ["k"], [-7], [f_other])]), 6, mtime=0)
+    return [(5, 1, 1, 100, 2, blob1), (5, 2, 2, 200, 2, blob2)]
+
+
+def _mixed_archive_df(spark):
+    """The _mixed_archive_rows tiles as a DataFrame."""
     return spark.createDataFrame(
-        [(5, 1, 1, 100, 2, bytearray(blob1)), (5, 2, 2, 200, 2, bytearray(blob2))],
+        [r[:5] + (bytearray(r[5]),) for r in _mixed_archive_rows()],
         "z int, x bigint, y bigint, tile_id bigint, n_features bigint, data binary")
 
 
-@pytest.mark.spark
-def test_decode_tiles_vectorized_matches_scalar(spark):
-    """The mapInArrow fast path and the scalar twin must agree row-for-row
-    on mixed geometries and typed values — both schemas."""
-    tiles = _mixed_archive_df(spark)
+def test_decode_tiles_vectorized_matches_scalar():
+    """decode_tiles' numpy flattener and the scalar flattener it falls back
+    to must agree on mixed geometries and typed values: the same flat
+    columns, and the same output batch under both schemas."""
+    import numpy as np
+    import pyarrow as pa
+
+    from mvt_wrangler_spark.functions import mvt_np
+
+    rows = _mixed_archive_rows()
+    batch = pa.RecordBatch.from_pydict(
+        {"z": pa.array([r[0] for r in rows], pa.int32()),
+         "x": pa.array([r[1] for r in rows], pa.int64()),
+         "y": pa.array([r[2] for r in rows], pa.int64()),
+         "tile_id": pa.array([r[3] for r in rows], pa.int64()),
+         "data": pa.array([r[5] for r in rows], pa.binary())})
+    blobs = batch.column("data").to_pylist()
+    fast, slow = mvt_np.flatten_np(blobs), mvt_np.flatten_scalar(blobs)
+    assert fast.keys() == slow.keys()
+    for k, va in fast.items():
+        if isinstance(va, np.ndarray):
+            assert np.array_equal(va, slow[k]), k
+        else:
+            assert list(va) == list(slow[k]), k
     for typed in (False, True):
-        fast = TE.decode_tiles(tiles, typed=typed).orderBy("tile_id", "feature_id")
-        slow = TE.decode_tiles(tiles, typed=typed, vectorized=False) \
-            .orderBy("tile_id", "feature_id")
-        a, b = fast.collect(), slow.collect()
-        assert a == b
-        assert len(a) == 5
+        a = mvt_np.to_record_batch(fast, batch, typed)
+        b = mvt_np.to_record_batch(slow, batch, typed)
+        assert a.equals(b)
+        assert a.num_rows == 5
 
 
 @pytest.mark.spark
