@@ -17,6 +17,30 @@ from pyspark.sql import functions as F
 Z = 10  # zoom used by the oracle-checked tiling queries
 
 
+# ---------------------------------------------------------------------------
+# S2 parent arithmetic for cell_cover_join and its oracle. Faces 4-5 set
+# bit 63, so cell ids are NEGATIVE int64s: shift/add forms overflow under
+# ANSI; the canonical (id & -lsb) | lsb form is two's-complement safe and
+# matches the uint64 numpy kernel bit-for-bit.
+# ---------------------------------------------------------------------------
+
+def s2_parent_column(cell, level: int):
+    """Parent cell at `level` (must be coarser than the cell's own level):
+    (id & -lsb) | lsb, the canonical S2 parent arithmetic."""
+    from mvt_wrangler_spark.functions.cells import _MAX_LEVEL
+
+    lsb = 1 << (2 * (_MAX_LEVEL - level))
+    return cell.bitwiseAND(F.lit(-lsb)).bitwiseOR(F.lit(lsb))
+
+
+def s2_parent_sql(cell: str, level: int) -> str:
+    """DuckDB twin of s2_parent_column."""
+    from mvt_wrangler_spark.functions.cells import _MAX_LEVEL
+
+    lsb = 1 << (2 * (_MAX_LEVEL - level))
+    return f"(({cell} & {-lsb}) | {lsb})"
+
+
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mvt_wrangler_spark.sources.points import synth_points
 
@@ -171,30 +195,6 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return J.broadcast_pip_join(spark, pts.select("id", "lon", "lat"), polys).select("id", "admin_id")
 
 
-def q_pip_join_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same result contract as pip_join, via the NON-broadcast scale path
-    (operators/joins.py partitioned_pip_join): polygon tile-cover equi-join +
-    salted cogrouped exact refine — the regime for polygon layers too large
-    to broadcast (reference only ever broadcasts its filter geometries,
-    data.rs:189-230; this is the 100 TB generalization). The SAME half-plane
-    DuckDB oracle as pip_join checks it, so broadcast and partitioned paths
-    are pinned to one contract."""
-    import numpy as np
-
-    from mvt_wrangler_spark.operators import joins as J
-    from mvt_wrangler_spark.sources.points import PIP_POLYGONS
-
-    pts = _points(spark, sf_dir)
-    rows = [(pid, [np.asarray(v, dtype=float)[:, 0].tolist()],
-                  [np.asarray(v, dtype=float)[:, 1].tolist()])
-            for pid, v in PIP_POLYGONS]
-    polys = spark.createDataFrame(
-        rows, "admin_id string, xs array<array<double>>, ys array<array<double>>")
-    return J.partitioned_pip_join(
-        pts.select("id", "lon", "lat"), polys, z=6,
-        poly_id_col="admin_id", n_salt=4).select("id", "admin_id")
-
-
 def q_intersects_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact geometry x geometry intersects join (J2 generalized): mixed
     Point/LineString/Polygon features vs broadcast admin polygons
@@ -209,28 +209,6 @@ def q_intersects_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = synth_geoms(spark, sf_dir)
     polys = [(pid, G.Polygon(np.array(v))) for pid, v in PIP_POLYGONS]
     return J.broadcast_intersects_join(spark, feats, polys).select(
-        "id", "geom_type", "admin_id")
-
-
-def q_intersects_join_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same result contract as intersects_join via the NON-broadcast path
-    (operators/joins.py partitioned_intersects_join): both-side tile covers,
-    slim pair dedup before arrays move, salted cogrouped exact refine.
-    Shares intersects_join's sign-product DuckDB oracle, pinning broadcast
-    and partitioned intersects to one contract."""
-    import numpy as np
-
-    from mvt_wrangler_spark.operators import joins as J
-    from mvt_wrangler_spark.sources.points import PIP_POLYGONS, synth_geoms
-
-    feats = synth_geoms(spark, sf_dir)
-    rows = [(pid, [np.asarray(v, dtype=float)[:, 0].tolist()],
-                  [np.asarray(v, dtype=float)[:, 1].tolist()])
-            for pid, v in PIP_POLYGONS]
-    polys = spark.createDataFrame(
-        rows, "admin_id string, xs array<array<double>>, ys array<array<double>>")
-    return J.partitioned_intersects_join(
-        feats, polys, z=5, poly_id_col="admin_id", n_salt=16).select(
         "id", "geom_type", "admin_id")
 
 
@@ -261,21 +239,9 @@ def q_type_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return surv.select("id", "geom_type")
 
 
-def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mvt_wrangler_spark.operators import joins as J
-
-    pts = _points(spark, sf_dir)
-    queries = spark.createDataFrame(
-        [("q0", 139.76, 35.68), ("q1", -74.0, 40.71), ("q2", 10.5, -20.25)],
-        "query_id string, lon double, lat double",
-    )
-    out = J.knn_join(pts.withColumn("id", F.col("id").cast("string")), queries, k=4, data_id="id")
-    return out.select("query_id", "rank", F.col("neighbor_id").cast("long").alias("neighbor_id"), "dist2")
-
-
 def q_knn_join_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both-sides-distributed kNN (salted cell join, expanding-ring rounds) —
-    globally EXACT, so it shares the brute-force oracle with knn_join."""
+    globally EXACT, so the oracle is a brute-force top-k over all points."""
     from mvt_wrangler_spark.operators import joins as J
 
     pts = _points(spark, sf_dir)
@@ -395,18 +361,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         F.col("value").alias("purchase_value"),
         F.col("v_r").alias("last_click_value"))
-
-
-def q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1h event-time window agg (streaming-shaped, batch-checked)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("window_start"),
-                   F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(F.col("value").cast("decimal(20,6)")).cast("double").alias("total"))
-        .select("event_type", "window_start", "n", "total")
-    )
 
 
 def q_docs_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -626,41 +580,6 @@ def q_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("__cells.h3_cell").alias("h3_cell"))
 
 
-def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversion funnel view -> click -> purchase per user: greedy
-    first-match walk (earliest view, earliest click strictly after it,
-    earliest purchase after that) with int64-packed (ts, event_id) order
-    keys — one min-aggregate + one user-key join per step
-    (operators/events.py)."""
-    from mvt_wrangler_spark.operators.events import funnel
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          # sparsify: the synthetic fixture gives every user ~13 events per
-          # type, so the unfiltered funnel converts 100% — 1/7 of events
-          # leaves ~2 per (user, type) and all reached levels occur
-          .filter(F.pmod("event_id", F.lit(7)) == 0))
-    return funnel(ev, ["view", "click", "purchase"])
-
-
-def q_od_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Origin-destination tile flows: consecutive-event tile transitions
-    per user (events located by a deterministic event-id hash, tiles via
-    the real z4 mercator math, packed x*16+y), counted per (from, to).
-    One user-key lag window ordered by the total (ts, event_id) order +
-    one groupBy — operators/events.od_matrix."""
-    from mvt_wrangler_spark.functions import tiling
-    from mvt_wrangler_spark.operators.events import od_matrix
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    eid, uid = F.col("event_id"), F.col("user_id")
-    lon = (F.pmod(eid * 7919 + uid, F.lit(360000)) - 180000).cast("double") / 1000.0
-    lat = (F.pmod(eid * 104729 + uid, F.lit(170000)) - 85000).cast("double") / 1000.0
-    located = ev.select(
-        "user_id", "ts", "event_id",
-        (tiling.tile_x(lon, 4) * 16 + tiling.tile_y(lat, 4)).alias("tile"))
-    return od_matrix(located)
-
-
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30 min) — lag + cumulative-sum windows."""
     from pyspark.sql import Window
@@ -692,19 +611,6 @@ def q_distinct_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = tiling.assign_tiles(_points(spark, sf_dir), z=6, with_local=False)
     return pts.groupBy("x", "y").agg(F.countDistinct("phash").alias("n_phash"))
-
-
-def q_topk_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 events by value per type (ranking window)."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("event_type").orderBy(F.col("value").desc(), F.col("event_id").asc())
-    return (
-        ev.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("event_type", "rank", "event_id", "value")
-    )
 
 
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1430,39 +1336,6 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmeans_assign(emb, k=4, n_iter=2, quant=100)
 
 
-def q_bytes_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-hash exact dedup over RAW BYTES — the first dedup any image
-    pipeline runs. Images whose ids share a seed (id//106 over the id%53==11
-    selection) produce byte-identical raw blobs; groups key on
-    md5(lower(hex(bytes))) so the oracle can rebuild the exact byte stream
-    from the pixel formula (printf %02x per byte in row-major order) and md5
-    the same string — binary content hashing under the value gate."""
-    import numpy as np
-    import pandas as pd
-
-    W, H = 8, 6
-    ids = _spread(_points(spark, sf_dir).select("id")
-                  .filter(F.pmod("id", F.lit(53)) == 11).distinct())
-
-    def gen(pdfs):
-        for pdf in pdfs:
-            rows = {"id": [], "bytes": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                i = int(i)
-                seed = i // 106
-                px = ((seed * 37 + yy * 11 + xx * 17 + cc * 23) % 256).astype(np.uint8)
-                rows["id"].append(i)
-                rows["bytes"].append(px.tobytes())
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(gen, "id long, bytes binary")
-    return (imgs.select("id", F.md5(F.lower(F.hex("bytes"))).alias("content_hash"))
-            .groupBy("content_hash")
-            .agg(F.count(F.lit(1)).alias("n_copies"),
-                 F.min("id").alias("keeper_id")))
-
-
 def q_tile_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT quantiles of the z8 tile-size distribution — the skew diagnosis
     every hot-tile salting decision starts from. Quantile = value at rank
@@ -1484,33 +1357,6 @@ def q_tile_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (targets.join(ranked, targets["target"] == ranked["rn"])
             .select(F.col("q").cast("int").alias("q"),
                     F.col("cnt").cast("long").alias("tile_cnt")))
-
-
-def q_revenue_by_tile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classic analytical join co-existing with the spatial ops: customers
-    become deterministic points, orders aggregate to per-customer revenue
-    (DECIMAL(18,2) sums — exact, order-independent, hash-stable across
-    engines), the two shuffle-join on custkey, and the result rolls up per
-    z5 tile. Customers without orders count with zero revenue."""
-    from mvt_wrangler_spark.functions import tiling
-
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ck = F.col("c_custkey")
-    cpts = cust.select(
-        ck.alias("custkey"),
-        ((F.pmod(ck * 7919, F.lit(360000)) - 180000).cast("double") / 1000.0).alias("lon"),
-        ((F.pmod(ck * 104729, F.lit(170000)) - 85000).cast("double") / 1000.0).alias("lat"))
-    assigned = tiling.assign_tiles(cpts, z=5, with_local=False)
-    rev = orders.groupBy("o_custkey").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev_d"),
-        F.count(F.lit(1)).alias("n_ord"))
-    j = assigned.join(rev, assigned["custkey"] == rev["o_custkey"], "left")
-    return j.groupBy("z", "x", "y").agg(
-        F.sum(F.coalesce(F.col("rev_d"), F.lit(0).cast("decimal(18,2)")))
-        .cast("double").alias("revenue"),
-        F.count(F.lit(1)).alias("n_cust"),
-        F.sum(F.coalesce(F.col("n_ord"), F.lit(0))).cast("long").alias("n_orders"))
 
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1647,7 +1493,7 @@ def q_cell_cover_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         C.cells_from_xyz_column(F.col("x"), F.col("y"), F.col("z"),
                                 level=12, res=7))
     d = d.select("id", F.col("__cells.s2_cell").alias("s2"))
-    d = d.withColumn("p5", C.s2_parent_column(F.col("s2"), 5))
+    d = d.withColumn("p5", s2_parent_column(F.col("s2"), 5))
     # pin the slim (id, s2, p5) proxy: un-pinned, the cell-encode UDF ran
     # FOUR times — the region (build) side and the probe side each embed the
     # whole encode chain, and on each side the inferred isnotnull(p5) join
@@ -2043,64 +1889,6 @@ def q_dwithin_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dwithin_join(left, right, eps=500)
 
 
-def q_ring_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OGC-style ring simplicity check over the geom_measures rings: count
-    proper crossings + improper touches between NON-ADJACENT edges of each
-    ring (a bowtie or a vertex-on-edge spike makes even-odd vs winding
-    fills disagree — simplifiers must drop/repair before encoding). Exact
-    int64 orientation tests; candidate pairs come from a per-(ring, cell)
-    grid-bucket self-join instead of O(k²) all-pairs — see
-    operators/overlay.py. DuckDB twin brute-forces the pairs with the same
-    integer predicate, so the bucketing itself is what's under test."""
-    from mvt_wrangler_spark.operators.overlay import ring_validity
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ok, ln = F.col("l_orderkey"), F.col("l_linenumber").cast("long")
-    v = li.select(
-        ok.alias("gkey"), ln.alias("vord"),
-        F.pmod(ok * 7919 + ln * 104729, F.lit(4096)).alias("vx"),
-        F.pmod(ok * 104729 + ln * 7919, F.lit(4096)).alias("vy"))
-    rings = (v.groupBy("gkey")
-             .agg(F.array_sort(F.collect_list(F.struct("vord", "vx", "vy")))
-                  .alias("vs"))
-             .filter(F.size("vs") >= 3)
-             .select("gkey", F.col("vs.vx").alias("xs"),
-                     F.col("vs.vy").alias("ys")))
-    return ring_validity(rings)
-
-
-def q_line_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Line/line overlay join: proper crossings between two layers of short
-    integer segments (road×road grade crossings), aggregated to crossing
-    counts per left segment. The join is cell-bucketed (cell 64 = max
-    segment extent, so each bbox covers <= 4 cells) + distinct + exact
-    integer orientation test — never an all-pairs shape. Segments are
-    synthesized from lineitem keys: anchor = hash mod 4096, endpoint =
-    anchor + (hash mod 129 - 64) clamped to the tile box; layers are the
-    id mod 16 == 2 / == 11 slices (disjoint (orderkey parity, linenumber)
-    classes) to keep the oracle's pair volume bounded. The sf0.001 lattice
-    is mutually avoiding (0 crossings); sf0.01 has ~2.3k."""
-    from mvt_wrangler_spark.operators.overlay import segment_cross_join
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ok, ln = F.col("l_orderkey"), F.col("l_linenumber").cast("long")
-    sid = (ok * 8 + ln).alias("id")
-    ax = F.pmod(ok * 7919 + ln * 104729, F.lit(4096))
-    ay = F.pmod(ok * 104729 + ln * 7919, F.lit(4096))
-    bx = F.greatest(F.lit(0).cast("long"), F.least(
-        F.lit(4095).cast("long"),
-        ax + F.pmod(ok * 131 + ln * 7919, F.lit(129)) - 64))
-    by = F.greatest(F.lit(0).cast("long"), F.least(
-        F.lit(4095).cast("long"),
-        ay + F.pmod(ok * 52379 + ln * 31337, F.lit(129)) - 64))
-    segs = li.select(sid, ax.alias("ax"), ay.alias("ay"),
-                     bx.alias("bx"), by.alias("by"))
-    a = segs.filter(F.pmod(F.col("id"), F.lit(16)) == 2)
-    b = segs.filter(F.pmod(F.col("id"), F.lit(16)) == 11)
-    x = segment_cross_join(a, b, cell_size=64)
-    return x.groupBy("a_id").agg(F.count("*").alias("n_cross"))
-
-
 def q_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE-style column profiling of the orders table (row/null/exact
     distinct counts + min/max) in ONE aggregate pass, exploded to
@@ -2161,15 +1949,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tile_shards": q_tile_shards,
         "spatial_cluster": q_spatial_cluster,
         "dataset_split": q_dataset_split,
-        "ring_valid": q_ring_valid,
-        "line_cross": q_line_cross,
         "boilerplate": q_boilerplate,
         "dwithin_join": q_dwithin_join,
         "tfidf_topk": q_tfidf_topk,
         "winding": q_winding,
         "pagerank": q_pagerank,
-        "funnel": q_funnel,
-        "od_matrix": q_od_matrix,
         "dedup_safe_split": q_dedup_safe_split,
         "profile": q_profile,
         "phash_neardup": q_phash_neardup,
@@ -2178,8 +1962,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "image_ahash_neardup": q_image_ahash_neardup,
         "neardup_clusters": q_neardup_clusters,
         "tile_quantiles": q_tile_quantiles,
-        "revenue_by_tile": q_revenue_by_tile,
-        "bytes_dedup": q_bytes_dedup,
         "tile_encode": q_tile_encode,
         "simhash": q_simhash,
         "doc_fingerprint": q_doc_fingerprint,
@@ -2198,17 +1980,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rtree_pack": q_rtree_pack,
         "rtree_probe": q_rtree_probe,
         "pip_join": q_pip_join,
-        "pip_join_partitioned": q_pip_join_partitioned,
-        "intersects_join_partitioned": q_intersects_join_partitioned,
         "intersects_join": q_intersects_join,
         "type_filter": q_type_filter,
-        "knn_join": q_knn_join,
         "knn_join_cells": q_knn_join_cells,
         "phash_dedup": q_phash_dedup,
         "pipeline_e2e": q_pipeline_e2e,
         "tag_filter": q_tag_filter,
         "expr_filter": q_expr_filter,
-        "events_window": q_events_window,
         "asof_join": q_asof_join,
         "interval_join": q_interval_join,
         "docs_exact_dedup": q_docs_exact_dedup,
@@ -2229,7 +2007,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sessionize": q_sessionize,
         "quality_score": q_quality_score,
         "distinct_phash": q_distinct_phash,
-        "topk_events": q_topk_events,
         "embed_neardup": q_embed_neardup,
         "embed_neardup_lsh": q_embed_neardup_lsh,
         "zonal_stats": q_zonal_stats,
@@ -2527,13 +2304,6 @@ FROM __l ASOF LEFT JOIN __r
   ON __l.user_id = __r.user_id AND __l.ts >= __r.ts
 """
 
-    events_window = """
-SELECT event_type, date_trunc('hour', ts) AS window_start,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total
-FROM events GROUP BY 1, 2
-"""
-
     docs_dedup = """
 SELECT doc_id FROM (
   SELECT doc_id, row_number() OVER (PARTITION BY text ORDER BY doc_id ASC) AS rn
@@ -2758,13 +2528,6 @@ FROM t
         + "SELECT x, y, CAST(count(DISTINCT phash) AS BIGINT) AS n_phash FROM __xy GROUP BY 1, 2"
     )
 
-    topk_events = """
-SELECT event_type, CAST(rank AS INT) AS rank, event_id, value FROM (
-  SELECT event_type, event_id, value,
-         row_number() OVER (PARTITION BY event_type ORDER BY value DESC, event_id ASC) AS rank
-  FROM events) WHERE rank <= 3
-"""
-
     embed_neardup = """
 WITH e AS (SELECT vec_id AS id,
                   list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 100) AS BIGINT)) AS q
@@ -2938,42 +2701,8 @@ WHERE r.rn = (q.q * __n.n + 99) // 100
     # revenue by tile: DECIMAL(18,2) sums are exact and order-independent in
     # both engines (the double-sum nondeterminism trap), customers without
     # orders keep zero revenue via the left join
-    revenue_by_tile = f"""
-WITH __c AS (
-  SELECT c_custkey AS custkey,
-         CAST((c_custkey*7919 % 360000 + 360000) % 360000 - 180000 AS DOUBLE) / 1000.0 AS lon,
-         CAST((c_custkey*104729 % 170000 + 170000) % 170000 - 85000 AS DOUBLE) / 1000.0 AS lat
-  FROM customer),
-__cxy AS (SELECT custkey, CAST(5 AS INT) AS z,
-                 {tile_x_sql('lon', 5)} AS x, {tile_y_sql('lat', 5)} AS y FROM __c),
-__rev AS (SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev_d,
-                 count(*) AS n_ord
-          FROM orders GROUP BY 1)
-SELECT z, x, y,
-       CAST(sum(coalesce(rev_d, 0)) AS DOUBLE) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_cust,
-       CAST(sum(coalesce(n_ord, 0)) AS BIGINT) AS n_orders
-FROM __cxy LEFT JOIN __rev ON custkey = o_custkey
-GROUP BY 1, 2, 3
-"""
-
     # content-hash dedup: rebuild the exact raw byte stream from the pixel
     # formula (row-major %02x hex), md5 the same lowercase-hex string
-    bytes_dedup = f"""
-WITH __pts AS ({POINTS_SQL}),
-__im AS (SELECT DISTINCT id, id // 106 AS seed FROM __pts WHERE id % 53 = 11),
-__px AS (
-  SELECT id, i.i AS i, j.j AS j, c.c AS c,
-         (seed*37 + i.i*11 + j.j*17 + c.c*23) % 256 AS v
-  FROM __im, generate_series(0, 5) i(i), generate_series(0, 7) j(j),
-       generate_series(0, 2) c(c)),
-__hx AS (SELECT id, md5(string_agg(printf('%02x', v), '' ORDER BY i, j, c)) AS content_hash
-         FROM __px GROUP BY id)
-SELECT content_hash, CAST(count(*) AS BIGINT) AS n_copies,
-       CAST(min(id) AS BIGINT) AS keeper_id
-FROM __hx GROUP BY 1
-"""
-
     # phash near-dup: same integer phash synthesis, then the band/join/refine
     # restated by phash_hamming_sql — bit-identical candidate and refine path
     from mvt_wrangler_spark.operators.dedup import phash_hamming_sql
@@ -3177,7 +2906,6 @@ SELECT gkey, CAST(sgn AS INT) AS sign_before, revd = 1 AS was_reversed,
 FROM __r GROUP BY gkey, sgn, revd
 """
 
-    from mvt_wrangler_spark.functions.cells import s2_parent_sql
 
     cover_ctes, cover_last, cover_s2 = s2_cell_sql(level=12, base="__xyz2")
     cell_cover_join = (
@@ -3306,24 +3034,6 @@ SELECT doc_id,
 FROM documents
 """
 
-    from mvt_wrangler_spark.operators.events import funnel_sql
-
-    funnel_sql_str = funnel_sql(
-        "(SELECT * FROM events WHERE ((event_id % 7) + 7) % 7 = 0)",
-        ["view", "click", "purchase"])
-
-    from mvt_wrangler_spark.operators.events import od_matrix_sql
-
-    _od_lon = ("(CAST(((event_id*7919 + user_id) % 360000 + 360000) % 360000"
-               " - 180000 AS DOUBLE) / 1000.0)")
-    _od_lat = ("(CAST(((event_id*104729 + user_id) % 170000 + 170000) % 170000"
-               " - 85000 AS DOUBLE) / 1000.0)")
-    od_src = f"""
-SELECT user_id, ts, event_id,
-       {tile_x_sql(_od_lon, 4)}*16 + {tile_y_sql(_od_lat, 4)} AS tile
-FROM events"""
-    od_matrix_sql_str = od_matrix_sql(od_src)
-
     from mvt_wrangler_spark.operators.graph import pagerank_int_sql
 
     _pr_edges = """
@@ -3344,86 +3054,6 @@ FROM lineitem
 WHERE ((l_orderkey + l_linenumber) % 6 + 6) % 6 = {k6}"""
 
     dwithin_sql_str = dwithin_join_sql(_dw_src(3), _dw_src(4), eps=500)
-
-    from mvt_wrangler_spark.operators.overlay import (
-        FLAGS_SQL,
-        PROPER_SQL,
-        touch_sql,
-    )
-
-    # brute-force non-adjacent pair enumeration (no cell bucketing — the
-    # bucketed Spark plan is exactly what's under test), same int64
-    # orientation polynomials as operators/overlay.py.
-    ring_valid = f"""
-WITH __v AS (
-  SELECT CAST(l_orderkey AS BIGINT) AS gkey,
-         CAST(l_linenumber AS BIGINT) AS vord,
-         ((l_orderkey*7919 + CAST(l_linenumber AS BIGINT)*104729) % 4096 + 4096) % 4096 AS vx,
-         ((l_orderkey*104729 + CAST(l_linenumber AS BIGINT)*7919) % 4096 + 4096) % 4096 AS vy
-  FROM lineitem),
-__g AS (SELECT gkey, count(*) AS n FROM __v GROUP BY gkey HAVING count(*) >= 3),
-__e AS (
-  SELECT v.gkey,
-         CAST(row_number() OVER w - 1 AS BIGINT) AS eid,
-         vx AS ax, vy AS ay,
-         coalesce(lead(vx) OVER w, first_value(vx) OVER wf) AS bx,
-         coalesce(lead(vy) OVER w, first_value(vy) OVER wf) AS by
-  FROM __v v JOIN __g USING (gkey)
-  WINDOW w AS (PARTITION BY v.gkey ORDER BY vord),
-         wf AS (PARTITION BY v.gkey ORDER BY vord
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)),
-__p AS (
-  SELECT a.gkey, a.ax AS p_ax, a.ay AS p_ay, a.bx AS p_bx, a.by AS p_by,
-         b.ax AS q_ax, b.ay AS q_ay, b.bx AS q_bx, b.by AS q_by,
-{FLAGS_SQL.format(p='a.', q='b.')}
-  FROM __e a JOIN __e b ON a.gkey = b.gkey AND a.eid < b.eid
-  JOIN __g g ON g.gkey = a.gkey
-  WHERE b.eid - a.eid <> 1 AND NOT (a.eid = 0 AND b.eid = g.n - 1)),
-__c AS (
-  SELECT gkey,
-         CAST(sum(CASE WHEN {PROPER_SQL} THEN 1 ELSE 0 END) AS BIGINT) AS n_cross,
-         CAST(sum(CASE WHEN {touch_sql('p_', 'q_')} THEN 1 ELSE 0 END) AS BIGINT) AS n_touch
-  FROM __p GROUP BY gkey)
-SELECT g.gkey, CAST(g.n AS BIGINT) AS n_edges,
-       coalesce(c.n_cross, 0) AS n_cross,
-       coalesce(c.n_touch, 0) AS n_touch,
-       (coalesce(c.n_cross, 0) + coalesce(c.n_touch, 0)) = 0 AS is_simple
-FROM __g g LEFT JOIN __c c USING (gkey)
-"""
-
-    # same cell-bucket candidate generation as the Spark plan (equality
-    # joins only — a brute n×m inequality join would be a nested loop in
-    # DuckDB), exact flags shared via FLAGS_SQL/PROPER_SQL.
-    line_cross = f"""
-WITH __s AS (
-  SELECT CAST(l_orderkey*8 + l_linenumber AS BIGINT) AS id,
-         ((l_orderkey*7919 + CAST(l_linenumber AS BIGINT)*104729) % 4096 + 4096) % 4096 AS ax,
-         ((l_orderkey*104729 + CAST(l_linenumber AS BIGINT)*7919) % 4096 + 4096) % 4096 AS ay,
-         greatest(0, least(4095,
-           ((l_orderkey*7919 + CAST(l_linenumber AS BIGINT)*104729) % 4096 + 4096) % 4096
-           + ((l_orderkey*131 + CAST(l_linenumber AS BIGINT)*7919) % 129 + 129) % 129 - 64)) AS bx,
-         greatest(0, least(4095,
-           ((l_orderkey*104729 + CAST(l_linenumber AS BIGINT)*7919) % 4096 + 4096) % 4096
-           + ((l_orderkey*52379 + CAST(l_linenumber AS BIGINT)*31337) % 129 + 129) % 129 - 64)) AS by
-  FROM lineitem),
-__a1 AS (SELECT *, unnest(generate_series(least(ax,bx)//64, greatest(ax,bx)//64)) AS cx
-         FROM __s WHERE id % 16 = 2),
-__a2 AS (SELECT *, unnest(generate_series(least(ay,by)//64, greatest(ay,by)//64)) AS cy
-         FROM __a1),
-__b1 AS (SELECT *, unnest(generate_series(least(ax,bx)//64, greatest(ax,bx)//64)) AS cx
-         FROM __s WHERE id % 16 = 11),
-__b2 AS (SELECT *, unnest(generate_series(least(ay,by)//64, greatest(ay,by)//64)) AS cy
-         FROM __b1),
-__pp AS (SELECT DISTINCT a.id AS a_id, b.id AS b_id,
-                a.ax AS p_ax, a.ay AS p_ay, a.bx AS p_bx, a.by AS p_by,
-                b.ax AS q_ax, b.ay AS q_ay, b.bx AS q_bx, b.by AS q_by
-         FROM __a2 a JOIN __b2 b ON a.cx = b.cx AND a.cy = b.cy),
-__f AS (SELECT a_id, b_id,
-{FLAGS_SQL.format(p='p_', q='q_')}
-        FROM __pp)
-SELECT a_id, CAST(count(*) AS BIGINT) AS n_cross
-FROM __f WHERE {PROPER_SQL} GROUP BY a_id
-"""
 
     from mvt_wrangler_spark.operators.simplify import simplify_sql
 
@@ -3500,21 +3130,16 @@ FROM {gh_last}"""
         "tile_shards": tile_shards,
         "spatial_cluster": spatial_cluster_sql,
         "dataset_split": dataset_split,
-        "ring_valid": ring_valid,
-        "line_cross": line_cross,
         "boilerplate": boilerplate_sql_str,
         "dwithin_join": dwithin_sql_str,
         "tfidf_topk": tfidf_sql_str,
         "winding": winding,
         "pagerank": pagerank_sql_str,
-        "funnel": funnel_sql_str,
-        "od_matrix": od_matrix_sql_str,
         "dedup_safe_split": dedup_safe_split,
         "profile": profile_sql_str,
         "sessionize": sessionize,
         "quality_score": quality,
         "distinct_phash": distinct_phash,
-        "topk_events": topk_events,
         "embed_neardup": embed_neardup,
         "tile_local": tile_local,
         "archive_roundtrip": archive_roundtrip,
@@ -3527,17 +3152,13 @@ FROM {gh_last}"""
         "rtree_pack": rtree_pack,
         "rtree_probe": rtree_probe,
         "pip_join": pip_join,
-        "pip_join_partitioned": pip_join,
-        "intersects_join_partitioned": intersects_join,
         "intersects_join": intersects_join,
         "type_filter": type_filter,
-        "knn_join": knn,
         "knn_join_cells": knn,
         "phash_dedup": dedup,
         "pipeline_e2e": pipeline,
         "tag_filter": tag_filter,
         "expr_filter": expr_filter,
-        "events_window": events_window,
         "asof_join": asof_join,
         "interval_join": interval_join,
         "docs_exact_dedup": docs_dedup,
@@ -3568,6 +3189,4 @@ FROM {gh_last}"""
         "image_curate_e2e": image_curate_e2e,
         "neardup_clusters": neardup_clusters,
         "tile_quantiles": tile_quantiles,
-        "revenue_by_tile": revenue_by_tile,
-        "bytes_dedup": bytes_dedup,
     }

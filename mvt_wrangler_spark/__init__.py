@@ -1,14 +1,23 @@
 """mvt_wrangler_spark — a PySpark-native spatial-join + tiling engine.
 
-Brand-new engine with the query/data-processing capabilities of
-KotobaMedia/mvt-wrangler (reference at /root/reference, Rust), re-expressed
-Spark-first: web-mercator z/x/y tiling, PMTiles Hilbert tile ids, H3/S2 cell
-encoding, broadcast point-in-polygon joins, the Maplibre-style expression DSL
-compiled to Catalyst Columns, per-tile feature/tag filtering, phash dedup,
-tile-pyramid rollup, skew salting, checkpoint/resume — all as DataFrame ops
-plus vectorized Arrow/pandas UDFs (no per-row Python).
+The query/data-processing path of KotobaMedia/mvt-wrangler (the Rust
+reference), re-expressed Spark-first: scan image/feature rows ->
+web-mercator z/x/y tiling with PMTiles Hilbert tile ids (plus optional H3/S2
+cells) -> broadcast point-in-polygon / intersects joins against filter
+geometries -> feature and tag filtering with the Maplibre-style expression
+DSL compiled to Catalyst Columns -> phash dedup -> per-tile stats and the
+tile-pyramid rollup -> ordered snapshot write, MVT re-encode and PMTiles
+export. Alongside it: salted kNN, raster zonal stats, and the incremental
+minhash near-dup ingest into snapshot tables. All DataFrame ops plus
+vectorized Arrow/pandas UDFs (no per-row Python).
 
-See SURVEY.md for the full reference->Spark operator mapping.
+Layout: `functions/` (column kernels: tiling, cells, geometry, MVT codec,
+geocodes, ring measures, metrics), `operators/` (the path's joins, filters,
+dedup, rollup, zonal and tile encode, plus operators that only the contract
+queries in `__spark_entry__.py` run: text and image curation, clipping,
+simplification, sampling, clustering, graph ranking, profiling, R-tree),
+`sources/` (catalog, PMTiles, synthetic inputs), `plans/` (the CLI pipeline
+and the incremental ingest), `cli.py`, `session.py`.
 """
 
 from . import _zipimport

@@ -177,33 +177,6 @@ def s2_cell_id(lat_deg, lng_deg, level: int = 12) -> np.ndarray:
     return s2_cell_from_xyz_np(x, y, z, level)
 
 
-def s2_parent(cell: np.ndarray, level: int) -> np.ndarray:
-    """Parent at `level` via lsb arithmetic: (id & -lsb) | lsb."""
-    c = np.asarray(cell).astype(np.uint64)
-    lsb = np.uint64(1) << np.uint64(2 * (_MAX_LEVEL - level))
-    neg = (~lsb + np.uint64(1))  # two's complement -lsb
-    return ((c & neg) | lsb).astype(np.int64)
-
-
-def s2_level(cell: int) -> int:
-    """Level from the sentinel lsb."""
-    c = int(cell) & ((1 << 64) - 1)
-    lsb = c & (-c) & ((1 << 64) - 1)
-    return _MAX_LEVEL - (lsb.bit_length() - 1) // 2
-
-
-# --- cell topology as pure column/SQL BITWISE arithmetic. Faces 4-5 set
-# --- bit 63, so cell ids are NEGATIVE int64s: shift/add forms overflow
-# --- under ANSI; the canonical (id & -lsb) | lsb form is two's-complement
-# --- safe and matches the uint64 numpy kernel bit-for-bit.
-
-def s2_parent_column(cell: Column, level: int) -> Column:
-    """Parent cell at `level` (must be coarser than the cell's own level):
-    (id & -lsb) | lsb, the canonical S2 parent arithmetic."""
-    lsb = 1 << (2 * (_MAX_LEVEL - level))
-    return cell.bitwiseAND(F.lit(-lsb)).bitwiseOR(F.lit(lsb))
-
-
 def s2_range_columns(cell: Column, level: int) -> tuple[Column, Column]:
     """[range_min, range_max] — the id interval every descendant of a
     `level` cell falls in (the S2 cover-join predicate: descendant ids are
@@ -212,12 +185,6 @@ def s2_range_columns(cell: Column, level: int) -> tuple[Column, Column]:
     touches those bits — no carries, no ANSI overflow, sign-safe."""
     lsb = 1 << (2 * (_MAX_LEVEL - level))
     return cell - F.lit(lsb - 1).cast("long"), cell + F.lit(lsb - 1).cast("long")
-
-
-def s2_parent_sql(cell: str, level: int) -> str:
-    """DuckDB twin of s2_parent_column."""
-    lsb = 1 << (2 * (_MAX_LEVEL - level))
-    return f"(({cell} & {-lsb}) | {lsb})"
 
 
 # ---------------------------------------------------------------------------
@@ -319,14 +286,6 @@ def _pack_h3(face: np.ndarray, res: int, q: np.ndarray, r: np.ndarray) -> np.nda
         | (r + off)
     )
 
-
-def h3_unpack(cell) -> tuple[int, int, int, int]:
-    c = int(cell)
-    face = c >> 49
-    res = (c >> 45) & 0xF
-    q = ((c >> 20) & ((1 << 20) - 1)) - (1 << 19)
-    r = (c & ((1 << 20) - 1)) - (1 << 19)
-    return face, res, q, r
 
 
 def _cube_round(qf: np.ndarray, rf: np.ndarray):

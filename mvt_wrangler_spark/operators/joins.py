@@ -104,180 +104,6 @@ def broadcast_pip_join(spark: SparkSession, points: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# Partitioned point-in-polygon join (the beyond-broadcast scale path)
-# ---------------------------------------------------------------------------
-
-def partitioned_pip_join(points: DataFrame, polys: DataFrame, z: int = 9, *,
-                         id_col: str = "id", lon_col: str = "lon",
-                         lat_col: str = "lat", poly_id_col: str = "poly_id",
-                         xs_col: str = "xs", ys_col: str = "ys",
-                         n_salt: int = 8,
-                         max_tiles_per_poly: int = 4096) -> DataFrame:
-    """PIP join where BOTH sides are distributed DataFrames — the scale path
-    when the polygon layer (parcels, buildings: 10^7+ rings) does not fit in
-    a broadcast, the regime broadcast_pip_join cannot serve.
-
-    `polys` schema: (poly_id, xs: array<array<double>>, ys: array<array<double>>)
-    — ring 0 is the exterior, later rings are holes. Returns (id_col,
-    poly_id_col) candidate-refined INNER pairs; left-keep is a left-anti
-    join of `points` against this output.
-
-    Scale shape (same reference analog as broadcast_pip_join —
-    data.rs:189-230 prefilter + transform.rs:96-143 exact refine — but
-    re-expressed as a co-partitioned equi-join instead of a broadcast):
-      1. polygon tile cover: bbox -> inclusive tile range at zoom z, exploded
-         to slim (tx, ty, poly_id) rows. Monotonicity of tile_x / tile_y
-         (decreasing in lat) makes the cover complete: any point inside the
-         polygon lands in a covered tile. A runtime raise_error guard caps
-         blowup at max_tiles_per_poly cover tiles (lower z or raise the cap
-         for continent-scale polygons).
-      2. points -> (tx, ty) by the same formulas (pure codegen), equi-join
-         on the tile key -> candidate (point, polygon) pairs. A point has
-         exactly ONE tile, so no candidate pair duplicates and no dedup
-         shuffle is needed.
-      3. exact refine as PURE CODEGEN: polygon rings explode once to slim
-         EDGE rows and equi-join the candidates on (poly_id, salt); the
-         even-odd ray-casting rule of functions/geometry.points_in_ring is
-         reproduced term for term as column math (identical double
-         arithmetic, so results are bit-identical to the numpy kernel) and
-         a two-level aggregation — per-ring crossing parity, then
-         exterior AND NOT any(hole) — decides containment. No Python
-         boundary at all: the earlier cogrouped-applyInPandas refine moved
-         every candidate row through Arrow and was the dominant cost
-         (measured 45 s warm at sf0.1 vs ~5 s for this plan).
-      4. skew: a metro tile with 10^6 points under one big polygon would
-         make one join key hot; candidates salt by xxhash64(point id) %
-         n_salt and each polygon's edges replicate n_salt times (cheap:
-         n_salt * edges slim rows per polygon), bounding any single key at
-         ~1/n_salt of a polygon's candidates. Both partial aggregations
-         combine map-side, so the parity shuffle carries one row per
-         (candidate, ring), not per edge.
-    """
-    from ..functions import tiling as T
-
-    ext_x, ext_y = F.col(xs_col)[0], F.col(ys_col)[0]
-    p = polys.select(
-        F.col(poly_id_col).alias("__pid"),
-        F.col(xs_col).alias("__xs"), F.col(ys_col).alias("__ys"),
-        F.array_min(ext_x).alias("__minx"), F.array_max(ext_x).alias("__maxx"),
-        F.array_min(ext_y).alias("__miny"), F.array_max(ext_y).alias("__maxy"),
-    ).withColumns({
-        # y decreases with lat: the top edge (maxlat) gives the smaller ty
-        "__tx0": T.tile_x(F.col("__minx"), z), "__tx1": T.tile_x(F.col("__maxx"), z),
-        "__ty0": T.tile_y(F.col("__maxy"), z), "__ty1": T.tile_y(F.col("__miny"), z),
-    })
-    # polygons with NULL/empty rings have a NULL bbox and can never contain a
-    # point — drop them before the cap guard (assert_true raises on NULL)
-    p = p.filter(F.col("__tx0").isNotNull() & F.col("__ty0").isNotNull()
-                 & F.col("__tx1").isNotNull() & F.col("__ty1").isNotNull())
-    ntiles = ((F.col("__tx1") - F.col("__tx0") + 1)
-              * (F.col("__ty1") - F.col("__ty0") + 1))
-    # assert_true: NULL when the cap holds, raises with the message when not;
-    # wrapping __ntiles in when(guard.isNull(), ...) forces the check to be
-    # evaluated per polygon row (AssertTrue is non-foldable, so Catalyst
-    # cannot prune it) without a separate action.
-    guard = F.assert_true(ntiles <= F.lit(max_tiles_per_poly), F.concat(
-        F.lit("partitioned_pip_join: polygon "), F.col("__pid").cast("string"),
-        F.lit(f" covers > {max_tiles_per_poly} tiles at z={z}; "
-              "lower z or raise max_tiles_per_poly"),
-    ))
-    p = p.withColumn("__ntiles", F.when(guard.isNull(), ntiles))
-
-    cover = (
-        # the filter REFERENCES __ntiles so the guard cannot be pruned
-        p.filter(F.col("__ntiles") > 0)
-        .select("__pid", F.explode(F.sequence("__tx0", "__tx1")).alias("__tx"),
-                "__ty0", "__ty1")
-        .select("__pid", "__tx",
-                F.explode(F.sequence("__ty0", "__ty1")).alias("__ty"))
-    )
-
-    # duplicate (id, lon, lat) rows refine once and re-expand by count at
-    # the end (rows with equal key are identical, so this is lossless);
-    # rows sharing an id with different coordinates stay distinct groups
-    # pinned: referenced by the candidate path AND the final multiplicity
-    # join-back — unpinned, the point scan + dedup groupBy execute twice
-    # per run. Slim rows (id + 2 doubles + count), the guide §8 proxy shape.
-    mult = session.pin(points.select(F.col(id_col).alias("__id"),
-                                     F.col(lon_col).alias("__lon"),
-                                     F.col(lat_col).alias("__lat"))
-                       .groupBy("__id", "__lon", "__lat")
-                       .agg(F.count(F.lit(1)).alias("__mult")))
-    pt = mult.withColumns({
-        "__tx": T.tile_x(F.col("__lon"), z),
-        "__ty": T.tile_y(F.col("__lat"), z),
-    })
-    cand = (
-        pt.join(cover, on=["__tx", "__ty"])
-        .select("__pid", "__id", "__lon", "__lat")
-        .withColumn("__salt", F.pmod(F.xxhash64("__id"), F.lit(n_salt)))
-    )
-    # polygon EDGE rows: ring index + consecutive vertex pairs — exactly
-    # the edges points_in_ring tests AFTER Polygon._close_ring appends the
-    # first vertex to an open ring (exact float first!=last check, same as
-    # np.array_equal there). Replicated per salt; the exterior bbox rides
-    # along for the kernel's pre-cull.
-    ring = p.select("__pid", "__minx", "__maxx", "__miny", "__maxy",
-                    F.posexplode(F.arrays_zip(
-                        F.col("__xs").alias("rx"),
-                        F.col("__ys").alias("ry"))).alias("__ri", "__r"))
-    oxs, oys = F.col("__r.rx"), F.col("__r.ry")
-    is_open = (F.size(oxs) > 0) & (
-        (F.element_at(oxs, 1) != F.element_at(oxs, -1))
-        | (F.element_at(oys, 1) != F.element_at(oys, -1)))
-    ring = ring.select(
-        "__pid", "__ri", "__minx", "__maxx", "__miny", "__maxy",
-        F.when(is_open, F.concat(oxs, F.array(F.element_at(oxs, 1))))
-        .otherwise(oxs).alias("__rxs"),
-        F.when(is_open, F.concat(oys, F.array(F.element_at(oys, 1))))
-        .otherwise(oys).alias("__rys"))
-    rxs, rys = F.col("__rxs"), F.col("__rys")
-    m = F.greatest(F.size(rxs) - 1, F.lit(0))
-    edges = ring.select(
-        "__pid", "__ri", "__minx", "__maxx", "__miny", "__maxy",
-        F.posexplode(F.arrays_zip(
-            F.slice(rxs, 1, m).alias("x1"), F.slice(rys, 1, m).alias("y1"),
-            F.slice(rxs, 2, m).alias("x2"), F.slice(rys, 2, m).alias("y2"),
-        )).alias("__ei", "__e"))
-    edges = edges.select(
-        "__pid", "__ri", "__minx", "__maxx", "__miny", "__maxy",
-        F.col("__e.x1").alias("__x1"), F.col("__e.y1").alias("__y1"),
-        F.col("__e.x2").alias("__x2"), F.col("__e.y2").alias("__y2"),
-        # long salt: must match cand's pmod(xxhash64) type exactly — the
-        # equi-join coerces, but keeping both long avoids a cast in the key
-        F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))
-                  .cast("array<bigint>")).alias("__salt"))
-
-    px, py = F.col("__lon"), F.col("__lat")
-    j = (cand.join(edges, on=["__pid", "__salt"])
-         # same inclusive exterior-bbox pre-cull as points_in_polygon
-         .filter((px >= F.col("__minx")) & (px <= F.col("__maxx"))
-                 & (py >= F.col("__miny")) & (py <= F.col("__maxy"))))
-    # points_in_ring's crossing rule, identical double arithmetic: a
-    # rightward ray crosses edge (x1,y1)->(x2,y2) iff (y1>py) != (y2>py)
-    # and px < the edge's x at py (denominator masked to 1.0 when y1==y2,
-    # where the parity condition is false anyway)
-    den = F.when(F.col("__y2") != F.col("__y1"),
-                 F.col("__y2") - F.col("__y1")).otherwise(F.lit(1.0))
-    xint = (F.col("__x1")
-            + (py - F.col("__y1")) * (F.col("__x2") - F.col("__x1")) / den)
-    cross = ((F.col("__y1") > py) != (F.col("__y2") > py)) & (px < xint)
-    parity = j.groupBy("__id", "__lon", "__lat", "__pid", "__ri").agg(
-        (F.sum(cross.cast("int")) % 2 == 1).alias("__odd"))
-    inside = (parity.groupBy("__id", "__lon", "__lat", "__pid").agg(
-        F.coalesce(F.max(F.when(F.col("__ri") == 0, F.col("__odd"))),
-                   F.lit(False)).alias("__ext"),
-        F.coalesce(F.max(F.when(F.col("__ri") > 0, F.col("__odd"))),
-                   F.lit(False)).alias("__hole"))
-        .filter(F.col("__ext") & ~F.col("__hole")))
-    return (inside.join(mult, on=["__id", "__lon", "__lat"])
-            .withColumn("__rep", F.explode(
-                F.array_repeat(F.lit(1), F.col("__mult").cast("int"))))
-            .select(F.col("__id").alias(id_col),
-                    F.col("__pid").alias(poly_id_col)))
-
-
-# ---------------------------------------------------------------------------
 # Broadcast exact intersects join (general geometries: point/line/polygon)
 # ---------------------------------------------------------------------------
 
@@ -572,83 +398,6 @@ FROM __r WHERE rank <= {k}
 """
 
 
-def knn_join(data: DataFrame, queries: DataFrame, k: int,
-             data_id: str = "image_id", query_id: str = "query_id",
-             lon_col: str = "lon", lat_col: str = "lat",
-             max_queries: int = 100_000) -> DataFrame:
-    """Exact k nearest data rows per query row (squared-degree distance).
-
-    BROADCAST-QUERIES variant: the query table is collected to the driver
-    and broadcast, so it is HARD-BOUNDED at `max_queries` rows (raises
-    ValueError above it — ~100k queries x 3 fields is a few MB of broadcast;
-    beyond that, use knn_join_cells, the both-sides-distributed twin).
-
-    Two-phase top-k, shaped for 10^12 data rows:
-      1. LOCAL phase — queries broadcast as a numpy array; `mapInPandas`
-         computes a (batch x Q) distance matrix per Arrow batch and emits
-         only each batch's top-k per query (argpartition). Zero shuffle,
-         zero join; survivor volume <= k x Q x n_batches.
-      2. GLOBAL phase — row_number window over the tiny survivor set.
-    The hash-uniform Arrow batching is the salting here: a hot metro cell
-    spreads across input splits, so no single task owns a hot query (the
-    reference's analog is its rayon work-stealing pool, processing.rs:78-96).
-    Ties break on data id (deterministic). Output columns:
-    query_id, rank, neighbor_id, dist2.
-    """
-    spark = data.sparkSession
-    qrows = queries.select(query_id, lon_col, lat_col).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"knn_join broadcasts the query side to the driver and is bounded "
-            f"at max_queries={max_queries} rows; use knn_join_cells for large "
-            f"query sets (both sides distributed, exact expanding-ring)")
-    bc = spark.sparkContext.broadcast(
-        (
-            [r[0] for r in qrows],
-            np.array([r[1] for r in qrows], dtype=np.float64),
-            np.array([r[2] for r in qrows], dtype=np.float64),
-        )
-    )
-
-    def local_topk(pdfs):
-        qids, qlon, qlat = bc.value
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            dlon = pdf[lon_col].to_numpy(dtype=np.float64)
-            dlat = pdf[lat_col].to_numpy(dtype=np.float64)
-            dids = pdf[data_id].to_numpy()
-            # (N, Q) squared distances
-            dx = dlon[:, None] - qlon[None, :]
-            dy = dlat[:, None] - qlat[None, :]
-            d2 = dx * dx + dy * dy
-            kk = min(k, len(pdf))
-            # tie-inclusive local top-k: emit every row at or below the k-th
-            # distance, so boundary ties survive to the global phase and the
-            # window's (dist2, id) tie-break — argpartition alone would keep
-            # an arbitrary member of a tie and could drop the global winner
-            kth = np.partition(d2, kk - 1, axis=0)[kk - 1, :]   # (Q,)
-            di, qi = np.nonzero(d2 <= kth[None, :])
-            yield pd.DataFrame({
-                query_id: np.array(qids, dtype=object)[qi],
-                "neighbor_id": dids[di],
-                "dist2": d2[di, qi],
-            })
-
-    survivors = data.select(data_id, lon_col, lat_col).mapInPandas(
-        local_topk, f"{query_id} string, neighbor_id string, dist2 double"
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("dist2").asc(),
-        F.expr("try_cast(neighbor_id AS BIGINT)").asc_nulls_last(),
-        F.col("neighbor_id").asc())
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "rank", "neighbor_id", "dist2")
-    )
-
-
 def asof_join(left: DataFrame, right: DataFrame, on: str,
               left_time: str = "ts", right_time: str | None = None,
               value_cols: list[str] | None = None,
@@ -720,8 +469,8 @@ def interval_join(points: DataFrame, intervals: DataFrame, *,
                   overflow: str = "error") -> DataFrame:
     """INNER join of point rows to every interval row with
     start <= point <= end (numeric columns; cast timestamps to epoch
-    micros upstream). The 1-D analog of [[partitioned-pip-join]]'s tile
-    cover, and the general-range sibling of `asof_join`.
+    micros upstream). A 1-D tile cover, and the general-range sibling of
+    `asof_join`.
 
     Spark's own plan for an inequality-only join is a broadcast
     nested-loop or a full cartesian — O(|P|*|I|) at any scale. Here both
@@ -793,214 +542,6 @@ def interval_join(points: DataFrame, intervals: DataFrame, *,
         arm = pt.drop("__b").join(F.broadcast(long_.drop("__b0", "__b1")), refine)
         out = out.unionByName(arm)
     return out
-
-
-def partitioned_intersects_join(feats: DataFrame, polys: DataFrame, z: int = 9, *,
-                                id_col: str = "id", type_col: str = "geom_type",
-                                fxs_col: str = "xs", fys_col: str = "ys",
-                                poly_id_col: str = "poly_id",
-                                xs_col: str = "xs", ys_col: str = "ys",
-                                n_salt: int = 8,
-                                max_tiles: int = 4096) -> DataFrame:
-    """Exact `intersects` join of mixed Point/LineString/Polygon features vs
-    a DISTRIBUTED polygon table — the non-broadcast generalization of
-    broadcast_intersects_join, completing the family begun by
-    [[partitioned-pip-join]] (same reference analog: data.rs:189-230 bbox
-    prefilter + transform.rs:130-143 exact refine).
-
-    `feats`: (id, geom_type, xs array<double>, ys array<double>) — the
-    synth_geoms / decode_tiles single-ring contract. `polys`: (poly_id,
-    xs array<array<double>>, ys array<array<double>>), ring 0 exterior.
-    Returns DISTINCT (id_col, type_col, poly_id_col) intersecting pairs.
-
-    Differences from the PIP case, both scale-relevant:
-      - a feature's bbox may span MULTIPLE tiles, so the tile equi-join can
-        emit the same (feature, polygon) pair once per shared tile; a slim
-        distinct on (id, poly_id) dedups BEFORE the wide vertex arrays are
-        re-attached (the [[ngram-jaccard]] shuffle-bytes discipline).
-      - BOTH sides carry a cover cap guard: a continent polygon or a
-        transcontinental linestring would explode the cover; each side
-        fails fast at max_tiles with its own message.
-    The exact refine is the same salted cogrouped geoms_intersect_polygon
-    pass: polygon rings cross the wire once per (polygon, salt), feature
-    arrays once per surviving candidate.
-    """
-    from ..functions import tiling as T
-
-    def _cover(df, idc, bbox_cols, what, pfx):
-        """Tile cover of each bbox; the 4 bbox corners RIDE ALONG as
-        `{pfx}0x..{pfx}1y` so the candidate join can bbox-prune pairs that
-        merely share a coarse tile before anything wide moves, and the
-        cover-min tile (`{pfx}tx0`/`{pfx}ty0`) rides along so the pair
-        dedup can be a codegen reporting-tile predicate instead of a
-        distinct (the cover rows stay slim: id + 4 tile ints + 4 doubles).
-        """
-        bx0, bx1, by0, by1 = bbox_cols
-        d = df.withColumns({
-            "__tx0": T.tile_x(bx0, z), "__tx1": T.tile_x(bx1, z),
-            "__ty0": T.tile_y(by1, z), "__ty1": T.tile_y(by0, z),
-        }).filter(F.col("__tx0").isNotNull() & F.col("__ty0").isNotNull()
-                  & F.col("__tx1").isNotNull() & F.col("__ty1").isNotNull())
-        ntiles = ((F.col("__tx1") - F.col("__tx0") + 1)
-                  * (F.col("__ty1") - F.col("__ty0") + 1))
-        guard = F.assert_true(ntiles <= F.lit(max_tiles), F.concat(
-            F.lit(f"partitioned_intersects_join: {what} "),
-            F.col(idc).cast("string"),
-            F.lit(f" covers > {max_tiles} tiles at z={z}")))
-        d = d.withColumn("__tx0", F.when(guard.isNull(), F.col("__tx0")))
-        bb = {f"{pfx}0x": bx0, f"{pfx}1x": bx1,
-              f"{pfx}0y": by0, f"{pfx}1y": by1}
-        return (d.select(idc, *[c.alias(n) for n, c in bb.items()],
-                         F.col("__tx0").alias(f"{pfx}tx0"),
-                         F.col("__ty0").alias(f"{pfx}ty0"),
-                         F.explode(F.sequence("__tx0", "__tx1")).alias("__tx"),
-                         "__ty0", "__ty1")
-                 .select(idc, *bb.keys(), f"{pfx}tx0", f"{pfx}ty0", "__tx",
-                         F.explode(F.sequence("__ty0", "__ty1")).alias("__ty")))
-
-    f = feats.select(
-        F.col(id_col).alias("__fid"), F.col(type_col).alias("__gt"),
-        F.col(fxs_col).alias("__fxs"), F.col(fys_col).alias("__fys"))
-    # ONE aggregation consolidates what used to be three separate passes
-    # over the feature input (cover source, dropDuplicates for the vertex
-    # rows, multiplicity count), pinned once: per-branch column pruning
-    # makes the three copies non-identical, so exchange reuse does NOT
-    # fire (verified in the plan) and without the pin the upstream feature
-    # derivation still executes three times. The pin is one pass over the
-    # unique-feature table — at corpus scale the same cost class as the
-    # shuffle the groupBy already pays. (Duplicate ids carry identical
-    # geometry by contract, so first() is exact.)
-    g = session.pin(f.groupBy("__fid")
-                    .agg(F.count(F.lit(1)).alias("__mult"),
-                         F.first("__gt").alias("__gt"),
-                         F.first("__fxs").alias("__fxs"),
-                         F.first("__fys").alias("__fys")))
-    fcov = _cover(
-        g.withColumns({"__minx": F.array_min("__fxs"), "__maxx": F.array_max("__fxs"),
-                       "__miny": F.array_min("__fys"), "__maxy": F.array_max("__fys")}),
-        "__fid",
-        (F.col("__minx"), F.col("__maxx"), F.col("__miny"), F.col("__maxy")),
-        "feature", "__fb")
-
-    pp = polys.select(
-        F.col(poly_id_col).alias("__pid"),
-        F.col(xs_col).alias("__pxs"), F.col(ys_col).alias("__pys"))
-    ext_x, ext_y = F.col("__pxs")[0], F.col("__pys")[0]
-    pcov = _cover(
-        pp.withColumns({"__minx": F.array_min(ext_x), "__maxx": F.array_max(ext_x),
-                        "__miny": F.array_min(ext_y), "__maxy": F.array_max(ext_y)}),
-        "__pid",
-        (F.col("__minx"), F.col("__maxx"), F.col("__miny"), F.col("__maxy")),
-        "polygon", "__pb")
-
-    # slim candidate pairs: bbox overlap (a NECESSARY condition for
-    # intersects) prunes pairs that only share a coarse tile; pairs sharing
-    # several tiles are collapsed by the PBSM reporting-tile predicate (the
-    # pair survives only in the minimum tile of the two covers'
-    # intersection — pure integer codegen on the riding cover-min tiles)
-    # instead of a distinct's shuffle. Exactly-once holds because the
-    # feature side is unique per id (the groupBy above) and polys must be
-    # unique per poly_id (the refine already requires that — duplicate
-    # polygon rows would double their rings in the cogroup).
-    cand = (fcov.join(pcov, on=["__tx", "__ty"])
-            .filter((F.col("__fb0x") <= F.col("__pb1x"))
-                    & (F.col("__pb0x") <= F.col("__fb1x"))
-                    & (F.col("__fb0y") <= F.col("__pb1y"))
-                    & (F.col("__pb0y") <= F.col("__fb1y")))
-            .filter((F.col("__tx") == F.greatest("__fbtx0", "__pbtx0"))
-                    & (F.col("__ty") == F.greatest("__fbty0", "__pbty0")))
-            .select("__fid", "__pid")
-            .withColumn("__salt", F.pmod(F.xxhash64("__fid"), F.lit(n_salt))))
-    # SCALAR vertex rows, not array columns: pyarrow's arrow_to_pandas
-    # SEGFAULTS on sliced nested-list batches in the cogroup load path
-    # (observed with pyspark 4.1.2's bundled arrow once candidate groups
-    # grow past one batch slice at sf0.1 — serializers.py:405, crash in
-    # libarrow_python). Exploding (xs, ys) to one (idx, x, y) row per
-    # vertex keeps the big cogroup side all-scalar — which is the shuffle
-    # shape you want at 10^12 rows anyway — and the kernel rebuilds the
-    # ragged arrays with one sort + np.split per group.
-    # duplicate feature ids (same id appearing on several input rows) must
-    # carry identical geometry — the id IS the geometry key here — and their
-    # multiplicity is preserved: the refine runs once per distinct id, and
-    # the output re-expands by the input row count (matching the broadcast
-    # path, which emits one row per input ROW). Both the multiplicity and
-    # the unique vertex rows come from the SAME g aggregation as the cover.
-    fmult = g.select("__fid", "__mult")
-    fvert = g.select(
-        "__fid", "__gt",
-        F.posexplode(F.arrays_zip(F.col("__fxs"), F.col("__fys")))
-        .alias("__vi", "__v"))
-    fvert = fvert.select(
-        "__fid", "__gt", "__vi",
-        F.col("__v.__fxs").alias("__x"), F.col("__v.__fys").alias("__y"))
-    cand = cand.join(fvert, on="__fid")
-
-    # the polygon side must ALSO be scalar rows through the cogroup: the
-    # same arrow_to_pandas segfault fires on its sliced array<array<double>>
-    # ring columns once enough (polygon, salt) groups share an Arrow batch
-    # (reproduced at sf0.1; the candidate-side fix alone was not enough).
-    # One (pid, ring_idx, vert_idx, x, y) row per vertex; rings rebuild in
-    # the kernel by (ring, vertex) sort + np.split.
-    pvert = pp.select("__pid", F.col("__pxs").alias("pxs"),
-                      F.col("__pys").alias("pys"))
-    pvert = pvert.select(
-        "__pid", F.posexplode(F.arrays_zip("pxs", "pys")).alias("__ri", "__ring"))
-    pvert = pvert.select(
-        "__pid", "__ri",
-        F.col("__ring.pxs").alias("rxs"), F.col("__ring.pys").alias("rys"))
-    pvert = pvert.select(
-        "__pid", "__ri",
-        F.posexplode(F.arrays_zip("rxs", "rys")).alias("__pvi", "__pv"))
-    pvert = pvert.select(
-        F.col("__pid").alias("__pid_r"), "__ri", "__pvi",
-        F.col("__pv.rxs").alias("__px"), F.col("__pv.rys").alias("__py"))
-    # long cast: cogroup keys are partitioned per side WITHOUT cross-side
-    # type coercion — an int salt here vs cand's long salt lands the two
-    # sides of one key in different partitions (rows silently lost; see
-    # partitioned_pip_join's polyrep note)
-    polyrep = pvert.withColumn(
-        "__salt_r",
-        F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))
-                  .cast("array<bigint>")))
-
-    id_t = feats.schema[id_col].dataType.simpleString()
-    pid_t = polys.schema[poly_id_col].dataType.simpleString()
-    out_schema = (f"{id_col} {id_t}, {type_col} string, {poly_id_col} {pid_t}")
-
-    def _refine(key, cand_pdf: pd.DataFrame, poly_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({id_col: [], type_col: [], poly_id_col: []})
-        if cand_pdf.empty or poly_pdf.empty:
-            return empty
-        poly_pdf = poly_pdf.sort_values(["__ri", "__pvi"], kind="mergesort")
-        ri = poly_pdf["__ri"].to_numpy()
-        _, rstarts = np.unique(ri, return_index=True)  # ring order ascending
-        rx = np.split(poly_pdf["__px"].to_numpy(dtype=np.float64), rstarts[1:])
-        ry = np.split(poly_pdf["__py"].to_numpy(dtype=np.float64), rstarts[1:])
-        rings = [np.column_stack([x, y]) for x, y in zip(rx, ry)]
-        poly = G.Polygon(rings[0], rings[1:])
-        # rebuild ragged per-feature vertex arrays from the scalar rows
-        cand_pdf = cand_pdf.sort_values(["__fid", "__vi"], kind="mergesort")
-        fid = cand_pdf["__fid"].to_numpy()
-        # rows are fid-sorted, so first-occurrence indices come out ascending
-        ufid, starts = np.unique(fid, return_index=True)
-        xs_list = np.split(cand_pdf["__x"].to_numpy(dtype=np.float64), starts[1:])
-        ys_list = np.split(cand_pdf["__y"].to_numpy(dtype=np.float64), starts[1:])
-        gtypes = cand_pdf["__gt"].to_numpy()[starts]
-        hit = G.geoms_intersect_polygon(gtypes, xs_list, ys_list, poly)
-        if not hit.any():
-            return empty
-        return pd.DataFrame({id_col: ufid[hit],
-                             type_col: gtypes[hit],
-                             poly_id_col: key[0]})
-
-    refined = (cand.groupBy("__pid", "__salt")
-               .cogroup(polyrep.groupBy("__pid_r", "__salt_r"))
-               .applyInPandas(_refine, out_schema))
-    return (refined
-            .join(fmult.withColumnRenamed("__fid", id_col), on=id_col)
-            .withColumn("__rep", F.explode(
-                F.array_repeat(F.lit(1), F.col("__mult").cast("int"))))
-            .drop("__mult", "__rep"))
 
 
 def dwithin_join(left: DataFrame, right: DataFrame, eps: int,

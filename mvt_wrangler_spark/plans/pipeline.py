@@ -45,7 +45,6 @@ def run_pipeline(
     z: int = 10,
     min_z: int = 0,
     dedup: bool = True,
-    n_salt: int = 8,
     with_cells: bool = False,
 ) -> PipelineResult:
     """The flagship query (SURVEY §7.2 step 2), generalized."""
@@ -77,7 +76,7 @@ def run_pipeline(
     # the window dedup keeps the full surviving rows (min image_id per
     # (tile, phash)), which the archive sink needs
     deduped = D.phash_dedup(survivors) if dedup else survivors
-    stats = R.tile_stats(deduped, n_salt=n_salt)
+    stats = R.tile_stats(deduped, n_salt=8)
     pyramid = R.pyramid_rollup(
         stats.select("z", "x", "y", "n_rows", "bytes_in"), base_z=z, min_z=min_z
     )

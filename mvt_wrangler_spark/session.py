@@ -78,9 +78,9 @@ def pin(df: DataFrame) -> DataFrame:
     every reference re-runs the frame's whole upstream, Python UDF passes
     included (each duplicated ArrowEvalPython node executes), and a
     nondeterministic upstream (sampling, limit, range boundaries) can hand
-    different rows to different readers. In driver loops (pair_clusters,
-    knn rings, pagerank) the pin also cuts the lineage, so plans do not
-    compound round over round.
+    different rows to different readers. In driver loops (the pair_clusters
+    rounds, the knn_join_cells rings, pagerank) the pin also cuts the
+    lineage, so plans do not compound round over round.
 
     A local checkpoint, not persist(): the CacheManager matches cached data
     by canonicalized plan, so a persisted frame would be silently reused by
@@ -97,9 +97,12 @@ def pin(df: DataFrame) -> DataFrame:
       * the blocks have no replica and the lineage is cut: a lost executor
         loses them, and jobs that read them fail instead of recomputing;
       * storage grows with the width of the pinned frame. Most pins are
-        slim (id, key) proxies, but ring_validity pins whole (key, xs, ys)
-        coordinate arrays;
+        slim (id, key) proxies, but ngram_jaccard pins whole shingle-token
+        arrays, and the ingest's first pin holds whole batch rows (text
+        included) next to their band buckets;
       * the blocks are freed when the returned frame is garbage-collected,
-        not when its last reader is done (funnel pins one frame per step).
+        not when its last reader is done: the pair_clusters rounds, the
+        knn_join_cells rings and pagerank's checkpoints each pin one frame
+        per round.
     """
     return df.localCheckpoint(eager=True)

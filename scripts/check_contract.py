@@ -58,7 +58,7 @@ def main():
 
     import __spark_entry__ as entrymod
 
-    spark = get_spark(master="local[8]", shuffle_partitions=16)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")

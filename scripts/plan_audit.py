@@ -39,9 +39,7 @@ AUDIT = [
     ("tile_quantiles", "exact quantiles via range-repartitioned global rank"),
     ("asof_join", "union-stream as-of join: one key shuffle, no range-join blowup"),
     ("ngram_jaccard", "exact Jaccard: slim prefix join, arrays re-attached post-dedup"),
-    ("pip_join_partitioned", "non-broadcast PIP: tile-cover equi-join + codegen edge-parity refine, no Python"),
     ("interval_join", "range join as bucketed equi-join — must have NO nested-loop stage"),
-    ("intersects_join_partitioned", "both-side tile covers + bbox prune + slim pair dedup + salted cogrouped refine"),
     ("geom_measures", "ring measures: one collect_list shuffle + codegen array math"),
     ("geocode", "geohash/quadkey: zero-shuffle single-pass codegen projection"),
     ("cell_cover_join", "S2 cover join: broadcast region cells, no geometry shuffle"),
@@ -66,8 +64,6 @@ AUDIT = [
     ("blocklist_scrub", "domain explode + BROADCAST blocklist join + one groupBy(id)"),
     ("curate_e2e", "composed curation gates: per-doc signal aggs joined on doc_id"),
     ("vocab_topk", "token explode + groupBy + TakeOrderedAndProject global top-k"),
-    ("ring_valid", "edge explode + cell-cover self equi-join + distinct + codegen orientation flags"),
-    ("line_cross", "two-layer segment crossing: cell equi-join, no all-pairs stage"),
     ("boilerplate", "one shingle Arrow pass + doc-frequency WINDOW on shingle key (no self-join)"),
     ("patch_stats", "decode -> patch grid -> re-encode mapInPandas chain, no shuffle"),
     ("caption_conflicts", "ahash hamming pairs + two broadcast caption joins + array_intersect"),
@@ -78,8 +74,6 @@ AUDIT = [
     ("image_curate_e2e", "ahash closure keepers (singleton left join) + broadcast caption gates"),
     ("winding", "shoelace sign + F.reverse flip: one ring-build shuffle, codegen after"),
     ("pagerank", "2 iterations: edges join (deg, rank) + groupBy(dst) partial agg — no cartesian"),
-    ("funnel", "greedy step walk: one min-agg + one user-key join per step"),
-    ("od_matrix", "one user-key lag window + one groupBy(from, to)"),
     ("recon_error", "decode -> pool -> SSE: one mapInPandas chain, no shuffle"),
     ("dedup_safe_split", "minhash closure + singleton left join + codegen split CASE"),
     ("profile", "one Expand aggregate pass -> 1-row global agg -> per-column explode"),
@@ -186,8 +180,7 @@ def main() -> None:
     # AQE wraps everything in AdaptiveSparkPlan(isFinalPlan=false) pre-run,
     # which hides codegen-span assignment from explain(); disable it here so
     # the static plan shows the codegen grouping (production keeps AQE on)
-    spark = get_spark(master="local[8]", shuffle_partitions=8,
-                      app_name="plan-audit",
+    spark = get_spark(app_name="plan-audit",
                       extra={"spark.sql.adaptive.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     qs = e.queries()

@@ -1,4 +1,6 @@
-"""S2 topology columns vs the numpy kernels, incl. negative-id faces 4-5."""
+"""S2 topology columns vs the numpy kernels, incl. negative-id faces 4-5:
+the parent column and its SQL twin (the cell_cover_join contract query's
+join key) and the descendant id range."""
 
 from __future__ import annotations
 
@@ -6,7 +8,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as E
 from mvt_wrangler_spark.functions import cells as C
+from tests.oracle.cells_oracle import s2_parent
 
 
 @pytest.mark.spark
@@ -21,8 +25,8 @@ def test_s2_parent_column_matches_numpy(spark):
         [(int(i), int(c)) for i, c in enumerate(cell12)], "i long, cell long")
     for lvl in (4, 6, 10):
         got = {r.i: r.p for r in
-               df.withColumn("p", C.s2_parent_column(F.col("cell"), lvl)).collect()}
-        want = C.s2_parent(cell12, lvl)
+               df.withColumn("p", E.s2_parent_column(F.col("cell"), lvl)).collect()}
+        want = s2_parent(cell12, lvl)
         for i in range(len(cell12)):
             assert got[i] == int(want[i]), (lvl, i)
         # a parent must equal encoding the same point directly at that level
@@ -56,6 +60,6 @@ def test_s2_parent_sql_twin_matches():
     con.execute("CREATE TABLE t AS SELECT * FROM (VALUES "
                 + ",".join(f"({int(c)})" for c in cells) + ") v(cell)")
     got = [r[0] for r in con.execute(
-        f"SELECT {C.s2_parent_sql('cell', 6)} FROM t").fetchall()]
-    want = C.s2_parent(cells, 6)
+        f"SELECT {E.s2_parent_sql('cell', 6)} FROM t").fetchall()]
+    want = s2_parent(cells, 6)
     assert got == [int(w) for w in want]

@@ -210,22 +210,6 @@ def test_simhash_unicode_matches_duckdb(spark):
     assert got == want
 
 
-@pytest.mark.spark
-def test_knn_join_query_bound_raises(spark):
-    from mvt_wrangler_spark.operators.joins import knn_join
-
-    data = spark.range(0, 100).select(
-        F.col("id").cast("string").alias("image_id"),
-        (F.col("id") * 0.1).alias("lon"), (F.col("id") * 0.05).alias("lat"))
-    queries = spark.range(0, 50).select(
-        F.col("id").cast("string").alias("query_id"),
-        (F.col("id") * 0.2).alias("lon"), (F.col("id") * 0.1).alias("lat"))
-    with pytest.raises(ValueError, match="knn_join_cells"):
-        knn_join(data, queries, k=3, max_queries=10)
-    # under the bound it works
-    assert knn_join(data, queries, k=3, max_queries=50).count() == 150
-
-
 # ---------------------------------------------------------------------------
 # phash hamming near-dup (banding guarantee + popcount refine)
 # ---------------------------------------------------------------------------

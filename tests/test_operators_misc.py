@@ -1,4 +1,5 @@
-"""Zonal assignment, metrics/lineage, streaming shape, CLI, dedup variants."""
+"""Zonal assignment, metrics/lineage, CLI, as-of and interval joins, spatial
+statistics, profile, R-tree and pyramid-rollup internals."""
 
 from __future__ import annotations
 
@@ -54,33 +55,6 @@ def test_observed_metrics_and_lineage(spark):
     lin = M.tile_lineage(a).collect()
     assert sum(r.n_rows for r in lin) == 300
     assert all(r.partition_id >= 0 for r in lin)
-
-
-@pytest.mark.spark
-def test_streaming_windowed_counts(spark, tmp_path):
-    """Run the streaming agg via a rate-less memory stream: batch-parity check."""
-    from mvt_wrangler_spark.streaming.stream import snapshot_sink, windowed_tile_counts
-
-    src = str(tmp_path / "src")
-    df = I.synthetic_images(spark, 200, with_pixels=False, partitions=2).withColumn(
-        "ts", F.timestamp_seconds(F.lit(1700000000) + F.xxhash64("image_id") % 7200))
-    df.write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    agg = windowed_tile_counts(stream, z=4, ts_col="ts", window="1 hour")
-    q = (agg.writeStream.outputMode("complete").format("memory")
-         .queryName("tile_counts").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("SELECT sum(n_rows) AS s FROM tile_counts").collect()[0].s
-    assert got == 200
-    # batch parity
-    batch = (tiling.assign_tiles(spark.read.parquet(src), z=4)
-             .groupBy(F.window("ts", "1 hour"), "z", "x", "y")
-             .agg(F.count(F.lit(1)).alias("n_rows")))
-    want = {(r["window"].start, r.z, r.x, r.y): r.n_rows for r in batch.collect()}
-    rows = spark.sql("SELECT * FROM tile_counts").collect()
-    got_map = {(r.window_start, r.z, r.x, r.y): r.n_rows for r in rows}
-    assert got_map == want
 
 
 def test_cli_end_to_end(tmp_path):
@@ -348,76 +322,6 @@ def test_getis_ord_gi_matches_bruteforce(spark):
         assert abs(r["gi_star"] - ref) < 1e-6, (x, y)
     assert got[(0, 0)]["gi_star"] == max(r["gi_star"] for r in got.values())
     assert got[(4, 4)]["gi_star"] < 0
-
-
-def test_funnel_greedy_first_match(spark):
-    """Greedy semantics: step i matches the EARLIEST event strictly after
-    step i-1's match; interleaved other events are ignored; a user whose
-    purchase precedes every click does not convert; same-timestamp ties
-    resolve by event_id."""
-    from datetime import datetime, timezone
-
-    from mvt_wrangler_spark.operators.events import funnel
-
-    def t(s):
-        return datetime(2024, 1, 1, 0, 0, s, tzinfo=timezone.utc)
-
-    rows = [
-        # user 1: view(1) click(3) purchase(5), noise interleaved -> converts
-        (101, t(1), 1, "view"), (102, t(2), 1, "error"),
-        (103, t(3), 1, "click"), (104, t(4), 1, "view"),
-        (105, t(5), 1, "purchase"),
-        # user 2: purchase BEFORE any click -> reached 2 (view, click), no conv
-        (201, t(1), 2, "purchase"), (202, t(2), 2, "view"),
-        (203, t(3), 2, "click"),
-        # user 3: view then two clicks — greedy takes the EARLIER click
-        (301, t(1), 3, "view"), (302, t(2), 3, "click"),
-        (303, t(4), 3, "click"), (304, t(5), 3, "purchase"),
-        # user 4: same-ts tie — click at ts 1 with ids 402 < 403; both after
-        # view id 400 at the same micros? view ts(0), clicks at t(1)
-        (400, t(0), 4, "view"), (403, t(1), 4, "click"), (402, t(1), 4, "click"),
-        (404, t(2), 4, "purchase"),
-        # user 5: never views -> absent
-        (501, t(1), 5, "click"), (502, t(2), 5, "purchase"),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string")
-    got = {r.user_id: r for r in
-           funnel(df, ["view", "click", "purchase"]).collect()}
-    assert set(got) == {1, 2, 3, 4}
-    assert got[1].converted is True and got[1].reached == 3
-    assert got[1].dur_us == 4_000_000
-    assert got[2].converted is False and got[2].reached == 2
-    assert got[2].t3_us is None and got[2].dur_us is None
-    assert got[3].t2_us == got[3].t1_us + 1_000_000  # earlier click chosen
-    assert got[4].t2_us is not None and got[4].converted is True
-
-
-def test_od_matrix_hand_computed(spark):
-    from datetime import datetime, timezone
-
-    from mvt_wrangler_spark.operators.events import od_matrix
-
-    def t(s):
-        return datetime(2024, 1, 1, 0, 0, s, tzinfo=timezone.utc)
-
-    rows = [
-        # user 1 path: A -> B -> B -> A  => (A,B) (B,B) (B,A)
-        (1, t(0), 1, "A"), (2, t(1), 1, "B"), (3, t(2), 1, "B"), (4, t(3), 1, "A"),
-        # user 2 path: A -> B  => (A,B)  (cross-user transitions never counted)
-        (5, t(0), 2, "A"), (6, t(1), 2, "B"),
-        # user 3: single event -> no transition
-        (7, t(0), 3, "C"),
-        # user 4: same-ts tie, event_id order decides: B(id 8) then A(id 9)
-        (8, t(5), 4, "B"), (9, t(5), 4, "A"),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, tile string")
-    got = {(r.tile_from, r.tile_to): r.n_trips for r in od_matrix(df).collect()}
-    assert got == {("A", "B"): 2, ("B", "B"): 1, ("B", "A"): 2}
-    got2 = {(r.tile_from, r.tile_to): r.n_trips
-            for r in od_matrix(df, drop_self_loops=True).collect()}
-    assert ("B", "B") not in got2 and got2[("A", "B")] == 2
 
 
 def test_profile_hand_computed(spark):

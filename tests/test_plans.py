@@ -54,6 +54,15 @@ def test_red_flag_scan_catches_broken_plans(spark):
     assert any("unpruned" in f for f in flags)
 
 
+def test_every_query_has_an_oracle():
+    """The contract pairs each query with exactly one DuckDB oracle: a query
+    without a twin would pass check_contract on row counts alone, and an
+    oracle without a query checks nothing."""
+    import __spark_entry__ as e
+
+    assert e.queries().keys() == e.oracle_sql().keys()
+
+
 def test_read_schema_ncols_counts_top_level_only():
     """Nested types must not overcount; truncated schemas must trip the
     width gate instead of undercounting."""
