@@ -110,7 +110,7 @@ def main(argv: list[str] | None = None) -> int:
     pm_stats = None
     if args.pmtiles:
         # real PMTiles v3 serving archive: MVT-encode the surviving rows per
-        # tile, stream the sorted tiles into one clustered file (lib.rs:82-95)
+        # tile, merge the sorted tiles into one clustered file (lib.rs:82-95)
         from .operators.tile_encode import encode_tiles
         from .sources.pmtiles import write_pmtiles
 

@@ -43,12 +43,20 @@ def phash_dedup(df: DataFrame, keys: tuple[str, ...] = ("z", "x", "y", "phash"),
 
     row_number window; partial map-side combine isn't available for window
     fns, but the key includes phash so partitions are balanced.
+
+    The keepers are lazily pinned (session.pin(eager=False)): every engine
+    caller feeds them to several sinks (pyramid, snapshot, stats, export),
+    and the first sink's job computes the upstream (scan, tiling, cell and
+    PIP Python passes, filters, the window) once for all of them, while
+    building the frame still runs no Spark job. `df` must not carry an
+    observe() (see session.pin).
     """
     w = Window.partitionBy(*keys).orderBy(F.col(order_col).asc())
-    return (
+    return session.pin(
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .drop("__rn")
+        .drop("__rn"),
+        eager=False,
     )
 
 

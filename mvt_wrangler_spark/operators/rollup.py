@@ -54,7 +54,10 @@ def pyramid_rollup(base: DataFrame, base_z: int, min_z: int = 0) -> DataFrame:
     associative, so grouping base straight to each level equals the
     level-by-level chain bit for bit.
 
-    The base is pinned ONCE (session.pin): the naive
+    The base is pinned ONCE (session.pin, lazily: building the pyramid
+    runs no Spark job, its first reader materializes the base, and the
+    base keeps spark.sql.shuffle.partitions partitions, as AQE is off
+    inside a lazy pin): the naive
     chain-then-union plan re-executes the expensive base aggregation once
     PER LEVEL (level k's union branch embeds k cascaded groupBys all the
     way down to the raw scan — 11 scans / 66 exchanges in the zoom-10
@@ -66,7 +69,7 @@ def pyramid_rollup(base: DataFrame, base_z: int, min_z: int = 0) -> DataFrame:
     partition to its distinct coarse keys before the one exchange).
     """
     agg_cols = [c for c in base.columns if c not in ("z", "x", "y")]
-    b = session.pin(base)
+    b = session.pin(base, eager=False)
     if min_z > base_z - 1:
         return b
     # ALL coarser levels in one explode + ONE groupBy instead of a groupBy

@@ -9,7 +9,7 @@ This is the Spark re-expression of the reference's whole dataflow
   dict re-encode (A1)     -> parquet dictionary encoding at the sink
   ordered write (S5/W1)   -> the caller's SnapshotTable.write_snapshot
                              (range buckets on tile_id, sorted within)
-  metrics (A3)            -> df.observe named metrics + stats table
+  metrics (A3)            -> the stats table
 
 One narrow stage + exactly two shuffles (the dedup window; the sink's range
 partition) — the same stage shape at sf0.001 and 100 TB.
@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import tiling
@@ -35,7 +35,6 @@ class PipelineResult:
     deduped: DataFrame
     stats: DataFrame
     pyramid: DataFrame
-    observation: Observation | None = None
 
 
 def run_pipeline(
@@ -57,9 +56,6 @@ def run_pipeline(
         # same math exceeds HotSpot's method-size limits)
         assigned = C.with_cells(assigned, lat="lat", lng="lon")
 
-    obs = Observation("pipeline")
-    assigned = assigned.observe(obs, F.count(F.lit(1)).alias("rows_in"))
-
     if program is not None and program.features:
         # native codegen mask behind an inlining barrier (see
         # filters.filter_mask_native docstring: inlining would multiply the
@@ -74,7 +70,8 @@ def run_pipeline(
         survivors = assigned.withColumn("filter_mask", F.lit(0).cast("long"))
 
     # the window dedup keeps the full surviving rows (min image_id per
-    # (tile, phash)), which the archive sink needs
+    # (tile, phash)), which the archive sink needs; its lazy pin computes
+    # them once for the snapshot, stats, pyramid and export
     deduped = D.phash_dedup(survivors) if dedup else survivors
     stats = R.tile_stats(deduped, n_salt=8)
     pyramid = R.pyramid_rollup(
@@ -87,5 +84,4 @@ def run_pipeline(
         deduped=deduped,
         stats=stats,
         pyramid=pyramid,
-        observation=obs,
     )

@@ -12,6 +12,7 @@ pinned is decided here too.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -71,7 +72,12 @@ def get_spark(
     return b.getOrCreate()
 
 
-def pin(df: DataFrame) -> DataFrame:
+_AQE = "spark.sql.adaptive.enabled"
+# a CollectMetrics node (what DataFrame.observe adds) in a logical tree string
+_OBSERVE = re.compile(r"^[\s:|+-]*CollectMetrics ", re.M)
+
+
+def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize `df` once; the returned frame reads the stored rows.
 
     The engine pins a frame that its plan reads more than once. Unpinned,
@@ -87,22 +93,51 @@ def pin(df: DataFrame) -> DataFrame:
     the next invocation of the same query (cross-run result reuse), and
     nothing would unpersist it. The checkpoint re-materializes per call.
 
-    Eager: the checkpoint job runs here, so an Observation attached just
-    before the pin (`pin(df.observe(obs, ...))`) is complete when pin
-    returns and costs no second job, and every reader sees the one
+    Eager (the default): the checkpoint job runs here, so an Observation
+    attached just before the pin (`pin(df.observe(obs, ...))`) is complete
+    when pin returns and costs no second job, and every reader sees the one
     materialization. The price is that an operator that pins runs a Spark
     job while its DataFrame is being built.
+
+    Lazy (`eager=False`): the call runs no Spark job. The first job that
+    reads the returned frame computes the pinned subplan and stores its
+    blocks, and every later reader reads the stored blocks. This is how a
+    frame that feeds several sinks (phash_dedup's keepers: the pyramid, the
+    snapshot, the stats and the export) is computed once while building it
+    runs no job. The subplan is planned with AQE off for the length of the
+    call (an adaptive plan runs its shuffle stages as soon as the checkpoint
+    asks for its RDD); the caller's setting is restored afterwards. A lazy
+    pin over a plan that holds an `observe` raises ValueError: the metrics
+    of an Observation inside a lazily checkpointed subplan are never
+    reported to it (a downstream action sees zero rows).
 
     Caveats:
       * the blocks have no replica and the lineage is cut: a lost executor
         loses them, and jobs that read them fail instead of recomputing;
-      * storage grows with the width of the pinned frame. Most pins are
-        slim (id, key) proxies, but ngram_jaccard pins whole shingle-token
-        arrays, and the ingest's first pin holds whole batch rows (text
-        included) next to their band buckets;
+      * storage grows with the width of the pinned frame, and a pin stores
+        every upstream column whatever its readers later select. Most pins
+        are slim (id, key) proxies, but ngram_jaccard pins whole
+        shingle-token arrays, the ingest's first pin holds whole batch rows
+        (text included) next to their band buckets, and phash_dedup's
+        keepers are the whole surviving rows;
+      * a lazy pin's subplan runs without AQE: no partition coalescing and
+        no skew-join splitting inside it. The switch is session-wide, so a
+        query that another thread plans during the call runs without AQE
+        too;
       * the blocks are freed when the returned frame is garbage-collected,
         not when its last reader is done: the pair_clusters rounds, the
         knn_join_cells rings and pagerank's checkpoints each pin one frame
         per round.
     """
-    return df.localCheckpoint(eager=True)
+    if eager:
+        return df.localCheckpoint(eager=True)
+    if _OBSERVE.search(df._jdf.queryExecution().analyzed().toString()):
+        raise ValueError("pin(eager=False) over a frame that holds an observe(): "
+                         "its Observation would report nothing; pin eagerly")
+    conf = df.sparkSession.conf
+    aqe = conf.get(_AQE)
+    conf.set(_AQE, "false")
+    try:
+        return df.localCheckpoint(eager=False)
+    finally:
+        conf.set(_AQE, aqe)

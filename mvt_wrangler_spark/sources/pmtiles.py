@@ -9,18 +9,19 @@ be read back.
 
 Spark-scale story: the distributed archive IS the range-partitioned parquet
 tile table (tile_encode.write_archive / SnapshotTable); PMTiles is a SERVING
-format — a single file assembled in one ordered pass. write_pmtiles streams
-the sorted tiles through the driver with toLocalIterator (one partition in
-memory at a time, never a full collect); each blob is APPENDED to a temp
-data file the moment it arrives, and leaf directories are encoded +
-compressed + spilled to a second temp file every `leaf_size` entries, so
-driver memory is bounded at O(leaf_size entries + one root entry per leaf +
-the capped dedup map) regardless of archive size — a planet archive streams
-through in constant RAM. Identical consecutive blobs deduplicate via
-run-length entries; identical non-consecutive blobs share one data offset
-via a size-capped sha1 map (clustered + deduplicated, as the spec
-encourages; past the cap new duplicates are stored again — a space
-trade-off, never a correctness one).
+format — a single file assembled in one ordered pass. write_pmtiles runs
+one Spark write: each partition of the tiles, sorted on tile_id, becomes
+one uncompressed parquet file of (tile_id, z, data). The driver k-way
+merges those files by tile_id (one small batch per file in memory, never a
+full collect); each blob is APPENDED to a temp data file the moment it
+arrives, and leaf directories are encoded + compressed + spilled to a
+second temp file every `leaf_size` entries, so driver memory is bounded at
+O(part files x batch + leaf_size entries + one root entry per leaf + the
+capped dedup map) regardless of archive size. Identical consecutive blobs
+deduplicate via run-length entries; identical non-consecutive blobs share
+one data offset via a size-capped sha1 map (clustered + deduplicated, as
+the spec encourages; past the cap new duplicates are stored again — a
+space trade-off, never a correctness one).
 
 Layout written: 127-byte header | gzip'd root directory | gzip'd JSON
 metadata | leaf directory section | tile data. Archives up to `leaf_size`
@@ -34,13 +35,17 @@ the full entry list never materializes on the driver).
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import gzip
 import hashlib
+import heapq
 import json
 import os
 import shutil
 import struct
 from dataclasses import dataclass
+from operator import itemgetter
 
 HEADER_LEN = 127
 MAGIC = b"PMTiles"
@@ -176,32 +181,55 @@ class Header:
 DEFAULT_LEAF_SIZE = 16384
 
 
+@contextlib.contextmanager
+def _merged_parts(parts_dir: str):
+    """(tile_id, z, data) of every part file under `parts_dir`, k-way merged
+    by tile_id. Each file is one tile_id-sorted partition; a buffered reader
+    holds one small batch per file, never a whole row group. The files
+    close when the context exits."""
+    import pyarrow.parquet as pq
+
+    with contextlib.ExitStack() as files:
+        def rows(fn):
+            pf = pq.ParquetFile(files.enter_context(open(fn, "rb")),
+                                buffer_size=1 << 20)
+            for b in pf.iter_batches(batch_size=1024,
+                                     columns=["tile_id", "z", "data"]):
+                yield from zip(*(col.to_pylist() for col in b.columns))
+
+        yield heapq.merge(*(rows(fn) for fn in
+                            sorted(glob.glob(os.path.join(parts_dir, "*.parquet")))),
+                          key=itemgetter(0))
+
+
 def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
                   tile_compression: int = COMPRESSION_GZIP,
                   leaf_size: int = DEFAULT_LEAF_SIZE,
                   max_dedup_blobs: int = 1 << 20) -> dict:
     """Write a PMTiles v3 archive from a tiles DataFrame
-    (z, x, y, tile_id, data) — blobs as stored (gzip'd MVT from
-    encode_tiles). One ordered pass: repartitionByRange + per-file sort gives
-    globally ascending tile_ids through toLocalIterator.
+    (z, tile_id, data, ...) — blobs as stored (gzip'd MVT from
+    encode_tiles). One Spark write: each partition, sorted on tile_id,
+    lands as one uncompressed parquet file of (tile_id, z, data) in
+    `path + ".parts"`; the driver k-way merges those files by tile_id into
+    the archive. The input runs once (no range-sampling job, no second
+    pass of its Python encoder), whatever its partitioning.
 
-    SCALE-SAFE: blobs stream straight to a temp data file (the driver never
-    holds more than one blob), and once the directory exceeds `leaf_size`
-    entries it switches to leaf mode — every `leaf_size` entries are encoded,
-    gzip'd and appended to a temp leaf file, keeping only one root pointer
-    entry per leaf in memory. Peak driver state is therefore
-    O(leaf_size + n_entries/leaf_size + min(unique_blobs, max_dedup_blobs))
-    whatever the archive size. Final assembly splices
-    header | root | metadata | leaf section | data section with bounded-chunk
-    file copies.
+    SCALE-SAFE: the merge holds one small batch per part file, blobs
+    stream straight to a temp data file, and once the directory exceeds
+    `leaf_size` entries it switches to leaf mode — every `leaf_size`
+    entries are encoded, gzip'd and appended to a temp leaf file, keeping
+    only one root pointer entry per leaf in memory. Peak driver state is
+    therefore O(part files x batch + leaf_size + n_entries/leaf_size +
+    min(unique_blobs, max_dedup_blobs)) whatever the archive size. Final
+    assembly splices header | root | metadata | leaf section | data section
+    with bounded-chunk file copies. The part files and temp files are
+    deleted before returning, also when the write fails (a duplicate
+    tile_id, a Spark job error).
 
     Returns summary stats (incl. `peak_buffered_entries` so tests can assert
     the bound). Mirrors the reference's writer setup + finalize
     (src/lib.rs:82-95, processing.rs:98-121)."""
-    sorted_df = (tiles_df.select("z", "x", "y", "tile_id", "data")
-                 .repartitionByRange(max(tiles_df.sparkSession.sparkContext
-                                         .defaultParallelism, 8), "tile_id")
-                 .sortWithinPartitions("tile_id"))
+    parts = path + ".parts"
     tmp_data, tmp_leaf = path + ".data.tmp", path + ".leaf.tmp"
     entries: list[tuple[int, int, int, int]] = []   # pending (<= leaf_size+1)
     root_entries: list[tuple[int, int, int, int]] = []  # leaf pointers (run=0)
@@ -213,7 +241,12 @@ def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
     leaf_mode = False
     last_id = -1
     try:
-        with open(tmp_data, "wb") as data_f, open(tmp_leaf, "wb") as leaf_f:
+        # uncompressed: the blobs are compressed already
+        (tiles_df.select("tile_id", "z", "data").sortWithinPartitions("tile_id")
+         .write.mode("overwrite").option("compression", "uncompressed")
+         .parquet(parts))
+        with open(tmp_data, "wb") as data_f, open(tmp_leaf, "wb") as leaf_f, \
+                _merged_parts(parts) as tiles:
 
             def flush_leaf() -> None:
                 nonlocal leaf_len
@@ -223,16 +256,14 @@ def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
                 leaf_len += len(comp)
                 entries.clear()
 
-            for row in sorted_df.toLocalIterator():
-                tid = row.tile_id
+            for tid, z, blob in tiles:
                 if tid <= last_id:
                     raise ValueError(f"tile ids must be strictly ascending/unique: "
                                      f"{tid} after {last_id}")
                 last_id = tid
-                blob = bytes(row.data)
                 digest = hashlib.sha1(blob).digest()
                 n_addressed += 1
-                zmin, zmax = min(zmin, row.z), max(zmax, row.z)
+                zmin, zmax = min(zmin, z), max(zmax, z)
                 if entries and digest in blob_offsets \
                         and blob_offsets[digest][0] == entries[-1][1] \
                         and entries[-1][0] + entries[-1][3] == tid:
@@ -282,7 +313,8 @@ def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
             for tmp in (tmp_leaf, tmp_data):
                 with open(tmp, "rb") as src:
                     shutil.copyfileobj(src, f, length=1 << 22)  # 4 MiB chunks
-    finally:  # a failed write (unsorted ids, a Spark job error) leaves no temp file
+    finally:  # a failed write (duplicate ids, a Spark job error) leaves no temp file
+        shutil.rmtree(parts, ignore_errors=True)
         for tmp in (tmp_data, tmp_leaf):
             if os.path.exists(tmp):
                 os.remove(tmp)

@@ -126,20 +126,36 @@ def test_single_python_pass_shape(spark, name, budget):
 # The budget above reads the plan AFTER the pins, where a pinned frame is a
 # Scan ExistingRDD, so a Python pass duplicated inside the pinned subplan
 # would pass it. Here a recording pin keeps the plan each pin materializes.
-@pytest.mark.spark
-@pytest.mark.parametrize("name", ["cell_cover_join", "minhash_lsh"])
-def test_single_python_pass_under_each_pin(spark, monkeypatch, name):
+def _pinned_plans(spark, monkeypatch, name) -> list[str]:
     import __spark_entry__ as e
     from mvt_wrangler_spark import session
 
     real_pin, plans = session.pin, []
 
-    def recording_pin(df):
+    def recording_pin(df, eager=True):
         plans.append(formatted_plan(df))
-        return real_pin(df)
+        return real_pin(df, eager=eager)
 
     monkeypatch.setattr(session, "pin", recording_pin)
     e.queries()[name](spark, SF_DIR)
     assert plans, f"{name}: no frame went through session.pin"
+    return plans
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("name", ["cell_cover_join", "minhash_lsh"])
+def test_single_python_pass_under_each_pin(spark, monkeypatch, name):
+    plans = _pinned_plans(spark, monkeypatch, name)
     assert [_python_passes(p) for p in plans] == [1] * len(plans), (
         f"{name}: every pinned frame must run its Python pass exactly once")
+
+
+# phash_dedup pins its keepers, so the audited plans of these queries end at
+# the pin; the red-flag scan also reads the subplans behind it.
+@pytest.mark.spark
+@pytest.mark.parametrize("name", ["pipeline_e2e", "phash_dedup"])
+def test_audited_plan_is_clean_under_each_pin(spark, monkeypatch, name):
+    for plan in _pinned_plans(spark, monkeypatch, name):
+        assert "ReadSchema" in plan, name
+        flags = plan_red_flags(name, plan)
+        assert not flags, f"{name}: {flags}"

@@ -214,10 +214,78 @@ def test_pmtiles_mixed_root(spark, tmp_path):
 
 @pytest.mark.spark
 def test_pmtiles_failed_write_leaves_no_temp_files(spark, tmp_path):
-    """Duplicate tile ids fail the write, and neither temp file survives."""
+    """Duplicate tile ids fail the write (within one sorted partition, and
+    across partitions meeting in the driver's merge), and neither the temp
+    files nor the part directory survive."""
     rows = [(5, i, 0, 1000 + min(i, 2), bytearray(b"t%d" % i)) for i in range(4)]
-    tiles = spark.createDataFrame(rows, "z int, x bigint, y bigint, tile_id bigint, data binary")
-    path = str(tmp_path / "dup.pmtiles")
-    with pytest.raises(ValueError, match="ascending/unique"):
-        P.write_pmtiles(tiles, path)
-    assert list(tmp_path.iterdir()) == []
+    for n_parts in (1, 4):
+        tiles = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, n_parts),
+            "z int, x bigint, y bigint, tile_id bigint, data binary")
+        assert tiles.rdd.getNumPartitions() == n_parts
+        path = str(tmp_path / "dup.pmtiles")
+        with pytest.raises(ValueError, match="ascending/unique"):
+            P.write_pmtiles(tiles, path)
+        assert list(tmp_path.iterdir()) == [], n_parts
+
+
+def _tile_rows():
+    """(z, x, y, tile_id, data) rows with gaps in the ids, runs of identical
+    consecutive blobs (some crossing a leaf_size=4 boundary) and blobs that
+    repeat non-consecutively (stored once, shared by offset)."""
+    blobs = [gzip.compress(b"blob-%d" % k * (k + 1), 6, mtime=0) for k in range(5)]
+    ids = [7000 + i for i in range(9)] + [7020 + i for i in range(14)] + [7100, 7102]
+    pattern = [0, 0, 0, 0, 0, 1, 2, 1, 3, 3, 3, 3, 3, 3, 4, 0, 2, 2, 1, 4, 4, 4, 0, 1, 1]
+    return [(5, tid % 32, tid // 32, tid, bytearray(blobs[k]))
+            for tid, k in zip(ids, pattern)]
+
+
+@pytest.mark.spark
+def test_pmtiles_archive_is_independent_of_partitioning(spark, tmp_path):
+    """The same tiles in one partition and in 7 partitions of shuffled rows
+    give byte-identical archives: the driver's k-way merge restores the one
+    global tile order, and runs, dedup and leaves come out the same."""
+    import random
+
+    rows = _tile_rows()
+    schema = "z int, x bigint, y bigint, tile_id bigint, data binary"
+    shuffled = rows[:]
+    random.Random(3).shuffle(shuffled)
+    one = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    seven = spark.createDataFrame(spark.sparkContext.parallelize(shuffled, 7), schema)
+    assert seven.rdd.getNumPartitions() == 7
+
+    paths = [str(tmp_path / "one.pmtiles"), str(tmp_path / "seven.pmtiles")]
+    stats = [P.write_pmtiles(df, p, metadata={"name": "parts"}, leaf_size=4)
+             for df, p in zip((one, seven), paths)]
+    archives = [open(p, "rb").read() for p in paths]
+    assert archives[0] == archives[1]
+    assert stats[0] == stats[1]
+    assert stats[0]["leaves"] >= 2 and stats[0]["unique_blobs"] == 5
+    assert stats[0]["entries"] < len(rows)        # the runs were folded
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["one.pmtiles", "seven.pmtiles"]
+
+    rd = P.PMTilesReader(paths[1])
+    assert rd.tile_ids() == [r[3] for r in rows]
+    for r in rows:
+        assert rd.get_tile(r[3]) == bytes(r[4])
+
+
+@pytest.mark.spark
+def test_pmtiles_runs_its_input_once(spark, tmp_path):
+    """One Spark write: the input's Python function runs once per input
+    partition (a range-sampled export runs it once more to sample)."""
+    log = tmp_path / "calls.log"
+    log.touch()
+
+    def passthrough(pdfs):
+        with open(log, "a") as f:
+            f.write("call\n")
+        yield from pdfs
+
+    schema = "z int, x bigint, y bigint, tile_id bigint, data binary"
+    tiles = (spark.createDataFrame(spark.sparkContext.parallelize(_tile_rows(), 3), schema)
+             .mapInPandas(passthrough, schema))
+    stats = P.write_pmtiles(tiles, str(tmp_path / "once.pmtiles"))
+    assert stats["tiles"] == len(_tile_rows())
+    assert log.read_text().count("call") == 3
