@@ -363,168 +363,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v_r").alias("last_click_value"))
 
 
-def q_docs_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mvt_wrangler_spark.operators import dedup as D
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return D.exact_dedup(docs, on="text", order_col="doc_id").select("doc_id")
-
-
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mvt_wrangler_spark.operators import text as T
-
-    return T.text_stats(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-hit language heuristic (deterministic formula, both engines)."""
-    from mvt_wrangler_spark.operators import text as T
-
-    return T.lang_id(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace + BPE-ish regex token counts per document (pure codegen
-    regexp_count; identical regex semantics pinned on both engines)."""
-    from mvt_wrangler_spark.operators import text as T
-
-    return T.token_counts(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: per training doc, the count of its
-    distinct 8-gram shingles appearing anywhere in the eval split
-    (doc_id % 37 == 3). Broadcast eval shingle set + one groupBy shuffle."""
-    from mvt_wrangler_spark.operators import text as T
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ev = F.pmod("doc_id", F.lit(37)) == 3
-    return T.decontaminate(docs.filter(~ev), docs.filter(ev), shingle=8)
-
-
-def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc top-5 salient terms by the exact-integer tf-idf surrogate
-    tf * (N - df) (text.tfidf_topk): explode -> tf groupBy -> df window ->
-    1-row broadcast N -> per-doc top-k window, ties broken on term."""
-    from mvt_wrangler_spark.operators import text as T
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return T.tfidf_topk(docs, k=5)
-
-
-def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-boilerplate detection: per doc, distinct 12-gram shingles
-    occurring in >= 4 distinct docs (header/footer/template chrome). One
-    Arrow shingle pass, doc frequency via a window over the shingle key
-    (no self-join, no recomputed subtree), one groupBy(id)."""
-    from mvt_wrangler_spark.operators import text as T
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return T.boilerplate_stats(docs, shingle=12, min_docs=4)
-
-
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition quality signals: duplicate-line fraction,
-    duplicate-line char fraction, top word bigram + covered fraction."""
-    from mvt_wrangler_spark.operators import text as T
-
-    return T.repetition_stats(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
-def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII count + redaction (emails / IPv4 / phones); the redacted text is
-    an output column so every replacement sits under the value hash."""
-    from mvt_wrangler_spark.operators import text as T
-
-    return T.pii_scrub(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
-def q_blocklist_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-blocklist curation value-checked end to end: deterministic
-    URL-bearing text is built from point ids (identical string algebra on
-    both engines), URLs -> hosts -> registrable domains are regex-extracted,
-    and a broadcast blocklist join yields per-doc (n_urls, n_blocked, keep).
-    Every 11th doc carries no URL (exercises the left-join keep path)."""
-    from mvt_wrangler_spark.operators import text as T
-
-    ids = _points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(29)) == 2).distinct()
-    i = F.col("id")
-    s1 = F.concat(F.lit("https://www.shop"), F.pmod(i, F.lit(5)),
-                  F.lit(".example"), F.pmod(i, F.lit(7)),
-                  F.lit(".com/item/"), i)
-    s2 = F.concat(F.lit("http://cdn"), F.pmod(i, F.lit(3)),
-                  F.lit(".assets"), F.pmod(i, F.lit(4)),
-                  F.lit(".net:8080/f/"), i)
-    text = F.when(F.pmod(i, F.lit(11)) == 0, F.lit("no links today"))\
-            .when(F.pmod(i, F.lit(2)) == 0,
-                  F.concat(F.lit("buy at "), s1, F.lit(" and "), s2, F.lit(" now")))\
-            .otherwise(F.concat(F.lit("see "), s1, F.lit(" today")))
-    docs = ids.select(i.alias("doc_id"), text.alias("text"))
-    blocked = spark.createDataFrame(
-        [("example0.com",), ("example3.com",), ("example6.com",),
-         ("assets1.net",), ("assets3.net",)], ["domain"])
-    return T.blocklist_scrub(docs, blocked)
-
-
-def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary: top-100 tokens by term frequency (+ doc
-    frequency), global top-k as TakeOrderedAndProject — no full sort."""
-    from mvt_wrangler_spark.operators import text as T
-
-    return T.vocab_topk(spark.read.parquet(f"{sf_dir}/documents.parquet"), k=100)
-
-
-def q_curate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end curation pipeline: exact dedup + repetition + PII +
-    length + language gates composed into one keep/drop verdict with a
-    priority-ordered drop reason (dup > repetitive > pii > short > lang).
-    The corpus is spiked deterministically (identical algebra on both
-    engines) so every gate fires: +1e6 ids are exact duplicates, +2e6 ids
-    carry an email, +3e6 ids are one line repeated three times. Each
-    signal is the SAME operator the standalone contract queries check; the
-    oracle composes the corresponding SQL twins as CTEs over the spiked
-    corpus."""
-    from mvt_wrangler_spark import session
-    from mvt_wrangler_spark.operators import dedup as D
-    from mvt_wrangler_spark.operators import text as T
-
-    base = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id", "text"))
-    d = F.col("doc_id")
-    dups = base.filter(d % 10 == 0).select((d + 1000000).alias("doc_id"), "text")
-    piis = base.filter(d % 17 == 0).select(
-        (d + 2000000).alias("doc_id"),
-        F.concat("text", F.lit(" contact bob@spam.io now")).alias("text"))
-    ln = F.concat(F.lit("repeat me "), d.cast("string"))
-    reps = base.filter(d % 13 == 0).select(
-        (d + 3000000).alias("doc_id"),
-        F.concat(ln, F.lit("\n"), ln, F.lit("\n"), ln).alias("text"))
-    docs = base.unionAll(dups).unionAll(piis).unionAll(reps)
-    # pin the spiked corpus: it feeds SIX consumers (the id spine + five
-    # signal operators), and un-pinned each consumer re-ran the 4-branch
-    # scan+spike union — 24 parquet scans in the plan, i.e. six full corpus
-    # passes at scale. One materialized pass is what a real curation
-    # pipeline does with its staged corpus.
-    docs = session.pin(docs)
-
-    keeper = (D.exact_dedup(docs, on="text", order_col="doc_id")
-              .select("doc_id").withColumn("__k", F.lit(1)))
-    tok = T.token_counts(docs).select("doc_id", "n_ws_tokens")
-    rep = T.repetition_stats(docs).select("doc_id", "dup_line_frac")
-    pii = T.pii_scrub(docs).select("doc_id", "has_pii")
-    lang = T.lang_id(docs)
-    j = (docs.select("doc_id").join(keeper, "doc_id", "left")
-         .join(tok, "doc_id").join(rep, "doc_id")
-         .join(pii, "doc_id").join(lang, "doc_id"))
-    reason = (F.when(F.col("__k").isNull(), "dup")
-              .when(F.col("dup_line_frac") > 0.3, "repetitive")
-              .when(F.col("has_pii"), "pii")
-              .when(F.col("n_ws_tokens") < 20, "short")
-              .when(F.col("lang_pred") == "unk", "lang"))
-    return j.select("doc_id", reason.isNull().alias("keep"),
-                    reason.alias("reason"))
-
-
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force integer-quantized dot-product top-k (ANN baseline)."""
     from pyspark.sql import Window
@@ -578,31 +416,6 @@ def q_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 level=12, res=7))
     return out.select("id", F.col("__cells.s2_cell").alias("s2_cell"),
                       F.col("__cells.h3_cell").alias("h3_cell"))
-
-
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30 min) — lag + cumulative-sum windows."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    us = F.unix_micros(F.col("ts").cast("timestamp"))  # exact integer microseconds
-    gap = us - F.lag(us).over(w)
-    bounded = ev.withColumn("new_sess", F.when(gap.isNull() | (gap > 1_800_000_000), 1).otherwise(0))
-    sess = bounded.withColumn("session_n", F.sum("new_sess").over(
-        w.rowsBetween(Window.unboundedPreceding, 0)))
-    return (
-        sess.groupBy("user_id", "session_n")
-        .agg(F.min("ts").alias("session_start"), F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", "session_start", "n_events")
-    )
-
-
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text quality heuristics: token stats + stopword/punct ratios."""
-    from mvt_wrangler_spark.operators import text as T
-
-    return T.quality_score(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def q_distinct_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1298,33 +1111,6 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   k=3, bands=4, max_bucket=1000)
 
 
-def q_image_curate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-curation pipeline composed end to end (the image twin of
-    curate_e2e): bytes -> ahash -> hamming near-dup CLUSTERS -> keep one
-    deterministic representative per cluster -> gate the keeper's caption
-    (token-count window 10..60 and language != 'unk'). Each stage is the
-    same operator its standalone contract query checks; the oracle
-    composes the full recursive-closure SQL with the token/lang twins.
-    This is the query a VLM-corpus builder runs nightly: visual dedup
-    first (captions differ across near-dups — see caption_conflicts),
-    then text-quality gates on the survivor."""
-    from mvt_wrangler_spark.operators import text as T
-    from mvt_wrangler_spark.operators.dedup import hamming_keepers
-
-    keep = hamming_keepers(_ahash_df(spark, sf_dir), id_col="id",
-                           phash_col="ahash", k=3, bands=4, max_bucket=1000)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    cap = (T.token_counts(docs).select("doc_id", "n_ws_tokens")
-           .join(T.lang_id(docs).select("doc_id", "lang_pred"), "doc_id"))
-    j = (keep.withColumn("doc_id", F.pmod("id", F.lit(500)))
-         .join(F.broadcast(cap), "doc_id"))
-    kept = (F.col("n_ws_tokens").between(10, 60)
-            & (F.col("lang_pred") != "unk"))
-    return j.select("id", "cluster_size",
-                    F.col("n_ws_tokens").cast("long").alias("n_ws_tokens"),
-                    "lang_pred", kept.alias("kept"))
-
-
 def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-Lloyd k-means over the embeddings table, bit-exact: quantized
     vectors, deterministic min-id init, integer argmin with lowest-centroid
@@ -1357,13 +1143,6 @@ def q_tile_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (targets.join(ranked, targets["target"] == ranked["rn"])
             .select(F.col("q").cast("int").alias("q"),
                     F.col("cnt").cast("long").alias("tile_cnt")))
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling position-weighted fingerprint mod 2^31-1 (SQL-foldable)."""
-    from mvt_wrangler_spark.operators import text as T
-
-    return T.doc_fingerprint(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def q_geom_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1458,21 +1237,6 @@ def q_winding(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(P))
     return out.select("gkey", "sign_before", "was_reversed",
                       fp("xs", 29).alias("fp_x"), fp("ys", 13).alias("fp_y"))
-
-
-def q_geocode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geohash-8 + Bing quadkey per point — the two remaining mainstream
-    cell systems alongside H3/S2/tile_id. Pure single-pass codegen (bit
-    spread chained through withColumns, base32/base4 digit concat);
-    bit-identical DuckDB twin."""
-    from mvt_wrangler_spark.functions import geocodes as GC
-    from mvt_wrangler_spark.functions import tiling
-
-    pts = _points(spark, sf_dir)
-    d = GC.with_geohash(pts, "lon", "lat", precision=8)
-    d = d.withColumn("qk", GC.quadkey(tiling.tile_x(F.col("lon"), Z),
-                                      tiling.tile_y(F.col("lat"), Z), Z))
-    return d.select("id", "geohash", "qk")
 
 
 def q_cell_cover_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1889,18 +1653,6 @@ def q_dwithin_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dwithin_join(left, right, eps=500)
 
 
-def q_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANALYZE-style column profiling of the orders table (row/null/exact
-    distinct counts + min/max) in ONE aggregate pass, exploded to
-    per-column rows (operators/profile.py; float columns rejected by
-    design — engine string forms differ)."""
-    from mvt_wrangler_spark.operators.profile import profile
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return profile(orders, ["o_orderkey", "o_custkey", "o_orderstatus",
-                            "o_orderdate", "o_orderpriority"])
-
-
 def q_dedup_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/val/test assignment: every member of a near-dup
     CLUSTER inherits the split of the cluster representative (singletons
@@ -1938,7 +1690,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hillshade": q_hillshade,
         "equalize": q_equalize,
         "caption_conflicts": q_caption_conflicts,
-        "image_curate_e2e": q_image_curate_e2e,
         "tile_sample": q_tile_sample,
         "embed_centroids": q_embed_centroids,
         "clip_tile": q_clip_tile,
@@ -1949,13 +1700,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tile_shards": q_tile_shards,
         "spatial_cluster": q_spatial_cluster,
         "dataset_split": q_dataset_split,
-        "boilerplate": q_boilerplate,
         "dwithin_join": q_dwithin_join,
-        "tfidf_topk": q_tfidf_topk,
         "winding": q_winding,
         "pagerank": q_pagerank,
         "dedup_safe_split": q_dedup_safe_split,
-        "profile": q_profile,
         "phash_neardup": q_phash_neardup,
         "kmeans_assign": q_kmeans_assign,
         "ann_topk_ivf": q_ann_topk_ivf,
@@ -1964,8 +1712,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tile_quantiles": q_tile_quantiles,
         "tile_encode": q_tile_encode,
         "simhash": q_simhash,
-        "doc_fingerprint": q_doc_fingerprint,
-        "geocode": q_geocode,
         "cell_cover_join": q_cell_cover_join,
         "tile_assign": q_tile_assign,
         "tile_assign_multi": q_tile_assign_multi,
@@ -1989,23 +1735,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "expr_filter": q_expr_filter,
         "asof_join": q_asof_join,
         "interval_join": q_interval_join,
-        "docs_exact_dedup": q_docs_exact_dedup,
-        "text_stats": q_text_stats,
-        "lang_id": q_lang_id,
-        "token_count": q_token_count,
-        "decontaminate": q_decontaminate,
-        "repetition_stats": q_repetition_stats,
-        "pii_scrub": q_pii_scrub,
-        "blocklist_scrub": q_blocklist_scrub,
-        "curate_e2e": q_curate_e2e,
-        "vocab_topk": q_vocab_topk,
         "ann_topk": q_ann_topk,
         "ann_topk_lsh": q_ann_topk_lsh,
         "minhash_lsh": q_minhash_lsh,
         "ngram_jaccard": q_ngram_jaccard,
         "cell_encode": q_cell_encode,
-        "sessionize": q_sessionize,
-        "quality_score": q_quality_score,
         "distinct_phash": q_distinct_phash,
         "embed_neardup": q_embed_neardup,
         "embed_neardup_lsh": q_embed_neardup_lsh,
@@ -2304,48 +2038,6 @@ FROM __l ASOF LEFT JOIN __r
   ON __l.user_id = __r.user_id AND __l.ts >= __r.ts
 """
 
-    docs_dedup = """
-SELECT doc_id FROM (
-  SELECT doc_id, row_number() OVER (PARTITION BY text ORDER BY doc_id ASC) AS rn
-  FROM documents) WHERE rn = 1
-"""
-
-    text_stats = r"""
-SELECT doc_id,
-       CAST(length(text) AS INT) AS n_chars_raw,
-       CAST(len(string_split_regex(trim(text), '\s+')) AS INT) AS n_tokens,
-       CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS INT) AS n_punct
-FROM documents
-"""
-
-    lang_id = """
-WITH h AS (
-  SELECT doc_id,
-         (length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' the ', ''))) / 5.0
-       + (length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' a ', ''))) / 3.0
-       + (length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' and ', ''))) / 5.0 AS en
-  FROM documents)
-SELECT doc_id, CASE WHEN en >= 3 THEN 'en' WHEN en >= 1 THEN 'en-ish' ELSE 'unk' END AS lang_pred
-FROM h
-"""
-
-    from mvt_wrangler_spark.operators.text import (boilerplate_stats_sql,
-                                                   decontaminate_sql,
-                                                   pii_scrub_sql,
-                                                   repetition_stats_sql,
-                                                   token_counts_sql,
-                                                   vocab_topk_sql)
-    token_count_sql_str = token_counts_sql("documents")
-    boilerplate_sql_str = boilerplate_stats_sql("documents", shingle=12,
-                                                min_docs=4)
-    from mvt_wrangler_spark.operators.text import tfidf_topk_sql
-
-    tfidf_sql_str = tfidf_topk_sql("documents", k=5)
-    decontaminate_sql_str = decontaminate_sql(
-        "documents", shingle=8, eval_pred="doc_id % 37 = 3")
-    repetition_stats_sql_str = repetition_stats_sql("documents")
-    pii_scrub_sql_str = pii_scrub_sql("documents")
-
     ann = """
 WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 3),
 p AS (SELECT e.vec_id, q.qid,
@@ -2356,18 +2048,6 @@ p AS (SELECT e.vec_id, q.qid,
 r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id ASC) AS rank FROM p)
 SELECT qid, CAST(rank AS INT) AS rank, vec_id AS neighbor_id, CAST(score AS BIGINT) AS score
 FROM r WHERE rank <= 5
-"""
-
-    sessionize = """
-WITH g AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END AS new_sess
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
-s AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                                    ROWS UNBOUNDED PRECEDING) AS session_n FROM g)
-SELECT user_id, min(ts) AS session_start, CAST(count(*) AS BIGINT) AS n_events
-FROM s GROUP BY user_id, session_n
 """
 
     def _hs_elev(dy: int, dx: int) -> str:
@@ -2407,81 +2087,6 @@ SELECT id, round(CAST(sum(shade) AS DOUBLE) / 308, 6) AS mean_shade,
 FROM __px GROUP BY 1
 """
 
-    _spiked_docs = """
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT doc_id + 2000000, text || ' contact bob@spam.io now'
-  FROM documents WHERE doc_id % 17 = 0
-  UNION ALL
-  SELECT doc_id + 3000000,
-         'repeat me ' || CAST(doc_id AS VARCHAR) || chr(10) ||
-         'repeat me ' || CAST(doc_id AS VARCHAR) || chr(10) ||
-         'repeat me ' || CAST(doc_id AS VARCHAR)
-  FROM documents WHERE doc_id % 13 = 0"""
-    curate_e2e = f"""
-WITH __docs AS ({_spiked_docs}),
-__keep AS (
-  SELECT doc_id, 1 AS k FROM (
-    SELECT doc_id, row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-    FROM __docs) WHERE rn = 1),
-__tok AS ({token_counts_sql('__docs')}),
-__rep AS ({repetition_stats_sql('__docs')}),
-__pii AS ({pii_scrub_sql('__docs')}),
-__lang AS (
-  SELECT doc_id,
-         CASE WHEN en >= 3 THEN 'en' WHEN en >= 1 THEN 'en-ish' ELSE 'unk'
-         END AS lang_pred
-  FROM (SELECT doc_id,
-          (length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' the ', ''))) / 5
-        + (length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' a ', ''))) / 3
-        + (length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' and ', ''))) / 5 AS en
-        FROM __docs)),
-__r AS (
-  SELECT d.doc_id,
-         CASE WHEN k.k IS NULL THEN 'dup'
-              WHEN r.dup_line_frac > 0.3 THEN 'repetitive'
-              WHEN p.has_pii THEN 'pii'
-              WHEN t.n_ws_tokens < 20 THEN 'short'
-              WHEN l.lang_pred = 'unk' THEN 'lang'
-         END AS reason
-  FROM __docs d LEFT JOIN __keep k USING (doc_id)
-       JOIN __tok t USING (doc_id) JOIN __rep r USING (doc_id)
-       JOIN __pii p USING (doc_id) JOIN __lang l USING (doc_id))
-SELECT doc_id, reason IS NULL AS keep, reason FROM __r
-"""
-
-    from mvt_wrangler_spark.operators.text import REG_DOMAIN_RE, URL_RE
-
-    _shop = ("'https://www.shop' || CAST(id % 5 AS VARCHAR) || '.example' || "
-             "CAST(id % 7 AS VARCHAR) || '.com/item/' || CAST(id AS VARCHAR)")
-    _cdn = ("'http://cdn' || CAST(id % 3 AS VARCHAR) || '.assets' || "
-            "CAST(id % 4 AS VARCHAR) || '.net:8080/f/' || CAST(id AS VARCHAR)")
-    blocklist_scrub_sql = f"""
-WITH __pts AS ({POINTS_SQL}),
-__ids AS (SELECT DISTINCT id FROM __pts WHERE id % 29 = 2),
-__d AS (
-  SELECT id AS doc_id,
-         CASE WHEN id % 11 = 0 THEN 'no links today'
-              WHEN id % 2 = 0 THEN 'buy at ' || {_shop} || ' and ' || {_cdn} || ' now'
-              ELSE 'see ' || {_shop} || ' today'
-         END AS text
-  FROM __ids),
-__u AS (SELECT doc_id, UNNEST(regexp_extract_all(text, '{URL_RE}', 1)) AS host FROM __d),
-__dom AS (SELECT doc_id, regexp_extract(host, '{REG_DOMAIN_RE}', 1) AS domain FROM __u),
-__bl AS (SELECT * FROM (VALUES ('example0.com'), ('example3.com'),
-                               ('example6.com'), ('assets1.net'),
-                               ('assets3.net')) b(domain)),
-__pd AS (
-  SELECT doc_id, count(*) AS n_urls, count(b.domain) AS n_blocked
-  FROM __dom d LEFT JOIN __bl b USING (domain) GROUP BY 1)
-SELECT d.doc_id, CAST(coalesce(n_urls, 0) AS BIGINT) AS n_urls,
-       CAST(coalesce(n_blocked, 0) AS BIGINT) AS n_blocked,
-       coalesce(n_blocked, 0) = 0 AS keep
-FROM __d d LEFT JOIN __pd USING (doc_id)
-"""
-
     equalize_sql = f"""
 WITH __pts AS ({POINTS_SQL}),
 __ids AS (SELECT DISTINCT id, CAST(id % 3 AS INT) AS fsel FROM __pts WHERE id % 47 = 9),
@@ -2506,20 +2111,6 @@ SELECT id,
        CAST(sum(e * (i*29 + j*13 + c*7 + 1)) % 2147483647 AS BIGINT) AS fp
 FROM __px JOIN __lut ON v = bin
 GROUP BY 1
-"""
-
-    quality = r"""
-WITH t AS (
-  SELECT doc_id,
-         CAST(len(string_split_regex(trim(text), '\s+')) AS INT) AS n_tokens,
-         length(regexp_replace(text, '\s', '', 'g')) AS nospace,
-         (length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' the ', ''))) / 5
-       + (length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' and ', ''))) / 5 AS stop_hits
-  FROM documents)
-SELECT doc_id, n_tokens,
-       round(CAST(nospace AS DOUBLE) / n_tokens, 6) AS mean_tok_len,
-       round(CAST(stop_hits AS DOUBLE) / n_tokens, 6) AS stop_ratio
-FROM t
 """
 
     distinct_phash = (
@@ -2779,46 +2370,11 @@ FROM __j
 
     neardup_clusters = pair_clusters_sql(ahash_neardup)
 
-    # composed image curation: closure keepers -> caption token/lang gates
-    # (the standalone twins wrapped as subqueries; lang CASE inlined below
-    # must stay in sync with the lang_id oracle)
-    image_curate_e2e = rf"""
-SELECT k.id, k.cluster_size, CAST(t.n_ws AS BIGINT) AS n_ws_tokens,
-       l.lang_pred,
-       (t.n_ws BETWEEN 10 AND 60 AND l.lang_pred <> 'unk') AS kept
-FROM (SELECT i.id, coalesce(c.cluster_size, 1) AS cluster_size
-      FROM (SELECT id FROM ({ahash_src})) i
-      LEFT JOIN ({neardup_clusters}) c ON c.member_id = i.id
-      WHERE c.member_id IS NULL OR c.member_id = c.cluster_rep) k
-JOIN (SELECT doc_id, len(string_split_regex(trim(text), '\s+')) AS n_ws
-      FROM documents) t
-  ON t.doc_id = ((k.id % 500) + 500) % 500
-JOIN (SELECT doc_id,
-             CASE WHEN en >= 3 THEN 'en' WHEN en >= 1 THEN 'en-ish'
-                  ELSE 'unk' END AS lang_pred
-      FROM (SELECT doc_id,
-                   (length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' the ', ''))) / 5.0
-                 + (length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' a ', ''))) / 3.0
-                 + (length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' and ', ''))) / 5.0 AS en
-            FROM documents)) l
-  ON l.doc_id = t.doc_id
-"""
-
     from mvt_wrangler_spark.operators.cluster import ann_topk_ivf_sql, kmeans_sql
 
     kmeans_sql_oracle = kmeans_sql(k=4, n_iter=2, quant=100)
     ann_ivf_oracle = ann_topk_ivf_sql(k=5, n_clusters=4, n_probe=2,
                                       n_iter=2, quant=100, n_queries=3)
-
-    doc_fp = """
-WITH c AS (
-  SELECT doc_id,
-         list_transform(generate_series(1, greatest(length(text), 1)),
-                        i -> CAST(ascii(substr(text, CAST(i AS INT), 1)) AS BIGINT)
-                             * (((i - 1) % 64) + 1)) AS terms
-  FROM documents)
-SELECT doc_id, CAST(list_sum(terms) % 2147483647 AS BIGINT) AS fingerprint FROM c
-"""
 
     from mvt_wrangler_spark.operators.dedup import (
         embedding_lsh_sql,
@@ -2842,12 +2398,6 @@ SELECT doc_id, CAST(list_sum(terms) % 2147483647 AS BIGINT) AS fingerprint FROM 
     ann_lsh = ann_topk_lsh_sql(k=5)
 
     minhash_lsh = minhash_lsh_sql(num_hashes=16, bands=4, shingle=5, max_bucket=1000)
-
-    from mvt_wrangler_spark.operators.profile import profile_sql
-
-    profile_sql_str = profile_sql(
-        "orders", ["o_orderkey", "o_custkey", "o_orderstatus",
-                   "o_orderdate", "o_orderpriority"])
 
     from mvt_wrangler_spark.operators.sampling import assign_split_sql as _as_sql
 
@@ -3096,16 +2646,6 @@ FROM __pts""",
     shard_manifest = (f"SELECT id, x, y, nbytes, shard, seq, byte_start, "
                       f"byte_end FROM ({_sm_inner}) __smf")
 
-    from mvt_wrangler_spark.functions.geocodes import geohash_sql, quadkey_sql
-
-    gh_ctes, gh_last, gh_expr = geohash_sql("lon", "lat", 8, "__pts")
-    geocode = (
-        "WITH " + ",\n".join([pts] + gh_ctes)
-        + f""" SELECT id, {gh_expr} AS geohash,
-       {quadkey_sql(tile_x_sql('lon', Z), tile_y_sql('lat', Z), Z)} AS qk
-FROM {gh_last}"""
-    )
-
     return {
         "tile_assign": tile_assign,
         "tile_assign_multi": tile_assign_multi,
@@ -3116,9 +2656,7 @@ FROM {gh_last}"""
                                            shingle=5, threshold=0.8),
         "simhash": simhash,
         "embed_neardup_lsh": embed_lsh,
-        "doc_fingerprint": doc_fp,
         "geom_measures": geom_measures,
-        "geocode": geocode,
         "cell_cover_join": cell_cover_join,
         "tile_sample": tile_sample,
         "embed_centroids": embed_centroids,
@@ -3130,15 +2668,10 @@ FROM {gh_last}"""
         "tile_shards": tile_shards,
         "spatial_cluster": spatial_cluster_sql,
         "dataset_split": dataset_split,
-        "boilerplate": boilerplate_sql_str,
         "dwithin_join": dwithin_sql_str,
-        "tfidf_topk": tfidf_sql_str,
         "winding": winding,
         "pagerank": pagerank_sql_str,
         "dedup_safe_split": dedup_safe_split,
-        "profile": profile_sql_str,
-        "sessionize": sessionize,
-        "quality_score": quality,
         "distinct_phash": distinct_phash,
         "embed_neardup": embed_neardup,
         "tile_local": tile_local,
@@ -3161,16 +2694,6 @@ FROM {gh_last}"""
         "expr_filter": expr_filter,
         "asof_join": asof_join,
         "interval_join": interval_join,
-        "docs_exact_dedup": docs_dedup,
-        "text_stats": text_stats,
-        "lang_id": lang_id,
-        "token_count": token_count_sql_str,
-        "decontaminate": decontaminate_sql_str,
-        "repetition_stats": repetition_stats_sql_str,
-        "pii_scrub": pii_scrub_sql_str,
-        "blocklist_scrub": blocklist_scrub_sql,
-        "curate_e2e": curate_e2e,
-        "vocab_topk": vocab_topk_sql("documents", k=100),
         "ann_topk": ann,
         "ann_topk_lsh": ann_lsh,
         "zonal_stats": zonal,
@@ -3186,7 +2709,6 @@ FROM {gh_last}"""
         "ann_topk_ivf": ann_ivf_oracle,
         "image_ahash_neardup": ahash_neardup,
         "caption_conflicts": caption_conflicts,
-        "image_curate_e2e": image_curate_e2e,
         "neardup_clusters": neardup_clusters,
         "tile_quantiles": tile_quantiles,
     }

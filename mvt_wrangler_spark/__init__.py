@@ -12,10 +12,10 @@ minhash near-dup ingest into snapshot tables. All DataFrame ops plus
 vectorized Arrow/pandas UDFs (no per-row Python).
 
 Layout: `functions/` (column kernels: tiling, cells, geometry, MVT codec,
-geocodes, ring measures, metrics), `operators/` (the path's joins, filters,
-dedup, rollup, zonal and tile encode, plus operators that only the contract
-queries in `__spark_entry__.py` run: text and image curation, clipping,
-simplification, sampling, clustering, graph ranking, profiling, R-tree),
+ring measures, metrics), `operators/` (the path's joins, filters, dedup,
+rollup, zonal and tile encode, plus operators that only the contract queries
+in `__spark_entry__.py` run: image curation, clipping, simplification,
+sampling, clustering, graph ranking, R-tree),
 `sources/` (catalog, PMTiles, synthetic inputs), `plans/` (the CLI pipeline
 and the incremental ingest), `cli.py`, `session.py`.
 """

@@ -1,6 +1,5 @@
 """Deduplication operators: phash-per-tile (north rule) + the training-data
-suite (exact, minhash-LSH, simhash, embedding near-dup) over text/vector
-columns.
+suite (minhash-LSH, simhash, embedding near-dup) over text/vector columns.
 
 The reference's only dedup is the per-tile dictionary re-encode
 (/root/reference/src/transform.rs:174-191); the graft promotes dedup to a
@@ -58,12 +57,6 @@ def phash_dedup(df: DataFrame, keys: tuple[str, ...] = ("z", "x", "y", "phash"),
         .drop("__rn"),
         eager=False,
     )
-
-
-def exact_dedup(df: DataFrame, on: str, order_col: str) -> DataFrame:
-    """Exact dedup by column value, deterministic keeper (min order_col)."""
-    w = Window.partitionBy(on).orderBy(F.col(order_col).asc())
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 # ---------------------------------------------------------------------------
@@ -727,7 +720,7 @@ def phash_hamming_pairs(df: DataFrame, id_col: str = "image_id",
 
     The image twin of minhash_lsh_candidates: web-scale image dedup keys on
     pHash hamming <= k (re-encodes/resizes perturb a few bits), not exact
-    equality (exact_dedup / phash_dedup cover that). Reference scope: the
+    equality (phash_dedup covers that). Reference scope: the
     per-tile phash dedup of the north rule generalized to cross-variant
     near-duplicates.
 

@@ -47,52 +47,43 @@ def tile_stats(df: DataFrame, n_salt: int = 0, salt_col: str = "image_id",
 
 
 def pyramid_rollup(base: DataFrame, base_z: int, min_z: int = 0) -> DataFrame:
-    """Roll per-tile stats from base_z up to min_z; returns all levels unioned.
+    """Roll per-tile stats from base_z up to min_z; returns all levels.
 
-    base must have (z, x, y, n_rows[, bytes_in]); level z' aggregates base
-    with x >> (base_z - z'), y >> (base_z - z') — integer sums are
-    associative, so grouping base straight to each level equals the
-    level-by-level chain bit for bit.
+    base must have (z, x, y, n_rows[, bytes_in]), one row per tile; level
+    z' aggregates base with x >> (base_z - z'), y >> (base_z - z') —
+    integer sums are associative, so grouping base straight to each level
+    equals the level-by-level chain bit for bit.
 
-    The base is pinned ONCE (session.pin, lazily: building the pyramid
-    runs no Spark job, its first reader materializes the base, and the
-    base keeps spark.sql.shuffle.partitions partitions, as AQE is off
-    inside a lazy pin): the naive
-    chain-then-union plan re-executes the expensive base aggregation once
+    Every level, base_z included (a shift of 0 over one row per tile is the
+    identity), comes from ONE explode + ONE aggregation over base, so the
+    plan reads base once and builds with no Spark job. The naive
+    chain-then-union plan re-executed the expensive base aggregation once
     PER LEVEL (level k's union branch embeds k cascaded groupBys all the
     way down to the raw scan — 11 scans / 66 exchanges in the zoom-10
-    contract query's physical plan), turning a log-depth pyramid into a
-    quadratic one. base after its groupBy is bounded by 4^base_z rows
-    regardless of corpus size, so the pin is cheap at any scale,
-    and every coarser level then derives from that bounded table in one
-    explode + single aggregation (map-side combine collapses each
-    partition to its distinct coarse keys before the one exchange).
+    contract query's physical plan), and a base-plus-coarser-levels union
+    needs base pinned and writes base's partitions as they are, one file
+    per shuffle partition. Here map-side combine collapses each partition
+    to its distinct keys before the one exchange, and the output is at most
+    4^base_z * 4/3 rows whatever the corpus size, so AQE coalesces it to a
+    few partitions (one file at small sizes) whatever
+    spark.sql.shuffle.partitions is.
     """
     agg_cols = [c for c in base.columns if c not in ("z", "x", "y")]
-    b = session.pin(base, eager=False)
-    if min_z > base_z - 1:
-        return b
-    # ALL coarser levels in one explode + ONE groupBy instead of a groupBy
-    # + union branch per level: each base row contributes its (z', x>>d,
-    # y>>d) tuple once per level either way, and integer sums are
-    # associative, so the single aggregation is bit-identical to the
-    # per-level chain (A/B-verified exceptAll-equal at sf0.1). Wins twice:
-    # one Exchange instead of (base_z - min_z) — map-side combine still
-    # collapses each partition to its distinct coarse keys before the
-    # shuffle — and ~4 DataFrame calls instead of 4 per level, which at
-    # base_z=10 removed ~1 s of driver-side plan construction from every
-    # invocation (the with_hilbert_d lesson: per-call py4j/analyzer
-    # overhead is flat and adds up in loops).
-    zlist = list(range(base_z - 1, min_z - 1, -1))
-    lv = (b.select(F.explode(F.array(*[F.lit(z).cast("int") for z in zlist]))
-                   .alias("__z2"), "x", "y", *agg_cols)
-          .select(F.col("__z2").alias("z"),
-                  F.expr(f"shiftright(x, {base_z} - __z2)").alias("x"),
-                  F.expr(f"shiftright(y, {base_z} - __z2)").alias("y"),
-                  *agg_cols)
-          .groupBy("z", "x", "y")
-          .agg(*[F.sum(c).alias(c) for c in agg_cols]))
-    return b.unionByName(lv)
+    # one explode + ONE groupBy instead of a groupBy + union branch per
+    # level (A/B-verified exceptAll-equal at sf0.1): one Exchange instead of
+    # (base_z - min_z), and ~4 DataFrame calls instead of 4 per level, which
+    # at base_z=10 removed ~1 s of driver-side plan construction from every
+    # invocation (per-call py4j/analyzer overhead is flat and adds up in
+    # loops).
+    zlist = list(range(base_z, min_z - 1, -1))
+    return (base.select(F.explode(F.array(*[F.lit(z).cast("int") for z in zlist]))
+                        .alias("__z2"), "x", "y", *agg_cols)
+            .select(F.col("__z2").alias("z"),
+                    F.expr(f"shiftright(x, {base_z} - __z2)").alias("x"),
+                    F.expr(f"shiftright(y, {base_z} - __z2)").alias("y"),
+                    *agg_cols)
+            .groupBy("z", "x", "y")
+            .agg(*[F.sum(c).alias(c) for c in agg_cols]))
 
 
 def morans_i(tiles: DataFrame, x_col: str = "x", y_col: str = "y",

@@ -95,7 +95,7 @@ def _images(jobs, spark, path):
 
 @pytest.mark.spark
 def test_building_the_curate_frames_runs_no_job(spark, images_path):
-    """Both pins on the chain (the keepers, the pyramid base) are lazy."""
+    """The keepers' pin is lazy, and the pyramid needs no pin."""
     jobs = _Jobs(spark)
     images = _images(jobs, spark, images_path)
     _, _, pyramid = jobs.run("curate-build", _curate_frames, spark, images)
@@ -144,3 +144,35 @@ def test_curate_op_job_budget(spark, images_path, tmp_path):
         assert names, sink
         assert "ArrowEvalPython" not in names, (sink, names)
         assert not any(n.startswith("Scan parquet") for n in names), (sink, names)
+
+
+@pytest.mark.spark
+def test_pyramid_files_do_not_depend_on_shuffle_partitions(spark, images_path, tmp_path):
+    """The pyramid is at most 4^Z * 4/3 rows, so its file count must not
+    follow spark.sql.shuffle.partitions (one file per partition would be 200
+    small files at Spark's default), and building it still runs no job."""
+    from mvt_wrangler_spark.functions import tiling
+    from mvt_wrangler_spark.operators import rollup
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    files, rows = {}, {}
+    jobs = _Jobs(spark)
+    try:
+        for n in (4, 16):
+            spark.conf.set(key, str(n))
+            stats = rollup.tile_stats(
+                tiling.assign_tiles(spark.read.parquet(images_path), z=Z),
+                n_salt=8, salt_col="image_id")
+            pyramid = jobs.run(f"pyramid-build-{n}", rollup.pyramid_rollup,
+                               stats.select("z", "x", "y", "n_rows", "bytes_in"),
+                               base_z=Z, min_z=0)
+            assert jobs.jobs(f"pyramid-build-{n}") == 0
+            path = str(tmp_path / f"pyramid-{n}")
+            pyramid.write.parquet(path)
+            files[n] = [f for f in os.listdir(path) if f.endswith(".parquet")]
+            rows[n] = sorted(spark.read.parquet(path).collect())
+    finally:
+        spark.conf.set(key, prev)
+    assert len(files[4]) == len(files[16]), files
+    assert rows[4] == rows[16] and rows[4][0].z == 0

@@ -9,12 +9,20 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
 
-from plan_audit import AUDIT, formatted_plan, plan_red_flags  # noqa: E402
+from plan_audit import (  # noqa: E402
+    AUDIT,
+    CARTESIAN_OK,
+    SCAN_COLS_OK,
+    SINGLE_PARTITION_OK,
+    formatted_plan,
+    plan_red_flags,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -57,10 +65,25 @@ def test_red_flag_scan_catches_broken_plans(spark):
 def test_every_query_has_an_oracle():
     """The contract pairs each query with exactly one DuckDB oracle: a query
     without a twin would pass check_contract on row counts alone, and an
-    oracle without a query checks nothing."""
+    oracle without a query checks nothing. Every audit exemption and
+    per-query budget must also name a live query: an entry left behind by a
+    deleted query is a special case the red-flag gate no longer needs."""
     import __spark_entry__ as e
 
-    assert e.queries().keys() == e.oracle_sql().keys()
+    names = e.queries().keys()
+    assert names == e.oracle_sql().keys()
+    listed = {
+        "AUDIT": {n for n, _ in AUDIT},
+        "CARTESIAN_OK": CARTESIAN_OK,
+        "SINGLE_PARTITION_OK": SINGLE_PARTITION_OK,
+        "SCAN_COLS_OK": SCAN_COLS_OK.keys(),
+        "PYTHON_PASS_BUDGET": {n for n, _ in PYTHON_PASS_BUDGET},
+        "PIN_PASS_QUERIES": PIN_PASS_QUERIES,
+        "PIN_AUDIT_QUERIES": PIN_AUDIT_QUERIES,
+    }
+    stale = {k: sorted(set(v) - names) for k, v in listed.items()
+             if set(v) - names}
+    assert not stale, f"entries for queries that do not exist: {stale}"
 
 
 def test_read_schema_ncols_counts_top_level_only():
@@ -142,8 +165,11 @@ def _pinned_plans(spark, monkeypatch, name) -> list[str]:
     return plans
 
 
+PIN_PASS_QUERIES = ["cell_cover_join", "minhash_lsh"]
+
+
 @pytest.mark.spark
-@pytest.mark.parametrize("name", ["cell_cover_join", "minhash_lsh"])
+@pytest.mark.parametrize("name", PIN_PASS_QUERIES)
 def test_single_python_pass_under_each_pin(spark, monkeypatch, name):
     plans = _pinned_plans(spark, monkeypatch, name)
     assert [_python_passes(p) for p in plans] == [1] * len(plans), (
@@ -152,8 +178,11 @@ def test_single_python_pass_under_each_pin(spark, monkeypatch, name):
 
 # phash_dedup pins its keepers, so the audited plans of these queries end at
 # the pin; the red-flag scan also reads the subplans behind it.
+PIN_AUDIT_QUERIES = ["pipeline_e2e", "phash_dedup"]
+
+
 @pytest.mark.spark
-@pytest.mark.parametrize("name", ["pipeline_e2e", "phash_dedup"])
+@pytest.mark.parametrize("name", PIN_AUDIT_QUERIES)
 def test_audited_plan_is_clean_under_each_pin(spark, monkeypatch, name):
     for plan in _pinned_plans(spark, monkeypatch, name):
         assert "ReadSchema" in plan, name
