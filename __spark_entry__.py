@@ -460,8 +460,9 @@ def _tile_encode_input(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tile_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The archive encoder's per-(tile, layer) dictionaries as flat columns:
     keys/values in FIRST-SEEN order (transform.rs:174-191 A1 semantics),
-    computed by the same _layer_dictionaries the MVT blob encoder uses. The
-    blob bytes themselves are pytest-pinned (golden bytes + decode round-trip)."""
+    computed by the per-tile MVT blob encoder's _layer_dictionaries. The
+    blob bytes themselves are pytest-pinned (golden bytes, decode round-trip,
+    and the batch encoder against scalar framing)."""
     from mvt_wrangler_spark.operators import tile_encode as TE
 
     return TE.tile_dictionary_stats(_tile_encode_input(spark, sf_dir)).select(
@@ -1040,8 +1041,8 @@ def _ahash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
     # Pin (id, ahash) ONCE per invocation: consumers reference it several
-    # times (hamming_keepers joins df twice; the banding operators pin only
-    # their own slim projection), and an unpinned reference re-runs the
+    # times (the banding operators pin only their own slim projection),
+    # and an unpinned reference re-runs the
     # whole scan->gen->codec->ahash chain. 16 bytes/row — the guide §8
     # proxy shape. Repartition-down first: the Python chain runs wide
     # (_spread), but downstream consumers are slim row-count-bounded joins,

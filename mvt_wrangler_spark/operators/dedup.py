@@ -1136,22 +1136,3 @@ SELECT CAST(member_id AS BIGINT) AS member_id,
 FROM __rep
 """
 
-
-def hamming_keepers(df: DataFrame, id_col: str = "id",
-                    phash_col: str = "phash", k: int = 3, bands: int = 4,
-                    max_bucket: int = 1000) -> DataFrame:
-    """One deterministic keeper row per hamming near-dup CLUSTER, with
-    singletons kept at cluster_size 1 — the 'which rows survive dedup'
-    operator a curation pipeline actually materializes (pair_clusters
-    covers only paired nodes, so rows with no near-dup would silently
-    vanish without the left join here). Output: (id, cluster_size);
-    keeper = min member id, matching pair_clusters' representative."""
-    cl = phash_hamming_clusters(df, id_col=id_col, phash_col=phash_col,
-                                k=k, bands=bands, max_bucket=max_bucket)
-    return (df.select(F.col(id_col))
-            .join(cl, F.col(id_col) == cl["member_id"], "left")
-            .filter(F.col("member_id").isNull()
-                    | (F.col("member_id") == F.col("cluster_rep")))
-            .select(F.col(id_col),
-                    F.coalesce("cluster_size", F.lit(1)).cast("long")
-                    .alias("cluster_size")))

@@ -19,9 +19,13 @@ Reference semantics reproduced exactly (KotobaMedia/mvt-wrangler):
 
 The compiler targets Catalyst instead of a Rust enum tree: every DSL node
 lowers to built-in pyspark.sql.functions column expressions (JVM-side,
-whole-stage codegen — no Python in the hot path). Literal-vs-column
-comparisons produce a full type-cascade that Catalyst constant-folds down to
-the single live branch.
+whole-stage codegen — no Python in the hot path). Folding happens here, at
+compile time, not in Catalyst: each column value carries the static set of
+kinds it can hold (a literal one, a string-tag lookup NULL or STRING), and
+every type cascade emits only the branches those kinds reach; boolean
+operators over constants fold to constants. A Column built with the dead
+branches costs driver py4j calls and analysis on every build, even though
+the optimizer removes them later.
 
 Value kinds: NULL=0 STRING=1 NUMBER=2 FLOAT=3 BOOL=4 (arrays exist only as
 compile-time `in`-list / literal values, never as column data).
@@ -40,6 +44,7 @@ evaluator `tests/oracle/expr_oracle.py`, approximated in columns):
 
 from __future__ import annotations
 
+import operator
 import re
 from dataclasses import dataclass
 from typing import Any, Union
@@ -166,46 +171,128 @@ def lit_from_json(v: Any) -> Lit:
 
 
 # ---------------------------------------------------------------------------
+# Compile-time folding: a value is a Python constant or a Column
+# ---------------------------------------------------------------------------
+
+_UNREACHABLE = object()  # a CASE fallback no row can reach
+
+
+def as_column(v: Any) -> Column:
+    """A folded value (Python constant or Column) as a Column."""
+    return v if isinstance(v, Column) else F.lit(v)
+
+
+def _is_const(v: Any) -> bool:
+    return not isinstance(v, Column)
+
+
+def fold_and(x: Any, y: Any) -> Any:
+    """x AND y; a constant operand decides or drops out (3-valued logic
+    agrees: FALSE AND NULL is FALSE, TRUE AND x is x)."""
+    if x is False or y is False:
+        return False
+    if x is True:
+        return y
+    if y is True:
+        return x
+    return x & y
+
+
+def fold_or(x: Any, y: Any) -> Any:
+    """x OR y with the same folding as fold_and."""
+    if x is True or y is True:
+        return True
+    if x is False:
+        return y
+    if y is False:
+        return x
+    return x | y
+
+
+def _fold_not(x: Any) -> Any:
+    return (not x) if isinstance(x, bool) else ~x
+
+
+def fold_case(branches: list, otherwise: Any) -> Any:
+    """CASE WHEN over (condition, value) pairs, folded at compile time.
+
+    A False condition drops its branch and a True one ends the cascade.
+    `otherwise=_UNREACHABLE` says the conditions cover every row, so the
+    last live branch becomes the fallback. Trailing branches whose value is
+    the fallback's constant are dropped. A cascade that folds to a constant
+    returns it."""
+    live = []
+    for cond, val in branches:
+        if cond is False:
+            continue
+        if cond is True:
+            otherwise = val
+            break
+        live.append((cond, val))
+    if otherwise is _UNREACHABLE:
+        otherwise = live.pop()[1]
+    while live and _is_const(live[-1][1]) and _is_const(otherwise) \
+            and live[-1][1] == otherwise and type(live[-1][1]) is type(otherwise):
+        live.pop()
+    if not live:
+        return otherwise
+    out = F.when(live[0][0], as_column(live[0][1]))
+    for cond, val in live[1:]:
+        out = out.when(cond, as_column(val))
+    return out.otherwise(as_column(otherwise))
+
+
+# ---------------------------------------------------------------------------
 # Runtime (column) values: a bundle of per-kind columns
 # ---------------------------------------------------------------------------
 
+# kind pairs the comparison ladder orders by payload (the rest by Display)
+_LADDER_PAIRS = {(BOOL, BOOL), (NUMBER, NUMBER), (FLOAT, FLOAT),
+                 (NUMBER, FLOAT), (FLOAT, NUMBER), (STRING, STRING)}
+
+
 class CVal:
-    """A column-valued ExpressionValue: kind column + per-kind payloads."""
+    """A column-valued ExpressionValue: kind column + per-kind payloads,
+    plus the static set of kinds the value can hold.
 
-    __slots__ = ("t", "s", "i", "f", "fs", "b")
+    `kinds=None` means any kind the data carries (typed tag structs read it
+    from the data). Otherwise only the payloads of those kinds exist, and
+    every test, Display and truthiness cascade emits branches for those
+    kinds only: a `map<string,string>` lookup is NULL or STRING, so it never
+    builds the NUMBER/FLOAT/BOOL branches. `null_of` is the column whose
+    NULL marks kind NULL in a {NULL, X} value; `lit` is the literal a
+    constant CVal came from."""
 
-    def __init__(self, t: Column, s: Column, i: Column, f: Column, fs: Column, b: Column):
-        self.t, self.s, self.i, self.f, self.fs, self.b = t, s, i, f, fs, b
+    __slots__ = ("kinds", "t", "s", "i", "f", "fs", "b", "null_of", "lit")
+
+    def __init__(self, kinds: frozenset | None, t: Column | None = None,
+                 s: Column | None = None, i: Column | None = None,
+                 f: Column | None = None, fs: Column | None = None,
+                 b: Column | None = None, null_of: Column | None = None,
+                 lit: Lit | None = None):
+        self.kinds, self.t, self.null_of, self.lit = kinds, t, null_of, lit
+        self.s, self.i, self.f, self.fs, self.b = s, i, f, fs, b
 
     @staticmethod
     def from_lit(v: Lit) -> "CVal":
+        k = v.kind
         return CVal(
-            t=F.lit(v.kind),
-            s=F.lit(v.s).cast("string"),
-            i=F.lit(v.i).cast("long"),
-            f=F.lit(v.f if v.kind == FLOAT else None).cast("double"),
-            fs=F.lit(v.fs).cast("string"),
-            b=F.lit(v.b).cast("boolean"),
+            frozenset({k}), lit=v,
+            s=F.lit(v.s) if k == STRING else None,
+            i=F.lit(v.i).cast("long") if k == NUMBER else None,
+            f=F.lit(v.f) if k == FLOAT else None,
+            fs=F.lit(v.fs) if k == FLOAT else None,
+            b=F.lit(v.b) if k == BOOL else None,
         )
 
     @staticmethod
     def from_string_col(c: Column) -> "CVal":
         """A nullable string column (map<string,string> tag lookup): NULL or STRING."""
-        return CVal(
-            t=F.when(c.isNull(), F.lit(NULL)).otherwise(F.lit(STRING)),
-            s=c,
-            i=F.lit(None).cast("long"),
-            f=F.lit(None).cast("double"),
-            fs=F.lit(None).cast("string"),
-            b=F.lit(None).cast("boolean"),
-        )
+        return CVal(frozenset({NULL, STRING}), s=c, null_of=c)
 
     @staticmethod
     def from_bool_col(c: Column) -> "CVal":
-        return CVal(
-            t=F.lit(BOOL), s=F.lit(None).cast("string"), i=F.lit(None).cast("long"),
-            f=F.lit(None).cast("double"), fs=F.lit(None).cast("string"), b=c,
-        )
+        return CVal(frozenset({BOOL}), b=c)
 
     @staticmethod
     def from_value_struct(c: Column) -> "CVal":
@@ -214,6 +301,7 @@ class CVal:
         A NULL struct (missing map key) is kind NULL.
         """
         return CVal(
+            None,
             t=F.coalesce(c.getField("t"), F.lit(NULL)),
             s=c.getField("s"),
             i=c.getField("i"),
@@ -222,27 +310,53 @@ class CVal:
             b=c.getField("b"),
         )
 
-    def display(self) -> Column:
-        """Rust Display coercion (expression_compiler.rs:111-125)."""
-        return (
-            F.when(self.t == NULL, F.lit("null"))
-            .when(self.t == STRING, self.s)
-            .when(self.t == NUMBER, self.i.cast("string"))
-            .when(self.t == FLOAT, self.fs)
-            .when(self.t == BOOL, F.when(self.b, F.lit("true")).otherwise(F.lit("false")))
-            .otherwise(F.lit(None))
-        )
+    def can(self, k: int) -> bool:
+        return self.kinds is None or k in self.kinds
 
-    def truthy(self) -> Column:
+    def is_(self, k: int) -> Any:
+        """`kind == k`, folded to a constant when the kinds decide it."""
+        if self.kinds is not None:
+            if k not in self.kinds:
+                return False
+            if len(self.kinds) == 1:
+                return True
+            if self.null_of is not None:  # kinds == {NULL, X}
+                return self.null_of.isNull() if k == NULL else self.null_of.isNotNull()
+        return self.t == k
+
+    def _by_kind(self, per_kind: dict, fallback: Any) -> Any:
+        """One branch per possible kind; the fallback only for open kinds."""
+        return fold_case([(self.is_(k), fn(self)) for k, fn in per_kind.items()
+                          if self.can(k)],
+                         fallback if self.kinds is None else _UNREACHABLE)
+
+    def display(self) -> Any:
+        """Rust Display coercion (expression_compiler.rs:111-125)."""
+        if self.lit is not None:
+            return self.lit.display()
+        return self._by_kind(_DISPLAY, None)
+
+    def truthy(self) -> Any:
         """to_bool (expression_compiler.rs:99-108)."""
-        return (
-            F.when(self.t == NULL, F.lit(False))
-            .when(self.t == STRING, self.s != "")
-            .when(self.t == NUMBER, self.i != 0)
-            .when(self.t == FLOAT, (self.fs != "0") & (self.fs != "0.0"))
-            .when(self.t == BOOL, self.b)
-            .otherwise(F.lit(False))
-        )
+        if self.lit is not None:
+            return self.lit.truthy()
+        return self._by_kind(_TRUTHY, False)
+
+
+_DISPLAY = {
+    NULL: lambda v: "null",
+    STRING: lambda v: v.s,
+    NUMBER: lambda v: v.i.cast("string"),
+    FLOAT: lambda v: v.fs,
+    BOOL: lambda v: F.when(v.b, F.lit("true")).otherwise(F.lit("false")),
+}
+_TRUTHY = {
+    NULL: lambda v: False,
+    STRING: lambda v: v.s != "",
+    NUMBER: lambda v: v.i != 0,
+    FLOAT: lambda v: (v.fs != "0") & (v.fs != "0.0"),
+    BOOL: lambda v: v.b,
+}
 
 
 Val = Union[Lit, CVal]
@@ -252,62 +366,57 @@ def _as_cval(v: Val) -> CVal:
     return CVal.from_lit(v) if isinstance(v, Lit) else v
 
 
-def _bool_val(v: Val) -> Column:
-    """Truthiness of an evaluated node as a Column (or folds for literals)."""
-    if isinstance(v, Lit):
-        return F.lit(v.truthy())
+def _bool_val(v: Val) -> Any:
+    """Truthiness of an evaluated node: a Python bool or a Column."""
     return v.truthy()
 
 
-_ORD_OPS = {
-    "==": lambda c: c == 0,
-    "!=": lambda c: c != 0,
-    "<": lambda c: c < 0,
-    ">": lambda c: c > 0,
-    "<=": lambda c: c <= 0,
-    ">=": lambda c: c >= 0,
-}
+def _bool_result(x: Any) -> Val:
+    """A folded boolean as a node value: a literal when constant."""
+    return Lit(BOOL, b=x) if isinstance(x, bool) else CVal.from_bool_col(x)
 
 
-def _cmp(a: Val, b: Val, op: str) -> Column:
+_ORD_OPS = {"==": operator.eq, "!=": operator.ne, "<": operator.lt,
+            ">": operator.gt, "<=": operator.le, ">=": operator.ge}
+
+
+def _cmp(a: Val, b: Val, op: str) -> Any:
     """compare_values coercion ladder (executor.rs:200-235) as one cascade.
 
-    Emits a boolean Column directly (one branch per type pair); with a
-    literal on either side Catalyst constant-folds the dead branches away.
-    """
+    One branch per type pair the operands can hold, folded at compile time:
+    a literal side has one kind, a string-tag lookup two (NULL, STRING), so
+    `["==", ["tag", "kind"], "building"]` compiles to one null test and one
+    string comparison. Only open kinds (typed tag structs) keep the whole
+    ladder and the Display fallback."""
+    cmp = _ORD_OPS[op]
     if isinstance(a, Lit) and isinstance(b, Lit):
-        return F.lit(_ORD_OPS[op](_compare_lits(a, b)))
+        return cmp(_compare_lits(a, b), 0)
     ca, cb = _as_cval(a), _as_cval(b)
 
-    def o(x: Column, y: Column) -> Column:
-        if op == "==":
-            return x == y
-        if op == "!=":
-            return x != y
-        if op == "<":
-            return x < y
-        if op == ">":
-            return x > y
-        if op == "<=":
-            return x <= y
-        return x >= y
+    def o(x: Any, y: Any) -> Column:
+        return cmp(as_column(x), as_column(y))
 
-    const = {"==": (True, False, False), "!=": (False, True, True),
-             "<": (False, True, False), ">": (False, False, True),
-             "<=": (True, True, False), ">=": (True, False, True)}[op]
-    eq_r, lt_r, gt_r = const  # result when ordering is Equal / Less / Greater
-    return (
-        F.when((ca.t == NULL) & (cb.t == NULL), F.lit(eq_r))
-        .when(ca.t == NULL, F.lit(lt_r))
-        .when(cb.t == NULL, F.lit(gt_r))
-        .when((ca.t == BOOL) & (cb.t == BOOL), o(ca.b.cast("int"), cb.b.cast("int")))
-        .when((ca.t == NUMBER) & (cb.t == NUMBER), o(ca.i, cb.i))
-        .when((ca.t == FLOAT) & (cb.t == FLOAT), o(ca.f, cb.f))
-        .when((ca.t == NUMBER) & (cb.t == FLOAT), o(ca.i.cast("double"), cb.f))
-        .when((ca.t == FLOAT) & (cb.t == NUMBER), o(ca.f, cb.i.cast("double")))
-        .when((ca.t == STRING) & (cb.t == STRING), o(ca.s, cb.s))
-        .otherwise(o(ca.display(), cb.display()))
-    )
+    # result when ordering is Equal / Less / Greater
+    eq_r, lt_r, gt_r = cmp(0, 0), cmp(-1, 0), cmp(1, 0)
+    branches = [(fold_and(ca.is_(NULL), cb.is_(NULL)), eq_r),
+                (ca.is_(NULL), lt_r), (cb.is_(NULL), gt_r)]
+    payload = {
+        (BOOL, BOOL): lambda: o(ca.b.cast("int"), cb.b.cast("int")),
+        (NUMBER, NUMBER): lambda: o(ca.i, cb.i),
+        (FLOAT, FLOAT): lambda: o(ca.f, cb.f),
+        (NUMBER, FLOAT): lambda: o(ca.i.cast("double"), cb.f),
+        (FLOAT, NUMBER): lambda: o(ca.f, cb.i.cast("double")),
+        (STRING, STRING): lambda: o(ca.s, cb.s),
+    }
+    for (ka, kb), val in payload.items():
+        cond = fold_and(ca.is_(ka), cb.is_(kb))
+        if cond is not False:
+            branches.append((cond, val()))
+    mixed = (ca.kinds is None or cb.kinds is None
+             or any((x, y) not in _LADDER_PAIRS
+                    for x in ca.kinds - {NULL} for y in cb.kinds - {NULL}))
+    return fold_case(branches, o(ca.display(), cb.display()) if mixed
+                     else _UNREACHABLE)
 
 
 def _compare_lits(a: Lit, b: Lit) -> int:
@@ -335,19 +444,23 @@ def _compare_lits(a: Lit, b: Lit) -> int:
     return (da > db) - (da < db)
 
 
-def _in_member_test(c: CVal, member: Lit) -> Column:
-    """Exact-typed membership (HashSet equality on the enum — no coercion)."""
-    if member.kind == NULL:
-        return c.t == NULL
-    if member.kind == STRING:
-        return (c.t == STRING) & (c.s == member.s)
-    if member.kind == NUMBER:
-        return (c.t == NUMBER) & (c.i == member.i)
-    if member.kind == FLOAT:
-        return (c.t == FLOAT) & (c.fs == member.fs)
-    if member.kind == BOOL:
-        return (c.t == BOOL) & (c.b == member.b)
-    return F.lit(False)  # arrays never equal column data (no array columns)
+def _in_members(c: CVal, members: tuple[Lit, ...]) -> Any:
+    """Exact-typed membership (HashSet equality on the enum — no coercion):
+    one kind test and one IN list per member kind the value can hold.
+    Arrays never equal column data (no array columns)."""
+    uniq = list(dict.fromkeys(members))
+    hit: Any = False
+    if any(m.kind == NULL for m in uniq):
+        hit = c.is_(NULL)
+    for kind, attr in ((STRING, "s"), (NUMBER, "i"), (FLOAT, "fs"), (BOOL, "b")):
+        vals = [getattr(m, attr) for m in uniq if m.kind == kind]
+        is_k = c.is_(kind) if vals else False
+        if is_k is False:
+            continue
+        col = getattr(c, attr)
+        hit = fold_or(hit, fold_and(is_k, col == vals[0] if len(vals) == 1
+                                    else col.isin(vals)))
+    return hit
 
 
 # ---------------------------------------------------------------------------
@@ -408,22 +521,24 @@ def _compile_op(op: str, args: list, ctx: ColumnContext) -> Val:
         _ensure_args(op, args, 2)
         a = compile_value(args[0], ctx)
         b = compile_value(args[1], ctx)
-        return CVal.from_bool_col(_cmp(a, b, op))
+        return _bool_result(_cmp(a, b, op))
 
     if op in ("any", "all", "none"):
         vals = [_bool_val(compile_value(a, ctx)) for a in args]
-        if op == "any":  # 0 args -> false (executor.rs:99-107)
-            return CVal.from_bool_col(_or_all(vals))
-        if op == "none":  # NOT OR (executor.rs:117-125)
-            return CVal.from_bool_col(~_or_all(vals))
-        out = F.lit(True)  # all: 0 args -> true (executor.rs:108-116)
+        if op == "all":  # 0 args -> true (executor.rs:108-116)
+            out = True
+            for v in vals:
+                out = fold_and(out, v)
+            return _bool_result(out)
+        out = False  # any: 0 args -> false (executor.rs:99-107)
         for v in vals:
-            out = out & v
-        return CVal.from_bool_col(out)
+            out = fold_or(out, v)
+        # none: NOT OR (executor.rs:117-125)
+        return _bool_result(_fold_not(out) if op == "none" else out)
 
     if op in ("not", "!"):
         _ensure_args(op, args, 1)
-        return CVal.from_bool_col(~_bool_val(compile_value(args[0], ctx)))
+        return _bool_result(_fold_not(_bool_val(compile_value(args[0], ctx))))
 
     if op in ("in", "not-in"):
         _ensure_args(op, args, 2)
@@ -431,13 +546,9 @@ def _compile_op(op: str, args: list, ctx: ColumnContext) -> Val:
         members = compile_value(args[1], ctx)
         if not (isinstance(members, Lit) and members.kind == ARRAY):
             raise ExpressionCompileError("In operator requires an array of values")
-        if isinstance(v, Lit):
-            hit = F.lit(v in set(members.arr))
-        else:
-            hit = F.lit(False)
-            for m in set(members.arr):
-                hit = hit | _in_member_test(v, m)
-        return CVal.from_bool_col(~hit if op == "not-in" else hit)
+        hit = (v in set(members.arr)) if isinstance(v, Lit) \
+            else _in_members(v, members.arr)
+        return _bool_result(_fold_not(hit) if op == "not-in" else hit)
 
     if op in ("starts-with", "ends-with"):
         _ensure_args(op, args, 2)
@@ -445,11 +556,11 @@ def _compile_op(op: str, args: list, ctx: ColumnContext) -> Val:
         if not isinstance(args[1], str):
             raise ExpressionCompileError(f"{op} requires string argument")
         pat = args[1]
-        if isinstance(v, Lit):
-            d = v.display()
-            return CVal.from_bool_col(F.lit(d.startswith(pat) if op == "starts-with" else d.endswith(pat)))
         d = _as_cval(v).display()
-        return CVal.from_bool_col(F.startswith(d, F.lit(pat)) if op == "starts-with" else F.endswith(d, F.lit(pat)))
+        if isinstance(d, str):
+            return Lit(BOOL, b=d.startswith(pat) if op == "starts-with" else d.endswith(pat))
+        fn = F.startswith if op == "starts-with" else F.endswith
+        return CVal.from_bool_col(fn(d, F.lit(pat)))
 
     if op == "regex-match":
         _ensure_args(op, args, 2)
@@ -458,7 +569,7 @@ def _compile_op(op: str, args: list, ctx: ColumnContext) -> Val:
         if not isinstance(pattern, str):
             raise ExpressionCompileError("RegexMatch requires string pattern")
         _validate_regex(pattern)
-        d = _as_cval(v).display()
+        d = as_column(_as_cval(v).display())
         return CVal.from_bool_col(d.rlike(pattern))
 
     if op == "regex-capture":
@@ -473,25 +584,22 @@ def _compile_op(op: str, args: list, ctx: ColumnContext) -> Val:
         compiled = _validate_regex(pattern)
         if group > compiled.groups:
             return Lit(NULL)  # absent group -> Null (executor.rs:159-161)
-        d = _as_cval(v).display()
+        d = as_column(_as_cval(v).display())
         extracted = F.regexp_extract(d, pattern, group)
         # no-match -> Null (Spark's regexp_extract returns "" for both
         # no-match and an empty capture; rlike disambiguates the former)
-        return CVal.from_string_col(F.when(d.rlike(pattern), extracted).otherwise(F.lit(None)))
+        return CVal.from_string_col(F.when(d.rlike(pattern), extracted))
 
     if op == "boolean":
         _ensure_args(op, args, 1)
         v = compile_value(args[0], ctx)
-        if isinstance(v, Lit):
-            return Lit(BOOL, b=v.truthy())
-        return CVal.from_bool_col(v.truthy())
+        return _bool_result(v.truthy())
 
     if op == "string":
         _ensure_args(op, args, 1)
         v = compile_value(args[0], ctx)
-        if isinstance(v, Lit):
-            return Lit(STRING, s=v.display())
-        return CVal.from_string_col(_as_cval(v).display())
+        d = _as_cval(v).display()
+        return Lit(STRING, s=d) if isinstance(d, str) else CVal.from_string_col(d)
 
     if op == "literal":
         _ensure_args(op, args, 1)
@@ -518,13 +626,6 @@ def _compile_op(op: str, args: list, ctx: ColumnContext) -> Val:
     raise ExpressionCompileError(f"Unknown operator: {op}")
 
 
-def _or_all(vals: list[Column]) -> Column:
-    out = F.lit(False)
-    for v in vals:
-        out = out | v
-    return out
-
-
 def _validate_regex(pattern: str):
     """Compile-time regex validation (invalid pattern -> compile error)."""
     try:
@@ -533,9 +634,15 @@ def _validate_regex(pattern: str):
         raise ExpressionCompileError(f"Invalid regex pattern '{pattern}': {e}") from e
 
 
+def compile_bool(expr: Any, ctx: ColumnContext) -> Any:
+    """Compile a DSL expression to its truthiness: a Python bool when it
+    folds at compile time, else a boolean Column."""
+    return _bool_val(compile_value(expr, ctx))
+
+
 def compile_expr(expr: Any, ctx: ColumnContext) -> Column:
     """Compile a DSL expression to a boolean Column (evaluate_bool analog)."""
-    return _bool_val(compile_value(expr, ctx))
+    return as_column(compile_bool(expr, ctx))
 
 
 def validate_expr(expr: Any) -> None:

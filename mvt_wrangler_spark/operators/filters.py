@@ -22,7 +22,8 @@ Spark realization:
     take one Arrow-batched pandas UDF instead;
   - predicate side: per filter feature, a layer-name CASE cascade of compiled
     DSL Columns; overall removal = OR over (mask bit i AND rule_i). Pure
-    Catalyst.
+    Catalyst. Rules fold at compile time (operators/expr.py): a feature
+    with no rule of a kind adds no term to that kind's predicate.
   - tag filter: F.map_filter higher-order function, with the compiled tag
     expr bound to the lambda key — no explode, no shuffle.
 """
@@ -188,31 +189,35 @@ def _ring_crossings_odd(ring, lon: Column, lat: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 def _resolved_rule(feat: FilterFeature, kind: str, layer: Column,
-                   ctx: E.ColumnContext) -> Column:
+                   ctx: E.ColumnContext):
     """data.rs:264-308: specific layer entry with this kind, else "*" with
-    this kind, else false (keep)."""
+    this kind, else false (keep). Folded at compile time: the layer tests
+    are disjoint, so a layer whose rule is the fallback (no rule of this
+    kind, or the same constant) adds no branch. Returns a Python bool when
+    the rule folds to a constant, else a boolean Column."""
     wildcard = feat.layers.get("*", {}).get(kind)
-    wc_col = E.compile_expr(wildcard, ctx) if wildcard is not None else F.lit(False)
-    out = None
+    fallback = E.compile_bool(wildcard, ctx) if wildcard is not None else False
+    branches = []
     for name, lf in feat.layers.items():
-        if name == "*":
+        if name == "*" or lf.get(kind) is None:
             continue
-        rule = lf.get(kind)
-        branch = E.compile_expr(rule, ctx) if rule is not None else wc_col
-        out = (out if out is not None else F).when(layer == name, branch)
-    if out is None:
-        return wc_col
-    return out.otherwise(wc_col)
+        rule = E.compile_bool(lf[kind], ctx)
+        if not (isinstance(rule, bool) and rule is fallback):
+            branches.append((layer == name, rule))
+    return E.fold_case(branches, fallback)
 
 
 def removal_predicate(program: FilterProgram, mask: Column, layer: Column,
                       ctx: E.ColumnContext, kind: str) -> Column:
-    """True iff ANY spatially-applicable filter's resolved rule is truthy."""
-    out = F.lit(False)
+    """True iff ANY spatially-applicable filter's resolved rule is truthy.
+    A filter whose rule folds to false adds no term."""
+    out = False
     for i, feat in enumerate(program.features):
-        applies = mask.bitwiseAND(F.lit(1 << i)) != 0
-        out = out | (applies & _resolved_rule(feat, kind, layer, ctx))
-    return out
+        rule = _resolved_rule(feat, kind, layer, ctx)
+        if rule is not False:
+            applies = mask.bitwiseAND(F.lit(1 << i)) != 0
+            out = E.fold_or(out, E.fold_and(applies, rule))
+    return E.as_column(out)
 
 
 def apply_feature_filter(df: DataFrame, program: FilterProgram, mask_col: str = "filter_mask",

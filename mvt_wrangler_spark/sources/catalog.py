@@ -23,10 +23,12 @@ bucket — n_buckets full scans of a 100 TB input):
   - The data lands in ONE Spark write with partitionBy(__bucket): one input
     scan.
   - By default a commit stages through repartitionByRange over
-    (__bucket, sort_col) into max(defaultParallelism, n_buckets) tasks: one
+    (__bucket, sort_col) into defaultParallelism tasks, one per core: one
     sampling job, then within every bucket the part files are range-disjoint
     and internally sorted, so bucket order == file order == row order
-    (ordered-archive, S5/W1).
+    (ordered-archive, S5/W1). A task may write several buckets; sizing the
+    write by buckets instead (16 tasks on 4 cores for `curate`'s 2,446
+    keepers) costs a task and a part file per range for no parallelism.
   - `one_file_per_bucket=True` (compaction, and the incremental ingest's
     small per-batch commits) stages through repartition(n_buckets,
     __bucket) instead: no sampling job and one sorted file per bucket, but
@@ -36,6 +38,9 @@ bucket — n_buckets full scans of a 100 TB input):
   - Every snapshot manifest carries the committed job-id ledger, so a
     replay check opens the CURRENT manifest only, at any table age.
   - Row counts come from parquet FOOTER metadata (pyarrow), not a re-scan.
+  - Every snapshot manifest records the committed schema, so a read hands
+    it to the parquet reader and starts no footer-inference job (manifests
+    without one fall back to inference).
   - Bucketing is RANGE by default when `key_max` is known (high key bits),
     so concatenated buckets are globally ordered by the cluster key;
     without `key_max` it falls back to hash (pmod) bucketing, which is
@@ -61,6 +66,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import session
 
@@ -167,6 +173,7 @@ class SnapshotTable:
         (incremental ingest — streaming micro-batches); default replaces.
         one_file_per_bucket=True skips the range-sampling job and writes one
         file per bucket from at most n_buckets tasks (module Scale notes).
+        The manifest records `df`'s schema for the readers.
         """
         os.makedirs(f"{self.root}/manifests/job-{job_id}", exist_ok=True)
         sort_col = sort_col or self.bucket_col
@@ -205,7 +212,7 @@ class SnapshotTable:
         for b in range(self.n_buckets):
             with open(self._marker(job_id, b)) as f:
                 manifests.append(json.load(f))
-        return self._commit(job_id, manifests, append=append)
+        return self._commit(job_id, manifests, df.schema, append=append)
 
     def _stage(self, df: DataFrame, data_dir: str, sort_col: str,
                one_file_per_bucket: bool) -> None:
@@ -217,8 +224,7 @@ class SnapshotTable:
         if one_file_per_bucket:
             staged = df.repartition(self.n_buckets, "__bucket")
         else:
-            n_out = max(df.sparkSession.sparkContext.defaultParallelism,
-                        self.n_buckets)
+            n_out = df.sparkSession.sparkContext.defaultParallelism
             staged = df.repartitionByRange(n_out, "__bucket", sort_col)
         (staged.sortWithinPartitions("__bucket", sort_col)
          .write.partitionBy("__bucket").mode("overwrite").parquet(data_dir))
@@ -247,7 +253,8 @@ class SnapshotTable:
         os.rename(tmp, mpath)  # atomic per-partition checkpoint
         return m
 
-    def _commit(self, job_id: str, manifests: list[dict], append: bool = False) -> dict:
+    def _commit(self, job_id: str, manifests: list[dict], schema: StructType,
+                append: bool = False) -> dict:
         buckets = list(manifests)
         prev = self.current_snapshot()
         if append and prev is not None:
@@ -258,6 +265,9 @@ class SnapshotTable:
             "job_id": job_id,
             "job_ids": sorted(self._committed_job_ids(prev) | {job_id}),
             "append": append,
+            # the data files' schema: the frame's columns without __bucket
+            "schema": StructType([f for f in schema.fields
+                                  if f.name != "__bucket"]).jsonValue(),
             "buckets": buckets,
             "total_rows": sum(m["rows"] for m in buckets),
             "total_bytes": sum(m["bytes"] for m in buckets),
@@ -313,7 +323,16 @@ class SnapshotTable:
         if missing:
             raise FileNotFoundError(
                 f"snapshot {snapshot_id} data vacuumed: {missing[:3]}")
-        return spark.read.parquet(*paths)
+        return self._reader(spark, snap).parquet(*paths)
+
+    @staticmethod
+    def _reader(spark: SparkSession, snap: dict):
+        """A parquet reader given the snapshot's recorded schema: reading
+        then starts no footer-inference job. Manifests written before the
+        schema was recorded infer it."""
+        if "schema" not in snap:
+            return spark.read
+        return spark.read.schema(StructType.fromJson(snap["schema"]))
 
     def read_current(self, spark: SparkSession) -> DataFrame:
         n = self.current_snapshot_id()
@@ -354,7 +373,7 @@ class SnapshotTable:
         missing = [p for p in new_paths if not os.path.isdir(p)]
         if missing:
             raise FileNotFoundError(f"diff data vacuumed: {missing[:3]}")
-        return spark.read.parquet(*new_paths)
+        return self._reader(spark, to_snap).parquet(*new_paths)
 
     def read_diff_keys(self, spark: SparkSession, from_id: int, key_cols: list[str],
                        to_id: int | None = None) -> DataFrame:
@@ -398,7 +417,7 @@ class SnapshotTable:
                 if m["bucket"] not in new_entries]
         buckets = sorted(kept + list(new_entries.values()),
                          key=lambda m: (m["bucket"], m["path"]))
-        return self._commit(job_id, buckets, append=False)
+        return self._commit(job_id, buckets, df.schema, append=False)
 
     def merge_keys(self, df: DataFrame, key_cols: list[str], job_id: str,
                    sort_col: str | None = None) -> dict:

@@ -352,7 +352,7 @@ def read_pmtiles(spark, path: str):
     hdr = rd.header
     data_off, leaf_off = hdr.data_offset, hdr.leaf_offset
     gz_internal = hdr.internal_compression == COMPRESSION_GZIP
-    n = max(spark.sparkContext.defaultParallelism, 8)
+    n = spark.sparkContext.defaultParallelism
     out_schema = "z int, x bigint, y bigint, tile_id bigint, data binary"
 
     def _frame(tids, blobs):

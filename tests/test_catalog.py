@@ -503,7 +503,7 @@ def test_replay_ledger_reads_current_manifest_only(spark, table, monkeypatch):
 
 def test_one_file_per_bucket_is_opt_in(spark):
     """A default commit, hash-bucketed or not, keeps its range-sampled write
-    over max(defaultParallelism, n_buckets) tasks; only an explicit
+    over defaultParallelism tasks, one per core; only an explicit
     one_file_per_bucket commit collapses each bucket to one file."""
     root = f"{ROOT}-opt-in"
     shutil.rmtree(root, ignore_errors=True)
@@ -519,3 +519,39 @@ def test_one_file_per_bucket_is_opt_in(spark):
         assert t.read_current(spark).count() == 10000
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.spark
+def test_reads_carry_the_committed_schema(spark, table):
+    """The manifest records the committed schema, so read_current, read_at
+    and read_diff start no Spark job before an action (parquet schema
+    inference runs a footer job per read). A manifest without a schema
+    still reads, by inference."""
+    sc = spark.sparkContext
+    df = _df(spark).withColumn("tags", F.create_map(F.lit("k"), F.col("v").cast("string")))
+    table.write_snapshot(df, job_id="a", append=True)
+    snap = table.write_snapshot(df.limit(10), job_id="b", append=True)
+    assert [f["name"] for f in snap["schema"]["fields"]] == ["id", "tile_id", "v", "tags"]
+
+    def reads():
+        return [table.read_current(spark), table.read_at(spark, 1),
+                table.read_diff(spark, 1)]
+
+    sc.setJobGroup("schema-reads", "schema-reads")
+    try:
+        frames = reads()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("schema-reads") == []
+    inferred = spark.read.parquet(*[m["path"] for m in snap["buckets"] if m["files"]])
+    assert all(f.schema == inferred.schema for f in frames)
+    assert [f.count() for f in frames] == [5010, 5000, 10]
+
+    path = f"{ROOT}/manifests/snapshot-2.json"
+    with open(path) as fh:
+        legacy = json.load(fh)
+    del legacy["schema"]
+    with open(path, "w") as fh:
+        json.dump(legacy, fh)
+    assert table.read_current(spark).schema == inferred.schema
+    assert table.read_current(spark).count() == 5010

@@ -17,6 +17,9 @@ import pytest
 Z = 10
 MAX_OP_JOBS = 16          # 27 before the keepers were pinned
 MAX_EXPORT_JOBS = 3       # 12 with the range-sampled toLocalIterator export
+# `.sql()` length of the fixture program's analyzed feature and tag
+# predicates before the filter compiler folded literal kinds
+UNFOLDED_FEATURE_SQL, UNFOLDED_TAG_SQL = 3420, 13477
 
 
 class _Jobs:
@@ -46,6 +49,13 @@ class _Jobs:
     def jobs(self, name) -> int:
         return len(self.sc.statusTracker().getJobIdsForGroup(name))
 
+    def stage_tasks(self, name) -> dict[int, int]:
+        """Stage id -> (task count, name) over the jobs of `name`."""
+        st = self.sc.statusTracker()
+        return {sid: (st.getStageInfo(sid).numTasks, st.getStageInfo(sid).name)
+                for jid in st.getJobIdsForGroup(name)
+                for sid in st.getJobInfo(jid).stageIds}
+
     def node_names(self, name) -> list[str]:
         names = []
         for eid in self.executions[name]:
@@ -54,12 +64,12 @@ class _Jobs:
         return names
 
 
-def _curate_frames(spark, images):
-    """The curate workload's lazy chain, up to the four sinks' inputs."""
+def _masked(spark, images):
+    """The curate workload's lazy chain up to the filter program's input."""
     from pyspark.sql import functions as F
 
     from mvt_wrangler_spark.functions import cells, geometry as G, tiling
-    from mvt_wrangler_spark.operators import dedup, filters, joins, rollup
+    from mvt_wrangler_spark.operators import filters, joins
     from mvt_wrangler_spark.sources.fixtures import default_filter_geojson
 
     prog = filters.FilterProgram.from_geojson(default_filter_geojson())
@@ -69,8 +79,15 @@ def _curate_frames(spark, images):
              for j, y in enumerate((-85, 0))]
     assigned = cells.with_cells(tiling.assign_tiles(images, z=Z), lat="lat", lng="lon")
     joined = joins.broadcast_pip_join(spark, assigned, admin)
-    masked = joined.withColumn(
+    return prog, joined.withColumn(
         "filter_mask", filters.filter_mask_native(prog, F.col("lon"), F.col("lat")))
+
+
+def _curate_frames(spark, images):
+    """The curate workload's lazy chain, up to the four sinks' inputs."""
+    from mvt_wrangler_spark.operators import dedup, filters, rollup
+
+    prog, masked = _masked(spark, images)
     surv = filters.apply_tag_filter(filters.apply_feature_filter(masked, prog), prog)
     deduped = dedup.phash_dedup(surv)
     stats = rollup.tile_stats(deduped, n_salt=8, salt_col="image_id")
@@ -176,3 +193,55 @@ def test_pyramid_files_do_not_depend_on_shuffle_partitions(spark, images_path, t
         spark.conf.set(key, prev)
     assert len(files[4]) == len(files[16]), files
     assert rows[4] == rows[16] and rows[4][0].z == 0
+
+
+@pytest.mark.spark
+def test_curate_sinks_run_one_task_per_core(spark, images_path, tmp_path):
+    """The snapshot's staged write and the export's encoder are sized by
+    cores: no stage of either sink runs more than defaultParallelism tasks
+    (16 and 8 on 4 cores when they were sized by buckets and by a floor of
+    8). Shuffle partitions follow the session default, one per core."""
+    from mvt_wrangler_spark.functions import tiling
+    from mvt_wrangler_spark.operators.tile_encode import encode_tiles
+    from mvt_wrangler_spark.sources.catalog import SnapshotTable
+    from mvt_wrangler_spark.sources.pmtiles import write_pmtiles
+
+    cores = spark.sparkContext.defaultParallelism
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(cores))
+    try:
+        jobs = _Jobs(spark)
+        deduped, _, _ = _curate_frames(spark, spark.read.parquet(images_path))
+        table = SnapshotTable(str(tmp_path / "table"), n_buckets=16,
+                              key_max=tiling._zoom_acc(Z + 1) - 1,
+                              key_min=tiling._zoom_acc(Z))
+        snap = jobs.run("cores-snapshot", table.write_snapshot, deduped,
+                        job_id="c-0", sort_col="tile_id")
+        jobs.run("cores-export", write_pmtiles, encode_tiles(deduped),
+                 str(tmp_path / "tiles.pmtiles"), leaf_size=256)
+    finally:
+        spark.conf.set(key, prev)
+    assert snap["total_rows"] > 0
+    for sink in ("cores-snapshot", "cores-export"):
+        tasks = jobs.stage_tasks(sink)
+        assert tasks and max(t[0] for t in tasks.values()) <= cores, (sink, sorted(tasks.items()))
+
+
+@pytest.mark.spark
+def test_filter_predicates_fold_at_compile_time(spark, images_path):
+    """The fixture program's feature and tag predicates analyze to at most a
+    quarter of their unfolded size: no cascade branch for a kind a value
+    cannot hold, no rule for a layer that falls back to the same constant."""
+    from mvt_wrangler_spark.operators import filters
+
+    prog, masked = _masked(spark, spark.read.parquet(images_path))
+    feature = filters.apply_feature_filter(masked, prog)
+    tag = filters.apply_tag_filter(masked, prog)
+    feature_sql = feature._jdf.queryExecution().analyzed().condition().sql()
+    cols = tag._jdf.queryExecution().analyzed().projectList()
+    tag_sql = [cols.apply(j).child().sql() for j in range(cols.size())
+               if cols.apply(j).name() == "tags"]
+    assert len(tag_sql) == 1 and "map_filter" in tag_sql[0]
+    assert len(feature_sql) <= UNFOLDED_FEATURE_SQL // 4, feature_sql
+    assert len(tag_sql[0]) <= UNFOLDED_TAG_SQL // 4, tag_sql[0]

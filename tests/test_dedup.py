@@ -509,22 +509,3 @@ def test_phash_hamming_clusters_equals_composed(spark):
         assert got == want, f"max_bucket={max_bucket}"
         assert len(want) > 10
 
-
-def test_hamming_keepers_includes_singletons(spark):
-    """Keeper set = one min-id rep per cluster PLUS every singleton at
-    cluster_size 1 (pair_clusters alone drops unpaired rows)."""
-    from mvt_wrangler_spark.operators.dedup import hamming_keepers
-
-    rows = [
-        (1, 0b1111),                    # cluster A (hamming 1 to id 2)
-        (2, 0b1110),
-        (3, 0x5A5A5A5A5A5A5A5A),        # singleton (far from everything)
-        (4, -1234567890111213141),      # singleton, negative hash
-        (10, 0x0F0F0F0F0F0F0F00),       # cluster B: two exact + hamming 2
-        (11, 0x0F0F0F0F0F0F0F00),
-        (12, 0x0F0F0F0F0F0F0F03),
-    ]
-    df = spark.createDataFrame(rows, "id long, phash long")
-    got = {r.id: r.cluster_size for r in
-           hamming_keepers(df, k=3, bands=4).collect()}
-    assert got == {1: 2, 3: 1, 4: 1, 10: 3}
