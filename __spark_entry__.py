@@ -582,391 +582,6 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("mean_b", 6).alias("mean_b"))
 
 
-def q_thumb_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Thumbnail generation value-checked end to end: algebraic-formula images
-    are encoded to real bytes (raw/rawz/qlossy), the engine decodes, box-
-    downsamples 4x in exact integer arithmetic, re-encodes the thumbnail
-    (rawz), and the check decodes those thumbnail BYTES back into per-image
-    channel means + a position-weighted fingerprint over every thumbnail
-    pixel. The oracle brute-forces the same block-sum // 16 pooling (with the
-    lossy quantization model) in SQL — so decode, pooling, and the thumbnail
-    codec round-trip all sit under the driver's value hash."""
-    import numpy as np
-    import pandas as pd
-
-    from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
-
-    W, H, FCT = 24, 16, 4
-    ids = _spread(_points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(41)) == 5).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                px = ((int(i) * 31 + yy * 7 + xx * 13 + cc * 5) % 256).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    thumbs = M.thumbnail(imgs, factor=FCT, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        n_blk = (H // FCT) * (W // FCT)
-        for pdf in pdfs:
-            rows = {"id": [], "mean_r": [], "mean_g": [], "mean_b": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.thumb), row.fmt, row.tw, row.th).astype(np.int64)
-                g = _grids.get((row.th, row.tw))
-                if g is None:
-                    g = _grids.setdefault((row.th, row.tw),
-                                          np.mgrid[0:row.th, 0:row.tw, 0:3])
-                zy, zx, cc = g
-                fp = int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum() % 2147483647)
-                rows["id"].append(int(row.image_id))
-                for col, c in (("mean_r", 0), ("mean_g", 1), ("mean_b", 2)):
-                    rows[col].append(round(float(t[:, :, c].sum()) / n_blk, 6))
-                rows["fp"].append(fp)
-            yield pd.DataFrame(rows)
-
-    return thumbs.mapInPandas(
-        stats, "id long, mean_r double, mean_g double, mean_b double, fp long")
-
-
-def q_patch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ViT-style patch extraction value-checked end to end: algebraic
-    images (24x16, the thumb_stats formula) are encoded to real bytes
-    (raw/rawz/qlossy cycling by id), the engine decodes and splits each
-    into an 8x8 patch grid re-encoded as rawz patch rows, and the check
-    decodes those PATCH BYTES back into per-patch channel sums + a
-    patch-local position-weighted fingerprint. The oracle restates the
-    pixel formula (incl. the qlossy quantization model) and the grid
-    arithmetic in SQL, so decode, grid split, and the patch codec
-    round-trip all sit under the driver's value hash."""
-    import numpy as np
-    import pandas as pd
-
-    from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
-
-    W, H, P = 24, 16, 8
-    ids = _spread(_points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(47)) == 9).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                px = ((int(i) * 31 + yy * 7 + xx * 13 + cc * 5) % 256).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    patches = M.extract_patches(imgs, patch=P, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        for pdf in pdfs:
-            rows = {"id": [], "gy": [], "gx": [],
-                    "sum_r": [], "sum_g": [], "sum_b": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.patch), row.fmt, row.pw, row.ph).astype(np.int64)
-                g = _grids.get((row.ph, row.pw))
-                if g is None:
-                    g = _grids.setdefault((row.ph, row.pw),
-                                          np.mgrid[0:row.ph, 0:row.pw, 0:3])
-                zy, zx, cc = g
-                rows["id"].append(int(row.image_id))
-                rows["gy"].append(int(row.gy))
-                rows["gx"].append(int(row.gx))
-                for col, c in (("sum_r", 0), ("sum_g", 1), ("sum_b", 2)):
-                    rows[col].append(int(t[:, :, c].sum()))
-                rows["fp"].append(int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum()
-                                      % 2147483647))
-            yield pd.DataFrame(rows)
-
-    return patches.mapInPandas(
-        stats,
-        "id long, gy int, gx int, sum_r long, sum_g long, sum_b long, fp long")
-
-
-def q_recon_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compression-error audit value-checked end to end: algebraic 24x16
-    images -> real codec bytes -> exact integer SSE + max |err| between
-    the original and its 4x box-down -> nearest-up reconstruction
-    (multimodal.recon_error). The oracle restates pixels (incl. qlossy),
-    block pooling, and the per-pixel squared error in SQL."""
-    import numpy as np
-    import pandas as pd
-
-    from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
-
-    W, H = 24, 16
-    ids = _spread(_points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(61)) == 17).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                px = ((int(i) * 31 + yy * 7 + xx * 13 + cc * 5) % 256).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    out = M.recon_error(imgs, factor=4)
-    return out.select(F.col("image_id").cast("long").alias("id"),
-                      "sse", "max_err")
-
-
-def q_contour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marching-squares contour classification over Terrain-RGB DEM tiles
-    (the hillshade fixture: elev = (id*13 + y²*3 + x²*2 + y*x*5) % 2^20
-    packed R*65536+G*256+B, encoded to real raw/rawz/qlossy bytes). The
-    iso-threshold is PER TILE — each tile's base elevation (id*13 % 2^20)
-    + 1700, mid of the intra-tile relief — attached as a codegen column,
-    so every non-quantized tile actually gets cut. Output: cut-cell count,
-    segment count (saddles carry 2), and a position-weighted class
-    fingerprint over the full (h-1)x(w-1) cell grid. The oracle restates
-    elevation (incl. the qlossy per-channel model), the per-tile
-    threshold, the 4-corner classification, and the saddle rule in SQL."""
-    import numpy as np
-    import pandas as pd
-
-    from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
-
-    W, H = 24, 16
-    ids = _spread(_points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(59)) == 13).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx = np.mgrid[0:H, 0:W]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                elev = (int(i) * 13 + yy * yy * 3 + xx * xx * 2 + yy * xx * 5) % (1 << 20)
-                px = np.stack([elev // 65536, (elev // 256) % 256, elev % 256],
-                              axis=-1).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    dem = imgs.withColumn(
-        "iso", F.pmod(F.col("image_id").cast("long") * 13, F.lit(1 << 20)) + 1700)
-    out = M.contour_cells(dem, threshold_col="iso")
-    return out.select(F.col("image_id").cast("long").alias("id"),
-                      "n_cut", "n_segments", "fp")
-
-
-def q_augment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic augmentation value-checked end to end: algebraic 24x16
-    images -> real codec bytes -> hash-seeded 16x12 crop + h/v flips
-    (multimodal.augment; parameters are sample_hash codegen columns) ->
-    rawz re-encode; the check decodes the AUGMENTED BYTES into per-channel
-    sums (crop-window evidence — flips are permutations) + a
-    position-weighted fingerprint (orientation evidence) and echoes the
-    parameters. The oracle restates sample_hash, the offset/flip
-    derivation, the source-coordinate permutation, and the qlossy model in
-    SQL — augmentation is reproducible BECAUSE a second engine can
-    recompute it."""
-    import numpy as np
-    import pandas as pd
-
-    from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
-
-    W, H, CW, CH = 24, 16, 16, 12
-    ids = _spread(_points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(53)) == 11).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                px = ((int(i) * 31 + yy * 7 + xx * 13 + cc * 5) % 256).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    aug = M.augment(imgs, crop_w=CW, crop_h=CH, salt=0, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        for pdf in pdfs:
-            rows = {"id": [], "hflip": [], "vflip": [], "ox": [], "oy": [],
-                    "sum_r": [], "sum_g": [], "sum_b": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.bytes), row.fmt, row.w, row.h).astype(np.int64)
-                g = _grids.get((row.h, row.w))
-                if g is None:
-                    g = _grids.setdefault((row.h, row.w),
-                                          np.mgrid[0:row.h, 0:row.w, 0:3])
-                zy, zx, cc = g
-                rows["id"].append(int(row.image_id))
-                for k in ("hflip", "vflip", "ox", "oy"):
-                    rows[k].append(int(getattr(row, k)))
-                for col, c in (("sum_r", 0), ("sum_g", 1), ("sum_b", 2)):
-                    rows[col].append(int(t[:, :, c].sum()))
-                rows["fp"].append(int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum()
-                                      % 2147483647))
-            yield pd.DataFrame(rows)
-
-    return aug.mapInPandas(
-        stats, "id long, hflip int, vflip int, ox int, oy int, "
-               "sum_r long, sum_g long, sum_b long, fp long")
-
-
-def q_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Terrain-RGB hillshade value-checked end to end: algebraic DEM tiles
-    (elev = (id*13 + y*y*3 + x*x*2 + y*x*5) % 2^20, packed R*65536+G*256+B)
-    are encoded to real bytes (raw/rawz/qlossy), the engine decodes, runs
-    Horn's 3x3 integer gradient stencil, packs (shade, |gx|%256, |gy|%256)
-    and re-encodes; the check decodes those SHADE BYTES back into per-tile
-    mean/max shade + a position-weighted fingerprint over every output
-    pixel. The oracle restates elevation unpack (incl. the qlossy
-    per-channel quantization model), both gradients, the shift-4 L1 shade,
-    and the output packing in SQL."""
-    import numpy as np
-    import pandas as pd
-
-    from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
-
-    W, H = 24, 16
-    ids = _spread(_points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(43)) == 7).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx = np.mgrid[0:H, 0:W]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                elev = (int(i) * 13 + yy * yy * 3 + xx * xx * 2 + yy * xx * 5) % (1 << 20)
-                px = np.stack([elev // 65536, (elev // 256) % 256, elev % 256],
-                              axis=-1).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    shades = M.hillshade(imgs, shift=4, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        for pdf in pdfs:
-            rows = {"id": [], "mean_shade": [], "max_shade": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.shade), row.fmt, row.tw, row.th).astype(np.int64)
-                g = _grids.get((row.th, row.tw))
-                if g is None:
-                    g = _grids.setdefault((row.th, row.tw),
-                                          np.mgrid[0:row.th, 0:row.tw, 0:3])
-                zy, zx, cc = g
-                fp = int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum() % 2147483647)
-                rows["id"].append(int(row.image_id))
-                rows["mean_shade"].append(
-                    round(float(t[:, :, 0].sum()) / (row.th * row.tw), 6))
-                rows["max_shade"].append(int(t[:, :, 0].max()))
-                rows["fp"].append(fp)
-            yield pd.DataFrame(rows)
-
-    return shades.mapInPandas(
-        stats, "id long, mean_shade double, max_shade long, fp long")
-
-
-def q_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide histogram equalization value-checked end to end: skewed
-    algebraic images (v = u^2 for u = (id*7 + y*3 + x + c*5) % 16) are
-    encoded to real bytes, the engine computes ONE global 256-bin histogram
-    (bounded 256-row collect), remaps every pixel through the integer CDF
-    LUT, re-encodes, and the check decodes the equalized BYTES into
-    per-image mean + fingerprint. The oracle restates histogram, cumsum
-    LUT (window sum), and remap in SQL — including the qlossy per-channel
-    quantization model on the input side."""
-    import numpy as np
-    import pandas as pd
-
-    from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
-
-    W, H = 16, 8
-    # no _spread here: the 16x8 fixture's per-image Python is so light that
-    # the two-pass operator (histogram + remap both re-read the gen) pays
-    # more in repartition exchanges + task scheduling than the parallelism
-    # returns (A/B at sf0.1: 1.43 s vs 2.5-3.1 s median with _spread)
-    ids = _points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(47)) == 9).distinct()
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                u = (int(i) * 7 + yy * 3 + xx + cc * 5) % 16
-                px = (u * u).astype(np.uint8)  # skewed: 16 clumped levels
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    eq = M.equalize(imgs, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        for pdf in pdfs:
-            rows = {"id": [], "mean_eq": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.eq), row.fmt, row.w, row.h).astype(np.int64)
-                g = _grids.get((row.h, row.w))
-                if g is None:
-                    g = _grids.setdefault((row.h, row.w),
-                                          np.mgrid[0:row.h, 0:row.w, 0:3])
-                zy, zx, cc = g
-                fp = int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum() % 2147483647)
-                rows["id"].append(int(row.image_id))
-                rows["mean_eq"].append(round(float(t.sum()) / (row.h * row.w * 3), 6))
-                rows["fp"].append(fp)
-            yield pd.DataFrame(rows)
-
-    return eq.mapInPandas(stats, "id long, mean_eq double, fp long")
-
-
 def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup by phash hamming banding, value-checked bit-for-bit:
     synthesize 62-bit phashes in pure integer column math (cluster base =
@@ -997,119 +612,6 @@ def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return ann_topk_ivf(emb, k=5, n_clusters=4, n_probe=2, n_iter=2,
                         quant=100, n_queries=3)
-
-
-def _ahash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(id, ahash) for the image fixture: algebraic images (pairs share a
-    cluster formula; the odd member gets a +45 bump in one cluster-chosen
-    zone) -> real codec encode -> ahash64 (decode, 8x8 integer luma
-    pooling, mean-threshold bits). Shared by the pair and cluster
-    queries so both stay on one bytes->hash stage."""
-    import numpy as np
-    import pandas as pd
-
-    from mvt_wrangler_spark import session
-    from mvt_wrangler_spark.operators.dedup import phash_hamming_pairs
-    from mvt_wrangler_spark.operators.multimodal import ahash64
-    from mvt_wrangler_spark.sources import images as I
-
-    W, H = 24, 16
-    ids = _spread(_points(spark, sf_dir).select("id")
-                  .filter((F.pmod("id", F.lit(5)) < 2)
-                          & (F.pmod(F.expr("id div 5"), F.lit(8)) == 0))
-                  .distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                i = int(i)
-                cl, b = i // 5, i % 5
-                px = (cl * 31 + yy * 7 + xx * 13 + cc * 5) % 200
-                if b == 1:  # localized bump in one cluster-chosen zone
-                    zy0, zx0 = cl % 8, (cl // 8) % 8
-                    px = px + 45 * ((yy // 2 == zy0) & (xx // 3 == zx0))
-                fmt = fmts[i % 3]
-                rows["image_id"].append(str(i))
-                rows["bytes"].append(I.encode(px.astype(np.uint8), fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    # Pin (id, ahash) ONCE per invocation: consumers reference it several
-    # times (the banding operators pin only their own slim projection),
-    # and an unpinned reference re-runs the
-    # whole scan->gen->codec->ahash chain. 16 bytes/row — the guide §8
-    # proxy shape. Repartition-down first: the Python chain runs wide
-    # (_spread), but downstream consumers are slim row-count-bounded joins,
-    # and reading 2x-parallelism pinned blocks per reference costs more
-    # task scheduling than 16-byte rows justify.
-    par = max(8, spark.sparkContext.defaultParallelism // 4)
-    return session.pin(ahash64(imgs)
-                       .select(F.col("image_id").cast("long").alias("id"), "ahash")
-                       .repartition(par))
-
-
-def q_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The engine's full bytes-to-near-dup image chain under one value hash
-    (see _ahash_df for the bytes->decode->ahash stages). The oracle restates
-    pixels, luma, pooling, the 64-bit assembly (HUGEINT wrap), and the
-    entire hamming join in SQL."""
-    from mvt_wrangler_spark.operators.dedup import phash_hamming_pairs
-
-    ph = _ahash_df(spark, sf_dir)
-    return phash_hamming_pairs(ph, id_col="id", phash_col="ahash",
-                               k=3, bands=4, max_bucket=1000)
-
-
-def q_caption_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-modal label-noise mining for image+caption training rows: find
-    pairs whose IMAGES are near-identical (bytes -> ahash -> hamming <= 3
-    band pairs, the _ahash_df chain) but whose CAPTIONS disagree (exact
-    5-gram shingle Jaccard < 0.3, integer cross-multiplied — no float).
-    Same-image-different-caption rows are either alt-text noise to drop or
-    caption diversity to keep — either way the pipeline must SEE them;
-    pure near-dup dedup would silently keep one caption at random.
-
-    Captions come from the documents table keyed doc_id = image id mod 500.
-    Plan: the banded hamming join produces the (small) pair set; caption
-    shingle sets attach via two joins on the caption key (broadcast here —
-    pairs and the caption dim are both tiny next to the corpus; at caption
-    scale it's the same equi-join, shuffled); intersection/union are
-    array_intersect/size on the already-distinct sorted shingle arrays."""
-    from mvt_wrangler_spark.operators.dedup import phash_hamming_pairs
-    from mvt_wrangler_spark.operators.multimodal import caption_conflicts
-
-    pairs = (phash_hamming_pairs(_ahash_df(spark, sf_dir), id_col="id",
-                                 phash_col="ahash", k=3, bands=4,
-                                 max_bucket=1000)
-             .withColumn("__ka", F.pmod("id_a", F.lit(500)))
-             .withColumn("__kb", F.pmod("id_b", F.lit(500))))
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return caption_conflicts(pairs, docs, shingle=5, num=3, den=10)
-
-
-def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs closed into CLUSTERS — the step pairwise dedup cannot
-    skip: image bytes -> ahash -> hamming band pairs (q_image_ahash_neardup)
-    -> transitive closure, yielding (member_id, cluster_rep, cluster_size)
-    with the deterministic min-id keeper. Computed via
-    phash_hamming_clusters — the hash-collapsed closure proven (and
-    pytest-pinned) EQUAL to pair_clusters(phash_hamming_pairs(...)) but
-    never materializing the quadratic identical-hash pair set (13,154
-    images collapse to 82 distinct hashes at sf0.1). The oracle is
-    UNCHANGED: the full image-level ahash pair SQL closed with a
-    recursive-CTE reachability walk — an independent restatement that
-    adversarially checks the collapse."""
-    from mvt_wrangler_spark.operators.dedup import phash_hamming_clusters
-
-    ph = _ahash_df(spark, sf_dir)
-    return phash_hamming_clusters(ph, id_col="id", phash_col="ahash",
-                                  k=3, bands=4, max_bucket=1000)
 
 
 def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1358,142 +860,6 @@ def q_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SI.simplify_lines(rings, eps=64)
 
 
-def q_overzoom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tile overzoom value-checked end to end: algebraic 16x16 parent tiles
-    are encoded to real bytes (fmt cycles raw/rawz/qlossy), the engine
-    decodes, quadrant-crops, 2x nearest-neighbor upsamples, re-encodes —
-    and the check decodes the CHILD bytes into per-channel pixel sums plus
-    a position-weighted fingerprint over every child pixel. The oracle
-    regenerates the child pixels from the parent formula (child (y,x) =
-    parent (qy*8 + y//2, qx*8 + x//2)) with the qlossy quant model, so
-    decode, crop, upsample, and the codec round-trip all sit under the
-    value hash."""
-    import numpy as np
-    import pandas as pd
-
-    from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
-
-    W = H = 16
-    ids = _spread(_points(spark, sf_dir).select("id")
-                  .filter(F.pmod("id", F.lit(37)) == 3).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                px = ((int(i) * 31 + yy * 7 + xx * 13 + cc * 5) % 256).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(
-        gen, "image_id string, bytes binary, fmt string, w int, h int")
-    children = M.overzoom(imgs, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        for pdf in pdfs:
-            rows = {"id": [], "child": [], "sum_r": [], "sum_g": [],
-                    "sum_b": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.cbytes), row.cfmt,
-                             row.cw, row.ch).astype(np.int64)
-                g = _grids.get((row.ch, row.cw))
-                if g is None:
-                    g = _grids.setdefault((row.ch, row.cw),
-                                          np.mgrid[0:row.ch, 0:row.cw, 0:3])
-                zy, zx, cc = g
-                fp = int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum()
-                         % 2147483647)
-                rows["id"].append(int(row.image_id))
-                rows["child"].append(int(row.child))
-                for col, c in (("sum_r", 0), ("sum_g", 1), ("sum_b", 2)):
-                    rows[col].append(int(t[:, :, c].sum()))
-                rows["fp"].append(fp)
-            yield pd.DataFrame(rows)
-
-    return children.mapInPandas(
-        stats,
-        "id long, child int, sum_r long, sum_g long, sum_b long, fp long")
-
-
-def q_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raster pyramid BUILD value-checked end to end (inverse of
-    q_overzoom): 4 algebraic 16x16 children per parent (fmt cycles
-    raw/rawz/qlossy by (id+child)%3) are encoded to real bytes, the
-    engine decodes, 2x integer box-mean downsamples each child, mosaics
-    the quadrants into the parent, re-encodes — and the check decodes
-    the PARENT bytes into per-channel pixel sums plus a
-    position-weighted fingerprint. The oracle regenerates parent pixels
-    from the child formula (parent (py,px) = floor-mean of the 2x2 child
-    block at quadrant (py//8, px//8)) with the qlossy quant model, so
-    decode, downsample, quadrant placement, and both codec round-trips
-    all sit under the value hash."""
-    import numpy as np
-    import pandas as pd
-
-    from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
-
-    W = H = 16
-    ids = _spread(_points(spark, sf_dir).select("id")
-                  .filter(F.pmod("id", F.lit(41)) == 5).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"parent_id": [], "child": [], "bytes": [], "fmt": [],
-                    "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                for q in range(4):
-                    px = ((int(i) * 31 + q * 11 + yy * 7 + xx * 13 + cc * 5)
-                          % 256).astype(np.uint8)
-                    rows["parent_id"].append(str(int(i)))
-                    rows["child"].append(q)
-                    rows["bytes"].append(I.encode(px, fmts[(int(i) + q) % 3]))
-                    rows["fmt"].append(fmts[(int(i) + q) % 3])
-                    rows["w"].append(W)
-                    rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    kids = ids.mapInPandas(
-        gen, "parent_id string, child int, bytes binary, fmt string, "
-             "w int, h int")
-    parents = M.mosaic(kids, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        for pdf in pdfs:
-            rows = {"id": [], "n_children": [], "sum_r": [], "sum_g": [],
-                    "sum_b": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.pbytes), row.pfmt,
-                             row.pw, row.ph).astype(np.int64)
-                g = _grids.get((row.ph, row.pw))
-                if g is None:
-                    g = _grids.setdefault((row.ph, row.pw),
-                                          np.mgrid[0:row.ph, 0:row.pw, 0:3])
-                zy, zx, cc = g
-                fp = int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum()
-                         % 2147483647)
-                rows["id"].append(int(row.parent_id))
-                rows["n_children"].append(int(row.n_children))
-                for col, c in (("sum_r", 0), ("sum_g", 1), ("sum_b", 2)):
-                    rows[col].append(int(t[:, :, c].sum()))
-                rows["fp"].append(fp)
-            yield pd.DataFrame(rows)
-
-    return parents.mapInPandas(
-        stats, "id long, n_children int, sum_r long, sum_g long, "
-               "sum_b long, fp long")
-
-
 def q_clip_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Liang–Barsky line clip to the tile box — pure codegen end to end
     (each segment clips independently: per-row t-parameter math, no
@@ -1685,18 +1051,10 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "geom_measures": q_geom_measures,
-        "augment_stats": q_augment_stats,
-        "contour": q_contour,
-        "recon_error": q_recon_error,
-        "hillshade": q_hillshade,
-        "equalize": q_equalize,
-        "caption_conflicts": q_caption_conflicts,
         "tile_sample": q_tile_sample,
         "embed_centroids": q_embed_centroids,
         "clip_tile": q_clip_tile,
         "simplify": q_simplify,
-        "overzoom": q_overzoom,
-        "mosaic": q_mosaic,
         "clip_lines": q_clip_lines,
         "tile_shards": q_tile_shards,
         "spatial_cluster": q_spatial_cluster,
@@ -1708,8 +1066,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "phash_neardup": q_phash_neardup,
         "kmeans_assign": q_kmeans_assign,
         "ann_topk_ivf": q_ann_topk_ivf,
-        "image_ahash_neardup": q_image_ahash_neardup,
-        "neardup_clusters": q_neardup_clusters,
         "tile_quantiles": q_tile_quantiles,
         "tile_encode": q_tile_encode,
         "simhash": q_simhash,
@@ -1745,8 +1101,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embed_neardup": q_embed_neardup,
         "embed_neardup_lsh": q_embed_neardup_lsh,
         "zonal_stats": q_zonal_stats,
-        "thumb_stats": q_thumb_stats,
-        "patch_stats": q_patch_stats,
     }
 
 
@@ -2051,69 +1405,6 @@ SELECT qid, CAST(rank AS INT) AS rank, vec_id AS neighbor_id, CAST(score AS BIGI
 FROM r WHERE rank <= 5
 """
 
-    def _hs_elev(dy: int, dx: int) -> str:
-        """Elevation at interior-neighbor (i+dy, j+dx) for the hillshade
-        oracle, with the qlossy per-channel quantization model applied when
-        fsel = 2 (same model as the thumb oracle)."""
-        y = f"(i+{dy})" if dy else "i"
-        x = f"(j+{dx})" if dx else "j"
-        v = f"((id*13 + {y}*{y}*3 + {x}*{x}*2 + {y}*{x}*5) % 1048576)"
-        q = (f"((({v}) // 65536) // 4 * 4 + 2) * 65536"
-             f" + (((({v}) // 256) % 256) // 4 * 4 + 2) * 256"
-             f" + ((({v}) % 256) // 4 * 4 + 2)")
-        return f"(CASE WHEN fsel = 2 THEN {q} ELSE {v} END)"
-
-    hillshade = f"""
-WITH __pts AS ({POINTS_SQL}),
-__ids AS (SELECT DISTINCT id, CAST(id % 3 AS INT) AS fsel FROM __pts WHERE id % 43 = 7),
-__g AS (
-  SELECT id, fsel, i.i AS i, j.j AS j
-  FROM __ids, generate_series(1, 14) i(i), generate_series(1, 22) j(j)),
-__grad AS (
-  SELECT id, i, j,
-         ({_hs_elev(-1, 1)} + 2*{_hs_elev(0, 1)} + {_hs_elev(1, 1)})
-       - ({_hs_elev(-1, -1)} + 2*{_hs_elev(0, -1)} + {_hs_elev(1, -1)}) AS gx,
-         ({_hs_elev(1, -1)} + 2*{_hs_elev(1, 0)} + {_hs_elev(1, 1)})
-       - ({_hs_elev(-1, -1)} + 2*{_hs_elev(-1, 0)} + {_hs_elev(-1, 1)}) AS gy
-  FROM __g),
-__px AS (
-  SELECT id, i - 1 AS zy, j - 1 AS zx,
-         least((abs(gx) + abs(gy)) // 16, 255) AS shade,
-         abs(gx) % 256 AS axm, abs(gy) % 256 AS aym
-  FROM __grad)
-SELECT id, round(CAST(sum(shade) AS DOUBLE) / 308, 6) AS mean_shade,
-       CAST(max(shade) AS BIGINT) AS max_shade,
-       CAST(sum(shade * (zy*29 + zx*13 + 1) + axm * (zy*29 + zx*13 + 8)
-                + aym * (zy*29 + zx*13 + 15)) % 2147483647 AS BIGINT) AS fp
-FROM __px GROUP BY 1
-"""
-
-    equalize_sql = f"""
-WITH __pts AS ({POINTS_SQL}),
-__ids AS (SELECT DISTINCT id, CAST(id % 3 AS INT) AS fsel FROM __pts WHERE id % 47 = 9),
-__px AS (
-  SELECT id, i.i AS i, j.j AS j, c.c AS c,
-         CASE WHEN fsel = 2
-              THEN (((id*7 + i.i*3 + j.j + c.c*5) % 16) * ((id*7 + i.i*3 + j.j + c.c*5) % 16)) // 4 * 4 + 2
-              ELSE ((id*7 + i.i*3 + j.j + c.c*5) % 16) * ((id*7 + i.i*3 + j.j + c.c*5) % 16)
-         END AS v
-  FROM __ids, generate_series(0, 7) i(i), generate_series(0, 15) j(j),
-       generate_series(0, 2) c(c)),
-__h AS (SELECT v AS bin, count(*) AS cnt FROM __px GROUP BY 1),
-__cdf AS (SELECT bin, sum(cnt) OVER (ORDER BY bin) AS cdf FROM __h),
-__tot AS (SELECT sum(cnt) AS total, (SELECT min(cdf) FROM __cdf) AS cdfmin FROM __h),
-__lut AS (
-  SELECT bin, CASE WHEN total > cdfmin
-                   THEN (cdf - cdfmin) * 255 // (total - cdfmin) ELSE 0
-              END AS e
-  FROM __cdf, __tot)
-SELECT id,
-       round(CAST(sum(e) AS DOUBLE) / 384, 6) AS mean_eq,
-       CAST(sum(e * (i*29 + j*13 + c*7 + 1)) % 2147483647 AS BIGINT) AS fp
-FROM __px JOIN __lut ON v = bin
-GROUP BY 1
-"""
-
     distinct_phash = (
         "WITH " + f"__pts AS ({POINTS_SQL}), "
         + f"__xy AS (SELECT phash, {tile_x_sql('lon', 6)} AS x, {tile_y_sql('lat', 6)} AS y FROM __pts) "
@@ -2154,129 +1445,6 @@ SELECT id, CAST(zone AS INT) AS zone, CAST(count(*) AS BIGINT) AS n_px,
 FROM __px GROUP BY 1, 2
 """
 
-    # thumbnail: brute-force the same pixel formula, then the exact integer
-    # box pooling (4x4 block SUM // 16) and the position-weighted fingerprint
-    # the Spark side computes from the DECODED thumbnail bytes
-    thumb = f"""
-WITH __pts AS ({POINTS_SQL}),
-__ids AS (SELECT DISTINCT id, CAST(id % 3 AS INT) AS fsel FROM __pts WHERE id % 41 = 5),
-__px AS (
-  SELECT id, i.i AS i, j.j AS j, c.c AS c,
-         CASE WHEN fsel = 2
-              THEN ((id*31 + i.i*7 + j.j*13 + c.c*5) % 256) // 4 * 4 + 2
-              ELSE (id*31 + i.i*7 + j.j*13 + c.c*5) % 256 END AS v
-  FROM __ids, generate_series(0, 15) i(i), generate_series(0, 23) j(j),
-       generate_series(0, 2) c(c)),
-__blk AS (
-  SELECT id, i // 4 AS zy, j // 4 AS zx, c, CAST(sum(v) // 16 AS BIGINT) AS tv
-  FROM __px GROUP BY 1, 2, 3, 4)
-SELECT id,
-       round(CAST(sum(CASE WHEN c = 0 THEN tv ELSE 0 END) AS DOUBLE) / 24, 6) AS mean_r,
-       round(CAST(sum(CASE WHEN c = 1 THEN tv ELSE 0 END) AS DOUBLE) / 24, 6) AS mean_g,
-       round(CAST(sum(CASE WHEN c = 2 THEN tv ELSE 0 END) AS DOUBLE) / 24, 6) AS mean_b,
-       CAST(sum(tv * (zy*29 + zx*13 + c*7 + 1)) % 2147483647 AS BIGINT) AS fp
-FROM __blk GROUP BY 1
-"""
-
-    patch_stats = f"""
-WITH __pts AS ({POINTS_SQL}),
-__ids AS (SELECT DISTINCT id, CAST(id % 3 AS INT) AS fsel FROM __pts WHERE id % 47 = 9),
-__ppx AS (
-  SELECT id, i.i AS i, j.j AS j, c.c AS c,
-         CASE WHEN fsel = 2
-              THEN ((id*31 + i.i*7 + j.j*13 + c.c*5) % 256) // 4 * 4 + 2
-              ELSE (id*31 + i.i*7 + j.j*13 + c.c*5) % 256 END AS v
-  FROM __ids, generate_series(0, 15) i(i), generate_series(0, 23) j(j),
-       generate_series(0, 2) c(c))
-SELECT id, CAST(i // 8 AS INT) AS gy, CAST(j // 8 AS INT) AS gx,
-       CAST(sum(CASE WHEN c = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r,
-       CAST(sum(CASE WHEN c = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-       CAST(sum(CASE WHEN c = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b,
-       CAST(sum(v * ((i % 8)*29 + (j % 8)*13 + c*7 + 1)) % 2147483647 AS BIGINT) AS fp
-FROM __ppx GROUP BY 1, 2, 3
-"""
-
-    from mvt_wrangler_spark.operators.sampling import sample_hash_sql
-
-    def _elev_sql(y: str, x: str) -> str:
-        """Terrain-RGB elevation at (y, x) incl. the qlossy channel model."""
-        e = f"((id*13 + ({y})*({y})*3 + ({x})*({x})*2 + ({y})*({x})*5) % 1048576)"
-        r, g, b = f"({e} // 65536)", f"(({e} // 256) % 256)", f"({e} % 256)"
-        return (f"(CASE WHEN id % 3 = 2 THEN ({r}//4*4+2)*65536 + ({g}//4*4+2)*256 + ({b}//4*4+2) "
-                f"ELSE {e} END)")
-
-    _corner = "CASE WHEN {e} > iso THEN 1 ELSE 0 END"
-    contour = f"""
-WITH __pts AS ({POINTS_SQL}),
-__ids AS (SELECT DISTINCT id, (id*13 % 1048576) + 1700 AS iso
-          FROM __pts WHERE id % 59 = 13),
-__cls AS (
-  SELECT id, y.y AS cy, x.x AS cx,
-         8*{_corner.format(e=_elev_sql('y.y', 'x.x'))}
-       + 4*{_corner.format(e=_elev_sql('y.y', 'x.x + 1'))}
-       + 2*{_corner.format(e=_elev_sql('y.y + 1', 'x.x + 1'))}
-       + 1*{_corner.format(e=_elev_sql('y.y + 1', 'x.x'))} AS cls
-  FROM __ids, generate_series(0, 14) y(y), generate_series(0, 22) x(x))
-SELECT id,
-       CAST(sum(CASE WHEN cls NOT IN (0, 15) THEN 1 ELSE 0 END) AS INT) AS n_cut,
-       CAST(sum(CASE WHEN cls IN (0, 15) THEN 0
-                     WHEN cls IN (5, 10) THEN 2 ELSE 1 END) AS INT) AS n_segments,
-       CAST(sum(cls * (cy*29 + cx*13 + 1)) % 2147483647 AS BIGINT) AS fp
-FROM __cls GROUP BY id
-"""
-
-    _aug_hash = sample_hash_sql("id", salt=0)
-    augment_stats = f"""
-WITH __pts AS ({POINTS_SQL}),
-__ids AS (SELECT DISTINCT id, CAST(id % 3 AS INT) AS fsel FROM __pts WHERE id % 53 = 11),
-__par AS (
-  SELECT id, fsel,
-         CAST(h & 1 AS INT) AS hflip,
-         CAST((h >> 1) & 1 AS INT) AS vflip,
-         CAST((h >> 2) % 9 AS INT) AS ox,
-         CAST(((h >> 2) // 9) % 5 AS INT) AS oy
-  FROM (SELECT id, fsel, {_aug_hash} AS h FROM __ids)),
-__apx AS (
-  SELECT id, hflip, vflip, ox, oy, y.y AS y, x.x AS x, c.c AS c,
-         oy + CASE WHEN vflip = 1 THEN 11 - y.y ELSE y.y END AS sy,
-         ox + CASE WHEN hflip = 1 THEN 15 - x.x ELSE x.x END AS sx
-  FROM __par, generate_series(0, 11) y(y), generate_series(0, 15) x(x),
-       generate_series(0, 2) c(c)),
-__av AS (
-  SELECT id, hflip, vflip, ox, oy, y, x, c,
-         CASE WHEN id % 3 = 2
-              THEN ((id*31 + sy*7 + sx*13 + c*5) % 256) // 4 * 4 + 2
-              ELSE (id*31 + sy*7 + sx*13 + c*5) % 256 END AS v
-  FROM __apx)
-SELECT id, hflip, vflip, ox, oy,
-       CAST(sum(CASE WHEN c = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r,
-       CAST(sum(CASE WHEN c = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-       CAST(sum(CASE WHEN c = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b,
-       CAST(sum(v * (y*29 + x*13 + c*7 + 1)) % 2147483647 AS BIGINT) AS fp
-FROM __av GROUP BY 1, 2, 3, 4, 5
-"""
-
-    recon_error = f"""
-WITH __pts AS ({POINTS_SQL}),
-__ids AS (SELECT DISTINCT id, CAST(id % 3 AS INT) AS fsel FROM __pts WHERE id % 61 = 17),
-__rpx AS (
-  SELECT id, i.i AS i, j.j AS j, c.c AS c,
-         CASE WHEN fsel = 2
-              THEN ((id*31 + i.i*7 + j.j*13 + c.c*5) % 256) // 4 * 4 + 2
-              ELSE (id*31 + i.i*7 + j.j*13 + c.c*5) % 256 END AS v
-  FROM __ids, generate_series(0, 15) i(i), generate_series(0, 23) j(j),
-       generate_series(0, 2) c(c)),
-__rpool AS (
-  SELECT id, i // 4 AS zy, j // 4 AS zx, c, CAST(sum(v) // 16 AS BIGINT) AS pv
-  FROM __rpx GROUP BY 1, 2, 3, 4)
-SELECT p.id,
-       CAST(sum((p.v - q.pv) * (p.v - q.pv)) AS BIGINT) AS sse,
-       CAST(max(abs(p.v - q.pv)) AS INT) AS max_err
-FROM __rpx p JOIN __rpool q
-  ON q.id = p.id AND q.zy = p.i // 4 AND q.zx = p.j // 4 AND q.c = p.c
-GROUP BY 1
-"""
-
     # exact tile-size quantiles: value at rank ceil(q*n/100) with (cnt, x, y)
     # tie-break, integer rank target in both engines
     tile_quantiles = f"""
@@ -2290,11 +1458,6 @@ FROM (VALUES (50), (90), (99)) q(q), __n, __r r
 WHERE r.rn = (q.q * __n.n + 99) // 100
 """
 
-    # revenue by tile: DECIMAL(18,2) sums are exact and order-independent in
-    # both engines (the double-sum nondeterminism trap), customers without
-    # orders keep zero revenue via the left join
-    # content-hash dedup: rebuild the exact raw byte stream from the pixel
-    # formula (row-major %02x hex), md5 the same lowercase-hex string
     # phash near-dup: same integer phash synthesis, then the band/join/refine
     # restated by phash_hamming_sql — bit-identical candidate and refine path
     from mvt_wrangler_spark.operators.dedup import phash_hamming_sql
@@ -2308,69 +1471,6 @@ SELECT id,
 FROM __ids"""
     phash_neardup = phash_hamming_sql(phash_nd_src, k=3, bands=4, max_bucket=1000)
 
-    # image bytes -> ahash -> hamming near-dup: restate pixels, luma pooling,
-    # the 64-bit assembly (two 32-bit halves, HUGEINT combine, signed wrap),
-    # then reuse the hamming-join twin verbatim
-    lo_bits = ("sum(CASE WHEN v > m AND idx < 32 "
-               "THEN CAST(1 AS BIGINT) << CAST(idx AS INT) ELSE 0 END)")
-    hi_bits = ("sum(CASE WHEN v > m AND idx >= 32 "
-               "THEN CAST(1 AS BIGINT) << CAST(idx - 32 AS INT) ELSE 0 END)")
-    ahash_src = f"""WITH __pts AS ({POINTS_SQL}),
-__im AS (SELECT DISTINCT id, id // 5 AS cl, id % 5 AS b, CAST(id % 3 AS INT) AS fsel
-         FROM __pts WHERE id % 5 < 2 AND (id // 5) % 8 = 0),
-__px AS (
-  SELECT id, i.i AS i, j.j AS j, c.c AS c,
-         (cl*31 + i.i*7 + j.j*13 + c.c*5) % 200
-         + CASE WHEN b = 1 AND i.i // 2 = cl % 8 AND j.j // 3 = (cl // 8) % 8
-                THEN 45 ELSE 0 END AS raw_v,
-         fsel
-  FROM __im, generate_series(0, 15) i(i), generate_series(0, 23) j(j),
-       generate_series(0, 2) c(c)),
-__lum AS (
-  SELECT id, i, j,
-         sum((CASE WHEN fsel = 2 THEN raw_v // 4 * 4 + 2 ELSE raw_v END)
-             * (CASE c WHEN 1 THEN 2 ELSE 1 END)) AS lum
-  FROM __px GROUP BY 1, 2, 3),
-__z AS (SELECT id, (i // 2) * 8 + (j // 3) AS idx,
-               CAST(sum(lum) // 6 AS BIGINT) AS v
-        FROM __lum GROUP BY 1, 2),
-__zm AS (SELECT __z.*, mm.m FROM __z JOIN
-         (SELECT id, sum(v) // 64 AS m FROM __z GROUP BY id) mm USING (id)),
-__h AS (SELECT id, CAST({hi_bits} AS HUGEINT) * 4294967296 + {lo_bits} AS h
-        FROM __zm GROUP BY id)
-SELECT id, CAST(CASE WHEN h >= 9223372036854775808 THEN h - 18446744073709551616
-                     ELSE h END AS BIGINT) AS phash
-FROM __h"""
-    ahash_neardup = phash_hamming_sql(ahash_src, k=3, bands=4, max_bucket=1000)
-
-    from mvt_wrangler_spark.operators.dedup import shingle_hashes_sql_expr
-
-    shingle_hashes_sql_expr_5gram = shingle_hashes_sql_expr("text", 5)
-    # cross-modal: the same image pair set joined to caption shingle sets;
-    # list_intersect over the distinct sorted shingle lists = array_intersect
-    caption_conflicts = f"""
-WITH __ap AS ({ahash_neardup}),
-__docs AS (SELECT doc_id,
-                  list_distinct({shingle_hashes_sql_expr_5gram}) AS toks
-           FROM documents),
-__j AS (
-  SELECT p.id_a, p.id_b, p.hamming,
-         CAST(length(list_intersect(a.toks, b.toks)) AS BIGINT) AS n_common,
-         CAST(length(a.toks) + length(b.toks)
-              - length(list_intersect(a.toks, b.toks)) AS BIGINT) AS n_union
-  FROM __ap p
-  JOIN __docs a ON a.doc_id = ((p.id_a % 500) + 500) % 500
-  JOIN __docs b ON b.doc_id = ((p.id_b % 500) + 500) % 500)
-SELECT id_a, id_b, hamming, n_common, n_union,
-       n_common * 10 < n_union * 3 AS conflict
-FROM __j
-"""
-    # pairs -> clusters: recursive-CTE reachability closure over the SAME
-    # ahash pair query (pair_clusters' large-star/small-star twin)
-    from mvt_wrangler_spark.operators.dedup import pair_clusters_sql
-
-    neardup_clusters = pair_clusters_sql(ahash_neardup)
-
     from mvt_wrangler_spark.operators.cluster import ann_topk_ivf_sql, kmeans_sql
 
     kmeans_sql_oracle = kmeans_sql(k=4, n_iter=2, quant=100)
@@ -2381,6 +1481,7 @@ FROM __j
         embedding_lsh_sql,
         minhash_lsh_sql,
         ngram_jaccard_sql,
+        pair_clusters_sql,
         simhash_sql_expr,
     )
 
@@ -2500,55 +1601,6 @@ __vk AS (SELECT * FROM __v WHERE gkey IN
 SELECT gkey, n_out, area2q FROM __clip
 """
 
-    overzoom_sql = f"""
-WITH {pts},
-__ozids AS (SELECT DISTINCT id, CAST(id % 3 AS INT) AS fsel
-            FROM __pts WHERE id % 37 = 3),
-__cpx AS (
-  SELECT id, qy.q AS qy, qx.q AS qx, y.y AS y, x.x AS x, c.c AS c,
-         CASE WHEN fsel = 2
-              THEN ((id*31 + (qy.q*8 + y.y//2)*7 + (qx.q*8 + x.x//2)*13 + c.c*5) % 256) // 4 * 4 + 2
-              ELSE (id*31 + (qy.q*8 + y.y//2)*7 + (qx.q*8 + x.x//2)*13 + c.c*5) % 256 END AS v
-  FROM __ozids, generate_series(0, 1) qy(q), generate_series(0, 1) qx(q),
-       generate_series(0, 15) y(y), generate_series(0, 15) x(x),
-       generate_series(0, 2) c(c))
-SELECT id, CAST(qy*2 + qx AS INT) AS child,
-       CAST(sum(CASE WHEN c = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r,
-       CAST(sum(CASE WHEN c = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-       CAST(sum(CASE WHEN c = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b,
-       CAST(sum(v * (y*29 + x*13 + c*7 + 1)) % 2147483647 AS BIGINT) AS fp
-FROM __cpx GROUP BY 1, 2
-"""
-
-    # mosaic: parent pixel (py,px,c) = floor-mean of the 2x2 block of child
-    # q = (py//8)*2 + (px//8) at child coords ((py%8)*2+dy, (px%8)*2+dx),
-    # child pixel v = (id*31 + q*11 + cy*7 + cx*13 + c*5) % 256 with the
-    # qlossy quant model (v//4*4+2) when (id+q)%3 = 2 — mirrors q_mosaic's
-    # generator and mosaic()'s integer box-mean exactly.
-    mosaic_sql = f"""
-WITH {pts},
-__moids AS (SELECT DISTINCT id FROM __pts WHERE id % 41 = 5),
-__ppx AS (
-  SELECT id, py.y AS py, px.x AS px, c.c AS c,
-         sum(CASE WHEN (id + ((py.y//8)*2 + (px.x//8))) % 3 = 2
-              THEN ((id*31 + ((py.y//8)*2 + (px.x//8))*11
-                     + ((py.y%8)*2 + dy.d)*7 + ((px.x%8)*2 + dx.d)*13
-                     + c.c*5) % 256) // 4 * 4 + 2
-              ELSE (id*31 + ((py.y//8)*2 + (px.x//8))*11
-                    + ((py.y%8)*2 + dy.d)*7 + ((px.x%8)*2 + dx.d)*13
-                    + c.c*5) % 256 END) // 4 AS v
-  FROM __moids, generate_series(0, 15) py(y), generate_series(0, 15) px(x),
-       generate_series(0, 2) c(c), generate_series(0, 1) dy(d),
-       generate_series(0, 1) dx(d)
-  GROUP BY 1, 2, 3, 4)
-SELECT id, CAST(4 AS INT) AS n_children,
-       CAST(sum(CASE WHEN c = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r,
-       CAST(sum(CASE WHEN c = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-       CAST(sum(CASE WHEN c = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b,
-       CAST(sum(v * (py*29 + px*13 + c*7 + 1)) % 2147483647 AS BIGINT) AS fp
-FROM __ppx GROUP BY 1
-"""
-
     from mvt_wrangler_spark.operators.clip import clip_segments_sql
 
     clip_lines = f"""
@@ -2663,8 +1715,6 @@ FROM __pts""",
         "embed_centroids": embed_centroids,
         "clip_tile": clip_tile,
         "simplify": simplify,
-        "overzoom": overzoom_sql,
-        "mosaic": mosaic_sql,
         "clip_lines": clip_lines,
         "tile_shards": tile_shards,
         "spatial_cluster": spatial_cluster_sql,
@@ -2698,18 +1748,8 @@ FROM __pts""",
         "ann_topk": ann,
         "ann_topk_lsh": ann_lsh,
         "zonal_stats": zonal,
-        "thumb_stats": thumb,
-        "patch_stats": patch_stats,
-        "augment_stats": augment_stats,
-        "contour": contour,
-        "recon_error": recon_error,
-        "hillshade": hillshade,
-        "equalize": equalize_sql,
         "phash_neardup": phash_neardup,
         "kmeans_assign": kmeans_sql_oracle,
         "ann_topk_ivf": ann_ivf_oracle,
-        "image_ahash_neardup": ahash_neardup,
-        "caption_conflicts": caption_conflicts,
-        "neardup_clusters": neardup_clusters,
         "tile_quantiles": tile_quantiles,
     }

@@ -60,6 +60,12 @@ def main(argv: list[str] | None = None) -> int:
     if not os.path.exists(args.input):
         print(f"error: input does not exist: {args.input}", file=sys.stderr)
         return 2
+    from .functions.tiling import MAX_ZOOM
+
+    if not 0 <= args.min_zoom <= args.zoom <= MAX_ZOOM:
+        print(f"error: need 0 <= --min-zoom <= --zoom <= {MAX_ZOOM}, got "
+              f"--min-zoom {args.min_zoom} --zoom {args.zoom}", file=sys.stderr)
+        return 2
 
     from pyspark.sql import functions as F  # noqa: F401
 

@@ -25,6 +25,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 WEB_MERCATOR_MAX_LAT = 85.0511287798066  # atan(sinh(pi)) in degrees
+# Deepest zoom the tile assigners accept. with_hilbert_d nests two selects per
+# level; from z=24 on, Spark's analyzer gives up on the chain ("Max
+# iterations (100) reached for batch Resolution") instead of resolving it.
+MAX_ZOOM = 23
 
 
 # ---------------------------------------------------------------------------
@@ -194,8 +198,11 @@ def assign_tiles(
     """Attach (z, x, y, tile_id[, px, py]) columns at zoom z.
 
     All column math — Catalyst folds it into the scan's project, so at 100TB
-    this is a zero-shuffle narrow stage.
+    this is a zero-shuffle narrow stage. Raises ValueError unless
+    0 <= z <= MAX_ZOOM.
     """
+    if not 0 <= z <= MAX_ZOOM:
+        raise ValueError(f"zoom must be in [0, {MAX_ZOOM}], got {z}")
     lon, lat = F.col(lon_col), F.col(lat_col)
     out = (
         df.withColumn("z", F.lit(z).cast("int"))
@@ -229,8 +236,8 @@ def assign_tiles_multi(
     zoom. Row clamping at z_max propagates correctly (floor(a)>>s ==
     floor(a/2^s)).
     """
-    if not 0 <= z_min <= z_max:
-        raise ValueError("need 0 <= z_min <= z_max")
+    if not 0 <= z_min <= z_max <= MAX_ZOOM:
+        raise ValueError(f"need 0 <= z_min <= z_max <= {MAX_ZOOM}")
     lon, lat = F.col(lon_col), F.col(lat_col)
     out = (
         df.withColumn("__xm", tile_x(lon, z_max))

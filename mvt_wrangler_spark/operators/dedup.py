@@ -794,8 +794,7 @@ def phash_hamming_pairs(df: DataFrame, id_col: str = "image_id",
     # and projecting the hashes away first narrows the surviving rows from
     # 4 longs to (id_a, id_b, int). Set-equal to distinct-then-refine
     # because the input is unique per id, so ph_a/ph_b are functions of
-    # (id_a, id_b) — same pair set either way (A/B-verified pairwise-equal
-    # on the 3.58M-pair sf0.1 ahash table; the SQL twin keeps the
+    # (id_a, id_b) — same pair set either way (the SQL twin keeps the
     # distinct-first shape as an independent restatement).
     return (
         cand
@@ -1010,106 +1009,6 @@ def pair_clusters_with_corpus(corpus: DataFrame, pairs: DataFrame,
                     .alias("cluster_rep"),
                     F.coalesce("cluster_size", F.lit(1)).cast("long")
                     .alias("cluster_size")))
-
-
-def phash_hamming_clusters(df: DataFrame, id_col: str = "image_id",
-                           phash_col: str = "phash", k: int = 3,
-                           bands: int = 4, max_bucket: int = 1000,
-                           max_rounds: int = 50) -> DataFrame:
-    """EXACTLY `pair_clusters(phash_hamming_pairs(df, ...))` — same
-    (member_id, cluster_rep, cluster_size) rows — computed over DISTINCT
-    HASHES instead of images, so the quadratic pair set of exact-duplicate
-    hash groups is never materialized. At web scale exact duplicates
-    dominate (measured here: 13,154 images -> 82 distinct aHashes at sf0.1,
-    3.58M pairs, 23 s; collapsed: 82-node graph, the pair stage disappears).
-    This is the architecture a 10^12-image dedup needs: cliques of
-    identical hashes carry no information beyond their membership.
-
-    Equivalence proof (each step mirrors phash_hamming_pairs' semantics):
-    a band BUCKET's membership is a function of the hash alone, so every
-    image of a hash group is in exactly the buckets the group is in.
-    - normal bucket (2 <= n_images <= max_bucket): image level emits ALL
-      refined pairs; every member of group g connects directly to every
-      member of h when hamming(g,h) <= k (including g == h with cnt >= 2,
-      hamming 0). Hash level: cross-edge (g,h) / self-mark (g,g) under the
-      same hamming test — expansion is fully connected either way.
-    - hot bucket (n_images > max_bucket): image level emits the star
-      (rep, a) with rep = the bucket's min image id, refined. Every member
-      of a group g with hamming(rep_ph, g) <= k connects to rep — so g's
-      members interconnect THROUGH rep, and groups beyond k of rep get NO
-      connectivity from this bucket (identical-hash members are NOT
-      interconnected by a hot bucket whose rep is far — the documented
-      bounded-recall trade). Hash level: cross-edge (rep_group, g) under
-      the same test; rep's own group self-marks when cnt >= 2.
-    - a group with no incident edge and no self-mark contributes only
-      singletons, which pair_clusters drops at image level too.
-    Component min-id = min over member images = min over groups' min ids,
-    because every edge-incident group expands ALL its members into the
-    component. Sizes recount after expansion. The equivalence is pinned by
-    pytest on the real ahash chain AND on forced-hot-bucket fixtures.
-    """
-    if not 1 <= k < bands:
-        raise ValueError(f"banding guarantee needs 1 <= k < bands, got k={k} bands={bands}")
-    if 64 % bands:
-        raise ValueError(f"bands must divide 64, got {bands}")
-    width = 64 // bands
-    mask = (1 << width) - 1
-    # pin the slim (id, hash) projection ONCE: it feeds the group agg, the
-    # banding, AND the final expansion join — unpinned, the whole upstream
-    # hash chain (decode + ahash here) recomputes for each reference
-    # (measured 3x at sf0.1; the [[with-global-rank]] exchange-reuse lesson)
-    ph_slim = session.pin(df.select(F.col(id_col).cast("long").alias("member_id"),
-                                    F.col(phash_col).alias("ph")))
-    groups = (ph_slim.groupBy("ph")
-              .agg(F.count(F.lit(1)).alias("cnt"),
-                   F.min("member_id").alias("minid")))
-    buckets = F.array(*[
-        (F.shiftright(F.col("ph"), i * width).bitwiseAND(F.lit(mask))
-         + F.lit(i * (mask + 1))).cast("long")
-        for i in range(bands)
-    ])
-    banded = groups.select("ph", "cnt", "minid",
-                           F.explode(buckets).alias("bucket"))
-    stats = banded.groupBy("bucket").agg(
-        F.sum("cnt").alias("__n"), F.min("minid").alias("__repid"),
-        F.min_by("ph", "minid").alias("__rep_ph"))
-    ham = lambda a, b: F.bit_count(a.bitwiseXOR(b))  # noqa: E731
-
-    normal = banded.join(
-        stats.filter((F.col("__n") >= 2) & (F.col("__n") <= max_bucket))
-        .select("bucket"), on="bucket")
-    a, b = normal.alias("a"), normal.alias("b")
-    e_norm = (a.join(b, on="bucket")
-              .filter((F.col("a.minid") < F.col("b.minid"))
-                      | ((F.col("a.minid") == F.col("b.minid"))
-                         & (F.col("a.cnt") >= 2)))
-              .filter(ham(F.col("a.ph"), F.col("b.ph")) <= F.lit(k))
-              .select(F.col("a.minid").alias("u"), F.col("b.minid").alias("v")))
-    hot = banded.join(stats.filter(F.col("__n") > max_bucket), on="bucket")
-    e_hot = (hot.filter((F.col("minid") != F.col("__repid"))
-                        | (F.col("cnt") >= 2))
-             .filter(ham(F.col("__rep_ph"), F.col("ph")) <= F.lit(k))
-             .select(F.col("__repid").alias("u"), F.col("minid").alias("v")))
-    edges = session.pin(e_norm.unionByName(e_hot).distinct())
-
-    cross = edges.filter(F.col("u") != F.col("v"))
-    selfmark = edges.filter(F.col("u") == F.col("v")).select(F.col("u").alias("minid"))
-    comp = pair_clusters(cross, id_a="u", id_b="v", max_rounds=max_rounds) \
-        .select(F.col("member_id").alias("minid"), "cluster_rep")
-    # self-marked groups with no cross edge form their own component
-    solo = (selfmark.join(comp, "minid", "left_anti")
-            .select("minid", F.col("minid").alias("cluster_rep")))
-    gmap = comp.unionByName(solo)
-
-    members = (ph_slim
-               .join(groups.select("ph", "minid"), on="ph")
-               .join(gmap, on="minid")
-               .select("member_id", "cluster_rep"))
-    sizes = members.groupBy("cluster_rep").agg(
-        F.count(F.lit(1)).alias("cluster_size"))
-    return (members.join(sizes, "cluster_rep")
-            .select("member_id", "cluster_rep",
-                    F.col("cluster_size").cast("long").alias("cluster_size")))
 
 
 def pair_clusters_sql(pairs_src: str, id_a: str = "id_a",

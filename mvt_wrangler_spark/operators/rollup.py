@@ -66,8 +66,11 @@ def pyramid_rollup(base: DataFrame, base_z: int, min_z: int = 0) -> DataFrame:
     to its distinct keys before the one exchange, and the output is at most
     4^base_z * 4/3 rows whatever the corpus size, so AQE coalesces it to a
     few partitions (one file at small sizes) whatever
-    spark.sql.shuffle.partitions is.
+    spark.sql.shuffle.partitions is. Raises ValueError unless
+    0 <= min_z <= base_z.
     """
+    if not 0 <= min_z <= base_z:
+        raise ValueError(f"need 0 <= min_z <= base_z, got min_z={min_z} base_z={base_z}")
     agg_cols = [c for c in base.columns if c not in ("z", "x", "y")]
     # one explode + ONE groupBy instead of a groupBy + union branch per
     # level (A/B-verified exceptAll-equal at sf0.1): one Exchange instead of

@@ -6,8 +6,7 @@ spatial analog of near-dup clustering, used to merge duplicate POI pins,
 collapse burst captures at one location, or build label regions.
 
 Scale shape — pure DataFrame ops, NO Python anywhere. The graph is built
-over CELLS, not points (the same node-collapse that makes
-phash_hamming_clusters tractable on exact-duplicate-heavy data):
+over CELLS, not points:
 
   1. cell size c = the largest integer with 2*(c-1)^2 <= eps^2
      (c ~= eps/sqrt(2)). Any two points in the SAME cell are within eps by

@@ -33,10 +33,8 @@ AUDIT = [
     ("phash_neardup", "hamming banding: explode + equi-join + popcount refine"),
     ("ann_topk_lsh", "IVF-style cells — must have NO cartesian stage"),
     ("ann_topk", "labeled brute-force baseline (cartesian EXPECTED)"),
-    ("thumb_stats", "image decode/pool/encode mapInPandas chain"),
     ("tile_encode", "ordered archive sink: range partition + sorted mapInPandas"),
     ("kmeans_assign", "iterative Lloyd: Arrow assign pass + posexplode partial-agg"),
-    ("image_ahash_neardup", "bytes -> decode -> aHash -> hamming band join chain"),
     ("tile_quantiles", "exact quantiles via range-repartitioned global rank"),
     ("asof_join", "union-stream as-of join: one key shuffle, no range-join blowup"),
     ("ngram_jaccard", "exact Jaccard: slim prefix join, arrays re-attached post-dedup"),
@@ -47,24 +45,15 @@ AUDIT = [
     ("embed_centroids", "64 codegen sums + count per group; no explode, no Python"),
     ("clip_tile", "Sutherland-Hodgman clip: ring assembly shuffle + one mapInPandas"),
     ("simplify", "Douglas-Peucker: ring assembly shuffle + one mapInPandas"),
-    ("overzoom", "tile overzoom: decode/crop/upsample/encode mapInPandas chain"),
     ("clip_lines", "Liang-Barsky line clip: codegen only; lead() window forms segments"),
     ("tile_shards", "shard packing: one key shuffle + window cumsum, integer DIV"),
     ("spatial_cluster", "sub-eps cell collapse + half-stencil hash join, bbox-gap prune, cell-graph closure; no distance cross-join"),
     ("dataset_split", "hash split assignment: zero-shuffle codegen projection"),
-    ("mosaic", "pyramid build: one parent-key shuffle + bounded applyInPandas group"),
-    ("hillshade", "DEM decode -> Horn stencil -> re-encode: one mapInPandas chain, no shuffle"),
     ("morans_i", "tile counts + 8-offset neighbor equi-join; scalar join on constant key"),
-    ("equalize", "global 256-bin histogram (bounded collect) + LUT remap mapInPandas"),
     ("hot_tiles", "Gi*: 9-offset explode + groupBy + tile equi-join + 1-row scalar broadcast"),
-    ("patch_stats", "decode -> patch grid -> re-encode mapInPandas chain, no shuffle"),
-    ("caption_conflicts", "ahash hamming pairs + two broadcast caption joins + array_intersect"),
-    ("augment_stats", "sample_hash codegen params + crop/flip mapInPandas, no shuffle"),
     ("dwithin_join", "radius band join: eps-grid equi-join + 9-stencil probe, exactly-once pairs"),
-    ("contour", "DEM decode -> marching-squares cells: one mapInPandas chain, no shuffle"),
     ("winding", "shoelace sign + F.reverse flip: one ring-build shuffle, codegen after"),
     ("pagerank", "2 iterations: edges join (deg, rank) + groupBy(dst) partial agg — no cartesian"),
-    ("recon_error", "decode -> pool -> SSE: one mapInPandas chain, no shuffle"),
     ("dedup_safe_split", "minhash closure + singleton left join + codegen split CASE"),
     ("tile_smooth", "separable 5x5 binomial: two 1-D explode+groupBy passes (10 taps, not 25)"),
     ("shard_manifest", "one key shuffle; shard + within-shard windows refine the same partitioning"),

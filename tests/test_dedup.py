@@ -472,40 +472,3 @@ def test_ngram_jaccard_threshold_boundary_exact(spark):
     full = D.ngram_jaccard_pairs(dup, "doc_id", "text", shingle=4,
                                  threshold=1.0).collect()
     assert [(r.id_a, r.id_b) for r in full] == [(1, 2)]
-
-
-@pytest.mark.spark
-def test_phash_hamming_clusters_equals_composed(spark):
-    """phash_hamming_clusters must equal pair_clusters(phash_hamming_pairs)
-    EXACTLY across bucket regimes: all-normal, forced-hot (tiny max_bucket,
-    star-fallback connectivity incl. identical-hash groups far from the
-    bucket rep), and mixed duplicates (cnt 1/2/large cliques)."""
-    import random
-
-    rng = random.Random(42)
-    rows = []
-    nid = 0
-    # planted identical-hash cliques of varying size around base patterns
-    bases = [rng.getrandbits(64) - (1 << 63) for _ in range(12)]
-    for gi, base in enumerate(bases):
-        for _ in range(1 + (gi % 5) * 3):
-            rows.append((nid, base)); nid += 1
-        # near variants: flip 1-2 bits (within k), and 8 bits (beyond k)
-        for nb in (1, 2, 8):
-            v = base
-            for bpos in rng.sample(range(64), nb):
-                v ^= (1 << bpos)
-            v = (v + (1 << 63)) % (1 << 64) - (1 << 63)
-            rows.append((nid, v)); nid += 1
-    df = spark.createDataFrame(rows, "image_id long, phash long")
-
-    for max_bucket in (1000, 4):  # all-normal vs heavily hot
-        composed = D.pair_clusters(D.phash_hamming_pairs(
-            df, id_col="image_id", k=3, bands=4, max_bucket=max_bucket))
-        collapsed = D.phash_hamming_clusters(
-            df, id_col="image_id", k=3, bands=4, max_bucket=max_bucket)
-        got = sorted(map(tuple, collapsed.collect()))
-        want = sorted(map(tuple, composed.collect()))
-        assert got == want, f"max_bucket={max_bucket}"
-        assert len(want) > 10
-

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from mvt_wrangler_spark.sources import images as I
 
@@ -72,423 +71,3 @@ def test_synthetic_images_spark(spark):
         else:
             assert np.array_equal(px, dec)
         assert r.caption.startswith(f"caption of img{i:09d}:")
-
-
-def test_thumbnail_pooling_exact_numpy():
-    """The operator's pooling contract: exact integer box filter, crop to the
-    covered grid, lossless rawz round-trip of the emitted bytes."""
-    from mvt_wrangler_spark.operators.multimodal import thumbnail  # noqa: F401  (op under test below)
-
-    px = I.pixels_for(42, 26, 19)  # 26x19, NOT multiples of 4 -> crop to 24x16
-    f = 4
-    th, tw = 19 // f, 26 // f
-    block = px[: th * f, : tw * f, :].astype(np.int64)
-    pooled = (block.reshape(th, f, tw, f, 3).sum(axis=(1, 3)) // (f * f)).astype(np.uint8)
-    # brute-force the same thing pixel by pixel
-    for zy in (0, th - 1):
-        for zx in (0, tw - 1):
-            for c in range(3):
-                blk = px[zy * f:(zy + 1) * f, zx * f:(zx + 1) * f, c].astype(np.int64)
-                assert pooled[zy, zx, c] == blk.sum() // (f * f)
-
-
-@pytest.mark.spark
-def test_thumbnail_spark_end_to_end(spark):
-    from mvt_wrangler_spark.operators.multimodal import thumbnail
-
-    df = I.synthetic_images(spark, 120, with_pixels=True, partitions=3)
-    out = {r.image_id: r for r in thumbnail(df, factor=4, out_fmt="rawz").collect()}
-    src = {r.image_id: r for r in df.collect()}
-    assert set(out) == {k for k, r in src.items() if r.w >= 4 and r.h >= 4}
-    for k, r in out.items():
-        s = src[k]
-        assert (r.tw, r.th) == (s.w // 4, s.h // 4)
-        t = I.decode(bytes(r.thumb), r.fmt, r.tw, r.th)
-        px = I.decode(bytes(s.bytes), s.fmt, s.w, s.h).astype(np.int64)
-        block = px[: r.th * 4, : r.tw * 4, :]
-        expect = (block.reshape(r.th, 4, r.tw, 4, 3).sum(axis=(1, 3)) // 16).astype(np.uint8)
-        assert np.array_equal(t, expect)
-    # dedup property: exact-duplicate source rows produce identical thumbnails
-    for i in range(17, 120, 17):
-        a, b = f"img{i:09d}", f"img{i - 1:09d}"
-        if a in out and b in out and src[a].fmt == src[b].fmt:
-            assert bytes(out[a].thumb) == bytes(out[b].thumb)
-
-
-@pytest.mark.spark
-def test_ahash64_properties(spark):
-    """aHash invariants: codec-independence for lossless fmts, exact
-    invariance under uniform brightness shift (v and m move together by
-    4c with no truncation slip), and the bytes->near-dup chain finding
-    the synthetic table's planted exact duplicates at hamming 0."""
-    import pandas as pd
-
-    from mvt_wrangler_spark.operators.dedup import phash_hamming_pairs
-    from mvt_wrangler_spark.operators.multimodal import ahash64
-
-    base = (I.pixels_for(77, 24, 16) % 250).astype(np.uint8)  # headroom: +3 never clips
-    shifted = (base.astype(np.int64) + 3).astype(np.uint8)
-    rows = [
-        ("raw0", I.encode(base, "raw"), "raw", 24, 16),
-        ("rawz0", I.encode(base, "rawz"), "rawz", 24, 16),
-        ("shift", I.encode(shifted, "raw"), "raw", 24, 16),
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["image_id", "bytes", "fmt", "w", "h"]))
-    got = {r.image_id: r.ahash for r in ahash64(df).collect()}
-    assert got["raw0"] == got["rawz0"]          # codec-independent
-    assert got["raw0"] == got["shift"]          # brightness-shift invariant
-
-    # chain: every-17th exact duplicate in the synthetic table -> hamming 0
-    imgs = I.synthetic_images(spark, 200, with_pixels=True, partitions=3)
-    ph = ahash64(imgs).select(
-        F.expr("CAST(substring(image_id, 4, 12) AS BIGINT)").alias("id"), "ahash")
-    pairs = {(r.id_a, r.id_b): r.hamming
-             for r in phash_hamming_pairs(ph, id_col="id", phash_col="ahash",
-                                          k=3).collect()}
-    # only pairs where NEITHER side is qlossy are pixel-exact (fmt cycles by
-    # the row's own id even though duplicates copy donor pixels + dims)
-    planted = [(i - 1, i) for i in range(17, 200, 17)
-               if i % 3 != 2 and (i - 1) % 3 != 2]
-    assert planted and all(pairs.get(p) == 0 for p in planted), (
-        [p for p in planted if pairs.get(p) != 0])
-
-
-def _mosaic_expected(children):
-    """children: {q: (pixels, fmt)} -> expected parent array (numpy ref)."""
-    h, w = next(iter(children.values()))[0].shape[:2]
-    h2, w2 = h // 2, w // 2
-    parent = np.zeros((h2 * 2, w2 * 2, 3), dtype=np.uint8)
-    for q, (px, fmt) in children.items():
-        stored = I.decode(I.encode(px, fmt), fmt, w, h).astype(np.int64)
-        down = (stored[: h2 * 2, : w2 * 2, :]
-                .reshape(h2, 2, w2, 2, 3).sum(axis=(1, 3)) // 4)
-        qy, qx = q // 2, q % 2
-        parent[qy * h2:(qy + 1) * h2, qx * w2:(qx + 1) * w2, :] = \
-            down.astype(np.uint8)
-    return parent
-
-
-@pytest.mark.spark
-def test_mosaic_exact_full_parent(spark):
-    from mvt_wrangler_spark.operators.multimodal import mosaic
-
-    fmts = ["raw", "rawz", "qlossy", "rawz"]
-    kids = {q: (I.pixels_for(900 + q, 16, 16), fmts[q]) for q in range(4)}
-    rows = [("p1", q, bytearray(I.encode(px, fmt)), fmt, 16, 16)
-            for q, (px, fmt) in kids.items()]
-    df = spark.createDataFrame(
-        rows, "parent_id string, child int, bytes binary, fmt string, "
-              "w int, h int").repartition(4)
-    out = mosaic(df, out_fmt="rawz").collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r.parent_id, r.pw, r.ph, r.pfmt, r.n_children) == \
-        ("p1", 16, 16, "rawz", 4)
-    got = I.decode(bytes(r.pbytes), "rawz", 16, 16)
-    assert np.array_equal(got, _mosaic_expected(kids))
-
-
-@pytest.mark.spark
-def test_mosaic_missing_duplicate_and_mismatched_children(spark):
-    from mvt_wrangler_spark.operators.multimodal import mosaic
-
-    px0a = I.pixels_for(1, 16, 16)
-    px0b = I.pixels_for(2, 16, 16)
-    px3 = I.pixels_for(3, 16, 16)
-    px_bad = I.pixels_for(4, 8, 8)          # dims differ from the group's
-    rows = [
-        ("p", 0, bytearray(I.encode(px0a, "raw")), "raw", 16, 16),
-        ("p", 0, bytearray(I.encode(px0b, "raw")), "raw", 16, 16),  # dup
-        ("p", 3, bytearray(I.encode(px3, "rawz")), "rawz", 16, 16),
-        ("p", 1, bytearray(I.encode(px_bad, "raw")), "raw", 8, 8),  # skip
-        ("p", 2, None, "raw", 16, 16),                              # null
-        ("q", 9, bytearray(I.encode(px3, "raw")), "raw", 16, 16),   # bad idx
-    ]
-    df = spark.createDataFrame(
-        rows, "parent_id string, child int, bytes binary, fmt string, "
-              "w int, h int").repartition(5)
-    out = {r.parent_id: r for r in mosaic(df, out_fmt="raw").collect()}
-    # q: its only row has child outside 0..3 -> quadrants all zero, n=0
-    assert out["q"].n_children == 0
-    assert not any(I.decode(bytes(out["q"].pbytes), "raw", 16, 16).ravel())
-    r = out["p"]
-    assert r.n_children == 2
-    # duplicate quadrant keeps the (child, bytes)-smallest row
-    keep0 = min(I.encode(px0a, "raw"), I.encode(px0b, "raw"))
-    kept_px = px0a if keep0 == I.encode(px0a, "raw") else px0b
-    expect = _mosaic_expected({0: (kept_px, "raw"), 3: (px3, "rawz")})
-    got = I.decode(bytes(r.pbytes), "raw", 16, 16)
-    assert np.array_equal(got, expect)
-    # determinism across a second run
-    out2 = {x.parent_id: x for x in mosaic(df, out_fmt="raw").collect()}
-    assert bytes(out2["p"].pbytes) == bytes(r.pbytes)
-
-
-@pytest.mark.spark
-def test_mosaic_overzoom_inverse(spark):
-    """mosaic(overzoom(img)) == img exactly for lossless formats: overzoom
-    duplicates each pixel 2x2, the box-mean averages 4 equal values back."""
-    from mvt_wrangler_spark.operators.multimodal import mosaic, overzoom
-
-    df = I.synthetic_images(spark, 40, with_pixels=True, partitions=3) \
-         .filter((F.col("w") % 2 == 0) & (F.col("h") % 2 == 0)) \
-         .filter(F.col("fmt") != "qlossy")
-    kids = overzoom(df, out_fmt="rawz").select(
-        F.col("image_id").alias("parent_id"), "child",
-        F.col("cbytes").alias("bytes"), F.col("cfmt").alias("fmt"),
-        F.col("cw").alias("w"), F.col("ch").alias("h"))
-    back = {r.parent_id: r for r in mosaic(kids, out_fmt="rawz").collect()}
-    for s in df.collect():
-        r = back[s.image_id]
-        assert (r.pw, r.ph, r.n_children) == (s.w, s.h, 4)
-        assert np.array_equal(
-            I.decode(bytes(r.pbytes), "rawz", r.pw, r.ph),
-            I.decode(bytes(s.bytes), s.fmt, s.w, s.h))
-
-
-def test_hillshade_exact_numpy(spark):
-    """Horn gradients + L1 shade on a random DEM tile match a direct numpy
-    reference through the full encode -> operator -> decode path."""
-    import numpy as np
-
-    from mvt_wrangler_spark.operators.multimodal import hillshade
-    from mvt_wrangler_spark.sources import images as I
-
-    rng = np.random.RandomState(7)
-    H, W = 9, 12
-    elev = rng.randint(0, 1 << 20, size=(H, W)).astype(np.int64)
-    px = np.stack([elev // 65536, (elev // 256) % 256, elev % 256],
-                  axis=-1).astype(np.uint8)
-
-    df = spark.createDataFrame(
-        [("t1", bytearray(I.encode(px, "rawz")), "rawz", W, H),
-         ("small", bytearray(b"xx"), "raw", 2, 2)],  # <3: no interior, dropped
-        "image_id string, bytes binary, fmt string, w int, h int")
-    out = {r["image_id"]: r for r in hillshade(df, shift=4).collect()}
-
-    assert "small" not in out
-    r = out["t1"]
-    assert (r["tw"], r["th"]) == (W - 2, H - 2)
-    got = I.decode(bytes(r["shade"]), r["fmt"], r["tw"], r["th"]).astype(np.int64)
-
-    gx = ((elev[:-2, 2:] + 2 * elev[1:-1, 2:] + elev[2:, 2:])
-          - (elev[:-2, :-2] + 2 * elev[1:-1, :-2] + elev[2:, :-2]))
-    gy = ((elev[2:, :-2] + 2 * elev[2:, 1:-1] + elev[2:, 2:])
-          - (elev[:-2, :-2] + 2 * elev[:-2, 1:-1] + elev[:-2, 2:]))
-    ax, ay = np.abs(gx), np.abs(gy)
-    want = np.stack([np.minimum((ax + ay) >> 4, 255), ax % 256, ay % 256],
-                    axis=-1)
-    assert np.array_equal(got, want)
-
-
-def test_hillshade_flat_dem_is_zero(spark):
-    """A constant-elevation tile has zero gradients everywhere."""
-    import numpy as np
-
-    from mvt_wrangler_spark.operators.multimodal import hillshade
-    from mvt_wrangler_spark.sources import images as I
-
-    px = np.full((5, 6, 3), 37, dtype=np.uint8)
-    df = spark.createDataFrame(
-        [("flat", bytearray(I.encode(px, "raw")), "raw", 6, 5)],
-        "image_id string, bytes binary, fmt string, w int, h int")
-    r = hillshade(df).collect()[0]
-    got = I.decode(bytes(r["shade"]), r["fmt"], r["tw"], r["th"])
-    assert not got.any()
-
-
-def test_equalize_matches_numpy_reference(spark):
-    """Global-histogram equalization equals a direct numpy reference
-    (shared CDF across images, integer floor LUT), and a constant corpus
-    maps to zeros instead of dividing by zero."""
-    import numpy as np
-
-    from mvt_wrangler_spark.operators.multimodal import equalize
-    from mvt_wrangler_spark.sources import images as I
-
-    rng = np.random.RandomState(3)
-    imgs = {f"i{k}": rng.randint(0, 64, size=(4, 5, 3)).astype(np.uint8) ** 1
-            for k in range(3)}
-    df = spark.createDataFrame(
-        [(k, bytearray(I.encode(v, "rawz")), "rawz", 5, 4) for k, v in imgs.items()],
-        "image_id string, bytes binary, fmt string, w int, h int")
-    got = {r["image_id"]: r for r in equalize(df).collect()}
-
-    hist = np.zeros(256, dtype=np.int64)
-    for v in imgs.values():
-        hist += np.bincount(v.ravel(), minlength=256)
-    cdf = np.cumsum(hist)
-    total, cdf_min = int(cdf[-1]), int(cdf[np.nonzero(hist)[0][0]])
-    lut = ((cdf - cdf_min) * 255 // (total - cdf_min)).astype(np.uint8)
-    for k, v in imgs.items():
-        out = I.decode(bytes(got[k]["eq"]), got[k]["fmt"], 5, 4)
-        assert np.array_equal(out, lut[v]), k
-
-    flat = np.full((3, 3, 3), 99, dtype=np.uint8)
-    fdf = spark.createDataFrame(
-        [("f", bytearray(I.encode(flat, "raw")), "raw", 3, 3)],
-        "image_id string, bytes binary, fmt string, w int, h int")
-    r = equalize(fdf).collect()[0]
-    assert not I.decode(bytes(r["eq"]), r["fmt"], 3, 3).any()
-
-
-@pytest.mark.spark
-def test_extract_patches_spark_end_to_end(spark):
-    """Patches reassemble exactly to the cropped source image; grid keys
-    cover the full (h//p, w//p) grid; sub-patch images emit nothing."""
-    from mvt_wrangler_spark.operators.multimodal import extract_patches
-
-    df = I.synthetic_images(spark, 80, with_pixels=True, partitions=3)
-    p = 8
-    out = [r for r in extract_patches(df, patch=p, out_fmt="rawz").collect()]
-    src = {r.image_id: r for r in df.collect()}
-    by_img = {}
-    for r in out:
-        by_img.setdefault(r.image_id, {})[(r.gy, r.gx)] = r
-    assert set(by_img) == {k for k, s in src.items() if s.w >= p and s.h >= p}
-    for k, grid in by_img.items():
-        s = src[k]
-        gh, gw = s.h // p, s.w // p
-        assert set(grid) == {(gy, gx) for gy in range(gh) for gx in range(gw)}
-        px = I.decode(bytes(s.bytes), s.fmt, s.w, s.h)
-        for (gy, gx), r in grid.items():
-            got = I.decode(bytes(r.patch), r.fmt, r.pw, r.ph)
-            assert np.array_equal(
-                got, px[gy * p:(gy + 1) * p, gx * p:(gx + 1) * p, :])
-
-
-@pytest.mark.spark
-def test_caption_conflicts_hand_computed(spark):
-    """Pair (1,2): same caption -> Jaccard 1, no conflict; pair (1,3):
-    disjoint captions -> Jaccard 0, conflict. Threshold edge: J exactly
-    num/den is NOT a conflict (strict <)."""
-    from mvt_wrangler_spark.operators.multimodal import caption_conflicts
-
-    pairs = spark.createDataFrame(
-        [(1, 2, 0), (1, 3, 1)], "id_a long, id_b long, hamming int")
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox"), (2, "the quick brown fox"),
-         (3, "zzzz yyyy xxxx wwww")],
-        "doc_id long, text string")
-    got = {(r.id_a, r.id_b): r for r in
-           caption_conflicts(pairs, docs, shingle=5).collect()}
-    same, diff = got[(1, 2)], got[(1, 3)]
-    assert same.n_common == same.n_union and same.conflict is False
-    assert diff.n_common == 0 and diff.conflict is True
-    # strict threshold: identical sets at num=den -> J = 1 = num/den, kept
-    eq = {(r.id_a, r.id_b): r for r in
-          caption_conflicts(pairs, docs, shingle=5, num=1, den=1).collect()}
-    assert eq[(1, 2)].conflict is False
-
-
-@pytest.mark.spark
-def test_augment_deterministic_crop_flip(spark):
-    """Augmented bytes decode to exactly the permuted source window; params
-    are a pure function of (id, salt): same run twice is identical, a new
-    salt changes some params."""
-    from mvt_wrangler_spark.operators.multimodal import augment
-
-    df = I.synthetic_images(spark, 60, with_pixels=True, partitions=3)
-    # synthetic image_ids are 'img000000017'-style -> not castable to long;
-    # provide a numeric seed column
-    df = df.withColumn("seed", F.xxhash64("image_id"))
-    out1 = {r.image_id: r for r in
-            augment(df, crop_w=8, crop_h=6, salt=0, seed_col="seed").collect()}
-    out2 = {r.image_id: r for r in
-            augment(df, crop_w=8, crop_h=6, salt=0, seed_col="seed").collect()}
-    src = {r.image_id: r for r in df.collect()}
-    assert set(out1) == {k for k, s in src.items() if s.w >= 8 and s.h >= 6}
-    for k, r in out1.items():
-        s = src[k]
-        px = I.decode(bytes(s.bytes), s.fmt, s.w, s.h)
-        win = px[r.oy: r.oy + 6, r.ox: r.ox + 8, :]
-        if r.vflip:
-            win = win[::-1, :, :]
-        if r.hflip:
-            win = win[:, ::-1, :]
-        assert np.array_equal(I.decode(bytes(r.bytes), r.fmt, 8, 6), win)
-        r2 = out2[k]
-        assert (r.hflip, r.vflip, r.ox, r.oy) == (r2.hflip, r2.vflip, r2.ox, r2.oy)
-        assert bytes(r.bytes) == bytes(r2.bytes)
-    out3 = {r.image_id: r for r in
-            augment(df, crop_w=8, crop_h=6, salt=1, seed_col="seed").collect()}
-    assert any((out3[k].hflip, out3[k].vflip, out3[k].ox, out3[k].oy)
-               != (out1[k].hflip, out1[k].vflip, out1[k].ox, out1[k].oy)
-               for k in out1)
-
-
-@pytest.mark.spark
-def test_contour_cells_hand_computed(spark):
-    """Known shapes: a single interior peak cuts the 8 cells around it; a
-    checkerboard 2x2 produces the saddle classes (2 segments per cell)."""
-    from mvt_wrangler_spark.operators.multimodal import contour_cells
-
-    def enc_elev(elev):
-        px = np.stack([elev // 65536, (elev // 256) % 256, elev % 256],
-                      axis=-1).astype(np.uint8)
-        return I.encode(px, "raw")
-
-    # 4x4 DEM, zero everywhere, one peak at (1,2) above iso=10
-    peak = np.zeros((4, 4), dtype=np.int64)
-    peak[1, 2] = 100
-    # 3x3 checkerboard alternating 0/100: every 2x2 cell is a saddle (5/10)
-    cb = np.indices((3, 3)).sum(axis=0) % 2 * 100
-    rows = [("peak", enc_elev(peak), "raw", 4, 4, 10),
-            ("cb", enc_elev(cb), "raw", 3, 3, 10)]
-    df = spark.createDataFrame(
-        rows, "image_id string, bytes binary, fmt string, w int, h int, iso long")
-    got = {r.image_id: r for r in
-           contour_cells(df, threshold_col="iso").collect()}
-    # peak corner is 'above' in exactly the 4 cells touching (1,2); each is
-    # a single-corner class (1/2/4/8) -> 4 cut cells, 4 segments
-    assert (got["peak"].n_cut, got["peak"].n_segments) == (4, 4)
-    assert (got["cb"].n_cut, got["cb"].n_segments) == (4, 8)  # all saddles
-    # fingerprint replica for the peak grid
-    a = (peak > 10)[:-1, :-1]; b = (peak > 10)[:-1, 1:]
-    c = (peak > 10)[1:, 1:]; d = (peak > 10)[1:, :-1]
-    cls = 8 * a + 4 * b + 2 * c + 1 * d
-    cy, cx = np.mgrid[0:3, 0:3]
-    assert got["peak"].fp == int((cls * (cy * 29 + cx * 13 + 1)).sum() % 2147483647)
-
-
-@pytest.mark.spark
-def test_recon_error_matches_numpy_and_is_zero_for_flat(spark):
-    from mvt_wrangler_spark.operators.multimodal import recon_error
-
-    flat = np.full((8, 8, 3), 200, dtype=np.uint8)
-    grad = I.pixels_for(5, 8, 8)  # varying image -> nonzero error
-    rows = [("flat", I.encode(flat, "raw"), "raw", 8, 8),
-            ("grad", I.encode(grad, "raw"), "raw", 8, 8)]
-    df = spark.createDataFrame(
-        rows, "image_id string, bytes binary, fmt string, w int, h int")
-    got = {r.image_id: r for r in recon_error(df, factor=4).collect()}
-    assert got["flat"].sse == 0 and got["flat"].max_err == 0
-    px = grad.astype(np.int64)
-    pooled = px.reshape(2, 4, 2, 4, 3).sum(axis=(1, 3)) // 16
-    recon = np.repeat(np.repeat(pooled, 4, axis=0), 4, axis=1)
-    d = px - recon
-    assert got["grad"].sse == int((d * d).sum())
-    assert got["grad"].max_err == int(np.abs(d).max())
-    assert got["grad"].sse > 0
-
-
-@pytest.mark.spark
-def test_corrupt_bytes_on_error_skip(spark):
-    """Default raises (one bad row fails the task); on_error='skip' drops
-    the corrupt row and keeps the rest."""
-    from mvt_wrangler_spark.operators.multimodal import ahash64, thumbnail
-
-    good = I.pixels_for(3, 8, 8)
-    rows = [("ok", I.encode(good, "rawz"), "rawz", 8, 8),
-            ("bad", b"\x00not-zlib\xff", "rawz", 8, 8)]
-    df = spark.createDataFrame(
-        rows, "image_id string, bytes binary, fmt string, w int, h int")
-    with pytest.raises(Exception, match="zlib|decompress|Python"):
-        thumbnail(df, factor=4).collect()
-    out = thumbnail(df, factor=4, on_error="skip").collect()
-    assert [r.image_id for r in out] == ["ok"]
-    hashes = ahash64(df, on_error="skip").collect()
-    assert [r.image_id for r in hashes] == ["ok"]
-    with pytest.raises(Exception, match="zlib|decompress|Python"):
-        ahash64(df).collect()

@@ -85,6 +85,36 @@ def test_pipeline_matches_oracle(spark, images_rows):
 
 
 @pytest.mark.spark
+def test_pyramid_rollup_rejects_bad_zoom_range(spark):
+    """min_z above base_z used to return an empty pyramid, and a negative
+    min_z emitted rows at negative zooms."""
+    from mvt_wrangler_spark.operators import rollup as R
+
+    base = spark.createDataFrame([(10, 1, 2, 3)], "z int, x long, y long, n_rows long")
+    for min_z in (12, -1):
+        with pytest.raises(ValueError, match="min_z"):
+            R.pyramid_rollup(base, base_z=10, min_z=min_z)
+
+
+@pytest.mark.parametrize("zooms", [("--min-zoom", "12", "--zoom", "10"),
+                                   ("--min-zoom", "-1"),
+                                   ("--zoom", "24")])
+def test_cli_rejects_bad_zooms(tmp_path, zooms):
+    """Bad zooms exit 2 before Spark starts, as a missing input does, and
+    write nothing (min-zoom above zoom used to write an empty pyramid)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mvt_wrangler_spark.cli import main
+
+    src, out = tmp_path / "in.parquet", tmp_path / "out"
+    pq.write_table(pa.table({"image_id": ["a"], "lon": [139.7], "lat": [35.6],
+                             "phash": [7]}), src)
+    assert main([str(src), str(out), *zooms]) == 2
+    assert not out.exists()
+
+
+@pytest.mark.spark
 def test_pip_join_matches_oracle(spark, images_rows):
     df, rows = images_rows
     prog = FilterProgram.from_geojson(default_filter_geojson())

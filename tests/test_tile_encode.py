@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from mvt_wrangler_spark.functions import tiling
-from mvt_wrangler_spark.operators import multimodal as MM
 from mvt_wrangler_spark.operators import tile_encode as TE
 from mvt_wrangler_spark.sources import images as I
 
@@ -60,32 +59,6 @@ def test_encode_tiles_and_ordered_archive(spark, tmp_path):
     # range partitioning: file ranges don't interleave
     for (a0, a1), (b0, b1) in zip(sorted(ranges), sorted(ranges)[1:]):
         assert a1 <= b0
-
-
-@pytest.mark.spark
-def test_multimodal_stubs_and_frame_sampling(spark):
-    import numpy as np
-
-    # pcm16 decode works; other codecs raise NotImplementedError
-    pcm = (np.sin(np.linspace(0, 6.28, 100)) * 20000).astype("<i2").tobytes()
-    wave = MM.decode_audio(pcm, "pcm16")
-    assert wave.shape == (100,) and abs(float(wave.max()) - 20000 / 32768) < 1e-3
-    with pytest.raises(NotImplementedError):
-        MM.decode_audio(b"...", "mp3")
-    with pytest.raises(NotImplementedError):
-        MM.decode_video_frame(b"...", "h264", 0)
-
-    media = spark.createDataFrame(
-        [(f"vid{i}", 3500 + i * 1000) for i in range(8)],
-        "media_id string, duration_ms long")
-    frames = MM.sample_frames(media, every_ms=1000).collect()
-    by_id = {}
-    for r in frames:
-        by_id.setdefault(r.media_id, []).append(r)
-    assert len(by_id["vid0"]) == 3 and len(by_id["vid7"]) == 10
-    again = {(r.media_id, r.frame_idx): r.mean_luma for r in MM.sample_frames(media).collect()}
-    for r in frames:
-        assert again[(r.media_id, r.frame_idx)] == r.mean_luma  # deterministic
 
 
 @pytest.mark.spark

@@ -117,6 +117,28 @@ def test_assign_tiles_multi_matches_per_zoom(spark):
             assert multi[k] == v, (k, v, multi[k])
 
 
+@pytest.mark.spark
+def test_assign_tiles_zoom_bounds(spark):
+    """The deepest supported zoom assigns exact tiles; a zoom outside
+    [0, MAX_ZOOM] raises ValueError while the frame is built (z=24 used to
+    fail inside the analyzer, a negative zoom with a shift error)."""
+    assert tiling.MAX_ZOOM == 23
+    rng = random.Random(5)
+    rows = [(i, rng.uniform(-179.99, 179.99), rng.uniform(-84.9, 84.9)) for i in range(50)]
+    df = spark.createDataFrame(rows, "id long, lon double, lat double")
+    z = tiling.MAX_ZOOM
+    out = tiling.assign_tiles(df, z, with_local=False).select("lon", "lat", "x", "y", "tile_id")
+    for r in out.collect():
+        ex, ey = orc.tile_xy(r.lon, r.lat, z)
+        assert (r.x, r.y) == (ex, ey), (r.lon, r.lat)
+        assert r.tile_id == orc.pmtiles_tile_id(z, ex, ey)
+    for bad in (24, -1):
+        with pytest.raises(ValueError, match="zoom"):
+            tiling.assign_tiles(df, bad)
+    with pytest.raises(ValueError, match="z_max"):
+        tiling.assign_tiles_multi(df, z_min=0, z_max=24)
+
+
 def test_hilbert_hierarchy_property():
     """Parent position = d >> 2 (the property assign_tiles_multi relies on)."""
     import random
