@@ -860,6 +860,71 @@ def q_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SI.simplify_lines(rings, eps=64)
 
 
+def q_overzoom(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tile overzoom value-checked end to end: algebraic 16x16 parent tiles
+    are encoded to real bytes (fmt cycles raw/rawz/qlossy), the engine
+    decodes, quadrant-crops, 2x nearest-neighbor upsamples, re-encodes —
+    and the check decodes the CHILD bytes into per-channel pixel sums plus
+    a position-weighted fingerprint over every child pixel. The oracle
+    regenerates the child pixels from the parent formula (child (y,x) =
+    parent (qy*8 + y//2, qx*8 + x//2)) with the qlossy quant model, so
+    decode, crop, upsample, and the codec round-trip all sit under the
+    value hash."""
+    import numpy as np
+    import pandas as pd
+
+    from mvt_wrangler_spark.operators.overzoom import overzoom
+    from mvt_wrangler_spark.sources import images as I
+
+    W = H = 16
+    ids = _spread(_points(spark, sf_dir).select("id")
+                  .filter(F.pmod("id", F.lit(37)) == 3).distinct())
+
+    def gen(pdfs):
+        fmts = ["raw", "rawz", "qlossy"]
+        for pdf in pdfs:
+            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
+            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
+            for i in pdf["id"].to_numpy(dtype=np.int64):
+                px = ((int(i) * 31 + yy * 7 + xx * 13 + cc * 5) % 256).astype(np.uint8)
+                fmt = fmts[int(i) % 3]
+                rows["image_id"].append(str(int(i)))
+                rows["bytes"].append(I.encode(px, fmt))
+                rows["fmt"].append(fmt)
+                rows["w"].append(W)
+                rows["h"].append(H)
+            yield pd.DataFrame(rows)
+
+    imgs = ids.mapInPandas(
+        gen, "image_id string, bytes binary, fmt string, w int, h int")
+    children = overzoom(imgs, out_fmt="rawz")
+
+    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
+        for pdf in pdfs:
+            rows = {"id": [], "child": [], "sum_r": [], "sum_g": [],
+                    "sum_b": [], "fp": []}
+            for row in pdf.itertuples(index=False):
+                t = I.decode(bytes(row.cbytes), row.cfmt,
+                             row.cw, row.ch).astype(np.int64)
+                g = _grids.get((row.ch, row.cw))
+                if g is None:
+                    g = _grids.setdefault((row.ch, row.cw),
+                                          np.mgrid[0:row.ch, 0:row.cw, 0:3])
+                zy, zx, cc = g
+                fp = int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum()
+                         % 2147483647)
+                rows["id"].append(int(row.image_id))
+                rows["child"].append(int(row.child))
+                for col, c in (("sum_r", 0), ("sum_g", 1), ("sum_b", 2)):
+                    rows[col].append(int(t[:, :, c].sum()))
+                rows["fp"].append(fp)
+            yield pd.DataFrame(rows)
+
+    return children.mapInPandas(
+        stats,
+        "id long, child int, sum_r long, sum_g long, sum_b long, fp long")
+
+
 def q_clip_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Liang–Barsky line clip to the tile box — pure codegen end to end
     (each segment clips independently: per-row t-parameter math, no
@@ -1055,6 +1120,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embed_centroids": q_embed_centroids,
         "clip_tile": q_clip_tile,
         "simplify": q_simplify,
+        "overzoom": q_overzoom,
         "clip_lines": q_clip_lines,
         "tile_shards": q_tile_shards,
         "spatial_cluster": q_spatial_cluster,
@@ -1601,6 +1667,26 @@ __vk AS (SELECT * FROM __v WHERE gkey IN
 SELECT gkey, n_out, area2q FROM __clip
 """
 
+    overzoom_sql = f"""
+WITH {pts},
+__ozids AS (SELECT DISTINCT id, CAST(id % 3 AS INT) AS fsel
+            FROM __pts WHERE id % 37 = 3),
+__cpx AS (
+  SELECT id, qy.q AS qy, qx.q AS qx, y.y AS y, x.x AS x, c.c AS c,
+         CASE WHEN fsel = 2
+              THEN ((id*31 + (qy.q*8 + y.y//2)*7 + (qx.q*8 + x.x//2)*13 + c.c*5) % 256) // 4 * 4 + 2
+              ELSE (id*31 + (qy.q*8 + y.y//2)*7 + (qx.q*8 + x.x//2)*13 + c.c*5) % 256 END AS v
+  FROM __ozids, generate_series(0, 1) qy(q), generate_series(0, 1) qx(q),
+       generate_series(0, 15) y(y), generate_series(0, 15) x(x),
+       generate_series(0, 2) c(c))
+SELECT id, CAST(qy*2 + qx AS INT) AS child,
+       CAST(sum(CASE WHEN c = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r,
+       CAST(sum(CASE WHEN c = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
+       CAST(sum(CASE WHEN c = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b,
+       CAST(sum(v * (y*29 + x*13 + c*7 + 1)) % 2147483647 AS BIGINT) AS fp
+FROM __cpx GROUP BY 1, 2
+"""
+
     from mvt_wrangler_spark.operators.clip import clip_segments_sql
 
     clip_lines = f"""
@@ -1715,6 +1801,7 @@ FROM __pts""",
         "embed_centroids": embed_centroids,
         "clip_tile": clip_tile,
         "simplify": simplify,
+        "overzoom": overzoom_sql,
         "clip_lines": clip_lines,
         "tile_shards": tile_shards,
         "spatial_cluster": spatial_cluster_sql,

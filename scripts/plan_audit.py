@@ -45,6 +45,7 @@ AUDIT = [
     ("embed_centroids", "64 codegen sums + count per group; no explode, no Python"),
     ("clip_tile", "Sutherland-Hodgman clip: ring assembly shuffle + one mapInPandas"),
     ("simplify", "Douglas-Peucker: ring assembly shuffle + one mapInPandas"),
+    ("overzoom", "tile overzoom: decode/crop/upsample/encode mapInPandas chain"),
     ("clip_lines", "Liang-Barsky line clip: codegen only; lead() window forms segments"),
     ("tile_shards", "shard packing: one key shuffle + window cumsum, integer DIV"),
     ("spatial_cluster", "sub-eps cell collapse + half-stencil hash join, bbox-gap prune, cell-graph closure; no distance cross-join"),

@@ -92,6 +92,33 @@ def test_clip_rings_operator(spark):
 
 
 @pytest.mark.spark
+def test_overzoom_children_reconstruct_parent(spark):
+    """2x box-downsampling an overzoomed child recovers the parent quadrant
+    exactly (nearest-neighbor up then 2x2 mean down is the identity)."""
+    import pandas as pd
+
+    from mvt_wrangler_spark.operators.overzoom import overzoom
+    from mvt_wrangler_spark.sources import images as I
+
+    rng = np.random.RandomState(4)
+    px = rng.randint(0, 256, (16, 16, 3)).astype(np.uint8)
+    df = spark.createDataFrame(
+        pd.DataFrame({"image_id": ["a"], "bytes": [I.encode(px, "rawz")],
+                      "fmt": ["rawz"], "w": [16], "h": [16]}))
+    out = {r.child: I.decode(bytes(r.cbytes), r.cfmt, r.cw, r.ch)
+           for r in overzoom(df).collect()}
+    assert set(out) == {0, 1, 2, 3}
+    for child, im in out.items():
+        qy, qx = divmod(child, 2)
+        quad = px[qy * 8:(qy + 1) * 8, qx * 8:(qx + 1) * 8, :]
+        assert im.shape == (16, 16, 3)
+        down = im.reshape(8, 2, 8, 2, 3).astype(np.int64).sum(axis=(1, 3)) // 4
+        assert (down == quad).all()
+        # child pixel sums are exactly 4x the quadrant sums
+        assert im.astype(np.int64).sum() == 4 * quad.astype(np.int64).sum()
+
+
+@pytest.mark.spark
 def test_clip_segments_liang_barsky(spark):
     rows = [
         # fully inside
