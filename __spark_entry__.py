@@ -363,38 +363,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v_r").alias("last_click_value"))
 
 
-def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force integer-quantized dot-product top-k (ANN baseline)."""
-    from pyspark.sql import Window
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb"))
-    pairs = emb.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("qid"))
-    prod = F.zip_with(
-        "embedding", "qemb",
-        lambda x, y: F.round(x.cast("double") * 1000).cast("long")
-        * F.round(y.cast("double") * 1000).cast("long"),
-    )
-    score = F.aggregate(prod, F.lit(0).cast("long"), lambda acc, v: acc + v)
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("vec_id").asc())
-    return (
-        pairs.withColumn("score", score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "rank", F.col("vec_id").alias("neighbor_id"), "score")
-    )
-
-
-def q_ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN scale path: sign-LSH coarse cells + hamming-1 probes +
-    exact integer rank within candidates (no cartesian stage)."""
-    from mvt_wrangler_spark.operators.joins import ann_topk_lsh
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return ann_topk_lsh(emb, k=5)
-
-
 def q_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full S2 (level 12) + H3-style (res 7) cell ids from unit-sphere xyz
     via the FUSED vectorized-numpy pandas UDF (one Arrow pass emits both
@@ -424,20 +392,6 @@ def q_distinct_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = tiling.assign_tiles(_points(spark, sf_dir), z=6, with_local=False)
     return pts.groupBy("x", "y").agg(F.countDistinct("phash").alias("n_phash"))
-
-
-def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (quantized, exact integer test,
-    cos > 0.4 — the synthetic embeddings' near-dup band).
-
-    Vectorized int64-matmul against the broadcast quantized matrix; exact
-    same results as the per-pair SQL oracle (integers all the way).
-    """
-    from mvt_wrangler_spark.operators.dedup import embedding_neardup_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return embedding_neardup_pairs(emb, id_col="vec_id", vec_col="embedding",
-                                   quant=100, cos_num=16, cos_den=100)
 
 
 def _tile_encode_input(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -498,32 +452,6 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = interval_join(pts, iv, point_col="t", start_col="lo", end_col="hi",
                         bucket_width=600_000_000)  # 10-min buckets
     return out.select("pid", "interval_id")
-
-
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT n-gram Jaccard near-dup pairs via the AllPairs prefix filter +
-    PPJoin position filter (slim candidate join, arrays re-attached
-    post-dedup). t=0.8 is the realistic exact-dedup operating point; at low
-    thresholds a boilerplate corpus degenerates toward all-pairs (9.7M of
-    12.5M pairs were candidates at t=0.4/sf0.1 — inherent to EXACT Jaccard;
-    minhash_lsh is the low-threshold scale path). The DuckDB oracle is a
-    BRUTE-FORCE cross join — an independent implementation that adversarially
-    verifies the two filters' completeness."""
-    from mvt_wrangler_spark.operators import dedup as D
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return D.ngram_jaccard_pairs(docs, id_col="doc_id", text_col="text",
-                                 shingle=5, threshold=0.8)
-
-
-def q_embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH bucketed embedding near-dup (the >1e6-vector scale path):
-    bucket equi-join candidates + exact int64 cosine refine, no N^2 stage."""
-    from mvt_wrangler_spark.operators.dedup import embedding_neardup_lsh
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return embedding_neardup_lsh(emb, id_col="vec_id", vec_col="embedding",
-                                 quant=100, cos_num=16, cos_den=100)
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -602,29 +530,6 @@ def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                                k=3, bands=4, max_bucket=1000)
 
 
-def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k with the LEARNED coarse quantizer (k-means IVF): probes the
-    n_probe nearest learned cells, exact integer dot-product rank. Same rank
-    convention as ann_topk / ann_topk_lsh; oracle reuses the unrolled Lloyd
-    CTEs and reproduces the identical result set."""
-    from mvt_wrangler_spark.operators.cluster import ann_topk_ivf
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return ann_topk_ivf(emb, k=5, n_clusters=4, n_probe=2, n_iter=2,
-                        quant=100, n_queries=3)
-
-
-def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-Lloyd k-means over the embeddings table, bit-exact: quantized
-    vectors, deterministic min-id init, integer argmin with lowest-centroid
-    ties, floor-divided centroid updates, empty clusters inherit. The oracle
-    unrolls the SAME two iterations in SQL (cluster.kmeans_sql)."""
-    from mvt_wrangler_spark.operators.cluster import kmeans_assign
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return kmeans_assign(emb, k=4, n_iter=2, quant=100)
-
-
 def q_tile_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT quantiles of the z8 tile-size distribution — the skew diagnosis
     every hot-tile salting decision starts from. Quantile = value at rank
@@ -684,27 +589,6 @@ def q_geom_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
         minx.alias("minx"), miny.alias("miny"),
         maxx.alias("maxx"), maxy.alias("maxy"))
     return out.filter(F.col("area2") >= 32)
-
-
-def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact PageRank (2 fixed-point iterations) over the
-    customer<->supplier trade graph (distinct pairs via lineitem x orders,
-    symmetric edges; node ids disambiguated as cust*2 / supp*2+1). Every
-    contribution is an integer floor-divide and every update an exact
-    int64 sum — bit-identical across engines and partitionings, unlike
-    float PageRank (operators/graph.py)."""
-    from mvt_wrangler_spark.operators.graph import pagerank_int
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    pairs = (li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-             .select((F.col("o_custkey") * 2).alias("c"),
-                     (F.col("l_suppkey") * 2 + 1).alias("s"))
-             .distinct())
-    edges = (pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-             .unionByName(pairs.select(F.col("s").alias("src"),
-                                       F.col("c").alias("dst"))))
-    return pagerank_int(edges, iters=2)
 
 
 def q_winding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -789,17 +673,6 @@ def q_tile_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = S.hash_sample(d, 0.5, id_col="id")
     return (S.stratified_topk(d, ["x", "y"], k=3, id_col="id")
             .select("id", "x", "y", "rn"))
-
-
-def q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean-pooled class centroids over the 64-dim embeddings: one codegen
-    aggregate per dimension (64 sums + count per group, full map-side
-    partial agg — no explode, no Python), integer-quantized so the sums
-    are exact and order-independent."""
-    from mvt_wrangler_spark.operators.cluster import group_centroids
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return group_centroids(emb, dim=64, keys=["label"])
 
 
 def q_clip_tile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1117,7 +990,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "geom_measures": q_geom_measures,
         "tile_sample": q_tile_sample,
-        "embed_centroids": q_embed_centroids,
         "clip_tile": q_clip_tile,
         "simplify": q_simplify,
         "overzoom": q_overzoom,
@@ -1127,11 +999,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dataset_split": q_dataset_split,
         "dwithin_join": q_dwithin_join,
         "winding": q_winding,
-        "pagerank": q_pagerank,
         "dedup_safe_split": q_dedup_safe_split,
         "phash_neardup": q_phash_neardup,
-        "kmeans_assign": q_kmeans_assign,
-        "ann_topk_ivf": q_ann_topk_ivf,
         "tile_quantiles": q_tile_quantiles,
         "tile_encode": q_tile_encode,
         "simhash": q_simhash,
@@ -1158,14 +1027,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "expr_filter": q_expr_filter,
         "asof_join": q_asof_join,
         "interval_join": q_interval_join,
-        "ann_topk": q_ann_topk,
-        "ann_topk_lsh": q_ann_topk_lsh,
         "minhash_lsh": q_minhash_lsh,
-        "ngram_jaccard": q_ngram_jaccard,
         "cell_encode": q_cell_encode,
         "distinct_phash": q_distinct_phash,
-        "embed_neardup": q_embed_neardup,
-        "embed_neardup_lsh": q_embed_neardup_lsh,
         "zonal_stats": q_zonal_stats,
     }
 
@@ -1459,35 +1323,11 @@ FROM __l ASOF LEFT JOIN __r
   ON __l.user_id = __r.user_id AND __l.ts >= __r.ts
 """
 
-    ann = """
-WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 3),
-p AS (SELECT e.vec_id, q.qid,
-             list_sum(list_transform(generate_series(1, 64),
-                      i -> CAST(round(CAST(e.embedding[i] AS DOUBLE) * 1000) AS BIGINT)
-                         * CAST(round(CAST(q.qe[i] AS DOUBLE) * 1000) AS BIGINT))) AS score
-      FROM embeddings e, q WHERE e.vec_id != q.qid),
-r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id ASC) AS rank FROM p)
-SELECT qid, CAST(rank AS INT) AS rank, vec_id AS neighbor_id, CAST(score AS BIGINT) AS score
-FROM r WHERE rank <= 5
-"""
-
     distinct_phash = (
         "WITH " + f"__pts AS ({POINTS_SQL}), "
         + f"__xy AS (SELECT phash, {tile_x_sql('lon', 6)} AS x, {tile_y_sql('lat', 6)} AS y FROM __pts) "
         + "SELECT x, y, CAST(count(DISTINCT phash) AS BIGINT) AS n_phash FROM __xy GROUP BY 1, 2"
     )
-
-    embed_neardup = """
-WITH e AS (SELECT vec_id AS id,
-                  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 100) AS BIGINT)) AS q
-           FROM embeddings),
-p AS (SELECT a.id AS id_a, b.id AS id_b,
-             list_sum(list_transform(generate_series(1, 64), i -> a.q[i] * b.q[i])) AS score,
-             list_sum(list_transform(generate_series(1, 64), i -> a.q[i] * a.q[i])) AS na,
-             list_sum(list_transform(generate_series(1, 64), i -> b.q[i] * b.q[i])) AS nb
-      FROM e a, e b WHERE a.id < b.id)
-SELECT id_a, id_b FROM p WHERE score > 0 AND score * score * 100 > 16 * na * nb
-"""
 
     # zonal: brute-force the pixel formula per (id, i, j); qlossy decodes to
     # mid-rise 4-step quantization (v//4*4 + 2) — same as images.encode
@@ -1537,16 +1377,8 @@ SELECT id,
 FROM __ids"""
     phash_neardup = phash_hamming_sql(phash_nd_src, k=3, bands=4, max_bucket=1000)
 
-    from mvt_wrangler_spark.operators.cluster import ann_topk_ivf_sql, kmeans_sql
-
-    kmeans_sql_oracle = kmeans_sql(k=4, n_iter=2, quant=100)
-    ann_ivf_oracle = ann_topk_ivf_sql(k=5, n_clusters=4, n_probe=2,
-                                      n_iter=2, quant=100, n_queries=3)
-
     from mvt_wrangler_spark.operators.dedup import (
-        embedding_lsh_sql,
         minhash_lsh_sql,
-        ngram_jaccard_sql,
         pair_clusters_sql,
         simhash_sql_expr,
     )
@@ -1560,10 +1392,6 @@ FROM __ids"""
         f"WITH __xyz AS ({XYZ_SQL}),\n" + ",\n".join(s2_ctes + h3_ctes)
         + f"\nSELECT id, {s2_expr} AS s2_cell, {h3_expr} AS h3_cell FROM {h3_last}"
     )
-
-    from mvt_wrangler_spark.operators.joins import ann_topk_lsh_sql
-
-    ann_lsh = ann_topk_lsh_sql(k=5)
 
     minhash_lsh = minhash_lsh_sql(num_hashes=16, bands=4, shingle=5, max_bucket=1000)
 
@@ -1579,7 +1407,6 @@ FROM (
 """
     simhash = ("SELECT doc_id, " + simhash_sql_expr("text", shingle=4)
                + " AS simhash FROM documents")
-    embed_lsh = embedding_lsh_sql(quant=100, cos_num=16, cos_den=100)
 
     from mvt_wrangler_spark.functions.measures import measures_sql
 
@@ -1647,10 +1474,6 @@ __s AS (SELECT id, x, y, h,
         FROM __txy WHERE h < {thr})
 SELECT id, x, y, CAST(rn AS INT) AS rn FROM __s WHERE rn <= 3
 """
-
-    from mvt_wrangler_spark.operators.cluster import group_centroids_sql
-
-    embed_centroids = group_centroids_sql("embeddings", dim=64, key="label")
 
     from mvt_wrangler_spark.operators.clip import clip_rings_sql
 
@@ -1723,15 +1546,6 @@ SELECT doc_id,
 FROM documents
 """
 
-    from mvt_wrangler_spark.operators.graph import pagerank_int_sql
-
-    _pr_edges = """
-SELECT src, dst FROM (
-  SELECT DISTINCT o_custkey*2 AS c, l_suppkey*2 + 1 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-CROSS JOIN LATERAL (VALUES (c, s), (s, c)) AS t(src, dst)"""
-    pagerank_sql_str = pagerank_int_sql(_pr_edges, iters=2)
-
     from mvt_wrangler_spark.operators.joins import dwithin_join_sql
 
     def _dw_src(k6: int) -> str:
@@ -1791,14 +1605,10 @@ FROM __pts""",
         "cell_encode": cell_encode,
         "tile_encode": tile_encode,
         "minhash_lsh": minhash_lsh,
-        "ngram_jaccard": ngram_jaccard_sql("documents", "doc_id", "text",
-                                           shingle=5, threshold=0.8),
         "simhash": simhash,
-        "embed_neardup_lsh": embed_lsh,
         "geom_measures": geom_measures,
         "cell_cover_join": cell_cover_join,
         "tile_sample": tile_sample,
-        "embed_centroids": embed_centroids,
         "clip_tile": clip_tile,
         "simplify": simplify,
         "overzoom": overzoom_sql,
@@ -1808,10 +1618,8 @@ FROM __pts""",
         "dataset_split": dataset_split,
         "dwithin_join": dwithin_sql_str,
         "winding": winding,
-        "pagerank": pagerank_sql_str,
         "dedup_safe_split": dedup_safe_split,
         "distinct_phash": distinct_phash,
-        "embed_neardup": embed_neardup,
         "tile_local": tile_local,
         "archive_roundtrip": archive_roundtrip,
         "pyramid_rollup": pyramid,
@@ -1832,11 +1640,7 @@ FROM __pts""",
         "expr_filter": expr_filter,
         "asof_join": asof_join,
         "interval_join": interval_join,
-        "ann_topk": ann,
-        "ann_topk_lsh": ann_lsh,
         "zonal_stats": zonal,
         "phash_neardup": phash_neardup,
-        "kmeans_assign": kmeans_sql_oracle,
-        "ann_topk_ivf": ann_ivf_oracle,
         "tile_quantiles": tile_quantiles,
     }

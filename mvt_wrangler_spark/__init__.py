@@ -15,7 +15,7 @@ Layout: `functions/` (column kernels: tiling, cells, geometry, MVT codec,
 ring measures, metrics), `operators/` (the path's joins, filters, dedup,
 rollup, zonal and tile encode, plus operators that only the contract queries
 in `__spark_entry__.py` run: clipping, simplification, raster overzoom,
-sampling, clustering, graph ranking, R-tree),
+sampling, spatial clustering, R-tree),
 `sources/` (catalog, PMTiles, synthetic inputs), `plans/` (the CLI pipeline
 and the incremental ingest), `cli.py`, `session.py`.
 """

@@ -25,10 +25,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 WEB_MERCATOR_MAX_LAT = 85.0511287798066  # atan(sinh(pi)) in degrees
-# Deepest zoom the tile assigners accept. with_hilbert_d nests two selects per
-# level; from z=24 on, Spark's analyzer gives up on the chain ("Max
-# iterations (100) reached for batch Resolution") instead of resolving it.
+# Deepest zoom with_hilbert_d, and so every tile assigner, accepts. It nests
+# two selects per level; from z=24 on, Spark's analyzer gives up on the chain
+# ("Max iterations (100) reached for batch Resolution") instead of resolving it.
 MAX_ZOOM = 23
+
+
+def _check_zoom(z: int) -> None:
+    if not 0 <= z <= MAX_ZOOM:
+        raise ValueError(f"zoom must be in [0, {MAX_ZOOM}], got {z}")
 
 
 # ---------------------------------------------------------------------------
@@ -114,7 +119,10 @@ def with_hilbert_d(df: DataFrame, z: int, x: str = "x", y: str = "y", out: str =
     one analysis: measured 1.22 s -> 0.21 s per construction, with a
     bit-identical result column (the SQL restates the identical integer
     expressions level by level; exceptAll both ways = 0 over a 100k grid).
+
+    Raises ValueError unless 0 <= z <= MAX_ZOOM.
     """
+    _check_zoom(z)
     if z == 0:
         return df.withColumn(out, F.lit(0).cast("long"))
     inner = (f"SELECT *, CAST(0 AS BIGINT) AS __d, "
@@ -201,8 +209,7 @@ def assign_tiles(
     this is a zero-shuffle narrow stage. Raises ValueError unless
     0 <= z <= MAX_ZOOM.
     """
-    if not 0 <= z <= MAX_ZOOM:
-        raise ValueError(f"zoom must be in [0, {MAX_ZOOM}], got {z}")
+    _check_zoom(z)  # before tile_x, whose 1 << z fails on a negative zoom
     lon, lat = F.col(lon_col), F.col(lat_col)
     out = (
         df.withColumn("z", F.lit(z).cast("int"))

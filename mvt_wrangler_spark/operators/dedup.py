@@ -1,5 +1,5 @@
 """Deduplication operators: phash-per-tile (north rule) + the training-data
-suite (minhash-LSH, simhash, embedding near-dup) over text/vector columns.
+suite (minhash-LSH, simhash, phash hamming) over text and hash columns.
 
 The reference's only dedup is the per-tile dictionary re-encode
 (/root/reference/src/transform.rs:174-191); the graft promotes dedup to a
@@ -219,260 +219,6 @@ SELECT DISTINCT id_a, id_b FROM (
 """
 
 
-# ---------------------------------------------------------------------------
-# Exact n-gram Jaccard all-pairs (prefix-filtered AllPairs / PPJoin family)
-# ---------------------------------------------------------------------------
-
-def _jaccard_fraction(threshold: float) -> tuple[int, int]:
-    """Exact rational (num, den) for the Jaccard threshold.
-
-    All threshold comparisons run in int64 on BOTH engines (Spark and the
-    DuckDB oracle): `den * n_common >= num * n_union`. A float compare would
-    differ between engines — DuckDB parses `0.4` as DECIMAL, Spark as DOUBLE —
-    exactly on the boundary cases a dedup threshold exists to decide.
-    limit_denominator keeps the products well inside int64 for any real
-    shingle-set size (den <= 10^6, n <= ~10^9 shingles would still overflow;
-    documents cap at text length, so num*n_union < 10^6 * 10^7 << 2^63).
-    """
-    from fractions import Fraction
-
-    fr = Fraction(threshold).limit_denominator(10**6)
-    if not (0 < fr <= 1):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    return fr.numerator, fr.denominator
-
-
-def shingle_set_column(text_col: Column, shingle: int = 5) -> Column:
-    """array<long>: sorted DISTINCT mod-P shingle hashes of the text.
-
-    One Arrow batch per partition; np.unique gives the sorted set. Shares
-    _shingle_hashes_np with minhash/simhash so the DuckDB twin
-    (list_sort(list_distinct(...)) over shingle_hashes_sql_expr) is
-    bit-identical.
-    """
-
-    @pandas_udf("array<long>")
-    def _sets(texts: pd.Series) -> pd.Series:
-        return pd.Series([np.unique(_shingle_hashes_np(t, shingle)) for t in texts])
-
-    return _sets(text_col)
-
-
-def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                        shingle: int = 5, threshold: float = 0.4) -> DataFrame:
-    """EXACT n-gram Jaccard near-dup pairs: J(A,B) >= threshold, no sampling.
-
-    Returns (id_a, id_b, n_common, n_union) with id_a < id_b — n_common/n_union
-    IS the exact Jaccard similarity of the two documents' distinct shingle
-    sets (MinHash-LSH only estimates it; this operator is the exact
-    counterpart the training-data mandate lists separately).
-
-    Scale shape — the AllPairs/PPJoin prefix filter (Bayardo et al., WWW'07;
-    MapReduce formulation: Vernica et al., SIGMOD'10), pure DataFrame ops:
-      1. distinct shingle sets per doc (one Arrow pass, np.unique)
-      2. global shingle document-frequencies (groupBy count — ONE shuffle
-         over total shingle occurrences)
-      3. each doc's set re-ordered ascending by (df, shingle): rarest tokens
-         first, a total order shared by all docs
-      4. PREFIX index: only the first  n - ceil(t*n) + 1  tokens of each doc
-         are exploded into the candidate join. Lemma (Chaudhuri/Ganti/
-         Kaushik, ICDE'06): under any common total order, |A^B| >= a implies
-         the first |A|-a+1 of A and first |B|-a+1 of B share a token. With
-         J >= t, |A^B| >= ceil(t*max(|A|,|B|)), so these prefixes suffice —
-         NO candidate with J >= t is missed, while stop-grams shared by
-         every boilerplate doc (the quadratic blowup in a naive
-         explode-join) land in suffixes and never generate pairs.
-      5. equi-join prefix-on-prefix (id_a < id_b, plus the length filter
-         den*|B| >= num*|A| both ways: J >= t forces t*|A| <= |B|) on SLIM
-         rows — (id, n, tok) only — aggregated to distinct pairs, THEN the
-         full sets are re-attached by two id-equi-joins and verified exactly
-         via np.intersect1d.
-    All threshold math is integer (see _jaccard_fraction) — the DuckDB
-    brute-force oracle (ngram_jaccard_sql) matches bit-for-bit, and it is an
-    INDEPENDENT implementation (cross join + list_intersect, no prefix
-    logic), so it adversarially checks the filter's completeness.
-
-    Shuffle discipline (measured, sf0.01): Vernica et al.'s record-carrying
-    variant (full token arrays riding the prefix join) was 289 s here —
-    every shared prefix token duplicates ~doc-size arrays into the
-    dedup shuffle, quadratic-ish bytes on boilerplate-heavy corpora. The
-    slim join + two array re-attach joins is 24x faster: the wide arrays
-    cross the wire once per SURVIVING candidate side, not once per shared
-    token. `ordered` is pinned (the [[with-global-rank]]
-    exchange-reuse lesson, ADVICE r4): it feeds both join sides and both
-    re-attach sides, and sampling-dependent recomputation must not produce
-    different df-orders between them.
-    """
-    num, den = _jaccard_fraction(threshold)
-    # pin the shingle pass: `tok` feeds BOTH the df aggregation subtree and
-    # the join side of `ordered`, and with freq broadcast there is no common
-    # exchange for Spark to reuse — unpinned, the Arrow shingle pass runs
-    # twice per execution (measured ~2 s warm / ~8 s cold of pure recompute
-    # at sf0.1; the pin is ~8 MB of int64 arrays per 5k docs)
-    docs = session.pin(df.select(
-        F.col(id_col).alias("id"),
-        shingle_set_column(F.col(text_col), shingle).alias("toks"),
-    ).withColumn("n", F.size("toks").cast("long")))
-
-    tok = docs.select("id", "n", F.explode("toks").alias("tok"))
-    freq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("tdf"))
-    ordered = session.pin(
-        tok.join(freq, on="tok")
-        .groupBy("id")
-        .agg(
-            F.expr("transform(sort_array(collect_list(struct(tdf, tok))), s -> s.tok)")
-            .alias("otoks"),
-            F.first("n").alias("n"),
-        )
-    )
-    # prefix length p = n - ceil(t*n) + 1, integer-exact:
-    # ceil(num*n/den) = (num*n + den - 1) div den
-    pre = ordered.select(
-        "id", "n",
-        F.posexplode(
-            F.slice(
-                F.col("otoks"), F.lit(1),
-                F.expr(f"CAST(n - (n * {num} + {den} - 1) DIV {den} + 1 AS INT)"),
-            )
-        ).alias("pos", "tok"),
-    )
-    a, b = pre.alias("a"), pre.alias("b")
-    # POSITION filter (PPJoin family, Xiao et al. WWW'08), aggregated form.
-    # Per pair let c = #shared-prefix tokens and (i^, j^) their MAX 0-based
-    # positions (positions are monotone in the global (df, tok) order within
-    # each array). Completeness proof: any common token w <= w^ (the max
-    # shared-prefix token) sits at position < i^ <= prefix_a in A and
-    # < j^ <= prefix_b in B — inside BOTH prefixes — so it IS one of the c
-    # shared-prefix tokens; common tokens > w^ live strictly after i^ in A
-    # and after j^ in B. Hence
-    #   overlap <= c + min(n_a - i^ - 1, n_b - j^ - 1),
-    # and J >= t  <=>  overlap >= num*(n_a+n_b)/(num+den): pairs whose bound
-    # misses the requirement are provably below threshold — dropped BEFORE
-    # the array re-attach joins, where candidate count turns into shuffle
-    # bytes. (This max-based bound dominates the textbook min-position one:
-    # positions after i_min include the other c-1 shared tokens, so
-    # 1 + min-span >= c + max-span always.) The brute-force DuckDB oracle
-    # adversarially re-checks the pruning on every contract run.
-    slim = (
-        a.join(b, on="tok")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .filter((F.col("a.n") * num <= F.col("b.n") * den)
-                & (F.col("b.n") * num <= F.col("a.n") * den))
-        .groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-            F.col("a.n").alias("n_a"), F.col("b.n").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("__c"),
-             F.max(F.col("a.pos")).alias("__i"), F.max(F.col("b.pos")).alias("__j"))
-        .filter(
-            F.lit(num + den)
-            * (F.col("__c") + F.least(F.col("n_a") - F.col("__i") - 1,
-                                      F.col("n_b") - F.col("__j") - 1))
-            >= F.lit(num) * (F.col("n_a") + F.col("n_b"))
-        )
-        .drop("__c", "__i", "__j")
-    )
-
-    # HISTOGRAM upper-bound prescreen (counting-filter flavor of the PPJoin+
-    # suffix filter idea): per doc, a B-bin count histogram of tok % B.
-    # Since each doc's toks are DISTINCT, for any pair
-    #   n_common <= sum_k min(hist_a[k], hist_b[k])
-    # (each common token lands in the same bin on both sides), so pairs
-    # whose bound fails (num+den)*bound >= num*(n_a+n_b) are provably below
-    # threshold. The bound is evaluated JVM-side (zip_with + aggregate,
-    # whole-stage codegen) over ~2*B*4-byte payloads instead of the full
-    # 8-byte-per-token arrays — measured at sf0.1/t=0.8 this cuts the
-    # position-filter survivors 420k -> 256 (the exact true-pair count), and
-    # the operator 43 s -> ~12 s warm, because the wide-array re-attach and
-    # the Python verify now see only true-ish pairs. Completeness is exact,
-    # not probabilistic (int32 bins never saturate below 2^31 distinct
-    # shingles per doc — an int16 clip here would UNDERestimate the bound
-    # for multi-MB documents and silently drop qualifying pairs); the
-    # brute-force oracle re-checks it every run.
-    HB = 128
-
-    @pandas_udf("array<int>")
-    def _hist(toks: pd.Series) -> pd.Series:
-        return pd.Series([
-            np.bincount(np.asarray(t, dtype=np.int64) % HB, minlength=HB)
-            .astype(np.int32) for t in toks
-        ])
-
-    hists = ordered.select("id", _hist("otoks").alias("hist"))
-    slim = (
-        slim
-        .join(hists.select(F.col("id").alias("id_a"), F.col("hist").alias("__ha")),
-              on="id_a")
-        .join(hists.select(F.col("id").alias("id_b"), F.col("hist").alias("__hb")),
-              on="id_b")
-        .withColumn("__bound", F.aggregate(
-            F.zip_with("__ha", "__hb", lambda x, y: F.least(x, y)),
-            F.lit(0), lambda acc, x: acc + x))
-        .filter(F.lit(num + den) * F.col("__bound")
-                >= F.lit(num) * (F.col("n_a") + F.col("n_b")))
-        .drop("__ha", "__hb", "__bound")
-    )
-
-    toks = ordered.select("id", "otoks")
-    cand = (
-        slim
-        .join(toks.select(F.col("id").alias("id_a"),
-                          F.col("otoks").alias("toks_a")), on="id_a")
-        .join(toks.select(F.col("id").alias("id_b"),
-                          F.col("otoks").alias("toks_b")), on="id_b")
-    )
-
-    # single mapInPandas pass: a pandas_udf n_common column referenced by
-    # both the threshold filter and the output projection gets its
-    # ArrowEvalPython DUPLICATED by Catalyst (deterministic-UDF re-eval) —
-    # measured 2x the array bytes through Arrow. Filtering inside Python
-    # evaluates once and ships only surviving (tiny) rows back.
-    id_t = df.schema[id_col].dataType.simpleString()
-    out_schema = f"id_a {id_t}, id_b {id_t}, n_common long, n_union long"
-
-    def _verify(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nc = np.fromiter(
-                (len(np.intersect1d(np.asarray(x, dtype=np.int64),
-                                    np.asarray(y, dtype=np.int64),
-                                    assume_unique=True))
-                 for x, y in zip(pdf["toks_a"], pdf["toks_b"])),
-                dtype=np.int64, count=len(pdf))
-            nu = pdf["n_a"].to_numpy() + pdf["n_b"].to_numpy() - nc
-            keep = nc * den >= nu * num
-            yield pd.DataFrame({
-                "id_a": pdf["id_a"].to_numpy()[keep],
-                "id_b": pdf["id_b"].to_numpy()[keep],
-                "n_common": nc[keep], "n_union": nu[keep],
-            })
-
-    return cand.select("id_a", "id_b", "n_a", "n_b", "toks_a", "toks_b") \
-               .mapInPandas(_verify, out_schema)
-
-
-def ngram_jaccard_sql(table: str = "documents", id_col: str = "doc_id",
-                      text_col: str = "text", shingle: int = 5,
-                      threshold: float = 0.4) -> str:
-    """DuckDB BRUTE-FORCE oracle for ngram_jaccard_pairs: every pair, exact
-    list_intersect — independently verifies the prefix filter lost nothing."""
-    num, den = _jaccard_fraction(threshold)
-    sh = shingle_hashes_sql_expr(text_col, shingle)
-    return f"""
-WITH __s AS (
-  SELECT {id_col} AS id, list_sort(list_distinct({sh})) AS toks FROM {table}),
-__n AS (SELECT id, toks, CAST(len(toks) AS BIGINT) AS n FROM __s),
-__p AS (
-  SELECT a.id AS id_a, b.id AS id_b,
-         CAST(len(list_intersect(a.toks, b.toks)) AS BIGINT) AS n_common,
-         a.n + b.n AS n_sum
-  FROM __n a JOIN __n b ON a.id < b.id)
-SELECT id_a, id_b, n_common, n_sum - n_common AS n_union
-FROM __p WHERE n_common * {den} >= (n_sum - n_common) * {num}
-"""
-
-
 def simhash64(text_col: Column, shingle: int = 4) -> Column:
     """62-bit SimHash over character shingles — vectorized numpy bit-vote.
 
@@ -522,191 +268,6 @@ def simhash_sql_expr(text: str, shingle: int = 4) -> str:
         f"FROM (SELECT __sh, list_transform(__sh, s -> (s * {GOLD} + 98765) % {P31}) AS __h2 "
         f"FROM (SELECT {sh} AS __sh)))"
     )
-
-
-# ---------------------------------------------------------------------------
-# Embedding near-dup: exact distributed all-pairs + LSH-bucketed scale path
-# ---------------------------------------------------------------------------
-
-def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
-                            vec_col: str = "embedding", quant: int = 100,
-                            cos_num: int = 16, cos_den: int = 100,
-                            n_blocks: int = 8) -> DataFrame:
-    """EXACT all-pairs cosine near-dup (a < b, score>0, score^2 * cos_den >
-    cos_num * |a|^2 * |b|^2 on `quant`-quantized int vectors) — fully
-    distributed block-pair matmul, NO driver collect.
-
-    Rows hash into n_blocks blocks; each unordered block pair (i <= j) is a
-    shuffle group holding submatrices of both blocks, reduced with one int64
-    GEMM per group. Shuffle volume is ~(n_blocks/2 + 1) copies of the input
-    (each row joins every block it pairs with); per-task memory is
-    2 * (N/n_blocks) vectors — size n_blocks ~ N * dim * 8 / executor_mem so
-    blocks fit. Compute is the unavoidable exact O(N^2) — for >10^6 vectors
-    use embedding_neardup_lsh, which prunes candidates by sign-LSH first.
-    """
-    base = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("b"),
-    )
-    left = base.select(
-        "id", "vec", F.lit(0).alias("side"), F.col("b").alias("bi"),
-        F.explode(F.sequence(F.col("b"), F.lit(n_blocks - 1))).alias("bj"),
-    )
-    right = base.select(
-        "id", "vec", F.lit(1).alias("side"),
-        F.explode(F.sequence(F.lit(0), F.col("b"))).alias("bi"),
-        F.col("b").alias("bj"),
-    )
-
-    def _block_pairs(key, pdf):
-        i, j = int(key[0]), int(key[1])
-        A = pdf[pdf["side"] == 0]
-        Bv = A if i == j else pdf[pdf["side"] == 1]
-        if not len(A) or not len(Bv):
-            return pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
-        qa = np.round(np.stack(A["vec"].to_numpy()).astype(np.float64) * quant).astype(np.int64)
-        qb = qa if i == j else np.round(
-            np.stack(Bv["vec"].to_numpy()).astype(np.float64) * quant).astype(np.int64)
-        ida = A["id"].to_numpy(dtype=np.int64)
-        idb = ida if i == j else Bv["id"].to_numpy(dtype=np.int64)
-        na, nb = (qa * qa).sum(axis=1), (qb * qb).sum(axis=1)
-        S = qa @ qb.T
-        # int64-safe: |q|<=quant, dim 64 -> S <= 64*quant^2 ~ 6.4e5;
-        # S^2*cos_den ~ 4e13 and norm-product*cos_num ~ 7e12, both < 2^63
-        ok = (S > 0) & (S * S * cos_den > cos_num * np.outer(na, nb))
-        lt = ida[:, None] < idb[None, :]
-        ai, bi_ = np.nonzero(ok & lt)
-        out_a, out_b = [ida[ai]], [idb[bi_]]
-        if i != j:  # cross blocks: the smaller id may sit on either side
-            ai2, bi2 = np.nonzero(ok & (ida[:, None] > idb[None, :]))
-            out_a.append(idb[bi2])
-            out_b.append(ida[ai2])
-        return pd.DataFrame({"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)})
-
-    return (
-        left.unionByName(right)
-        .groupBy("bi", "bj")
-        .applyInPandas(_block_pairs, "id_a long, id_b long")
-    )
-
-
-def embedding_sign_buckets(vec_col: Column, quant: int = 100, nbits: int = 16,
-                           bands: int = 4, dim: int = 64) -> Column:
-    """array<long> of sign-pattern LSH band buckets per vector.
-
-    Deterministic small-integer hyperplanes h[j][i] = ((i*GOLD + j*40503 + 17)
-    mod 7) - 3; bit j = (q . h_j >= 0); band k of width nbits/bands folds its
-    bits into bucket k*2^w + bits. Pure int math — embedding_lsh_sql mirrors
-    it exactly.
-    """
-    width = nbits // bands
-    H = np.array([[((i * GOLD + j * 40503 + 17) % 7) - 3 for i in range(dim)]
-                  for j in range(nbits)], dtype=np.int64)  # (nbits, dim)
-    SH = (np.arange(width, dtype=np.int64))
-
-    @pandas_udf("array<long>")
-    def _buckets(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype=object)
-        Q = np.round(np.stack(vecs.to_numpy()).astype(np.float64) * quant).astype(np.int64)
-        proj = Q @ H.T                            # (N, nbits)
-        bits = (proj >= 0).astype(np.int64)
-        folded = (bits.reshape(len(Q), bands, width) << SH).sum(axis=2)  # (N, bands)
-        buckets = folded + (np.arange(bands, dtype=np.int64) * (1 << width))[None, :]
-        return pd.Series(list(buckets))
-
-    return _buckets(vec_col)
-
-
-def embedding_neardup_lsh(df: DataFrame, id_col: str = "vec_id",
-                          vec_col: str = "embedding", quant: int = 100,
-                          cos_num: int = 16, cos_den: int = 100, nbits: int = 16,
-                          bands: int = 4, max_bucket: int = 2000) -> DataFrame:
-    """Scale path for embedding near-dup: sign-LSH bucket equi-join for
-    candidates (rows sharing >=1 band bucket), exact int64 cosine test within
-    buckets. Linear shuffle (bands copies of (id, bucket)), no N^2 anywhere;
-    hot buckets beyond max_bucket are dropped (bounded reducers). Recall is
-    the LSH collision probability — deterministic here, and the DuckDB twin
-    (embedding_lsh_sql) reproduces the exact same pair set.
-    """
-    qvec = F.transform(F.col(vec_col),
-                       lambda x: F.round(x.cast("double") * quant).cast("long"))
-    # SLIM candidate generation: the banded self-join and the pair dedup
-    # move only (id, bucket) rows; the quantized vectors re-attach to the
-    # deduplicated pair set afterwards. The earlier form carried qa+qb
-    # (2 x dim longs ~ 1 KB/row) through the bucket join AND the
-    # dropDuplicates shuffle — 372k candidate pairs x 1 KB at sf0.1 where
-    # the slim form shuffles 16 bytes/pair plus two id-keyed joins of the
-    # (much smaller) vector table.
-    # pinned: the slim (id, bucket) table is referenced 4x below (sizes +
-    # both self-join sides), and un-pinned each copy re-runs the sign-LSH
-    # Python pass over the full vector column (4 ArrowEvalPython / 6 scans
-    # measured in the un-pinned plan). 16 B x bands per vector.
-    e = session.pin(df.select(
-        F.col(id_col).alias("id"),
-        F.explode(embedding_sign_buckets(F.col(vec_col), quant, nbits, bands)
-                  ).alias("bucket")))
-    sizes = e.groupBy("bucket").agg(F.count(F.lit(1)).alias("__n"))
-    ok = sizes.filter((F.col("__n") >= 2) & (F.col("__n") <= max_bucket)).select("bucket")
-    e = e.join(ok, on="bucket")
-    a = e.select(F.col("id").alias("id_a"), "bucket")
-    b = e.select(F.col("id").alias("id_b"), "bucket")
-    vecs = df.select(F.col(id_col).alias("__vid"), qvec.alias("__q"))
-    cand = (
-        a.join(b, on="bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-        .join(vecs.select(F.col("__vid").alias("id_a"),
-                          F.col("__q").alias("qa")), on="id_a")
-        .join(vecs.select(F.col("__vid").alias("id_b"),
-                          F.col("__q").alias("qb")), on="id_b")
-    )
-    dot = F.aggregate(F.zip_with("qa", "qb", lambda x, y: x * y),
-                      F.lit(0).cast("long"), lambda acc, v: acc + v)
-    na = F.aggregate(F.transform("qa", lambda x: x * x), F.lit(0).cast("long"),
-                     lambda acc, v: acc + v)
-    nb = F.aggregate(F.transform("qb", lambda x: x * x), F.lit(0).cast("long"),
-                     lambda acc, v: acc + v)
-    return (
-        cand.withColumn("__s", dot).withColumn("__na", na).withColumn("__nb", nb)
-        .filter((F.col("__s") > 0)
-                & (F.col("__s") * F.col("__s") * cos_den > cos_num * F.col("__na") * F.col("__nb")))
-        .select("id_a", "id_b")
-    )
-
-
-def embedding_lsh_sql(table: str = "embeddings", id_col: str = "vec_id",
-                      vec_col: str = "embedding", quant: int = 100,
-                      cos_num: int = 16, cos_den: int = 100, nbits: int = 16,
-                      bands: int = 4, max_bucket: int = 2000, dim: int = 64) -> str:
-    """DuckDB twin of embedding_neardup_lsh (identical pair set)."""
-    width = nbits // bands
-    proj = (
-        f"list_transform(generate_series(0, {nbits - 1}), j -> CASE WHEN "
-        f"list_sum(list_transform(generate_series(1, {dim}), i -> "
-        f"q[i] * (((i - 1) * {GOLD} + j * 40503 + 17) % 7 - 3))) >= 0 THEN 1 ELSE 0 END)"
-    )
-    fold = " + ".join(f"bits[k*{width} + {t + 1}] * {1 << t}" for t in range(width))
-    return f"""
-WITH __e AS (
-  SELECT {id_col} AS id,
-         list_transform({vec_col}, x -> CAST(round(CAST(x AS DOUBLE) * {quant}) AS BIGINT)) AS q
-  FROM {table}),
-__p AS (SELECT id, q, {proj} AS bits FROM __e),
-__b AS (SELECT id, q, CAST(({fold}) + k * {1 << width} AS BIGINT) AS bucket
-        FROM __p, generate_series(0, {bands - 1}) t(k)),
-__ok AS (SELECT bucket FROM __b GROUP BY bucket HAVING count(*) BETWEEN 2 AND {max_bucket}),
-__f AS (SELECT __b.* FROM __b JOIN __ok USING (bucket)),
-__c AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b, a.q AS qa, b.q AS qb
-        FROM __f a JOIN __f b USING (bucket) WHERE a.id < b.id),
-__s AS (SELECT id_a, id_b,
-               list_sum(list_transform(generate_series(1, {dim}), i -> qa[i] * qb[i])) AS s,
-               list_sum(list_transform(generate_series(1, {dim}), i -> qa[i] * qa[i])) AS na,
-               list_sum(list_transform(generate_series(1, {dim}), i -> qb[i] * qb[i])) AS nb
-        FROM __c)
-SELECT id_a, id_b FROM __s WHERE s > 0 AND s * s * {cos_den} > {cos_num} * na * nb
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -843,18 +404,19 @@ def pair_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     """Transitive closure of a near-dup PAIR set into clusters with a
     deterministic min-id representative: (member_id, cluster_rep,
     cluster_size). The step every candidate-pair operator here
-    (minhash_lsh_candidates, phash_hamming_pairs, embedding near-dup) needs
-    before rows can actually be dropped — pair (a,b)+(b,c) must yield ONE
-    cluster {a,b,c} with one keeper, the per-scope-complete semantics of the
+    (minhash_lsh_candidates, phash_hamming_pairs) needs before rows can
+    actually be dropped — pair (a,b)+(b,c) must yield ONE cluster {a,b,c}
+    with one keeper, the per-scope-complete semantics of the
     reference's dictionary dedup (/root/reference/src/transform.rs:174-191)
     lifted to the whole dataset.
 
     Algorithm: alternating large-star / small-star (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SOCC'14 — public) as a
-    driver loop over DataFrame stages, the kmeans_fit pattern. Each round is
+    driver loop over DataFrame stages: convergence is tested on the driver
+    between rounds, so the rounds cannot be one lazy plan. Each round is
     two grouped min-aggregations + joins keyed on node id; the edge set is
-    pinned per round (truncates the compounding lazy DAG — see
-    kmeans_fit/knn expanding-ring note). Converges to per-component stars
+    pinned per round, because round r's lazy plan would otherwise nest all
+    r-1 earlier rounds and re-run them. Converges to per-component stars
     centered on the min id in O(log^2 n) rounds even on adversarial path
     graphs, where plain min-label propagation needs O(diameter) rounds.
 
@@ -921,8 +483,8 @@ def pair_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     # the tail of an LSH pass) pays ~10 driver-paced rounds x fixed job latency
     # in the star loop — while a bounded union-find over collected edges is
     # exact, deterministic, and instant. The collect is bounded by
-    # driver_threshold edges (16 B each; default 64k = 1 MB) — the same
-    # documented-bound pattern as kmeans_fit's k x dim pull. Billions-of-
+    # driver_threshold edges (16 B each; default 64k = 1 MB), so the driver
+    # never holds more than that whatever the input size. Billions-of-
     # edges inputs (driver_threshold exceeded) take the distributed loop;
     # pass driver_threshold=0 to force it (the loop tests do).
     if driver_threshold and sig[0] <= driver_threshold:

@@ -326,78 +326,6 @@ def knn_join_cells(data: DataFrame, queries: DataFrame, k: int, z: int = 7,
                       F.col("__did").alias("neighbor_id"), "dist2")
 
 
-def ann_topk_lsh(emb: DataFrame, k: int = 5, id_col: str = "vec_id",
-                 vec_col: str = "embedding", n_queries: int = 3,
-                 quant: int = 1000, nbits: int = 8) -> DataFrame:
-    """IVF-style ANN top-k over embeddings: sign-LSH coarse quantizer
-    (2^nbits cells), queries probe their cell plus all hamming-distance-1
-    neighbors, exact integer dot-product rank within candidates.
-
-    The scale path next to the brute-force crossJoin baseline (ann_topk):
-    shuffle volume is (nbits+1) probe rows per query equi-joined on cell —
-    linear, no cartesian stage; candidates per query ~ N*(nbits+1)/2^nbits.
-    Recall is the LSH collision probability (deterministic hyperplanes; the
-    DuckDB twin reproduces the exact same result set). Ties break on id.
-    """
-    from .dedup import embedding_sign_buckets
-
-    base = emb.select(
-        F.col(id_col).alias("vid"),
-        F.transform(F.col(vec_col),
-                    lambda x: F.round(x.cast("double") * quant).cast("long")).alias("q"),
-        F.element_at(
-            embedding_sign_buckets(F.col(vec_col), quant=100, nbits=nbits, bands=1),
-            1).alias("cell"),
-    )
-    qs = base.filter(F.col("vid") < n_queries).select(
-        F.col("vid").alias("qid"), F.col("q").alias("qq"), F.col("cell").alias("qcell"))
-    probes = qs.withColumn(
-        "cell", F.explode(F.array(*[F.col("qcell").bitwiseXOR(F.lit(m))
-                                    for m in [0] + [1 << b for b in range(nbits)]])))
-    cand = probes.join(base, on="cell").filter(F.col("vid") != F.col("qid"))
-    score = F.aggregate(F.zip_with("q", "qq", lambda x, y: x * y),
-                        F.lit(0).cast("long"), lambda a, v: a + v)
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("vid").asc())
-    return (
-        cand.withColumn("score", score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", F.col("vid").alias("neighbor_id"), "score")
-    )
-
-
-def ann_topk_lsh_sql(table: str = "embeddings", k: int = 5, n_queries: int = 3,
-                     quant: int = 1000, nbits: int = 8, dim: int = 64) -> str:
-    """DuckDB twin of ann_topk_lsh (identical result set)."""
-    from .dedup import GOLD
-
-    proj = (
-        f"list_transform(generate_series(0, {nbits - 1}), j -> CASE WHEN "
-        f"list_sum(list_transform(generate_series(1, {dim}), i -> "
-        f"CAST(round(CAST(e[i] AS DOUBLE) * 100) AS BIGINT)"
-        f" * (((i - 1) * {GOLD} + j * 40503 + 17) % 7 - 3))) >= 0 THEN 1 ELSE 0 END)"
-    )
-    fold = " + ".join(f"bits[{t + 1}] * {1 << t}" for t in range(nbits))
-    masks = ", ".join(f"({m})" for m in [0] + [1 << b for b in range(nbits)])
-    return f"""
-WITH __b AS (
-  SELECT vec_id AS vid,
-         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {quant}) AS BIGINT)) AS q,
-         {fold} AS cell
-  FROM (SELECT vec_id, embedding, {proj} AS bits
-        FROM (SELECT vec_id, embedding, embedding AS e FROM {table}))),
-__q AS (SELECT vid AS qid, q AS qq, cell AS qcell FROM __b WHERE vid < {n_queries}),
-__p AS (SELECT qid, qq, xor(qcell, m.m) AS cell FROM __q, (VALUES {masks}) m(m)),
-__c AS (SELECT p.qid, b.vid,
-               list_sum(list_transform(generate_series(1, {dim}), i -> b.q[i] * p.qq[i])) AS score
-        FROM __p p JOIN __b b USING (cell) WHERE b.vid != p.qid),
-__r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, vid ASC) AS rank
-        FROM __c)
-SELECT qid, CAST(rank AS INT) AS rank, vid AS neighbor_id, CAST(score AS BIGINT) AS score
-FROM __r WHERE rank <= {k}
-"""
-
-
 def asof_join(left: DataFrame, right: DataFrame, on: str,
               left_time: str = "ts", right_time: str | None = None,
               value_cols: list[str] | None = None,
@@ -490,8 +418,9 @@ def interval_join(points: DataFrame, intervals: DataFrame, *,
       "error"). overflow="broadcast" instead routes ONLY the oversized
       intervals through a broadcast range arm (sound for the few
       global-span intervals real data has; the arm is a deliberate
-      BroadcastNestedLoopJoin, so plans containing it are excluded from
-      the no-cartesian gate the same way ann_topk is).
+      BroadcastNestedLoopJoin, so a plan containing it passes the
+      no-cartesian gate only if scripts/plan_audit.py lists it in
+      CARTESIAN_OK).
 
     Column names of `points` and `intervals` must be disjoint; both sides'
     columns pass through to the output.

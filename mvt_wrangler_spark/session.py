@@ -85,8 +85,8 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     included (each duplicated ArrowEvalPython node executes), and a
     nondeterministic upstream (sampling, limit, range boundaries) can hand
     different rows to different readers. In driver loops (the pair_clusters
-    rounds, the knn_join_cells rings, pagerank) the pin also cuts the
-    lineage, so plans do not compound round over round.
+    rounds, the knn_join_cells rings) the pin also cuts the lineage, so
+    plans do not compound round over round.
 
     A local checkpoint, not persist(): the CacheManager matches cached data
     by canonicalized plan, so a persisted frame would be silently reused by
@@ -116,18 +116,16 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
         loses them, and jobs that read them fail instead of recomputing;
       * storage grows with the width of the pinned frame, and a pin stores
         every upstream column whatever its readers later select. Most pins
-        are slim (id, key) proxies, but ngram_jaccard pins whole
-        shingle-token arrays, the ingest's first pin holds whole batch rows
-        (text included) next to their band buckets, and phash_dedup's
-        keepers are the whole surviving rows;
+        are slim (id, key) proxies, but the ingest's first pin holds whole
+        batch rows (text included) next to their band buckets, and
+        phash_dedup's keepers are the whole surviving rows;
       * a lazy pin's subplan runs without AQE: no partition coalescing and
         no skew-join splitting inside it. The switch is session-wide, so a
         query that another thread plans during the call runs without AQE
         too;
       * the blocks are freed when the returned frame is garbage-collected,
-        not when its last reader is done: the pair_clusters rounds, the
-        knn_join_cells rings and pagerank's checkpoints each pin one frame
-        per round.
+        not when its last reader is done: the pair_clusters rounds and the
+        knn_join_cells rings each pin one frame per round.
     """
     if eager:
         return df.localCheckpoint(eager=True)

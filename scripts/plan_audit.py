@@ -31,18 +31,13 @@ AUDIT = [
     ("pip_join", "broadcast native PIP mask — must be zero-shuffle"),
     ("minhash_lsh", "LSH banding: explode + equi-join + star fallback"),
     ("phash_neardup", "hamming banding: explode + equi-join + popcount refine"),
-    ("ann_topk_lsh", "IVF-style cells — must have NO cartesian stage"),
-    ("ann_topk", "labeled brute-force baseline (cartesian EXPECTED)"),
     ("tile_encode", "ordered archive sink: range partition + sorted mapInPandas"),
-    ("kmeans_assign", "iterative Lloyd: Arrow assign pass + posexplode partial-agg"),
     ("tile_quantiles", "exact quantiles via range-repartitioned global rank"),
     ("asof_join", "union-stream as-of join: one key shuffle, no range-join blowup"),
-    ("ngram_jaccard", "exact Jaccard: slim prefix join, arrays re-attached post-dedup"),
     ("interval_join", "range join as bucketed equi-join — must have NO nested-loop stage"),
     ("geom_measures", "ring measures: one collect_list shuffle + codegen array math"),
     ("cell_cover_join", "S2 cover join: broadcast region cells, no geometry shuffle"),
     ("tile_sample", "hash Bernoulli prefilter + per-tile window: one key shuffle"),
-    ("embed_centroids", "64 codegen sums + count per group; no explode, no Python"),
     ("clip_tile", "Sutherland-Hodgman clip: ring assembly shuffle + one mapInPandas"),
     ("simplify", "Douglas-Peucker: ring assembly shuffle + one mapInPandas"),
     ("overzoom", "tile overzoom: decode/crop/upsample/encode mapInPandas chain"),
@@ -54,7 +49,6 @@ AUDIT = [
     ("hot_tiles", "Gi*: 9-offset explode + groupBy + tile equi-join + 1-row scalar broadcast"),
     ("dwithin_join", "radius band join: eps-grid equi-join + 9-stencil probe, exactly-once pairs"),
     ("winding", "shoelace sign + F.reverse flip: one ring-build shuffle, codegen after"),
-    ("pagerank", "2 iterations: edges join (deg, rank) + groupBy(dst) partial agg — no cartesian"),
     ("dedup_safe_split", "minhash closure + singleton left join + codegen split CASE"),
     ("tile_smooth", "separable 5x5 binomial: two 1-D explode+groupBy passes (10 taps, not 25)"),
     ("shard_manifest", "one key shuffle; shard + within-shard windows refine the same partitioning"),
@@ -65,7 +59,7 @@ AUDIT = [
 # queries whose plans legitimately contain a cartesian/broadcast-NLJ stage:
 # morans_i joins two ONE-ROW scalar aggregates on a constant key (Catalyst
 # folds the trivially-true condition into a 1x1 broadcast-NLJ)
-CARTESIAN_OK = {"ann_topk", "morans_i", "hot_tiles"}
+CARTESIAN_OK = {"morans_i", "hot_tiles"}
 # queries whose plans legitimately contain a SinglePartition exchange:
 # tile_quantiles' is the P-row per-partition OFFSET table (P = shuffle
 # parallelism, input-size independent) — the data rows never pass through it.

@@ -111,7 +111,7 @@ def test_read_schema_ncols_counts_top_level_only():
 
 # (query, max ArrowEvalPython nodes): the round-7 single-Python-pass wins.
 # Un-pinned / un-marked versions of these plans carried 2-6 copies of the
-# same expensive Python pass (minhash banding 6x, sign-LSH 4x, the PIP /
+# same expensive Python pass (minhash banding 6x, the PIP /
 # exact-intersects match UDF 2x via the filter inferred from explode, the
 # cell-encode chain 4x). Unlike duplicated JVM subtrees — which AQE stage
 # reuse dedups at runtime — duplicated ArrowEvalPython nodes all execute,
@@ -119,7 +119,6 @@ def test_read_schema_ncols_counts_top_level_only():
 # and the noisy shared-box bench would both miss.
 PYTHON_PASS_BUDGET = [
     ("minhash_lsh", 1),
-    ("embed_neardup_lsh", 1),
     ("pip_join", 1),
     ("intersects_join", 1),
     ("cell_cover_join", 0),  # encode runs once inside the pinned proxy

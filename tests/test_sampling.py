@@ -64,28 +64,6 @@ def test_stratified_topk_exact_k_per_group(spark):
 
 
 @pytest.mark.spark
-def test_group_centroids_matches_numpy(spark):
-    import numpy as np
-
-    from mvt_wrangler_spark.operators.cluster import group_centroids
-
-    rng = np.random.RandomState(1)
-    dim, n = 8, 200
-    emb = rng.uniform(-1, 1, (n, dim)).astype(np.float32)
-    lab = rng.randint(0, 3, n)
-    df = spark.createDataFrame(
-        [(int(lab[i]), [float(v) for v in emb[i]]) for i in range(n)],
-        "label int, embedding array<float>")
-    got = {(r.label, r.pos): (r.csum, r.n)
-           for r in group_centroids(df, dim=dim, keys=["label"]).collect()}
-    q = np.floor(emb.astype(np.float64) * 1_000_000).astype(np.int64)
-    for g in range(3):
-        rows = q[lab == g]
-        for p in range(dim):
-            assert got[(g, p)] == (int(rows[:, p].sum()), len(rows))
-
-
-@pytest.mark.spark
 def test_assign_shards_packing_invariants(spark):
     df = spark.range(200).select(
         F.col("id"), (F.col("id") % 3).alias("g"),

@@ -135,6 +135,11 @@ def test_assign_tiles_zoom_bounds(spark):
     for bad in (24, -1):
         with pytest.raises(ValueError, match="zoom"):
             tiling.assign_tiles(df, bad)
+    xy = df.select(F.lit(0).cast("long").alias("x"), F.lit(0).cast("long").alias("y"))
+    with pytest.raises(ValueError, match="zoom"):
+        tiling.with_hilbert_d(xy, 24)
+    with pytest.raises(ValueError, match="zoom"):
+        tiling.with_pmtiles_tile_id(xy, 24)
     with pytest.raises(ValueError, match="z_max"):
         tiling.assign_tiles_multi(df, z_min=0, z_max=24)
 
