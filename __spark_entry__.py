@@ -553,79 +553,6 @@ def q_tile_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("cnt").cast("long").alias("tile_cnt")))
 
 
-def q_geom_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-feature ring measures in tile-local INTEGER coordinates (the MVT
-    wire space) + the drop-tiny-polygons filter every tile simplifier
-    applies at low zooms. Rings are synthesized per orderkey (vertices =
-    lineitems ordered by linenumber, coords = integer hashes mod 4096);
-    shoelace 2A, exact-rational centroid, Σ squared segment lengths, and
-    bbox are integer polynomials — bit-exact vs the DuckDB window twin,
-    order-of-summation independent. Plan: one shuffle (groupBy orderkey
-    with partial collect), then pure codegen zip_with/aggregate math."""
-    from mvt_wrangler_spark.functions import measures as M
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ok, ln = F.col("l_orderkey"), F.col("l_linenumber").cast("long")
-    v = li.select(
-        ok.alias("gkey"), ln.alias("vord"),
-        F.pmod(ok * 7919 + ln * 104729, F.lit(4096)).alias("vx"),
-        F.pmod(ok * 104729 + ln * 7919, F.lit(4096)).alias("vy"))
-    rings = (v.groupBy("gkey")
-             .agg(F.array_sort(F.collect_list(F.struct("vord", "vx", "vy")))
-                  .alias("vs"))
-             .filter(F.size("vs") >= 3)
-             .select("gkey", F.col("vs.vx").alias("xs"),
-                     F.col("vs.vy").alias("ys")))
-    xs, ys = F.col("xs"), F.col("ys")
-    cx, cy, den = M.centroid_nums(xs, ys)
-    minx, miny, maxx, maxy = M.bbox_cols(xs, ys)
-    out = rings.select(
-        "gkey",
-        F.size("xs").cast("long").alias("n_vertices"),
-        M.shoelace_area2(xs, ys).alias("area2"),
-        cx.alias("cx_num"), cy.alias("cy_num"), den.alias("den"),
-        M.perimeter2_sum(xs, ys).alias("perim2"),
-        M.polyline_len2_sum(xs, ys).alias("len2_open"),
-        minx.alias("minx"), miny.alias("miny"),
-        maxx.alias("maxx"), maxy.alias("maxy"))
-    return out.filter(F.col("area2") >= 32)
-
-
-def q_winding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ring-winding normalization (force CCW before encode): signed
-    shoelace decides, F.reverse flips — zero shuffle past the ring build.
-    Output pins the BEFORE sign, the flip flag, and position-weighted
-    fingerprints of the AFTER vertex sequence (so a wrong or double
-    reversal breaks the hash); the oracle restates the flip as a reversed
-    position index in the window twin."""
-    from mvt_wrangler_spark.functions import measures as M
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ok, ln = F.col("l_orderkey"), F.col("l_linenumber").cast("long")
-    v = li.select(
-        ok.alias("gkey"), ln.alias("vord"),
-        F.pmod(ok * 7919 + ln * 104729, F.lit(4096)).alias("vx"),
-        F.pmod(ok * 104729 + ln * 7919, F.lit(4096)).alias("vy"))
-    rings = (v.groupBy("gkey")
-             .agg(F.array_sort(F.collect_list(F.struct("vord", "vx", "vy")))
-                  .alias("vs"))
-             .filter(F.size("vs") >= 3)
-             .select("gkey", F.col("vs.vx").alias("xs"),
-                     F.col("vs.vy").alias("ys")))
-    sign = M.shoelace_area2_signed(F.col("xs"), F.col("ys"))
-    out = M.normalize_winding(
-        rings.withColumn("sign_before", F.signum(sign).cast("int")))
-    idx = F.sequence(F.lit(0), F.size("xs") - 1)
-    P = 2147483647
-    fp = lambda arr, m: F.pmod(
-        F.aggregate(
-            F.zip_with(F.col(arr), idx, lambda val, i: val * (i * m + 1)),
-            F.lit(0).cast("long"), lambda acc, t: acc + t),
-        F.lit(P))
-    return out.select("gkey", "sign_before", "was_reversed",
-                      fp("xs", 29).alias("fp_x"), fp("ys", 13).alias("fp_y"))
-
-
 def q_cell_cover_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical S2 cover join: regions are SETS OF COARSE CELLS (level-5
     parents of a deterministic point subset), points join by truncating
@@ -673,156 +600,6 @@ def q_tile_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = S.hash_sample(d, 0.5, id_col="id")
     return (S.stratified_topk(d, ["x", "y"], k=3, id_col="id")
             .select("id", "x", "y", "rn"))
-
-
-def q_clip_tile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sutherland–Hodgman ring clip to a (buffered) tile box + MVT grid
-    snap — the geometry step of building a tile from scratch. One
-    mapInPandas, no shuffle beyond the ring assembly; the DuckDB twin
-    unrolls the same four half-plane passes with identical float
-    expression order, and the grid snap makes the compared area an exact
-    integer."""
-    from mvt_wrangler_spark.operators import clip as CL
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ok, ln = F.col("l_orderkey"), F.col("l_linenumber").cast("long")
-    # dropDuplicates: the synthetic lineitem contains repeated
-    # (orderkey, linenumber) rows; duplicate seq values make the ring's
-    # edge order ambiguous (the SQL twin's window would interleave the two
-    # tied edges' emissions differently than the collected array)
-    v = li.select(
-        ok.alias("gkey"), ln.alias("vord"),
-        F.pmod(ok * 7919 + ln * 104729, F.lit(4096)).alias("vx"),
-        F.pmod(ok * 104729 + ln * 7919, F.lit(4096)).alias("vy"))
-    v = v.dropDuplicates(["gkey", "vord"])
-    rings = (v.groupBy("gkey")
-             .agg(F.array_sort(F.collect_list(F.struct("vord", "vx", "vy")))
-                  .alias("vs"))
-             .filter(F.size("vs") >= 3)
-             .select("gkey",
-                     F.transform(F.col("vs.vx"),
-                                 lambda c: c.cast("double")).alias("xs"),
-                     F.transform(F.col("vs.vy"),
-                                 lambda c: c.cast("double")).alias("ys")))
-    # AQE coalesces the ring-assembly exchange to a couple of partitions
-    # (~MBs), which would run the per-ring Python clip nearly single-core
-    return CL.clip_rings(_spread(rings), 512.0, 512.0, 3584.0, 3584.0,
-                         snap=16)
-
-
-def q_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Douglas–Peucker at tolerance 64 tile-units over integer polylines —
-    integer-exact split test (cross² > eps²·len²), so the recursive-CTE
-    DuckDB twin reproduces the kept-vertex SET exactly. One mapInPandas
-    after ring assembly; output is (gkey, kept_seq) positions."""
-    from mvt_wrangler_spark.operators import simplify as SI
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ok, ln = F.col("l_orderkey"), F.col("l_linenumber").cast("long")
-    v = li.select(
-        ok.alias("gkey"), ln.alias("vord"),
-        F.pmod(ok * 7919 + ln * 104729, F.lit(4096)).alias("vx"),
-        F.pmod(ok * 104729 + ln * 7919, F.lit(4096)).alias("vy"))
-    v = v.dropDuplicates(["gkey", "vord"])
-    rings = (v.groupBy("gkey")
-             .agg(F.array_sort(F.collect_list(F.struct("vord", "vx", "vy")))
-                  .alias("vs"))
-             .filter(F.size("vs") >= 3)
-             .select("gkey", F.col("vs.vx").alias("xs"),
-                     F.col("vs.vy").alias("ys")))
-    return SI.simplify_lines(rings, eps=64)
-
-
-def q_overzoom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tile overzoom value-checked end to end: algebraic 16x16 parent tiles
-    are encoded to real bytes (fmt cycles raw/rawz/qlossy), the engine
-    decodes, quadrant-crops, 2x nearest-neighbor upsamples, re-encodes —
-    and the check decodes the CHILD bytes into per-channel pixel sums plus
-    a position-weighted fingerprint over every child pixel. The oracle
-    regenerates the child pixels from the parent formula (child (y,x) =
-    parent (qy*8 + y//2, qx*8 + x//2)) with the qlossy quant model, so
-    decode, crop, upsample, and the codec round-trip all sit under the
-    value hash."""
-    import numpy as np
-    import pandas as pd
-
-    from mvt_wrangler_spark.operators.overzoom import overzoom
-    from mvt_wrangler_spark.sources import images as I
-
-    W = H = 16
-    ids = _spread(_points(spark, sf_dir).select("id")
-                  .filter(F.pmod("id", F.lit(37)) == 3).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                px = ((int(i) * 31 + yy * 7 + xx * 13 + cc * 5) % 256).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(
-        gen, "image_id string, bytes binary, fmt string, w int, h int")
-    children = overzoom(imgs, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        for pdf in pdfs:
-            rows = {"id": [], "child": [], "sum_r": [], "sum_g": [],
-                    "sum_b": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.cbytes), row.cfmt,
-                             row.cw, row.ch).astype(np.int64)
-                g = _grids.get((row.ch, row.cw))
-                if g is None:
-                    g = _grids.setdefault((row.ch, row.cw),
-                                          np.mgrid[0:row.ch, 0:row.cw, 0:3])
-                zy, zx, cc = g
-                fp = int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum()
-                         % 2147483647)
-                rows["id"].append(int(row.image_id))
-                rows["child"].append(int(row.child))
-                for col, c in (("sum_r", 0), ("sum_g", 1), ("sum_b", 2)):
-                    rows[col].append(int(t[:, :, c].sum()))
-                rows["fp"].append(fp)
-            yield pd.DataFrame(rows)
-
-    return children.mapInPandas(
-        stats,
-        "id long, child int, sum_r long, sum_g long, sum_b long, fp long")
-
-
-def q_clip_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Liang–Barsky line clip to the tile box — pure codegen end to end
-    (each segment clips independently: per-row t-parameter math, no
-    Python, no recursion; the only exchange is the lead() window that
-    forms segments). Endpoints floor-snap to the MVT subpixel grid, so
-    the compare is integer-exact; the twin uses identical expression
-    order for bit-equal t values."""
-    from pyspark.sql import Window
-
-    from mvt_wrangler_spark.operators import clip as CL
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ok, ln = F.col("l_orderkey"), F.col("l_linenumber").cast("long")
-    v = li.select(
-        ok.alias("gkey"), ln.alias("vord"),
-        F.pmod(ok * 7919 + ln * 104729, F.lit(4096)).cast("double").alias("x1"),
-        F.pmod(ok * 104729 + ln * 7919, F.lit(4096)).cast("double").alias("y1"))
-    v = v.dropDuplicates(["gkey", "vord"])
-    w = Window.partitionBy("gkey").orderBy("vord")
-    seg = (v.withColumns({
-        "seq": F.row_number().over(w).cast("long"),
-        "x2": F.lead("x1").over(w), "y2": F.lead("y1").over(w)})
-        .filter(F.col("x2").isNotNull()))
-    return (CL.clip_segments(seg, 512.0, 512.0, 3584.0, 3584.0, snap=16)
-            .select("gkey", "seq", "qx1", "qy1", "qx2", "qy2"))
 
 
 def q_tile_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -988,17 +765,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        "geom_measures": q_geom_measures,
         "tile_sample": q_tile_sample,
-        "clip_tile": q_clip_tile,
-        "simplify": q_simplify,
-        "overzoom": q_overzoom,
-        "clip_lines": q_clip_lines,
         "tile_shards": q_tile_shards,
         "spatial_cluster": q_spatial_cluster,
         "dataset_split": q_dataset_split,
         "dwithin_join": q_dwithin_join,
-        "winding": q_winding,
         "dedup_safe_split": q_dedup_safe_split,
         "phash_neardup": q_phash_neardup,
         "tile_quantiles": q_tile_quantiles,
@@ -1408,50 +1179,6 @@ FROM (
     simhash = ("SELECT doc_id, " + simhash_sql_expr("text", shingle=4)
                + " AS simhash FROM documents")
 
-    from mvt_wrangler_spark.functions.measures import measures_sql
-
-    geom_measures = f"""
-WITH __v AS (
-  SELECT CAST(l_orderkey AS BIGINT) AS gkey,
-         CAST(l_linenumber AS BIGINT) AS vord,
-         ((l_orderkey*7919 + CAST(l_linenumber AS BIGINT)*104729) % 4096 + 4096) % 4096 AS vx,
-         ((l_orderkey*104729 + CAST(l_linenumber AS BIGINT)*7919) % 4096 + 4096) % 4096 AS vy
-  FROM lineitem),
-__vk AS (SELECT * FROM __v WHERE gkey IN
-         (SELECT gkey FROM __v GROUP BY gkey HAVING count(*) >= 3)),
-{measures_sql('__vk', 'gkey', 'vx', 'vy', 'vord')}
-SELECT gkey, n_vertices, CAST(abs(a2_signed) AS BIGINT) AS area2, cx_num, cy_num,
-       CAST(3*a2_signed AS BIGINT) AS den, perim2, len2_open, minx, miny, maxx, maxy
-FROM __m WHERE abs(a2_signed) >= 32
-"""
-
-    winding = f"""
-WITH __v AS (
-  SELECT CAST(l_orderkey AS BIGINT) AS gkey,
-         CAST(l_linenumber AS BIGINT) AS vord,
-         ((l_orderkey*7919 + CAST(l_linenumber AS BIGINT)*104729) % 4096 + 4096) % 4096 AS vx,
-         ((l_orderkey*104729 + CAST(l_linenumber AS BIGINT)*7919) % 4096 + 4096) % 4096 AS vy
-  FROM lineitem),
-__vk AS (SELECT * FROM __v WHERE gkey IN
-         (SELECT gkey FROM __v GROUP BY gkey HAVING count(*) >= 3)),
-{measures_sql('__vk', 'gkey', 'vx', 'vy', 'vord')},
-__r AS (
-  SELECT v.gkey, v.vx, v.vy,
-         row_number() OVER (PARTITION BY v.gkey ORDER BY v.vord) - 1 AS rn,
-         m.n_vertices AS n,
-         CASE WHEN m.a2_signed < 0 THEN 1 ELSE 0 END AS revd,
-         CASE WHEN m.a2_signed > 0 THEN 1 WHEN m.a2_signed < 0 THEN -1
-              ELSE 0 END AS sgn
-  FROM __vk v JOIN __m m ON m.gkey = v.gkey)
-SELECT gkey, CAST(sgn AS INT) AS sign_before, revd = 1 AS was_reversed,
-       CAST(CAST(sum(vx * ((CASE WHEN revd = 1 THEN n - 1 - rn ELSE rn END)*29 + 1)) AS BIGINT)
-            % 2147483647 AS BIGINT) AS fp_x,
-       CAST(CAST(sum(vy * ((CASE WHEN revd = 1 THEN n - 1 - rn ELSE rn END)*13 + 1)) AS BIGINT)
-            % 2147483647 AS BIGINT) AS fp_y
-FROM __r GROUP BY gkey, sgn, revd
-"""
-
-
     cover_ctes, cover_last, cover_s2 = s2_cell_sql(level=12, base="__xyz2")
     cell_cover_join = (
         f"WITH __xyz2 AS ({XYZ_SQL}),\n" + ",\n".join(cover_ctes)
@@ -1473,59 +1200,6 @@ __s AS (SELECT id, x, y, h,
                row_number() OVER (PARTITION BY x, y ORDER BY h, id) AS rn
         FROM __txy WHERE h < {thr})
 SELECT id, x, y, CAST(rn AS INT) AS rn FROM __s WHERE rn <= 3
-"""
-
-    from mvt_wrangler_spark.operators.clip import clip_rings_sql
-
-    clip_tile = f"""
-WITH __v AS (
-  SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS gkey,
-         CAST(l_linenumber AS BIGINT) AS seq,
-         CAST(((l_orderkey*7919 + CAST(l_linenumber AS BIGINT)*104729) % 4096 + 4096) % 4096 AS DOUBLE) AS x,
-         CAST(((l_orderkey*104729 + CAST(l_linenumber AS BIGINT)*7919) % 4096 + 4096) % 4096 AS DOUBLE) AS y
-  FROM lineitem),
-__vk AS (SELECT * FROM __v WHERE gkey IN
-         (SELECT gkey FROM __v GROUP BY gkey HAVING count(*) >= 3)),
-{clip_rings_sql('__vk', 512.0, 512.0, 3584.0, 3584.0, snap=16)}
-SELECT gkey, n_out, area2q FROM __clip
-"""
-
-    overzoom_sql = f"""
-WITH {pts},
-__ozids AS (SELECT DISTINCT id, CAST(id % 3 AS INT) AS fsel
-            FROM __pts WHERE id % 37 = 3),
-__cpx AS (
-  SELECT id, qy.q AS qy, qx.q AS qx, y.y AS y, x.x AS x, c.c AS c,
-         CASE WHEN fsel = 2
-              THEN ((id*31 + (qy.q*8 + y.y//2)*7 + (qx.q*8 + x.x//2)*13 + c.c*5) % 256) // 4 * 4 + 2
-              ELSE (id*31 + (qy.q*8 + y.y//2)*7 + (qx.q*8 + x.x//2)*13 + c.c*5) % 256 END AS v
-  FROM __ozids, generate_series(0, 1) qy(q), generate_series(0, 1) qx(q),
-       generate_series(0, 15) y(y), generate_series(0, 15) x(x),
-       generate_series(0, 2) c(c))
-SELECT id, CAST(qy*2 + qx AS INT) AS child,
-       CAST(sum(CASE WHEN c = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r,
-       CAST(sum(CASE WHEN c = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-       CAST(sum(CASE WHEN c = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b,
-       CAST(sum(v * (y*29 + x*13 + c*7 + 1)) % 2147483647 AS BIGINT) AS fp
-FROM __cpx GROUP BY 1, 2
-"""
-
-    from mvt_wrangler_spark.operators.clip import clip_segments_sql
-
-    clip_lines = f"""
-WITH __v AS (
-  SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS gkey,
-         CAST(l_linenumber AS BIGINT) AS vord,
-         CAST(((l_orderkey*7919 + CAST(l_linenumber AS BIGINT)*104729) % 4096 + 4096) % 4096 AS DOUBLE) AS x1,
-         CAST(((l_orderkey*104729 + CAST(l_linenumber AS BIGINT)*7919) % 4096 + 4096) % 4096 AS DOUBLE) AS y1
-  FROM lineitem),
-__seg0 AS (
-  SELECT gkey, CAST(row_number() OVER w AS BIGINT) AS seq, x1, y1,
-         lead(x1) OVER w AS x2, lead(y1) OVER w AS y2
-  FROM __v WINDOW w AS (PARTITION BY gkey ORDER BY vord)),
-__segs AS (SELECT * FROM __seg0 WHERE x2 IS NOT NULL),
-{clip_segments_sql('__segs', 512.0, 512.0, 3584.0, 3584.0, snap=16)}
-SELECT gkey, seq, qx1, qy1, qx2, qy2 FROM __lseg
 """
 
     from mvt_wrangler_spark.operators.spatial_cluster import grid_cluster_sql
@@ -1558,24 +1232,6 @@ WHERE ((l_orderkey + l_linenumber) % 6 + 6) % 6 = {k6}"""
 
     dwithin_sql_str = dwithin_join_sql(_dw_src(3), _dw_src(4), eps=500)
 
-    from mvt_wrangler_spark.operators.simplify import simplify_sql
-
-    simplify = f"""
-WITH RECURSIVE __v AS (
-  SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS gkey,
-         CAST(l_linenumber AS BIGINT) AS seq,
-         ((l_orderkey*7919 + CAST(l_linenumber AS BIGINT)*104729) % 4096 + 4096) % 4096 AS x,
-         ((l_orderkey*104729 + CAST(l_linenumber AS BIGINT)*7919) % 4096 + 4096) % 4096 AS y
-  FROM lineitem),
-__vd AS (SELECT gkey,
-                row_number() OVER (PARTITION BY gkey ORDER BY seq) - 1 AS i,
-                x, y
-         FROM __v WHERE gkey IN
-         (SELECT gkey FROM __v GROUP BY gkey HAVING count(*) >= 3)),
-{simplify_sql('__vd', eps=64)}
-SELECT gkey, kept_seq FROM __kept
-"""
-
     tile_shards = f"""
 WITH {pts},
 __ts AS (SELECT id, {tile_x_sql('lon', 6)} AS x, {tile_y_sql('lat', 6)} AS y,
@@ -1606,18 +1262,12 @@ FROM __pts""",
         "tile_encode": tile_encode,
         "minhash_lsh": minhash_lsh,
         "simhash": simhash,
-        "geom_measures": geom_measures,
         "cell_cover_join": cell_cover_join,
         "tile_sample": tile_sample,
-        "clip_tile": clip_tile,
-        "simplify": simplify,
-        "overzoom": overzoom_sql,
-        "clip_lines": clip_lines,
         "tile_shards": tile_shards,
         "spatial_cluster": spatial_cluster_sql,
         "dataset_split": dataset_split,
         "dwithin_join": dwithin_sql_str,
-        "winding": winding,
         "dedup_safe_split": dedup_safe_split,
         "distinct_phash": distinct_phash,
         "tile_local": tile_local,

@@ -12,10 +12,9 @@ minhash near-dup ingest into snapshot tables. All DataFrame ops plus
 vectorized Arrow/pandas UDFs (no per-row Python).
 
 Layout: `functions/` (column kernels: tiling, cells, geometry, MVT codec,
-ring measures, metrics), `operators/` (the path's joins, filters, dedup,
-rollup, zonal and tile encode, plus operators that only the contract queries
-in `__spark_entry__.py` run: clipping, simplification, raster overzoom,
-sampling, spatial clustering, R-tree),
+metrics), `operators/` (the path's joins, filters, dedup, rollup, zonal and
+tile encode, plus operators that only the contract queries in
+`__spark_entry__.py` run: sampling, spatial clustering, R-tree),
 `sources/` (catalog, PMTiles, synthetic inputs), `plans/` (the CLI pipeline
 and the incremental ingest), `cli.py`, `session.py`.
 """

@@ -177,16 +177,6 @@ def s2_cell_id(lat_deg, lng_deg, level: int = 12) -> np.ndarray:
     return s2_cell_from_xyz_np(x, y, z, level)
 
 
-def s2_range_columns(cell: Column, level: int) -> tuple[Column, Column]:
-    """[range_min, range_max] — the id interval every descendant of a
-    `level` cell falls in (the S2 cover-join predicate: descendant ids are
-    BETWEEN min and max, so coarse covers join fine cells by range).
-    Low `2*(30-level)+1` bits of the cell are `1000…0`, so ±(lsb-1) only
-    touches those bits — no carries, no ANSI overflow, sign-safe."""
-    lsb = 1 << (2 * (_MAX_LEVEL - level))
-    return cell - F.lit(lsb - 1).cast("long"), cell + F.lit(lsb - 1).cast("long")
-
-
 # ---------------------------------------------------------------------------
 # H3-style aperture-7 hex index on icosahedron gnomonic faces
 # ---------------------------------------------------------------------------

@@ -1,11 +1,10 @@
-"""Lineage + metrics: observe() named metrics and per-partition row counts.
+"""Metrics: observe() named metrics and the globally-exact row rank.
 
 Reference analog: the progress bar's running counts/rate
 (/root/reference/src/processing.rs:99-116). Here: named Observations riding
-the job (zero extra passes) + an explicit per-partition lineage frame for the
-north rule's "row-count metrics per tile partition". Post-commit counts in
-catalog.SnapshotTable are the durable truth (accumulators double-count on
-task retries; observe metrics are exactly-once per completed action).
+the job (zero extra passes). Post-commit counts in catalog.SnapshotTable are
+the durable truth (accumulators double-count on task retries; observe
+metrics are exactly-once per completed action).
 """
 
 from __future__ import annotations
@@ -21,21 +20,6 @@ def observed(df: DataFrame, name: str, **aggs) -> tuple[DataFrame, Observation]:
     obs = Observation(name)
     cols = [v.alias(k) for k, v in aggs.items()] or [F.count(F.lit(1)).alias("rows")]
     return df.observe(obs, *cols), obs
-
-
-def partition_lineage(df: DataFrame, keys: tuple[str, ...] = ("z",)) -> DataFrame:
-    """Rows + bytes per (physical partition, logical key) — the lineage table."""
-    return (
-        df.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid", *keys)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .withColumnRenamed("__pid", "partition_id")
-    )
-
-
-def tile_lineage(df: DataFrame) -> DataFrame:
-    """Per-tile row counts with the writing partition id (north rule)."""
-    return partition_lineage(df, keys=("z", "x", "y"))
 
 
 def with_global_rank(df: DataFrame, order_cols: list[str],

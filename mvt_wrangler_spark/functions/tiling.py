@@ -25,9 +25,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 WEB_MERCATOR_MAX_LAT = 85.0511287798066  # atan(sinh(pi)) in degrees
-# Deepest zoom with_hilbert_d, and so every tile assigner, accepts. It nests
-# two selects per level; from z=24 on, Spark's analyzer gives up on the chain
-# ("Max iterations (100) reached for batch Resolution") instead of resolving it.
+# Deepest zoom that with_hilbert_d, every tile assigner and the tile-coordinate
+# helpers accept. with_hilbert_d nests two selects per level; from z=24 on,
+# Spark's analyzer gives up on the chain ("Max iterations (100) reached for
+# batch Resolution") instead of resolving it.
 MAX_ZOOM = 23
 
 
@@ -42,11 +43,13 @@ def _check_zoom(z: int) -> None:
 
 def frac_tile_x(lon: Column, z: int) -> Column:
     """Fractional tile x at zoom z: (lon+180)/360 * 2^z. transform.rs:21."""
+    _check_zoom(z)
     return (lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(1 << z))
 
 
 def frac_tile_y(lat: Column, z: int) -> Column:
     """Fractional tile y: (1 - ln(tan(lat) + sec(lat))/pi)/2 * 2^z. transform.rs:22-24."""
+    _check_zoom(z)
     rad = F.radians(lat)
     return (
         (F.lit(1.0) - F.log(F.tan(rad) + F.lit(1.0) / F.cos(rad)) / F.lit(math.pi))
@@ -57,12 +60,14 @@ def frac_tile_y(lat: Column, z: int) -> Column:
 
 def tile_x(lon: Column, z: int) -> Column:
     """Integer tile x, clamped to [0, 2^z - 1]."""
+    _check_zoom(z)
     n = (1 << z) - 1
     return F.greatest(F.lit(0), F.least(F.lit(n), F.floor(frac_tile_x(lon, z)))).cast("long")
 
 
 def tile_y(lat: Column, z: int) -> Column:
     """Integer tile y, clamped to [0, 2^z - 1]."""
+    _check_zoom(z)
     n = (1 << z) - 1
     return F.greatest(F.lit(0), F.least(F.lit(n), F.floor(frac_tile_y(lat, z)))).cast("long")
 
@@ -79,11 +84,13 @@ def tile_local(lon: Column, lat: Column, z: int, x: Column, y: Column, extent: i
 # ---------------------------------------------------------------------------
 
 def tile_lon(x: Column, z: int) -> Column:
+    _check_zoom(z)
     return x.cast("double") / F.lit(float(1 << z)) * F.lit(360.0) - F.lit(180.0)
 
 
 def tile_lat(y: Column, z: int) -> Column:
     """Latitude of the tile's top edge at row y: degrees(atan(sinh(pi*(1-2y/n))))."""
+    _check_zoom(z)
     t = F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * y.cast("double") / F.lit(float(1 << z)))
     sinh = (F.exp(t) - F.exp(-t)) / F.lit(2.0)
     return F.degrees(F.atan(sinh))
@@ -209,7 +216,6 @@ def assign_tiles(
     this is a zero-shuffle narrow stage. Raises ValueError unless
     0 <= z <= MAX_ZOOM.
     """
-    _check_zoom(z)  # before tile_x, whose 1 << z fails on a negative zoom
     lon, lat = F.col(lon_col), F.col(lat_col)
     out = (
         df.withColumn("z", F.lit(z).cast("int"))

@@ -12,11 +12,11 @@ Reference behavior being re-expressed (/root/reference/src/transform.rs):
 
 Spark realization: repartition(tile_id) + partition sort -> one mapInArrow
 pass -> real gzip'd MVT-protobuf blob per tile (functions/mvt.py, public
-wire format) -> repartitionByRange(tile_id).sortWithinPartitions write =
-the ordered archive. Point tiles are encoded a whole Arrow batch at a time
-(_encode_point_table: factorize gives first-seen-order dictionary codes,
-numpy frames the protobuf); general geometries one tile at a time
-(_encode_tile_blob). Both produce the same bytes for point tiles
+wire format); the sinks (catalog.SnapshotTable, pmtiles.write_pmtiles)
+write the tiles in tile_id order. Point tiles are encoded a whole Arrow
+batch at a time (_encode_point_table: factorize gives first-seen-order
+dictionary codes, numpy frames the protobuf); general geometries one tile
+at a time (_encode_tile_blob). Both produce the same bytes for point tiles
 (pytest-pinned).
 
 tile_dictionary_stats exposes the per-tile encoder's dictionaries as flat
@@ -36,6 +36,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from ..functions import mvt
+from .expr import VALUE_STRUCT_DDL
 
 TILE_SCHEMA = "z int, x bigint, y bigint, tile_id bigint, n_features bigint, data binary"
 DICT_SCHEMA = ("z int, x bigint, y bigint, tile_id bigint, layer string, "
@@ -605,7 +606,6 @@ _FEATURE_COLS = ("layer string, feature_id bigint, tags map<string,{tags}>, "
                  "pxs array<double>, pys array<double>")
 FEATURE_SCHEMA = ("z int, x bigint, y bigint, tile_id bigint, "
                   + _FEATURE_COLS.format(tags="string"))
-VALUE_STRUCT_DDL = "struct<t:int,s:string,i:bigint,f:double,fs:string,b:boolean>"
 FEATURE_SCHEMA_TYPED = ("z int, x bigint, y bigint, tile_id bigint, "
                         + _FEATURE_COLS.format(tags=VALUE_STRUCT_DDL))
 
@@ -654,14 +654,3 @@ def decode_tile_blob(data: bytes) -> dict:
     if data[:2] == b"\x1f\x8b":
         data = gzip.decompress(data)
     return mvt.decode_tile(data)
-
-
-def write_archive(tiles: DataFrame, path: str, n_partitions: int | None = None) -> None:
-    """The ordered archive sink: range-partitioned, sorted by tile_id (S5/W1)."""
-    n = n_partitions or tiles.sparkSession.sparkContext.defaultParallelism
-    (
-        tiles.repartitionByRange(n, "tile_id")
-        .sortWithinPartitions("tile_id")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -8,7 +8,7 @@ a real `.pmtiles` file a PMTiles client can serve, and existing archives can
 be read back.
 
 Spark-scale story: the distributed archive IS the range-partitioned parquet
-tile table (tile_encode.write_archive / SnapshotTable); PMTiles is a SERVING
+tile table (catalog.SnapshotTable); PMTiles is a SERVING
 format — a single file assembled in one ordered pass. write_pmtiles runs
 one Spark write: each partition of the tiles, sorted on tile_id, becomes
 one uncompressed parquet file of (tile_id, z, data). The driver k-way

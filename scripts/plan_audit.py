@@ -35,20 +35,14 @@ AUDIT = [
     ("tile_quantiles", "exact quantiles via range-repartitioned global rank"),
     ("asof_join", "union-stream as-of join: one key shuffle, no range-join blowup"),
     ("interval_join", "range join as bucketed equi-join — must have NO nested-loop stage"),
-    ("geom_measures", "ring measures: one collect_list shuffle + codegen array math"),
     ("cell_cover_join", "S2 cover join: broadcast region cells, no geometry shuffle"),
     ("tile_sample", "hash Bernoulli prefilter + per-tile window: one key shuffle"),
-    ("clip_tile", "Sutherland-Hodgman clip: ring assembly shuffle + one mapInPandas"),
-    ("simplify", "Douglas-Peucker: ring assembly shuffle + one mapInPandas"),
-    ("overzoom", "tile overzoom: decode/crop/upsample/encode mapInPandas chain"),
-    ("clip_lines", "Liang-Barsky line clip: codegen only; lead() window forms segments"),
     ("tile_shards", "shard packing: one key shuffle + window cumsum, integer DIV"),
     ("spatial_cluster", "sub-eps cell collapse + half-stencil hash join, bbox-gap prune, cell-graph closure; no distance cross-join"),
     ("dataset_split", "hash split assignment: zero-shuffle codegen projection"),
     ("morans_i", "tile counts + 8-offset neighbor equi-join; scalar join on constant key"),
     ("hot_tiles", "Gi*: 9-offset explode + groupBy + tile equi-join + 1-row scalar broadcast"),
     ("dwithin_join", "radius band join: eps-grid equi-join + 9-stencil probe, exactly-once pairs"),
-    ("winding", "shoelace sign + F.reverse flip: one ring-build shuffle, codegen after"),
     ("dedup_safe_split", "minhash closure + singleton left join + codegen split CASE"),
     ("tile_smooth", "separable 5x5 binomial: two 1-D explode+groupBy passes (10 taps, not 25)"),
     ("shard_manifest", "one key shuffle; shard + within-shard windows refine the same partitioning"),

@@ -1,6 +1,6 @@
 """S2 topology columns vs the numpy kernels, incl. negative-id faces 4-5:
 the parent column and its SQL twin (the cell_cover_join contract query's
-join key) and the descendant id range."""
+join key)."""
 
 from __future__ import annotations
 
@@ -32,21 +32,6 @@ def test_s2_parent_column_matches_numpy(spark):
         # a parent must equal encoding the same point directly at that level
         direct = C.s2_cell_id(lat, lng, level=lvl)
         assert (want == direct).all()
-
-
-@pytest.mark.spark
-def test_s2_range_contains_descendants(spark):
-    rng = np.random.RandomState(9)
-    lat = rng.uniform(-85, 85, 100)
-    lng = rng.uniform(-180, 180, 100)
-    fine = C.s2_cell_id(lat, lng, level=14)
-    coarse = C.s2_cell_id(lat, lng, level=6)
-    df = spark.createDataFrame(
-        [(int(f), int(c)) for f, c in zip(fine, coarse)],
-        "fine long, coarse long")
-    lo, hi = C.s2_range_columns(F.col("coarse"), 6)
-    out = df.select((F.col("fine").between(lo, hi)).alias("inside")).collect()
-    assert all(r.inside for r in out)
 
 
 def test_s2_parent_sql_twin_matches():

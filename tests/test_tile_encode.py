@@ -1,4 +1,4 @@
-"""Per-tile blob encode: dictionary first-seen order, determinism, ordered sink."""
+"""Per-tile blob encode: dictionary first-seen order, determinism, decode round-trip."""
 
 from __future__ import annotations
 
@@ -31,7 +31,7 @@ def test_blob_dictionary_first_seen_order():
 
 
 @pytest.mark.spark
-def test_encode_tiles_and_ordered_archive(spark, tmp_path):
+def test_encode_tiles_and_ordered_archive(spark):
     df = I.synthetic_images(spark, 400, with_pixels=False, partitions=3)
     assigned = tiling.assign_tiles(df, z=5)
     tiles = TE.encode_tiles(assigned)
@@ -41,24 +41,6 @@ def test_encode_tiles_and_ordered_archive(spark, tmp_path):
     for r in rows[:20]:
         doc = TE.decode_tile_blob(r.data)
         assert sum(len(ly["features"]) for ly in doc["layers"]) == r.n_features
-    # ordered archive: per output file, tile_id non-decreasing
-    path = str(tmp_path / "archive")
-    TE.write_archive(tiles, path, n_partitions=4)
-    import glob
-
-    import pyarrow.parquet as pq
-
-    files = sorted(glob.glob(f"{path}/part-*.parquet"))
-    assert files
-    ranges = []
-    for fn in files:
-        t = pq.read_table(fn, columns=["tile_id"]).to_pandas()["tile_id"]
-        if len(t):
-            assert t.is_monotonic_increasing
-            ranges.append((t.iloc[0], t.iloc[-1]))
-    # range partitioning: file ranges don't interleave
-    for (a0, a1), (b0, b1) in zip(sorted(ranges), sorted(ranges)[1:]):
-        assert a1 <= b0
 
 
 @pytest.mark.spark

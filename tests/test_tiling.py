@@ -121,7 +121,8 @@ def test_assign_tiles_multi_matches_per_zoom(spark):
 def test_assign_tiles_zoom_bounds(spark):
     """The deepest supported zoom assigns exact tiles; a zoom outside
     [0, MAX_ZOOM] raises ValueError while the frame is built (z=24 used to
-    fail inside the analyzer, a negative zoom with a shift error)."""
+    fail inside the analyzer, a negative zoom with a shift error), from the
+    assigners and from each tile-coordinate helper alike."""
     assert tiling.MAX_ZOOM == 23
     rng = random.Random(5)
     rows = [(i, rng.uniform(-179.99, 179.99), rng.uniform(-84.9, 84.9)) for i in range(50)]
@@ -142,6 +143,11 @@ def test_assign_tiles_zoom_bounds(spark):
         tiling.with_pmtiles_tile_id(xy, 24)
     with pytest.raises(ValueError, match="z_max"):
         tiling.assign_tiles_multi(df, z_min=0, z_max=24)
+    for helper in (tiling.frac_tile_x, tiling.frac_tile_y, tiling.tile_x,
+                   tiling.tile_y, tiling.tile_lon, tiling.tile_lat):
+        for bad in (-1, 24):
+            with pytest.raises(ValueError, match="zoom"):
+                helper(F.col("lon"), bad)
 
 
 def test_hilbert_hierarchy_property():
