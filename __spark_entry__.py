@@ -530,29 +530,6 @@ def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                                k=3, bands=4, max_bucket=1000)
 
 
-def q_tile_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT quantiles of the z8 tile-size distribution — the skew diagnosis
-    every hot-tile salting decision starts from. Quantile = value at rank
-    ceil(q*n/100) over (cnt, x, y)-ordered tile counts (integer rank math,
-    deterministic ties). Rank comes from metrics.with_global_rank
-    (range-repartition + per-partition offsets), so no task ever holds the
-    whole tile universe — the shape is zoom-independent (a plain global
-    window would push up to 268M z14 tile aggregates through one reducer)."""
-    from mvt_wrangler_spark.functions import tiling
-    from mvt_wrangler_spark.functions.metrics import with_global_rank
-
-    pts = _points(spark, sf_dir)
-    sizes = (tiling.assign_tiles(pts, z=8, with_local=False)
-             .groupBy("x", "y").agg(F.count(F.lit(1)).alias("cnt")))
-    ranked = with_global_rank(sizes, ["cnt", "x", "y"])
-    tot = sizes.agg(F.count(F.lit(1)).alias("n"))
-    targets = (tot.select(F.explode(F.array(F.lit(50), F.lit(90), F.lit(99))).alias("q"), "n")
-               .withColumn("target", F.expr("(q * n + 99) div 100")))
-    return (targets.join(ranked, targets["target"] == ranked["rn"])
-            .select(F.col("q").cast("int").alias("q"),
-                    F.col("cnt").cast("long").alias("tile_cnt")))
-
-
 def q_cell_cover_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical S2 cover join: regions are SETS OF COARSE CELLS (level-5
     parents of a deterministic point subset), points join by truncating
@@ -586,176 +563,16 @@ def q_cell_cover_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("id", "p5"))
 
 
-def q_tile_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Balanced per-tile sampling: deterministic hash Bernoulli prefilter
-    (zero-shuffle, reproducible across runs/retries/cluster sizes — unlike
-    rand()) then exactly-k-per-tile stratified pick. The per-tile cap is
-    how a curation job stops dense metro tiles from dominating a training
-    set."""
-    from mvt_wrangler_spark.functions import tiling
-    from mvt_wrangler_spark.operators import sampling as S
-
-    pts = _points(spark, sf_dir)
-    d = tiling.assign_tiles(pts, z=6, with_local=False)
-    d = S.hash_sample(d, 0.5, id_col="id")
-    return (S.stratified_topk(d, ["x", "y"], k=3, id_col="id")
-            .select("id", "x", "y", "rn"))
-
-
-def q_tile_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic webdataset-style sharding: per z6 tile, rows pack
-    into ~64 KB shards in id order (shard = exclusive prefix-sum of the
-    synthetic byte size DIV shard_bytes) — one key shuffle + window
-    cumsum, integer-exact, stable across runs and cluster sizes."""
-    from mvt_wrangler_spark.functions import tiling
-    from mvt_wrangler_spark.operators import sampling as S
-
-    pts = _points(spark, sf_dir)
-    d = tiling.assign_tiles(pts, z=6, with_local=False)
-    d = d.withColumn("nbytes", F.pmod(F.col("id") * 2654435761, F.lit(8192))
-                     + F.lit(1024))
-    return (S.assign_shards(d, ["x", "y"], "nbytes", 65536, id_col="id")
-            .select("id", "x", "y", "nbytes", "shard"))
-
-
-def q_rtree_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatial index build: features (synthetic integer bboxes around the
-    standard points) Hilbert-packed into 256-feature R-tree leaves keyed
-    by the PMTiles tile id, leaf MBR + count per leaf. The Spark side
-    ranks via the distributed range-partitioner global rank; the oracle
-    uses a plain global row_number — same total order, different plan
-    (operators/index.py)."""
-    from mvt_wrangler_spark.operators.index import pack_rtree_leaves
-
-    return pack_rtree_leaves(_rtree_feats(spark, sf_dir), leaf_size=256)
-
-
-_RT_QBOX = (100000, 40000, 140000, 80000)  # shared by query + oracle
-
-
-def _rtree_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mvt_wrangler_spark.functions import tiling
-
-    pts = tiling.assign_tiles(_points(spark, sf_dir), z=Z, with_local=False)
-    i = F.col("id")
-    ok2, ln2 = F.expr("id DIV 8"), F.pmod(i, F.lit(8))
-    px = F.pmod(ok2 * 7919 + ln2 * 104729, F.lit(360000))
-    py = F.pmod(ok2 * 104729 + ln2 * 7919, F.lit(170000))
-    w = F.pmod(i * 131 + 7, F.lit(64)) + 1
-    h = F.pmod(i * 52379 + 11, F.lit(64)) + 1
-    return pts.select(
-        "id", "tile_id",
-        (px - w).alias("minx"), (py - h).alias("miny"),
-        (px + w).alias("maxx"), (py + h).alias("maxy"))
-
-
-def q_rtree_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-path bbox query: build leaves, prune by MBR overlap, refine
-    survivors — lossless by construction, and the ORACLE is a direct
-    full-scan bbox filter, so the driver hash proves the pruning loses no
-    feature (operators/index.rtree_probe)."""
-    from mvt_wrangler_spark.operators.index import rtree_probe
-
-    return rtree_probe(_rtree_feats(spark, sf_dir), leaf_size=256,
-                       qbox=_RT_QBOX)
-
-
-def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-access shard manifest over the tile_shards packing: per row,
-    shard + in-shard sequence number + byte offsets — the loader index for
-    seek-to-sample-k training reads. One key shuffle; the within-shard
-    windows refine the same partitioning (sampling.shard_manifest)."""
-    from mvt_wrangler_spark.functions import tiling
-    from mvt_wrangler_spark.operators import sampling as S
-
-    pts = _points(spark, sf_dir)
-    d = tiling.assign_tiles(pts, z=6, with_local=False)
-    d = d.withColumn("nbytes", F.pmod(F.col("id") * 2654435761, F.lit(8192))
-                     + F.lit(1024))
-    m = S.shard_manifest(d, ["x", "y"], "nbytes", 65536, id_col="id")
-    return m.select("id", "x", "y", "nbytes", "shard", "seq",
-                    "byte_start", "byte_end")
-
-
-def q_spatial_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-radius single-linkage spatial clustering (DBSCAN min_pts=1):
-    points collapse into sub-eps cells (same-cell => within eps by
-    construction), cell-pair candidates via a half-stencil HASH join
-    (never a distance cross-join) with bbox gap tests that connect or
-    drop most pairs for free, integer-exact dist² refine on borderline
-    pairs only, large-star/small-star closure over the CELL graph,
-    singletons preserved — merge-duplicate-pins at 10^12 scale.
-    Pure DataFrame ops end to end, no Python."""
-    from mvt_wrangler_spark.operators.spatial_cluster import grid_cluster
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ok, ln = F.col("l_orderkey"), F.col("l_linenumber").cast("long")
-    pts = li.select(
-        (ok * 8 + ln).alias("id"),
-        F.pmod(ok * 7919 + ln * 104729, F.lit(4096)).alias("px"),
-        F.pmod(ok * 104729 + ln * 7919, F.lit(4096)).alias("py"))
-    return grid_cluster(pts, eps=16)
-
-
-def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test split assignment over documents: the
-    row's split is a pure function of (doc_id, salt) — one codegen CASE
-    next to the scan, zero shuffle, stable under data growth / retries /
-    cluster size (rand()-based splits break all three). Group-level
-    contamination guards fall out by hashing the group id instead."""
-    from mvt_wrangler_spark.operators import sampling as S
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    d = S.assign_split(docs, {"train": 0.8, "val": 0.1, "test": 0.1},
-                       id_col="doc_id", salt=7)
-    return d.select("doc_id", "split")
-
-
-def q_dwithin_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distance-band join: every (hospital, shop) point pair within 500
-    milli-degrees — the fixed-radius two-table join (ST_DWithin) next to
-    kNN (fixed count) and grid_cluster (self radius). Coordinates are the
-    synth_points integer milli-degrees SHIFTED non-negative (+180000 /
-    +85000 fold into the pmod), eps-grid cell equi-join + 9-stencil probe
-    side, exact integer d² refine — each pair emitted exactly once, no
-    distinct, no cross join."""
-    from mvt_wrangler_spark.operators.joins import dwithin_join
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ok, ln = F.col("l_orderkey"), F.col("l_linenumber").cast("long")
-    pts = li.select(
-        (ok * 8 + ln).alias("id"),
-        F.pmod(ok * 7919 + ln * 104729, F.lit(360000)).alias("px"),
-        F.pmod(ok * 104729 + ln * 7919, F.lit(170000)).alias("py"),
-        F.pmod(ok + ln, F.lit(6)).alias("k6"))
-    left = (pts.filter(F.col("k6") == 3)
-            .select(F.col("id").alias("a_id"), "px", "py"))
-    right = (pts.filter(F.col("k6") == 4)
-             .select(F.col("id").alias("b_id"), "px", "py"))
-    return dwithin_join(left, right, eps=500)
-
-
-def q_dedup_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-safe train/val/test assignment: every member of a near-dup
-    CLUSTER inherits the split of the cluster representative (singletons
-    hash their own id) — the contamination guard without which near-dups
-    of a test document leak into train. Composition: minhash LSH pairs ->
-    pair_clusters -> singleton left join -> assign_split(rep) (all the
-    same operators their standalone queries check; split salt differs
-    from every sampling salt per the assign_split doc)."""
+def q_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup document clusters: minhash LSH candidate pairs ->
+    pair_clusters, each member with its min-id cluster representative and
+    cluster size — the closure the incremental ingest runs per batch."""
     from mvt_wrangler_spark.operators import dedup as D
-    from mvt_wrangler_spark.operators import sampling as S
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pairs = D.minhash_lsh_candidates(docs, num_hashes=16, bands=4,
                                      shingle=5, max_bucket=1000)
-    cl = D.pair_clusters(pairs)
-    m = (docs.select("doc_id")
-         .join(cl, F.col("doc_id") == F.col("member_id"), "left")
-         .select("doc_id", F.coalesce("cluster_rep", "doc_id").alias("rep")))
-    out = S.assign_split(m, {"train": 0.9, "val": 0.05, "test": 0.05},
-                         id_col="rep", salt=11)
-    return out.select("doc_id", "rep", "split")
+    return D.pair_clusters(pairs)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -765,14 +582,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        "tile_sample": q_tile_sample,
-        "tile_shards": q_tile_shards,
-        "spatial_cluster": q_spatial_cluster,
-        "dataset_split": q_dataset_split,
-        "dwithin_join": q_dwithin_join,
-        "dedup_safe_split": q_dedup_safe_split,
+        "minhash_clusters": q_minhash_clusters,
         "phash_neardup": q_phash_neardup,
-        "tile_quantiles": q_tile_quantiles,
         "tile_encode": q_tile_encode,
         "simhash": q_simhash,
         "cell_cover_join": q_cell_cover_join,
@@ -785,9 +596,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "morans_i": q_morans_i,
         "hot_tiles": q_hot_tiles,
         "tile_smooth": q_tile_smooth,
-        "shard_manifest": q_shard_manifest,
-        "rtree_pack": q_rtree_pack,
-        "rtree_probe": q_rtree_probe,
         "pip_join": q_pip_join,
         "intersects_join": q_intersects_join,
         "type_filter": q_type_filter,
@@ -832,28 +640,6 @@ def oracle_sql() -> dict[str, str]:
         "WITH " + ",\n".join([pts, xy] + ctes)
         + f" SELECT id, z, x, y, {tid} AS tile_id FROM {last}"
     )
-
-    from mvt_wrangler_spark.operators.index import pack_rtree_leaves_sql
-
-    _rt_px = "(((id // 8)*7919 + (id % 8)*104729) % 360000 + 360000) % 360000"
-    _rt_py = "(((id // 8)*104729 + (id % 8)*7919) % 170000 + 170000) % 170000"
-    _rt_w = "((id*131 + 7) % 64 + 64) % 64 + 1"
-    _rt_h = "((id*52379 + 11) % 64 + 64) % 64 + 1"
-    rtree_src = (
-        "WITH " + ",\n".join([pts, xy] + ctes)
-        + f""" SELECT id, {tid} AS tile_id,
-       {_rt_px} - ({_rt_w}) AS minx, {_rt_py} - ({_rt_h}) AS miny,
-       {_rt_px} + ({_rt_w}) AS maxx, {_rt_py} + ({_rt_h}) AS maxy
-FROM {last}""")
-    rtree_pack = pack_rtree_leaves_sql(rtree_src, leaf_size=256)
-    # probe oracle = DIRECT full-scan bbox filter (no index, no leaves):
-    # hash equality proves the Spark index path is lossless
-    _qx0, _qy0, _qx1, _qy1 = _RT_QBOX
-    rtree_probe = f"""
-SELECT id, minx, miny, maxx, maxy FROM ({rtree_src}) __rq
-WHERE minx <= {_qx1} AND maxx >= {_qx0}
-  AND miny <= {_qy1} AND maxy >= {_qy0}
-"""
 
     # multi-zoom: same one-Hilbert-pass arithmetic as assign_tiles_multi
     tile_assign_multi = (
@@ -1122,19 +908,6 @@ SELECT id, CAST(zone AS INT) AS zone, CAST(count(*) AS BIGINT) AS n_px,
 FROM __px GROUP BY 1, 2
 """
 
-    # exact tile-size quantiles: value at rank ceil(q*n/100) with (cnt, x, y)
-    # tie-break, integer rank target in both engines
-    tile_quantiles = f"""
-WITH __pts AS ({POINTS_SQL}),
-__xy8 AS (SELECT {tile_x_sql('lon', 8)} AS x, {tile_y_sql('lat', 8)} AS y FROM __pts),
-__t AS (SELECT x, y, count(*) AS cnt FROM __xy8 GROUP BY 1, 2),
-__r AS (SELECT cnt, row_number() OVER (ORDER BY cnt ASC, x ASC, y ASC) AS rn FROM __t),
-__n AS (SELECT count(*) AS n FROM __t)
-SELECT CAST(q.q AS INT) AS q, CAST(r.cnt AS BIGINT) AS tile_cnt
-FROM (VALUES (50), (90), (99)) q(q), __n, __r r
-WHERE r.rn = (q.q * __n.n + 99) // 100
-"""
-
     # phash near-dup: same integer phash synthesis, then the band/join/refine
     # restated by phash_hamming_sql — bit-identical candidate and refine path
     from mvt_wrangler_spark.operators.dedup import phash_hamming_sql
@@ -1165,17 +938,8 @@ FROM __ids"""
     )
 
     minhash_lsh = minhash_lsh_sql(num_hashes=16, bands=4, shingle=5, max_bucket=1000)
+    minhash_clusters = pair_clusters_sql(minhash_lsh)
 
-    from mvt_wrangler_spark.operators.sampling import assign_split_sql as _as_sql
-
-    _mh_closure = pair_clusters_sql(minhash_lsh)
-    dedup_safe_split = f"""
-SELECT doc_id, rep, {_as_sql({'train': 0.9, 'val': 0.05, 'test': 0.05},
-                             'rep', salt=11)} AS split
-FROM (
-  SELECT d.doc_id, coalesce(c.cluster_rep, d.doc_id) AS rep
-  FROM documents d LEFT JOIN ({_mh_closure}) c ON c.member_id = d.doc_id)
-"""
     simhash = ("SELECT doc_id, " + simhash_sql_expr("text", shingle=4)
                + " AS simhash FROM documents")
 
@@ -1188,73 +952,6 @@ __cr AS (SELECT DISTINCT p5 AS rcell FROM __cp WHERE id % 29 = 0)
 SELECT id, p5 FROM __cp JOIN __cr ON p5 = rcell"""
     )
 
-    from mvt_wrangler_spark.operators.sampling import sample_hash_sql
-
-    thr = int(0.5 * 2147483647)
-    tile_sample = f"""
-WITH {pts},
-__txy AS (SELECT id, {tile_x_sql('lon', 6)} AS x, {tile_y_sql('lat', 6)} AS y,
-                 {sample_hash_sql('id')} AS h
-          FROM __pts),
-__s AS (SELECT id, x, y, h,
-               row_number() OVER (PARTITION BY x, y ORDER BY h, id) AS rn
-        FROM __txy WHERE h < {thr})
-SELECT id, x, y, CAST(rn AS INT) AS rn FROM __s WHERE rn <= 3
-"""
-
-    from mvt_wrangler_spark.operators.spatial_cluster import grid_cluster_sql
-
-    spatial_cluster_pts = """
-SELECT CAST(l_orderkey*8 + l_linenumber AS BIGINT) AS id,
-       ((l_orderkey*7919 + CAST(l_linenumber AS BIGINT)*104729) % 4096 + 4096) % 4096 AS px,
-       ((l_orderkey*104729 + CAST(l_linenumber AS BIGINT)*7919) % 4096 + 4096) % 4096 AS py
-FROM lineitem"""
-    spatial_cluster_sql = grid_cluster_sql(spatial_cluster_pts, eps=16)
-
-    from mvt_wrangler_spark.operators.sampling import assign_split_sql
-
-    dataset_split = f"""
-SELECT doc_id,
-       {assign_split_sql({'train': 0.8, 'val': 0.1, 'test': 0.1},
-                         'doc_id', salt=7)} AS split
-FROM documents
-"""
-
-    from mvt_wrangler_spark.operators.joins import dwithin_join_sql
-
-    def _dw_src(k6: int) -> str:
-        return f"""
-SELECT CAST(l_orderkey*8 + l_linenumber AS BIGINT) AS id,
-       ((l_orderkey*7919 + CAST(l_linenumber AS BIGINT)*104729) % 360000 + 360000) % 360000 AS px,
-       ((l_orderkey*104729 + CAST(l_linenumber AS BIGINT)*7919) % 170000 + 170000) % 170000 AS py
-FROM lineitem
-WHERE ((l_orderkey + l_linenumber) % 6 + 6) % 6 = {k6}"""
-
-    dwithin_sql_str = dwithin_join_sql(_dw_src(3), _dw_src(4), eps=500)
-
-    tile_shards = f"""
-WITH {pts},
-__ts AS (SELECT id, {tile_x_sql('lon', 6)} AS x, {tile_y_sql('lat', 6)} AS y,
-                ((id * 2654435761) % 8192 + 8192) % 8192 + 1024 AS nbytes
-         FROM __pts)
-SELECT id, x, y, nbytes,
-       coalesce(sum(nbytes) OVER (PARTITION BY x, y ORDER BY id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       // 65536 AS shard
-FROM __ts
-"""
-
-    from mvt_wrangler_spark.operators.sampling import shard_manifest_sql
-
-    _sm_inner = shard_manifest_sql(
-        f"""WITH {pts}
-SELECT id, {tile_x_sql('lon', 6)} AS x, {tile_y_sql('lat', 6)} AS y,
-       ((id * 2654435761) % 8192 + 8192) % 8192 + 1024 AS nbytes
-FROM __pts""",
-        ["x", "y"], "nbytes", 65536, id_col="id")
-    shard_manifest = (f"SELECT id, x, y, nbytes, shard, seq, byte_start, "
-                      f"byte_end FROM ({_sm_inner}) __smf")
-
     return {
         "tile_assign": tile_assign,
         "tile_assign_multi": tile_assign_multi,
@@ -1263,12 +960,7 @@ FROM __pts""",
         "minhash_lsh": minhash_lsh,
         "simhash": simhash,
         "cell_cover_join": cell_cover_join,
-        "tile_sample": tile_sample,
-        "tile_shards": tile_shards,
-        "spatial_cluster": spatial_cluster_sql,
-        "dataset_split": dataset_split,
-        "dwithin_join": dwithin_sql_str,
-        "dedup_safe_split": dedup_safe_split,
+        "minhash_clusters": minhash_clusters,
         "distinct_phash": distinct_phash,
         "tile_local": tile_local,
         "archive_roundtrip": archive_roundtrip,
@@ -1277,9 +969,6 @@ FROM __pts""",
         "morans_i": morans,
         "hot_tiles": hot_tiles,
         "tile_smooth": tile_smooth,
-        "shard_manifest": shard_manifest,
-        "rtree_pack": rtree_pack,
-        "rtree_probe": rtree_probe,
         "pip_join": pip_join,
         "intersects_join": intersects_join,
         "type_filter": type_filter,
@@ -1292,5 +981,4 @@ FROM __pts""",
         "interval_join": interval_join,
         "zonal_stats": zonal,
         "phash_neardup": phash_neardup,
-        "tile_quantiles": tile_quantiles,
     }

@@ -2,19 +2,19 @@
 
 The query/data-processing path of KotobaMedia/mvt-wrangler (the Rust
 reference), re-expressed Spark-first: scan image/feature rows ->
-web-mercator z/x/y tiling with PMTiles Hilbert tile ids (plus optional H3/S2
-cells) -> broadcast point-in-polygon / intersects joins against filter
-geometries -> feature and tag filtering with the Maplibre-style expression
+web-mercator z/x/y tiling with PMTiles Hilbert tile ids, plus H3/S2 cells ->
+broadcast point-in-polygon / intersects joins against filter geometries ->
+feature and tag filtering with the Maplibre-style expression
 DSL compiled to Catalyst Columns -> phash dedup -> per-tile stats and the
 tile-pyramid rollup -> ordered snapshot write, MVT re-encode and PMTiles
 export. Alongside it: salted kNN, raster zonal stats, and the incremental
 minhash near-dup ingest into snapshot tables. All DataFrame ops plus
 vectorized Arrow/pandas UDFs (no per-row Python).
 
-Layout: `functions/` (column kernels: tiling, cells, geometry, MVT codec,
-metrics), `operators/` (the path's joins, filters, dedup, rollup, zonal and
-tile encode, plus operators that only the contract queries in
-`__spark_entry__.py` run: sampling, spatial clustering, R-tree),
+Layout: `functions/` (column kernels: tiling, cells, geometry, MVT codec),
+`operators/` (the path's joins, filters, dedup, rollup, zonal and tile
+encode, plus variants that only the contract queries in `__spark_entry__.py`
+run: as-of and interval joins, spatial statistics, simhash),
 `sources/` (catalog, PMTiles, synthetic inputs), `plans/` (the CLI pipeline
 and the incremental ingest), `cli.py`, `session.py`.
 """

@@ -36,8 +36,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--min-zoom", type=int, default=0)
     p.add_argument("--buckets", type=int, default=16)
     p.add_argument("--job-id", default=None, help="stable id enables resume")
-    p.add_argument("--no-dedup", action="store_true")
-    p.add_argument("--cells", action="store_true", help="attach H3/S2 cell columns")
     p.add_argument("--pmtiles", default=None, metavar="PATH",
                    help="also export a real PMTiles v3 archive (serving format; "
                         "tiles MVT-encoded per tile_id)")
@@ -67,7 +65,7 @@ def main(argv: list[str] | None = None) -> int:
               f"--min-zoom {args.min_zoom} --zoom {args.zoom}", file=sys.stderr)
         return 2
 
-    from pyspark.sql import functions as F  # noqa: F401
+    from pyspark.sql import functions as F
 
     from .plans.pipeline import run_pipeline
     from .session import get_spark
@@ -81,8 +79,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         images = spark.read.parquet(args.input)
 
-    res = run_pipeline(spark, images, program, z=args.zoom, min_z=args.min_zoom,
-                       dedup=not args.no_dedup, with_cells=args.cells)
+    res = run_pipeline(spark, images, program, z=args.zoom, min_z=args.min_zoom)
 
     from .functions.tiling import _zoom_acc
 
@@ -121,8 +118,6 @@ def main(argv: list[str] | None = None) -> int:
         from .sources.pmtiles import write_pmtiles
 
         rows = res.deduped
-        if "image_id" not in rows.columns and "id" in rows.columns:
-            rows = rows.withColumn("image_id", F.col("id").cast("string"))
         if "tags" not in rows.columns:
             rows = rows.withColumn("tags", F.create_map(F.lit("kind"), F.col("kind")))
         pm_stats = write_pmtiles(encode_tiles(rows), args.pmtiles, metadata=meta_in)

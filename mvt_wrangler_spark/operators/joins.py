@@ -353,8 +353,8 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
     sort — map-side combinable nowhere, but no pair blowup and no driver
     state. Each key's rows pass through one task: fine for the usual
     many-keys regime; a single giant key (one global time series) instead
-    wants the range-partition + per-partition-carry variant of
-    with_global_rank, which this operator intentionally does not pay for.
+    wants a range-partition + per-partition-carry variant, which this
+    operator intentionally does not pay for.
     DuckDB twin: native `ASOF LEFT JOIN` (semantics verified identical on
     inclusive ties by the contract query).
     """
@@ -471,68 +471,3 @@ def interval_join(points: DataFrame, intervals: DataFrame, *,
         arm = pt.drop("__b").join(F.broadcast(long_.drop("__b0", "__b1")), refine)
         out = out.unionByName(arm)
     return out
-
-
-def dwithin_join(left: DataFrame, right: DataFrame, eps: int,
-                 left_id: str = "a_id", right_id: str = "b_id",
-                 x_col: str = "px", y_col: str = "py") -> DataFrame:
-    """Distance-band join (ST_DWithin): ALL (a, b) pairs with
-    dist((a), (b))² <= eps² — the two-table radius join next to the
-    engine's kNN (fixed count, not fixed radius) and grid_cluster (self
-    radius). Classic uses: POIs near roads, captures near a landmark,
-    sensor-to-station assignment.
-
-    Coordinates are NON-NEGATIVE integers (quantized milli-degrees or
-    tile-local; shift signed coords first — DIV truncation vs floor is the
-    engine-wide negative-grid hazard, see spatial_cluster). Exact integer
-    refine, no float, no epsilon.
-
-    Scale shape: left is bucketed by its own eps-grid cell; right explodes
-    to the 9-cell stencil; the cell equi-join + dist² filter produce each
-    qualifying pair EXACTLY once (a's cell is fixed, so it matches exactly
-    one of b's nine probes) — no distinct needed, no cross join, shuffle
-    linear in rows (9x the right side). Output: (left_id, right_id, d2).
-    """
-    ax, ay = F.col(x_col), F.col(y_col)
-    a = left.select(F.col(left_id).alias("__aid"), ax.alias("__ax"),
-                    ay.alias("__ay"),
-                    F.expr(f"{x_col} DIV {eps}").alias("__cx"),
-                    F.expr(f"{y_col} DIV {eps}").alias("__cy"))
-    offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                     for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    b = (right.select(F.col(right_id).alias("__bid"), ax.alias("__bx"),
-                      ay.alias("__by"),
-                      F.expr(f"{x_col} DIV {eps}").alias("__bcx"),
-                      F.expr(f"{y_col} DIV {eps}").alias("__bcy"))
-         .withColumn("__o", F.explode(offs))
-         .select("__bid", "__bx", "__by",
-                 (F.col("__bcx") + F.col("__o.dx")).alias("__cx"),
-                 (F.col("__bcy") + F.col("__o.dy")).alias("__cy")))
-    d2 = ((F.col("__ax") - F.col("__bx")) * (F.col("__ax") - F.col("__bx"))
-          + (F.col("__ay") - F.col("__by")) * (F.col("__ay") - F.col("__by")))
-    return (a.join(b, on=["__cx", "__cy"])
-            .filter(d2 <= eps * eps)
-            .select(F.col("__aid").alias(left_id),
-                    F.col("__bid").alias(right_id),
-                    d2.cast("long").alias("d2")))
-
-
-def dwithin_join_sql(left_src: str, right_src: str, eps: int,
-                     left_id: str = "a_id", right_id: str = "b_id") -> str:
-    """DuckDB twin of dwithin_join over CTE sources yielding (id, px, py):
-    same cell equi-join shape (equality keys hash-join in DuckDB; a brute
-    inequality join would nested-loop), same integer refine."""
-    return f"""
-WITH __dla AS ({left_src}),
-__dlb AS ({right_src}),
-__ga AS (SELECT id AS aid, px AS ax, py AS ay,
-                px // {eps} AS cx, py // {eps} AS cy FROM __dla),
-__gb0 AS (SELECT id AS bid, px AS bx, py AS by,
-                 px // {eps} AS bcx, py // {eps} AS bcy FROM __dlb),
-__gb AS (SELECT bid, bx, by, bcx + dx.d AS cx, bcy + dy.d AS cy
-         FROM __gb0, generate_series(-1, 1) dx(d), generate_series(-1, 1) dy(d))
-SELECT a.aid AS {left_id}, b.bid AS {right_id},
-       CAST((a.ax - b.bx)*(a.ax - b.bx) + (a.ay - b.by)*(a.ay - b.by) AS BIGINT) AS d2
-FROM __ga a JOIN __gb b ON a.cx = b.cx AND a.cy = b.cy
-WHERE (a.ax - b.bx)*(a.ax - b.bx) + (a.ay - b.by)*(a.ay - b.by) <= {eps * eps}
-"""

@@ -1,4 +1,4 @@
-"""End-to-end job: assign -> spatial join -> filter -> dedup -> rollup.
+"""End-to-end job: assign -> cells -> spatial join -> filter -> dedup -> rollup.
 
 This is the Spark re-expression of the reference's whole dataflow
 (/root/reference/src/lib.rs:39-101 + src/processing.rs:18-129):
@@ -22,6 +22,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import cells as C
 from ..functions import tiling
 from ..operators import dedup as D
 from ..operators import filters as FL
@@ -43,18 +44,13 @@ def run_pipeline(
     program: FL.FilterProgram | None,
     z: int = 10,
     min_z: int = 0,
-    dedup: bool = True,
-    with_cells: bool = False,
 ) -> PipelineResult:
     """The flagship query (SURVEY §7.2 step 2), generalized."""
-    assigned = tiling.assign_tiles(images, z=z)
-    if with_cells:
-        from ..functions import cells as C
-
-        # fused pandas-UDF encoder: one Arrow round trip + one shared
-        # lon/lat->xyz pass for both cells (a native Catalyst chain of the
-        # same math exceeds HotSpot's method-size limits)
-        assigned = C.with_cells(assigned, lat="lat", lng="lon")
+    # fused pandas-UDF encoder: one Arrow round trip + one shared
+    # lon/lat->xyz pass for both cells (a native Catalyst chain of the
+    # same math exceeds HotSpot's method-size limits)
+    assigned = C.with_cells(tiling.assign_tiles(images, z=z),
+                            lat="lat", lng="lon")
 
     if program is not None and program.features:
         # native codegen mask behind an inlining barrier (see
@@ -72,7 +68,7 @@ def run_pipeline(
     # the window dedup keeps the full surviving rows (min image_id per
     # (tile, phash)), which the archive sink needs; its lazy pin computes
     # them once for the snapshot, stats, pyramid and export
-    deduped = D.phash_dedup(survivors) if dedup else survivors
+    deduped = D.phash_dedup(survivors)
     stats = R.tile_stats(deduped, n_salt=8)
     pyramid = R.pyramid_rollup(
         stats.select("z", "x", "y", "n_rows", "bytes_in"), base_z=z, min_z=min_z

@@ -117,13 +117,6 @@ def decode(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
     return np.frombuffer(buf, dtype=np.uint8).reshape(h, w, 3)
 
 
-def psnr(a: np.ndarray, b: np.ndarray) -> float:
-    mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
-    if mse == 0:
-        return float("inf")
-    return 10.0 * np.log10(255.0 ** 2 / mse)
-
-
 def phash_of(pixels: np.ndarray) -> int:
     """64-bit perceptual-ish hash: blake2b of the 4-step-quantized pixels.
 

@@ -32,39 +32,24 @@ AUDIT = [
     ("minhash_lsh", "LSH banding: explode + equi-join + star fallback"),
     ("phash_neardup", "hamming banding: explode + equi-join + popcount refine"),
     ("tile_encode", "ordered archive sink: range partition + sorted mapInPandas"),
-    ("tile_quantiles", "exact quantiles via range-repartitioned global rank"),
     ("asof_join", "union-stream as-of join: one key shuffle, no range-join blowup"),
     ("interval_join", "range join as bucketed equi-join — must have NO nested-loop stage"),
     ("cell_cover_join", "S2 cover join: broadcast region cells, no geometry shuffle"),
-    ("tile_sample", "hash Bernoulli prefilter + per-tile window: one key shuffle"),
-    ("tile_shards", "shard packing: one key shuffle + window cumsum, integer DIV"),
-    ("spatial_cluster", "sub-eps cell collapse + half-stencil hash join, bbox-gap prune, cell-graph closure; no distance cross-join"),
-    ("dataset_split", "hash split assignment: zero-shuffle codegen projection"),
     ("morans_i", "tile counts + 8-offset neighbor equi-join; scalar join on constant key"),
     ("hot_tiles", "Gi*: 9-offset explode + groupBy + tile equi-join + 1-row scalar broadcast"),
-    ("dwithin_join", "radius band join: eps-grid equi-join + 9-stencil probe, exactly-once pairs"),
-    ("dedup_safe_split", "minhash closure + singleton left join + codegen split CASE"),
+    ("minhash_clusters", "minhash LSH pairs -> pair_clusters closure"),
     ("tile_smooth", "separable 5x5 binomial: two 1-D explode+groupBy passes (10 taps, not 25)"),
-    ("shard_manifest", "one key shuffle; shard + within-shard windows refine the same partitioning"),
-    ("rtree_pack", "range-partitioner global rank (P-row offset table) + leaf groupBy"),
-    ("rtree_probe", "leaf MBR prune (broadcast dim) + exact overlap refine — lossless"),
 ]
 
 # queries whose plans legitimately contain a cartesian/broadcast-NLJ stage:
 # morans_i joins two ONE-ROW scalar aggregates on a constant key (Catalyst
 # folds the trivially-true condition into a 1x1 broadcast-NLJ)
 CARTESIAN_OK = {"morans_i", "hot_tiles"}
-# queries whose plans legitimately contain a SinglePartition exchange:
-# tile_quantiles' is the P-row per-partition OFFSET table (P = shuffle
-# parallelism, input-size independent) — the data rows never pass through it.
-# morans_i produces one global scalar row: the final agg over the already
-# partial-aggregated (<=4^z-row) tile table is a single-partition combine.
-# hot_tiles broadcasts the same 1-row global scalar into the per-tile join.
-SINGLE_PARTITION_OK = {"tile_quantiles", "morans_i", "hot_tiles",
-                       # with_global_rank's P-row offset-table window (P =
-                       # shuffle parallelism, input-size independent) — the
-                       # tile_quantiles pattern
-                       "rtree_pack", "rtree_probe"}
+# queries whose plans legitimately contain a SinglePartition exchange: each
+# combines one global scalar row from an already partial-aggregated tile
+# table (at most 4^z rows), so the data rows never pass through it. morans_i
+# produces that scalar itself; hot_tiles broadcasts it into the per-tile join.
+SINGLE_PARTITION_OK = {"morans_i", "hot_tiles"}
 # widest permitted parquet ReadSchema in an audited plan (column pruning
 # gate: every audited query projects a handful of columns). Per-query
 # overrides for queries that GENUINELY consume more: asof_join reads 5 of
@@ -172,8 +157,8 @@ def main() -> None:
                 r"CartesianProduct|BroadcastNestedLoopJoin", plan):
             verdict.append("cartesian (labeled baseline — expected)")
         if name in SINGLE_PARTITION_OK and "SinglePartition" in plan:
-            verdict.append("single-partition exchange on the P-row offset "
-                           "table only — expected")
+            verdict.append("single-partition exchange on a one-row global "
+                           "scalar only — expected")
         if not verdict:
             verdict.append("ok")
 

@@ -1,5 +1,5 @@
-"""Zonal assignment, metrics/lineage, CLI, as-of and interval joins, spatial
-statistics, R-tree and pyramid-rollup internals."""
+"""Zonal assignment, observed metrics, CLI, as-of and interval joins, spatial
+statistics and pyramid-rollup internals."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from mvt_wrangler_spark.functions import metrics as M
 from mvt_wrangler_spark.functions import tiling
 from mvt_wrangler_spark.operators import zonal as Z
 from mvt_wrangler_spark.sources import images as I
@@ -46,11 +45,16 @@ def test_zonal_stats_matches_numpy(spark):
 
 @pytest.mark.spark
 def test_observed_metrics_and_lineage(spark):
+    """Observations on a tiled frame count each row once per action, the
+    property the ingest's row and kept counts rely on."""
+    from pyspark.sql import Observation
+
     df = I.synthetic_images(spark, 300, with_pixels=False, partitions=3)
     a = tiling.assign_tiles(df, z=4, with_local=False)
+    obs = Observation("m")
     # DISTINCT aggregates are disallowed in observed metrics -> approx sketch
-    obs_df, obs = M.observed(a, "m", rows=F.count(F.lit(1)),
-                             tiles=F.approx_count_distinct("tile_id"))
+    obs_df = a.observe(obs, F.count(F.lit(1)).alias("rows"),
+                       F.approx_count_distinct("tile_id").alias("tiles"))
     n = obs_df.count()
     assert obs.get["rows"] == n == 300
     assert obs.get["tiles"] > 1
@@ -92,40 +96,6 @@ def test_cli_rejects_missing_input(tmp_path):
     from mvt_wrangler_spark.cli import main
 
     assert main(["/nonexistent/x.parquet", str(tmp_path / "o")]) == 2
-
-
-def test_with_global_rank_matches_global_window(spark):
-    """with_global_rank == a plain global-window row_number on random data,
-    and its plan contains no single-partition Exchange feeding the data-side
-    window (the P-row offset table is the only globally-ordered piece)."""
-    import numpy as np
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from mvt_wrangler_spark.functions.metrics import with_global_rank
-
-    rng = np.random.default_rng(3)
-    rows = [(int(a), int(i)) for i, a in enumerate(rng.integers(0, 50, 4000))]
-    df = spark.createDataFrame(rows, "v long, id long")
-
-    got = with_global_rank(df, ["v", "id"], num_partitions=8)
-    want = df.withColumn("rn", F.row_number().over(
-        Window.orderBy("v", "id")).cast("long"))
-    assert got.select("v", "id", "rn").subtract(want).count() == 0
-    assert want.subtract(got.select("v", "id", "rn")).count() == 0
-
-    # the range-partitioned frame is PINNED (localCheckpoint) so the offset
-    # aggregate and the final join provably read the same partitioning —
-    # range boundaries come from sampling, and exchange-reuse recomputation
-    # would otherwise silently misalign offsets vs local ranks. The final
-    # plan therefore reads the checkpointed RDD; the range exchange lives in
-    # the checkpoint job, and no data-side SinglePartition funnel remains.
-    plan = got._jdf.queryExecution().executedPlan().toString().lower()
-    assert "existingrdd" in plan
-    # exactly ONE SinglePartition exchange: the P-row offset table's window
-    # (input-size independent); the data rows join it via broadcast
-    assert plan.count("singlepartition") == 1
-    assert "broadcast" in plan
 
 
 @pytest.mark.spark
@@ -341,64 +311,6 @@ def test_tile_smooth_separable_equals_dense_kernel(spark):
     assert got == dict(expected)
     # kernel mass conservation: total smooth = 256 * total count
     assert sum(got.values()) == 256 * sum(c for _, _, c in rows)
-
-
-def test_pack_rtree_leaves_properties(spark):
-    """Every leaf except the last holds exactly leaf_size features; MBRs
-    contain all member bboxes; ordering follows the spatial key; packing
-    matches a brute-force sorted replica."""
-    import random
-
-    from mvt_wrangler_spark.operators.index import pack_rtree_leaves
-
-    rng = random.Random(3)
-    rows = []
-    for i in range(1000):
-        x, y = rng.randrange(0, 10000), rng.randrange(0, 10000)
-        w, h = rng.randrange(1, 50), rng.randrange(1, 50)
-        key = (x // 100) * 1000 + y // 100  # coarse spatial key
-        rows.append((i, key, x - w, y - h, x + w, y + h))
-    df = spark.createDataFrame(
-        rows, "id long, tile_id long, minx long, miny long, maxx long, maxy long")
-    B = 64
-    got = {r.leaf: r for r in pack_rtree_leaves(df, leaf_size=B).collect()}
-    srt = sorted(rows, key=lambda r: (r[1], r[0]))
-    for leaf, r in got.items():
-        members = srt[leaf * B:(leaf + 1) * B]
-        assert r.n == len(members)
-        assert r.minx == min(m[2] for m in members)
-        assert r.miny == min(m[3] for m in members)
-        assert r.maxx == max(m[4] for m in members)
-        assert r.maxy == max(m[5] for m in members)
-    assert sorted(got) == list(range((1000 + B - 1) // B))
-    assert all(got[leaf].n == B for leaf in range(1000 // B))
-
-
-def test_rtree_probe_equals_direct_scan_and_prunes(spark):
-    import random
-
-    from mvt_wrangler_spark.operators.index import (assign_rtree_leaves,
-                                                    rtree_probe)
-
-    rng = random.Random(9)
-    rows = []
-    for i in range(800):
-        x, y = rng.randrange(0, 10000), rng.randrange(0, 10000)
-        w, h = rng.randrange(1, 40), rng.randrange(1, 40)
-        rows.append((i, (x // 100) * 1000 + y // 100,
-                     x - w, y - h, x + w, y + h))
-    df = spark.createDataFrame(
-        rows, "id long, tile_id long, minx long, miny long, maxx long, maxy long")
-    q = (2000, 3000, 3500, 4500)
-    got = {r.id for r in rtree_probe(df, leaf_size=32, qbox=q).collect()}
-    direct = {i for (i, _, mnx, mny, mxx, mxy) in rows
-              if mnx <= q[2] and mxx >= q[0] and mny <= q[3] and mxy >= q[1]}
-    assert got == direct and len(direct) > 5
-    # the index actually prunes: surviving leaves < total leaves
-    assigned = assign_rtree_leaves(df, 32)
-    hit_leaves = {r.leaf for r in assigned.collect() if r.id in direct}
-    all_leaves = {r.leaf for r in assigned.collect()}
-    assert len(hit_leaves) < len(all_leaves)
 
 
 @pytest.mark.spark

@@ -38,7 +38,7 @@ def test_pipeline_matches_oracle(spark, images_rows):
     df, rows = images_rows
     prog = FilterProgram.from_geojson(default_filter_geojson())
 
-    res = P.run_pipeline(spark, df, prog, z=Z, dedup=True)
+    res = P.run_pipeline(spark, df, prog, z=Z)
 
     # --- assignments ---
     got_assign = {r.image_id: (r.z, r.x, r.y, r.tile_id, r.px, r.py)
@@ -69,7 +69,8 @@ def test_pipeline_matches_oracle(spark, images_rows):
         assert all(not t.startswith("pgf:") and t != "name:fr" for t in r.tags)
         assert any(t in ("name", "name:ja", "name:en") for t in r.tags)
 
-    # --- dedup ---
+    # --- dedup, with the H3/S2 cells attached ---
+    assert {"s2_cell", "h3_cell"} <= set(res.deduped.columns)
     kept_ids = {r.image_id for r in res.deduped.select("image_id").collect()}
     surv_rows = [r for r in rows if want_surv[r["image_id"]]["kept"]]
     want_keep = PO.dedup_keepers(surv_rows, want_assign)
