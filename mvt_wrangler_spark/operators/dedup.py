@@ -172,12 +172,14 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id", text_col: str 
     measured 6 ArrowEvalPython/6 scans in the un-pinned plan, and 1.63 s ->
     1.17 s warm at sf0.1 with the pin. The pinned rows are slim
     (id, bucket) = 16 B x bands per doc — the guide §8 proxy shape, one
-    cheap text pass at any corpus size.
+    cheap text pass at any corpus size. The pin is lazy (it carries no
+    Observation): building the frame runs no Spark job, and the first job
+    that reads it computes the pass once for every reference.
     """
     banded = session.pin(df.select(
         F.col(id_col).alias("id"),
         F.explode(minhash_band_buckets(F.col(text_col), num_hashes, bands, shingle)).alias("bucket"),
-    ))
+    ), eager=False)
     sizes = banded.groupBy("bucket").agg(F.count(F.lit(1)).alias("__n"),
                                          F.min("id").alias("__rep"))
     ok = sizes.filter((F.col("__n") >= 2) & (F.col("__n") <= max_bucket)).select("bucket")
@@ -395,164 +397,71 @@ FROM __cand WHERE bit_count(xor(ph_a, ph_b)) <= {k}
 
 
 # ---------------------------------------------------------------------------
-# Pairs -> clusters: distributed connected components (transitive closure)
+# Pairs -> clusters: connected components (transitive closure) in one task
 # ---------------------------------------------------------------------------
 
-def pair_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-                  max_rounds: int = 50,
-                  driver_threshold: int = 65536) -> DataFrame:
+def _components(batches):
+    """mapInArrow body: (u, v) edge batches -> (member_id, cluster_rep,
+    cluster_size) of every node, the rep being its component's min id.
+
+    Hook-and-shortcut union-find over dense node indices: np.unique sorts
+    the endpoint ids, so the min index is the min id, and duplicate or
+    reversed edges cost nothing. Each round hooks every root to the least
+    root it shares an edge with (np.minimum.at: a parent only ever gets
+    smaller, so the forest has no cycle), pointer-jumps until no label
+    moves, and drops the edges that now lie inside one component. The
+    root of a component is its min index, which no hook can move."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    ends = np.concatenate([b.column(c).to_numpy() for c in (0, 1) for b in batches])
+    ids, edges = np.unique(ends, return_inverse=True)
+    edges = edges.reshape(2, -1)
+    lbl = np.arange(len(ids))
+    while edges.size:
+        a, b = lbl[edges[0]], lbl[edges[1]]
+        np.minimum.at(lbl, a, b)
+        np.minimum.at(lbl, b, a)
+        while not np.array_equal(up := lbl[lbl], lbl):
+            lbl = up
+        edges = edges[:, lbl[edges[0]] != lbl[edges[1]]]
+    yield pa.RecordBatch.from_pydict({"member_id": ids, "cluster_rep": ids[lbl],
+                                      "cluster_size": np.bincount(lbl)[lbl]})
+
+
+def pair_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Transitive closure of a near-dup PAIR set into clusters with a
     deterministic min-id representative: (member_id, cluster_rep,
     cluster_size). The step every candidate-pair operator here
     (minhash_lsh_candidates, phash_hamming_pairs) needs before rows can
     actually be dropped — pair (a,b)+(b,c) must yield ONE cluster {a,b,c}
-    with one keeper, the per-scope-complete semantics of the
-    reference's dictionary dedup (/root/reference/src/transform.rs:174-191)
-    lifted to the whole dataset.
+    with one keeper, the per-scope-complete semantics of the reference's
+    dictionary dedup (transform.rs:174-191) lifted to the whole dataset.
 
-    Algorithm: alternating large-star / small-star (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SOCC'14 — public) as a
-    driver loop over DataFrame stages: convergence is tested on the driver
-    between rounds, so the rounds cannot be one lazy plan. Each round is
-    two grouped min-aggregations + joins keyed on node id; the edge set is
-    pinned per round, because round r's lazy plan would otherwise nest all
-    r-1 earlier rounds and re-run them. Converges to per-component stars
-    centered on the min id in O(log^2 n) rounds even on adversarial path
-    graphs, where plain min-label propagation needs O(diameter) rounds.
-
-    100 TB notes: every stage is a shuffle keyed by node id, partial-agg
-    combinable; edge count is non-increasing round over round (large-star
-    emits one edge per (u, v>u) slot, small-star at most |E| + |V|, then
-    distinct). Cluster reps of giant components become hot join keys — AQE
-    skew-join splits them (enabled in session.py); no stage ever collects
-    edges to the driver. Convergence is detected by a (count, hash-sum)
-    signature of the canonical edge set, then VERIFIED structurally (a
-    star forest has no node on both sides of an edge) before returning.
+    One lazy pass, so building the frame runs no Spark job: the edges go
+    through one exchange into a single partition, and one mapInArrow task
+    runs a numpy union-find over them (_components). Bound: that task holds
+    every edge, 16 B per edge (two longs) plus numpy working arrays of the
+    same order. The engine's graphs are small — the ingest's is at most
+    batch x bands star edges — so the small side is not partitioned; bring
+    back a distributed closure only if a listed workload needs one.
 
     Ids must be numeric (cast to long); pairs may arrive in any orientation,
-    with duplicates and self-loops (ignored). Nodes with no surviving pair
-    do not appear — left-join from the corpus for singleton handling.
+    with duplicates, self-loops and null ids (the last two ignored). Nodes
+    with no surviving pair do not appear — left-join from the corpus for
+    singleton handling (pair_clusters_with_corpus).
     """
-    def _canon(e: DataFrame) -> DataFrame:
-        return (e.filter(F.col("u") != F.col("v"))
-                .select(F.least("u", "v").alias("u"),
-                        F.greatest("u", "v").alias("v"))
-                .distinct())
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        # for each node u: m = min(N(u) + {u}); attach strictly-larger
-        # neighbors to m
-        und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = (und.groupBy("u").agg(F.min("v").alias("mn"))
-             .select("u", F.least("mn", F.col("u")).alias("m")))
-        return (und.join(m, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v")))
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        # orient high -> low; attach each smaller neighborhood (and the
-        # center) to its min
-        d = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        m = d.groupBy("u").agg(F.min("v").alias("m"))
-        return (d.join(m, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .union(m.select("u", F.col("m").alias("v"))))
-
-    def _checkpoint_with_sig(e: DataFrame):
-        """Materialize the round's edge set and its convergence signature in
-        ONE job: the (count, hash-sum) rides the pin's job as an
-        Observation instead of a second aggregation job. At sf0.1 the loop is
-        driver-pacing dominated (~3 visible jobs/round in round 4); this
-        halves the per-round action count. Decimal accumulator: summing raw
-        int64 hashes overflows ANSI long."""
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        chk = session.pin(e.observe(
-            obs, F.count(F.lit(1)).alias("c"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ))
-        got = obs.get  # the pin's job already completed the plan
-        return chk, (got["c"], got["h"])
-
-    edges, sig = _checkpoint_with_sig(_canon(
-        pairs.select(F.col(id_a).cast("long").alias("u"),
-                     F.col(id_b).cast("long").alias("v"))))
-    # Scale-adaptive: the canonical edge count is already known from the
-    # signature the pin observed. A SMALL graph (post-collapse hash graphs,
-    # the tail of an LSH pass) pays ~10 driver-paced rounds x fixed job latency
-    # in the star loop — while a bounded union-find over collected edges is
-    # exact, deterministic, and instant. The collect is bounded by
-    # driver_threshold edges (16 B each; default 64k = 1 MB), so the driver
-    # never holds more than that whatever the input size. Billions-of-
-    # edges inputs (driver_threshold exceeded) take the distributed loop;
-    # pass driver_threshold=0 to force it (the loop tests do).
-    if driver_threshold and sig[0] <= driver_threshold:
-        parent: dict[int, int] = {}
-
-        def _find(x: int) -> int:
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in edges.collect():
-            u, v = row.u, row.v
-            parent.setdefault(u, u)
-            parent.setdefault(v, v)
-            ru, rv = _find(u), _find(v)
-            if ru != rv:  # min id becomes the root == the star-loop rep
-                if rv < ru:
-                    ru, rv = rv, ru
-                parent[rv] = ru
-        members = list(parent)
-        reps = np.array([_find(m) for m in members], dtype=np.int64)
-        _, inverse, counts = np.unique(reps, return_inverse=True,
-                                       return_counts=True)
-        # an Arrow-backed frame: the JVM decodes the batches itself, where a
-        # list of tuples becomes a Python RDD that a Python worker unpickles
-        # every time a downstream plan runs
-        return pairs.sparkSession.createDataFrame(pa.table({
-            "member_id": pa.array(members, pa.int64()),
-            "cluster_rep": pa.array(reps, pa.int64()),
-            "cluster_size": pa.array(counts[inverse], pa.int64()),
-        }))
-
-    for _ in range(max_rounds):
-        # no distinct between the stars: small-star re-orients and min-
-        # aggregates per node, so duplicate/uncanonical large-star output
-        # only pads its groupBy input — one less shuffle per round
-        edges, new_sig = _checkpoint_with_sig(
-            _canon(_small_star(_large_star(edges))))
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(f"pair_clusters did not converge in {max_rounds} "
-                           "rounds (O(log^2 n) expected)")
-    # structural star check: no node is both a rep (u) and a member (v)
-    not_star = edges.alias("a").join(
-        edges.alias("b"), F.col("a.u") == F.col("b.v"), "left_semi").count()
-    if not_star:
-        raise RuntimeError("pair_clusters signature converged on a non-star "
-                           "edge set — raise max_rounds")
-    members = (edges.select(F.col("v").alias("member_id"),
-                            F.col("u").alias("cluster_rep"))
-               .union(edges.select(F.col("u").alias("member_id"),
-                                   F.col("u").alias("cluster_rep")).distinct()))
-    sizes = members.groupBy("cluster_rep").agg(
-        F.count(F.lit(1)).alias("cluster_size"))
-    return (members.join(sizes, "cluster_rep")
-            .select("member_id", "cluster_rep",
-                    F.col("cluster_size").cast("long").alias("cluster_size")))
+    return (pairs.select(F.col(id_a).cast("long").alias("u"),
+                         F.col(id_b).cast("long").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .repartition(1)
+            .mapInArrow(_components,
+                        "member_id long, cluster_rep long, cluster_size long"))
 
 
 def pair_clusters_with_corpus(corpus: DataFrame, pairs: DataFrame,
                               id_col: str = "id", id_a: str = "id_a",
-                              id_b: str = "id_b",
-                              max_rounds: int = 50) -> DataFrame:
+                              id_b: str = "id_b") -> DataFrame:
     """pair_clusters over the WHOLE corpus: rows with no near-dup pair come
     back as size-1 clusters (their own rep) instead of silently vanishing —
     the call every real dedup job makes (keep one row per cluster ==
@@ -562,8 +471,7 @@ def pair_clusters_with_corpus(corpus: DataFrame, pairs: DataFrame,
     outer join a predictable row-loss mistake; this wrapper is that left
     join done right. `id_col` values must be unique numeric row ids (the
     same ids the pair generator used)."""
-    clusters = pair_clusters(pairs, id_a=id_a, id_b=id_b,
-                             max_rounds=max_rounds)
+    clusters = pair_clusters(pairs, id_a=id_a, id_b=id_b)
     ids = corpus.select(F.col(id_col).cast("long").alias("member_id"))
     return (ids.join(clusters, "member_id", "left")
             .select("member_id",
@@ -579,7 +487,7 @@ def pair_clusters_sql(pairs_src: str, id_a: str = "id_a",
     `pairs_src` (any query yielding id_a, id_b), then min reachable label
     per member. Exact same (member_id, cluster_rep, cluster_size) set —
     reachability is symmetric, so min-over-reachable == component min ==
-    the star center large-star/small-star converges to."""
+    the root the union-find keeps."""
     return f"""
 WITH RECURSIVE
 __p AS (SELECT {id_a} AS pa, {id_b} AS pb FROM ({pairs_src}) WHERE {id_a} != {id_b}),

@@ -84,9 +84,9 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     every reference re-runs the frame's whole upstream, Python UDF passes
     included (each duplicated ArrowEvalPython node executes), and a
     nondeterministic upstream (sampling, limit, range boundaries) can hand
-    different rows to different readers. In driver loops (the pair_clusters
-    rounds, the knn_join_cells rings) the pin also cuts the lineage, so
-    plans do not compound round over round.
+    different rows to different readers. In a driver loop (the
+    knn_join_cells rings) the pin also cuts the lineage, so plans do not
+    compound round over round.
 
     A local checkpoint, not persist(): the CacheManager matches cached data
     by canonicalized plan, so a persisted frame would be silently reused by
@@ -124,8 +124,8 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
         query that another thread plans during the call runs without AQE
         too;
       * the blocks are freed when the returned frame is garbage-collected,
-        not when its last reader is done: the pair_clusters rounds and the
-        knn_join_cells rings each pin one frame per round.
+        not when its last reader is done: the knn_join_cells rings pin one
+        frame per round.
     """
     if eager:
         return df.localCheckpoint(eager=True)

@@ -4,6 +4,8 @@ cap under adversarial (all-identical) input."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -221,34 +223,95 @@ def test_phash_hamming_validates_params():
 # pair_clusters: pairs -> connected components with min-id reps
 # ---------------------------------------------------------------------------
 
-def _clusters(spark, pairs, thr=65536):
+def _clusters(spark, pairs):
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    rows = D.pair_clusters(df, driver_threshold=thr).collect()
+    rows = D.pair_clusters(df).collect()
     return {r.member_id: (r.cluster_rep, r.cluster_size) for r in rows}
 
 
+def _union_find(edges) -> list[tuple[int, int, int]]:
+    """Reference closure: a dict union-find over the pair list, min id as
+    the root; sorted (member_id, cluster_rep, cluster_size) rows."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for u, v in edges:
+        if u == v:
+            continue
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            ru, rv = min(ru, rv), max(ru, rv)
+            parent[rv] = ru
+    reps = {m: find(m) for m in parent}
+    sizes = Counter(reps.values())
+    return sorted((m, r, sizes[r]) for m, r in reps.items())
+
+
+def _duckdb_clusters(edges) -> list[tuple[int, int, int]]:
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE __pairs(id_a BIGINT, id_b BIGINT)")
+    if edges:
+        con.executemany("INSERT INTO __pairs VALUES (?, ?)", edges)
+    return sorted(tuple(r) for r in con.execute(
+        D.pair_clusters_sql("SELECT id_a, id_b FROM __pairs")).fetchall())
+
+
+# Every id is shifted by ``base``: at base 0 the 10^5-node path's ids equal
+# the kernel's node indices, so only a shifted run shows that the output maps
+# indices back to ids.
+ID_BASES = [0, 65536]
+
+
 @pytest.mark.spark
-@pytest.mark.parametrize("thr", [0, 65536])  # distributed loop AND driver union-find
-def test_pair_clusters_transitive_chain(spark, thr):
+@pytest.mark.parametrize("base", ID_BASES)
+def test_pair_clusters_transitive_chain(spark, base):
     """Planted 3-chain: (a,b)+(b,c) with NO (a,c) pair must yield one
     cluster {a,b,c} with the min id as keeper."""
-    got = _clusters(spark, [(10, 20), (20, 30)], thr)
-    assert got == {10: (10, 3), 20: (10, 3), 30: (10, 3)}
+    a, b, c = base + 10, base + 20, base + 30
+    got = _clusters(spark, [(a, b), (b, c)])
+    assert got == {a: (a, 3), b: (a, 3), c: (a, 3)}
 
 
 @pytest.mark.spark
-@pytest.mark.parametrize("thr", [0, 65536])
-def test_pair_clusters_path_and_components(spark, thr):
-    """Adversarial path graph (worst case for plain label propagation)
-    plus disjoint components, reversed/duplicate/self-loop input rows."""
+@pytest.mark.parametrize("base", ID_BASES)
+def test_pair_clusters_path_and_components(spark, base):
+    """Adversarial path graphs (worst case for plain label propagation)
+    plus disjoint components, reversed/duplicate/self-loop input rows; and
+    a 10^5-node path whose ids are shuffled along it, so the union-find
+    cannot follow the id order."""
     n = 33
     path = [(i + 1, i) for i in range(n - 1)]          # reversed orientation
     path += [(5, 6), (5, 6), (7, 7)]                   # dup + self-loop
     other = [(1000, 2000), (3000, 1000)]
-    got = _clusters(spark, path + other, thr)
+    got = _clusters(spark, [(base + u, base + v) for u, v in path + other])
     for i in range(n):
-        assert got[i] == (0, n), i
-    assert got[1000] == (1000, 3) and got[2000] == (1000, 3) and got[3000] == (1000, 3)
+        assert got[base + i] == (base, n), i
+    for m in (1000, 2000, 3000):
+        assert got[base + m] == (base + 1000, 3), m
+
+    n = 100_000
+
+    def shuffled(i):  # id of path node i: 7919 is prime to n, so a permutation
+        return base + (i * 7919) % n
+
+    big = spark.range(n - 1).select(shuffled(F.col("id")).alias("id_a"),
+                                    shuffled(F.col("id") + 1).alias("id_b"))
+    got = D.pair_clusters(big).toArrow()
+    rows = sorted(zip(*(got.column(c).to_pylist() for c in range(3))))
+    assert rows == [(base + i, base, n) for i in range(n)]
+    pos = np.arange(n - 1)
+    assert rows == _union_find(zip(shuffled(pos).tolist(), shuffled(pos + 1).tolist()))
 
 
 @pytest.mark.spark
@@ -272,9 +335,7 @@ def test_pair_clusters_clique_through_star_fallback(spark):
 @pytest.mark.spark
 def test_pair_clusters_empty_and_oracle(spark):
     """Empty input -> empty output with the contract schema; random graph
-    matches the DuckDB recursive-CTE twin exactly."""
-    import duckdb
-
+    matches the DuckDB recursive-CTE twin and the union-find oracle."""
     empty = spark.createDataFrame([], "id_a long, id_b long")
     out = D.pair_clusters(empty)
     assert out.dtypes == [("member_id", "bigint"), ("cluster_rep", "bigint"),
@@ -285,24 +346,15 @@ def test_pair_clusters_empty_and_oracle(spark):
     edges = [(int(a), int(b)) for a, b in rng.integers(0, 120, size=(200, 2))]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     got = sorted(tuple(r) for r in D.pair_clusters(df).collect())
-    # the distributed star loop must agree with the driver union-find path
-    got_dist = sorted(tuple(r) for r in
-                      D.pair_clusters(df, driver_threshold=0).collect())
-    assert got == got_dist
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE __pairs(id_a BIGINT, id_b BIGINT)")
-    con.executemany("INSERT INTO __pairs VALUES (?, ?)", edges)
-    want = sorted(tuple(r) for r in con.execute(
-        D.pair_clusters_sql("SELECT id_a, id_b FROM __pairs")).fetchall())
-    assert got == want
+    assert got == _union_find(edges)
+    assert got == _duckdb_clusters(edges)
 
 
 @pytest.mark.spark
-def test_pair_clusters_union_find_matches_star_loop(spark):
+def test_pair_clusters_matches_union_find_oracle(spark):
     """Property: on random graphs built from paths, stars and loose edges,
-    with duplicate (reversed) rows and self-loops, the driver union-find
-    path and the distributed star loop return identical rows."""
+    with duplicate (reversed) rows and self-loops, pair_clusters returns
+    the rows of the dict union-find oracle and of the DuckDB twin."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -324,12 +376,36 @@ def test_pair_clusters_union_find_matches_star_loop(spark):
     @given(graphs())
     def check(edges):
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        union_find = sorted(tuple(r) for r in D.pair_clusters(df).collect())
-        star_loop = sorted(tuple(r) for r in
-                           D.pair_clusters(df, driver_threshold=0).collect())
-        assert union_find == star_loop
+        got = sorted(tuple(r) for r in D.pair_clusters(df).collect())
+        assert got == _union_find(edges)
+        assert got == _duckdb_clusters(edges)
 
     check()
+
+
+@pytest.mark.spark
+def test_pair_clusters_runs_no_job_while_built(spark):
+    """Building the closure's frame runs no Spark job: over a pair frame,
+    and over minhash candidates of an already-read documents table (the
+    minhash_clusters contract query), whose band pin is lazy too."""
+    from tests.conftest import SF_DIR
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    sc = spark.sparkContext
+    for group, build in (
+            ("pair-clusters-build", lambda: D.pair_clusters(pairs)),
+            ("minhash-clusters-build", lambda: D.pair_clusters(
+                D.minhash_lsh_candidates(docs, num_hashes=16, bands=4,
+                                         shingle=5, max_bucket=1000)))):
+        sc.setJobGroup(group, group)
+        try:
+            built = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0, group
+        assert built.count() > 0, group
 
 
 @pytest.mark.spark

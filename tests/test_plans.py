@@ -38,6 +38,19 @@ def test_audited_plan_is_clean(spark, name):
 
 
 @pytest.mark.spark
+def test_minhash_clusters_single_partition_is_the_closure_only(spark):
+    """minhash_clusters is exempt from the single-partition flag for the
+    pair_clusters closure alone: one SinglePartition exchange feeding one
+    MapInArrow task, and no local table standing in for the work."""
+    import __spark_entry__ as e
+
+    plan = formatted_plan(e.queries()["minhash_clusters"](spark, SF_DIR))
+    assert plan.count("SinglePartition") == 1
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 1
+    assert "LocalTableScan" not in plan
+
+
+@pytest.mark.spark
 def test_red_flag_scan_catches_broken_plans(spark):
     """Negative control: deliberately-bad plans must be flagged."""
     from pyspark.sql import Window
@@ -175,9 +188,10 @@ def test_single_python_pass_under_each_pin(spark, monkeypatch, name):
         f"{name}: every pinned frame must run its Python pass exactly once")
 
 
-# phash_dedup pins its keepers, so the audited plans of these queries end at
-# the pin; the red-flag scan also reads the subplans behind it.
-PIN_AUDIT_QUERIES = ["pipeline_e2e", "phash_dedup"]
+# phash_dedup pins its keepers and minhash_lsh_candidates its band rows, so
+# the audited plans of these queries end at the pin; the red-flag scan also
+# reads the subplans behind it.
+PIN_AUDIT_QUERIES = ["pipeline_e2e", "phash_dedup", "minhash_clusters"]
 
 
 @pytest.mark.spark
