@@ -75,16 +75,6 @@ def q_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tiling.assign_tiles(pts, z=Z, with_local=False).select("id", "z", "x", "y", "tile_id")
 
 
-def q_tile_assign_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass multi-zoom assignment (z 4..10): one Hilbert pass at max
-    zoom, coarser zooms derived by shifts (hierarchical curve property)."""
-    from mvt_wrangler_spark.functions import tiling
-
-    pts = _points(spark, sf_dir)
-    return tiling.assign_tiles_multi(pts, z_min=4, z_max=Z).select(
-        "id", "z", "x", "y", "tile_id")
-
-
 def q_tile_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mvt_wrangler_spark.functions import tiling
 
@@ -145,42 +135,6 @@ def q_tile_stats_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = R.tile_stats(pts.withColumn("bytes", F.lit(None).cast("binary")),
                          n_salt=8, salt_col="id")
     return stats.select("z", "x", "y", "n_rows")
-
-
-def q_morans_i(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global Moran's I of per-tile point counts (queen weights) at zoom Z:
-    one scalar row answering 'is point density spatially clustered?'.
-    All distributed aggregates are exact integer sums; see rollup.morans_i."""
-    from mvt_wrangler_spark.functions import tiling
-    from mvt_wrangler_spark.operators import rollup as R
-
-    pts = tiling.assign_tiles(_points(spark, sf_dir), z=Z, with_local=False)
-    counts = pts.groupBy("x", "y").agg(F.count(F.lit(1)).alias("cnt"))
-    return R.morans_i(counts)
-
-
-def q_hot_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Getis-Ord Gi* hot-spot z-score per zoom-Z tile (queen weights incl.
-    self). Exact integer aggregates; pinned double evaluation order."""
-    from mvt_wrangler_spark.functions import tiling
-    from mvt_wrangler_spark.operators import rollup as R
-
-    pts = tiling.assign_tiles(_points(spark, sf_dir), z=Z, with_local=False)
-    counts = pts.groupBy("x", "y").agg(F.count(F.lit(1)).alias("cnt"))
-    return R.getis_ord_gi(counts)
-
-
-def q_tile_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heatmap smoothing of zoom-8 tile counts with the 5x5 binomial
-    kernel, run SEPARABLY (two 1-D passes, 10 stencil rows/tile instead of
-    25 — rollup.tile_smooth); the oracle applies the non-separated 2-D
-    kernel, so the factorization itself is what the hash checks."""
-    from mvt_wrangler_spark.functions import tiling
-    from mvt_wrangler_spark.operators import rollup as R
-
-    pts = tiling.assign_tiles(_points(spark, sf_dir), z=8, with_local=False)
-    counts = pts.groupBy("x", "y").agg(F.count(F.lit(1)).alias("cnt"))
-    return R.tile_smooth(counts)
 
 
 def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -338,31 +292,6 @@ def q_expr_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tagged.filter(E.compile_expr(prog, ctx)).select("p_partkey")
 
 
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Backward as-of join: every purchase event picks up the value of the
-    user's most recent click at-or-before it (inclusive ties, LEFT
-    semantics). Spark side is the union-stream + running-last window
-    operator (joins.asof_join — ONE key shuffle, no range-join pair
-    blowup); the oracle is DuckDB's NATIVE `ASOF LEFT JOIN` — an
-    independent implementation of the same semantics, not a restatement of
-    ours. The right side is deduped to unique (user_id, ts) with max value
-    first, making the winner deterministic in both engines."""
-    from mvt_wrangler_spark.operators.joins import asof_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    clicks = (ev.filter(F.col("event_type") == "click")
-              .groupBy("user_id", "ts").agg(F.max("value").alias("v")))
-    purchases = (ev.filter(F.col("event_type") == "purchase")
-                 .select("event_id", "user_id", "ts", "value"))
-    out = asof_join(purchases, clicks, on="user_id",
-                    left_time="ts", right_time="ts", value_cols=["v"])
-    return out.select(
-        "event_id", "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.col("value").alias("purchase_value"),
-        F.col("v_r").alias("last_click_value"))
-
-
 def q_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full S2 (level 12) + H3-style (res 7) cell ids from unit-sphere xyz
     via the FUSED vectorized-numpy pandas UDF (one Arrow pass emits both
@@ -434,35 +363,6 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     max_bucket=1000)
 
 
-def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-interval range join (operators/joins.py interval_join):
-    every event vs deterministic ad-exposure-style windows derived from the
-    click events ([ts, ts + (event_id%7+1) min]). Bucketed equi-join + exact
-    refine — NO BroadcastNestedLoopJoin in the plan (gate-audited); the
-    DuckDB oracle is the naive inequality join, an independent
-    implementation that checks cover completeness at bucket edges."""
-    from mvt_wrangler_spark.operators.joins import interval_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    pts = ev.select(F.col("event_id").alias("pid"), us.alias("t"))
-    iv = (ev.filter(F.col("event_type") == "click")
-            .select(F.col("event_id").alias("interval_id"), us.alias("lo"),
-                    (us + (F.col("event_id") % 7 + 1) * 60_000_000).alias("hi")))
-    out = interval_join(pts, iv, point_col="t", start_col="lo", end_col="hi",
-                        bucket_width=600_000_000)  # 10-min buckets
-    return out.select("pid", "interval_id")
-
-
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """62-bit SimHash fingerprint per document (two mod-P 31-bit hash
-    streams; bit-identical SQL twin)."""
-    from mvt_wrangler_spark.operators.dedup import simhash64
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select("doc_id", simhash64(F.col("text"), shingle=4).alias("simhash"))
-
-
 def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster->vector zonal assignment, value-checked end to end: images are
     synthesized with an algebraic pixel formula, ENCODED to real bytes
@@ -508,26 +408,6 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("mean_r", 6).alias("mean_r"),
         F.round("mean_g", 6).alias("mean_g"),
         F.round("mean_b", 6).alias("mean_b"))
-
-
-def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-dup by phash hamming banding, value-checked bit-for-bit:
-    synthesize 62-bit phashes in pure integer column math (cluster base =
-    two mod-P halves packed nonneg; each member XOR-flips one id-derived
-    bit, so same-cluster pairs sit at hamming 2), then run the lossless
-    band-join + popcount refine. The oracle restates bands, join, star
-    fallback, and refine in SQL (phash_hamming_sql)."""
-    from mvt_wrangler_spark.operators.dedup import GOLD, P31, phash_hamming_pairs
-
-    ids = (_points(spark, sf_dir).select("id")
-           .filter(F.pmod("id", F.lit(5)) < 2).distinct())
-    c = F.expr("id div 5")
-    h1 = F.pmod(c * F.lit(GOLD) + 11, F.lit(P31))
-    h2 = F.pmod(c * F.lit(1779033703) + 7, F.lit(P31))
-    flip = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(id % 62 AS INT))")
-    ph = ids.select("id", (h1 * F.lit(2 ** 31) + h2).bitwiseXOR(flip).alias("phash"))
-    return phash_hamming_pairs(ph, id_col="id", phash_col="phash",
-                               k=3, bands=4, max_bucket=1000)
 
 
 def q_cell_cover_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -583,19 +463,13 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "minhash_clusters": q_minhash_clusters,
-        "phash_neardup": q_phash_neardup,
         "tile_encode": q_tile_encode,
-        "simhash": q_simhash,
         "cell_cover_join": q_cell_cover_join,
         "tile_assign": q_tile_assign,
-        "tile_assign_multi": q_tile_assign_multi,
         "tile_local": q_tile_local,
         "archive_roundtrip": q_archive_roundtrip,
         "pyramid_rollup": q_pyramid_rollup,
         "tile_stats_salted": q_tile_stats_salted,
-        "morans_i": q_morans_i,
-        "hot_tiles": q_hot_tiles,
-        "tile_smooth": q_tile_smooth,
         "pip_join": q_pip_join,
         "intersects_join": q_intersects_join,
         "type_filter": q_type_filter,
@@ -604,8 +478,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pipeline_e2e": q_pipeline_e2e,
         "tag_filter": q_tag_filter,
         "expr_filter": q_expr_filter,
-        "asof_join": q_asof_join,
-        "interval_join": q_interval_join,
         "minhash_lsh": q_minhash_lsh,
         "cell_encode": q_cell_encode,
         "distinct_phash": q_distinct_phash,
@@ -639,15 +511,6 @@ def oracle_sql() -> dict[str, str]:
     tile_assign = (
         "WITH " + ",\n".join([pts, xy] + ctes)
         + f" SELECT id, z, x, y, {tid} AS tile_id FROM {last}"
-    )
-
-    # multi-zoom: same one-Hilbert-pass arithmetic as assign_tiles_multi
-    tile_assign_multi = (
-        "WITH " + ",\n".join([pts, xy] + ctes)
-        + f""" SELECT id, CAST(zz.z AS INT) AS z, x >> ({Z} - zz.z) AS x,
-       y >> ({Z} - zz.z) AS y,
-       ((CAST(1 AS BIGINT) << (2 * zz.z)) - 1) // 3 + (d >> (2 * ({Z} - zz.z))) AS tile_id
-FROM {last}, generate_series(4, {Z}) zz(z)"""
     )
 
     # archive_roundtrip: encode->decode must reproduce the (distinct) input —
@@ -686,59 +549,6 @@ FROM __xy
         "WITH " + ",\n".join([pts, xy])
         + " SELECT z, x, y, CAST(count(*) AS BIGINT) AS n_rows FROM __xy GROUP BY 1,2,3"
     )
-
-    morans = f"""
-WITH {pts}, {xy},
-__t AS (SELECT x, y, count(*) AS c FROM __xy GROUP BY 1, 2),
-__g AS (SELECT count(*) AS n, sum(c) AS t, sum(c*c) AS q FROM __t),
-__nb AS (
-  SELECT t1.c AS ci, t1.x + o.dx AS nx, t1.y + o.dy AS ny
-  FROM __t t1, (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),(0,1),(1,-1),(1,0),(1,1)) o(dx, dy)),
-__p AS (
-  SELECT count(*) AS s0, sum(ci * t2.c) AS p, sum(ci + t2.c) AS s1
-  FROM __nb JOIN __t t2 ON nx = t2.x AND ny = t2.y)
-SELECT CAST(n AS BIGINT) AS n_tiles, CAST(s0 AS BIGINT) AS s0,
-       CASE WHEN s0 * (n*q - t*t) <> 0
-            THEN round(CAST(n*n*p - n*t*s1 + t*t*s0 AS DOUBLE)
-                       / CAST(s0 * (n*q - t*t) AS DOUBLE), 6)
-       END AS morans_i
-FROM __g, __p
-"""
-
-    from mvt_wrangler_spark.operators.rollup import tile_smooth_sql
-
-    tile_smooth = tile_smooth_sql(
-        f"SELECT x, y, count(*) AS cnt FROM ("
-        f"WITH {pts} SELECT {tile_x_sql('lon', 8)} AS x, "
-        f"{tile_y_sql('lat', 8)} AS y FROM __pts) __txy GROUP BY 1, 2")
-
-    hot_tiles = f"""
-WITH {pts}, {xy},
-__t AS (SELECT x, y, count(*) AS c FROM __xy GROUP BY 1, 2),
-__g AS (SELECT count(*) AS n, sum(c) AS t, sum(c*c) AS q FROM __t),
-__hood AS (
-  SELECT t1.x + o.dx AS x, t1.y + o.dy AS y, sum(t1.c) AS sumw, count(*) AS w
-  FROM __t t1, (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),(0,0),(0,1),(1,-1),(1,0),(1,1)) o(dx, dy)
-  GROUP BY 1, 2)
-SELECT t.x, t.y, CAST(t.c AS BIGINT) AS cnt, CAST(h.w AS BIGINT) AS w_i,
-       CASE WHEN sqrt(CAST(q AS DOUBLE) / CAST(n AS DOUBLE)
-                      - (CAST(t2.t AS DOUBLE) / CAST(n AS DOUBLE))
-                        * (CAST(t2.t AS DOUBLE) / CAST(n AS DOUBLE)))
-                 * sqrt((CAST(n AS DOUBLE) * CAST(h.w AS DOUBLE)
-                         - CAST(h.w AS DOUBLE) * CAST(h.w AS DOUBLE))
-                        / (CAST(n AS DOUBLE) - 1.0)) > 0
-            THEN round((CAST(h.sumw AS DOUBLE)
-                        - (CAST(t2.t AS DOUBLE) / CAST(n AS DOUBLE))
-                          * CAST(h.w AS DOUBLE))
-                       / (sqrt(CAST(q AS DOUBLE) / CAST(n AS DOUBLE)
-                               - (CAST(t2.t AS DOUBLE) / CAST(n AS DOUBLE))
-                                 * (CAST(t2.t AS DOUBLE) / CAST(n AS DOUBLE)))
-                          * sqrt((CAST(n AS DOUBLE) * CAST(h.w AS DOUBLE)
-                                  - CAST(h.w AS DOUBLE) * CAST(h.w AS DOUBLE))
-                                 / (CAST(n AS DOUBLE) - 1.0))), 6)
-       END AS gi_star
-FROM __t t JOIN __hood h ON t.x = h.x AND t.y = h.y, __g t2
-"""
 
     pip_arms = "\nUNION ALL\n".join(
         f"SELECT id, '{pid}' AS admin_id FROM __pts WHERE {halfplane_sql(pid, v)}"
@@ -855,31 +665,6 @@ WHERE p_brand IN ('Brand#13', 'Brand#11', 'Brand#25')
   AND CAST(p_size AS VARCHAR) > '2'
 """
 
-    interval_join = """
-WITH __iv AS (
-  SELECT event_id AS interval_id, epoch_us(ts) AS lo,
-         epoch_us(ts) + (event_id % 7 + 1) * 60000000 AS hi
-  FROM events WHERE event_type = 'click'
-)
-SELECT e.event_id AS pid, __iv.interval_id
-FROM events e JOIN __iv ON epoch_us(e.ts) >= __iv.lo AND epoch_us(e.ts) <= __iv.hi
-"""
-
-    asof_join = """
-WITH __r AS (
-  SELECT user_id, ts, max(value) AS v
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-),
-__l AS (
-  SELECT event_id, user_id, ts, value
-  FROM events WHERE event_type = 'purchase'
-)
-SELECT __l.event_id, __l.user_id, epoch_us(__l.ts) AS ts_us,
-       __l.value AS purchase_value, __r.v AS last_click_value
-FROM __l ASOF LEFT JOIN __r
-  ON __l.user_id = __r.user_id AND __l.ts >= __r.ts
-"""
-
     distinct_phash = (
         "WITH " + f"__pts AS ({POINTS_SQL}), "
         + f"__xy AS (SELECT phash, {tile_x_sql('lon', 6)} AS x, {tile_y_sql('lat', 6)} AS y FROM __pts) "
@@ -908,24 +693,7 @@ SELECT id, CAST(zone AS INT) AS zone, CAST(count(*) AS BIGINT) AS n_px,
 FROM __px GROUP BY 1, 2
 """
 
-    # phash near-dup: same integer phash synthesis, then the band/join/refine
-    # restated by phash_hamming_sql — bit-identical candidate and refine path
-    from mvt_wrangler_spark.operators.dedup import phash_hamming_sql
-
-    phash_nd_src = f"""WITH __pts AS ({POINTS_SQL}),
-__ids AS (SELECT DISTINCT id FROM __pts WHERE id % 5 < 2)
-SELECT id,
-       xor((((id // 5) * 2654435761 + 11) % 2147483647) * 2147483648
-           + (((id // 5) * 1779033703 + 7) % 2147483647),
-           CAST(1 AS BIGINT) << CAST(id % 62 AS INT)) AS phash
-FROM __ids"""
-    phash_neardup = phash_hamming_sql(phash_nd_src, k=3, bands=4, max_bucket=1000)
-
-    from mvt_wrangler_spark.operators.dedup import (
-        minhash_lsh_sql,
-        pair_clusters_sql,
-        simhash_sql_expr,
-    )
+    from mvt_wrangler_spark.operators.dedup import minhash_lsh_sql, pair_clusters_sql
 
     from mvt_wrangler_spark.functions.cells import h3_cell_sql, s2_cell_sql
     from mvt_wrangler_spark.sources.points import XYZ_SQL
@@ -940,9 +708,6 @@ FROM __ids"""
     minhash_lsh = minhash_lsh_sql(num_hashes=16, bands=4, shingle=5, max_bucket=1000)
     minhash_clusters = pair_clusters_sql(minhash_lsh)
 
-    simhash = ("SELECT doc_id, " + simhash_sql_expr("text", shingle=4)
-               + " AS simhash FROM documents")
-
     cover_ctes, cover_last, cover_s2 = s2_cell_sql(level=12, base="__xyz2")
     cell_cover_join = (
         f"WITH __xyz2 AS ({XYZ_SQL}),\n" + ",\n".join(cover_ctes)
@@ -954,11 +719,9 @@ SELECT id, p5 FROM __cp JOIN __cr ON p5 = rcell"""
 
     return {
         "tile_assign": tile_assign,
-        "tile_assign_multi": tile_assign_multi,
         "cell_encode": cell_encode,
         "tile_encode": tile_encode,
         "minhash_lsh": minhash_lsh,
-        "simhash": simhash,
         "cell_cover_join": cell_cover_join,
         "minhash_clusters": minhash_clusters,
         "distinct_phash": distinct_phash,
@@ -966,9 +729,6 @@ SELECT id, p5 FROM __cp JOIN __cr ON p5 = rcell"""
         "archive_roundtrip": archive_roundtrip,
         "pyramid_rollup": pyramid,
         "tile_stats_salted": tile_stats,
-        "morans_i": morans,
-        "hot_tiles": hot_tiles,
-        "tile_smooth": tile_smooth,
         "pip_join": pip_join,
         "intersects_join": intersects_join,
         "type_filter": type_filter,
@@ -977,8 +737,5 @@ SELECT id, p5 FROM __cp JOIN __cr ON p5 = rcell"""
         "pipeline_e2e": pipeline,
         "tag_filter": tag_filter,
         "expr_filter": expr_filter,
-        "asof_join": asof_join,
-        "interval_join": interval_join,
         "zonal_stats": zonal,
-        "phash_neardup": phash_neardup,
     }

@@ -13,8 +13,7 @@ vectorized Arrow/pandas UDFs (no per-row Python).
 
 Layout: `functions/` (column kernels: tiling, cells, geometry, MVT codec),
 `operators/` (the path's joins, filters, dedup, rollup, zonal and tile
-encode, plus variants that only the contract queries in `__spark_entry__.py`
-run: as-of and interval joins, spatial statistics, simhash),
+encode),
 `sources/` (catalog, PMTiles, synthetic inputs), `plans/` (the CLI pipeline
 and the incremental ingest), `cli.py`, `session.py`.
 """

@@ -22,9 +22,10 @@ cell numbering is an arbitrary published assignment. Reconstructing them
 from memory and "validating" against memorized test vectors would risk
 pinning a WRONG implementation as Uber-compatible — strictly worse than the
 documented divergence. Closure plan (when the tables are retrievable): slot
-a `h3_cell_uber(lat, lng, res)` twin behind the same `h3_cell` seam
-(identical signature/packing contract), keep this index as the default, and
-gate with latLngToCell known-value vectors from the h3 repo's test suite.
+a `h3_cell_uber_from_xyz_np(x, y, z, res)` twin behind the same
+`h3_cell_from_xyz_np` seam (identical signature/packing contract), keep this
+index as the default, and gate with latLngToCell known-value vectors from
+the h3 repo's test suite.
 Until then ids are deterministic, hierarchy-consistent, and serve the
 engine's bucketing/join use unchanged.
 
@@ -87,12 +88,6 @@ def _face_uv_from_xyz(x: np.ndarray, y: np.ndarray, z: np.ndarray):
     return face, u, v
 
 
-def s2_face_uv(lat_deg: np.ndarray, lng_deg: np.ndarray):
-    """Cube face (0..5) and valid (u,v) per the s2 face projection."""
-    x, y, z = _xyz(np.asarray(lat_deg, np.float64), np.asarray(lng_deg, np.float64))
-    return _face_uv_from_xyz(x, y, z)
-
-
 def _st(u: np.ndarray) -> np.ndarray:
     """Quadratic UV->ST transform (s2: STtoUV inverse).
 
@@ -135,7 +130,7 @@ def _hilbert_lut(chunk: int) -> np.ndarray:
 def s2_cell_from_xyz_np(x: np.ndarray, y: np.ndarray, z: np.ndarray,
                         level: int = 12) -> np.ndarray:
     """S2 cell id (int64) from unit-sphere xyz arrays — the trig-free core
-    shared by s2_cell_id and the fused cell encoders. All float ops are
+    of the fused cell encoders. All float ops are
     IEEE-exact (divide/sqrt/floor), so ids are bit-identical to the DuckDB
     twin (s2_cell_sql).
 
@@ -169,12 +164,6 @@ def s2_cell_from_xyz_np(x: np.ndarray, y: np.ndarray, z: np.ndarray,
             | (pos.astype(np.uint64) << np.uint64(lsb_shift + 1))
             | np.uint64(1 << lsb_shift))
     return cell.astype(np.int64)
-
-
-def s2_cell_id(lat_deg, lng_deg, level: int = 12) -> np.ndarray:
-    """Vectorized S2 cell id at `level` (int64 array)."""
-    x, y, z = _xyz(np.asarray(lat_deg, np.float64), np.asarray(lng_deg, np.float64))
-    return s2_cell_from_xyz_np(x, y, z, level)
 
 
 # ---------------------------------------------------------------------------
@@ -235,7 +224,7 @@ def _h3_rot_consts(res: int) -> tuple[float, float, float]:
 def h3_cell_from_xyz_np(x: np.ndarray, y: np.ndarray, z: np.ndarray,
                         res: int = 7) -> np.ndarray:
     """H3-style cell id (int64) from unit-sphere xyz arrays — the trig-free
-    core shared by h3_cell and the fused cell encoders; bit-identical to
+    core of the fused cell encoders; bit-identical to
     the DuckDB twin (h3_cell_sql).
 
     id layout: [sign 0][face:5][res:4][q+2^19:20][r+2^19:20] (54 bits used).
@@ -261,12 +250,6 @@ def h3_cell_from_xyz_np(x: np.ndarray, y: np.ndarray, z: np.ndarray,
     return _pack_h3(face.astype(np.int64), res, q, r)
 
 
-def h3_cell(lat_deg, lng_deg, res: int = 7) -> np.ndarray:
-    """Vectorized H3-style cell id (int64) at resolution `res` (0..13)."""
-    x, y, z = _xyz(np.asarray(lat_deg, np.float64), np.asarray(lng_deg, np.float64))
-    return h3_cell_from_xyz_np(x, y, z, res)
-
-
 def _pack_h3(face: np.ndarray, res: int, q: np.ndarray, r: np.ndarray) -> np.ndarray:
     off = np.int64(1 << 19)
     return (
@@ -275,7 +258,6 @@ def _pack_h3(face: np.ndarray, res: int, q: np.ndarray, r: np.ndarray) -> np.nda
         | ((q + off) << np.int64(20))
         | (r + off)
     )
-
 
 
 def _cube_round(qf: np.ndarray, rf: np.ndarray):

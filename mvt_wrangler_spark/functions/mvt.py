@@ -234,38 +234,6 @@ def decode_geometry_rings(ints: list[int]) -> list[list[tuple[int, int]]]:
     return rings
 
 
-def ring_area2(ring: list[tuple[int, int]]) -> int:
-    """Twice the signed surveyor's area of an unclosed ring. In MVT screen
-    coords (y down) the spec's exterior rings are POSITIVE, holes NEGATIVE
-    (spec 4.3.4.5) — use this to split a polygon ring list into parts."""
-    n = len(ring)
-    s = 0
-    for i in range(n):
-        x0, y0 = ring[i]
-        x1, y1 = ring[(i + 1) % n]
-        s += x0 * y1 - x1 * y0
-    return -s  # y-down flips the sign convention
-
-
-def decode_geometry(ints: list[int]) -> tuple[str, list[tuple[int, int]]]:
-    """Command stream -> (type guess, flattened absolute points).
-    Back-compat wrapper over decode_geometry_rings."""
-    saw_close = any((c & 7) == CMD_CLOSE for c in _command_headers(ints))
-    saw_line = any((c & 7) == CMD_LINE for c in _command_headers(ints))
-    rings = decode_geometry_rings(ints)
-    pts = [pt for r in rings for pt in r]
-    gtype = "Polygon" if saw_close else ("LineString" if saw_line else "Point")
-    return gtype, pts
-
-
-def _command_headers(ints: list[int]):
-    pos = 0
-    while pos < len(ints):
-        h = ints[pos]
-        yield h
-        cmd, count = h & 7, h >> 3
-        pos += 1 + (0 if cmd == CMD_CLOSE else 2 * count)
-
 
 # -- Feature / Layer / Tile ---------------------------------------------------
 

@@ -229,54 +229,6 @@ def assign_tiles(
     return out
 
 
-def assign_tiles_multi(
-    df: DataFrame,
-    z_min: int,
-    z_max: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """ONE-PASS multi-zoom assignment: one output row per input row per
-    z in [z_min, z_max], with (z, x, y, tile_id).
-
-    The reference processes every zoom in the archive in one run
-    (/root/reference/src/processing.rs:32-39); the Spark re-expression
-    computes (x, y, hilbert d) ONCE at z_max and derives every coarser zoom
-    arithmetically — Hilbert curves are hierarchical (parent position =
-    d >> 2; property-tested in tests/test_tiling.py), so the whole pyramid
-    costs one unrolled curve plus an explode over (z_max - z_min + 1)
-    structs: a single narrow codegen stage, no shuffle, not one curve per
-    zoom. Row clamping at z_max propagates correctly (floor(a)>>s ==
-    floor(a/2^s)).
-    """
-    if not 0 <= z_min <= z_max <= MAX_ZOOM:
-        raise ValueError(f"need 0 <= z_min <= z_max <= {MAX_ZOOM}")
-    lon, lat = F.col(lon_col), F.col(lat_col)
-    out = (
-        df.withColumn("__xm", tile_x(lon, z_max))
-        .withColumn("__ym", tile_y(lat, z_max))
-    )
-    out = with_hilbert_d(out, z_max, "__xm", "__ym", out="__dm")
-    arms = [
-        F.struct(
-            F.lit(z).cast("int").alias("z"),
-            F.shiftright(F.col("__xm"), z_max - z).alias("x"),
-            F.shiftright(F.col("__ym"), z_max - z).alias("y"),
-            (F.lit(_zoom_acc(z)).cast("long")
-             + F.shiftright(F.col("__dm"), 2 * (z_max - z))).alias("tile_id"),
-        )
-        for z in range(z_min, z_max + 1)
-    ]
-    out = out.withColumn("__zs", F.explode(F.array(*arms)))
-    return (
-        out.withColumns({
-            "z": F.col("__zs.z"), "x": F.col("__zs.x"),
-            "y": F.col("__zs.y"), "tile_id": F.col("__zs.tile_id"),
-        })
-        .drop("__zs", "__xm", "__ym", "__dm")
-    )
-
-
 # ---------------------------------------------------------------------------
 # SQL twins (DuckDB oracle) — same math, ANSI SQL strings
 # ---------------------------------------------------------------------------

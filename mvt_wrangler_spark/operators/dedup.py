@@ -1,5 +1,5 @@
-"""Deduplication operators: phash-per-tile (north rule) + the training-data
-suite (minhash-LSH, simhash, phash hamming) over text and hash columns.
+"""Deduplication operators: phash-per-tile (north rule), minhash-LSH near-dup
+candidate pairs over text, and the pair -> cluster closure.
 
 The reference's only dedup is the per-tile dictionary re-encode
 (/root/reference/src/transform.rs:174-191); the graft promotes dedup to a
@@ -11,14 +11,12 @@ tile — so the shuffle key space is fine without salting; salting is applied
 in the tile-level aggregations (see rollup.py / pipeline.py) where the key is
 the bare tile.
 
-Hash family (shared by minhash + simhash, and mirrored exactly by the
-DuckDB oracle SQL builders below): all arithmetic in the mod P = 2^31-1
-domain so both engines compute bit-identical int64 values —
+Hash family (mirrored exactly by the DuckDB oracle SQL builders below): all
+arithmetic in the mod P = 2^31-1 domain so both engines compute
+bit-identical int64 values —
   shingle hash  s_t = (sum_j code[t+j] * 257^j) mod P
   minhash_i     min_t (s_t * (2i+1) + b_i) mod P,  b_i = (i*2654435761+7) mod P
   band bucket k (sum_t m_{kw+t} * 31^t) mod P + k * 2^31
-  simhash       bit votes over two streams h1 = s, h2 = (s*2654435761+98765) mod P
-                (31 bits each -> 62-bit fingerprint)
 """
 
 from __future__ import annotations
@@ -221,181 +219,6 @@ SELECT DISTINCT id_a, id_b FROM (
 """
 
 
-def simhash64(text_col: Column, shingle: int = 4) -> Column:
-    """62-bit SimHash over character shingles — vectorized numpy bit-vote.
-
-    Two independent 31-bit hash streams per shingle (h1 = s, h2 = affine
-    reshuffle) supply bits 0-30 and 31-61; a bit is set when more than half
-    the shingles have it set. Mod-P arithmetic only, so simhash_sql_expr is
-    a bit-identical DuckDB twin. (A JVM higher-order-fn formulation needs 62
-    interpreted aggregate() passes per row — measured 39s for 500 docs;
-    this is one Arrow pass.)
-    """
-
-    @pandas_udf("long")
-    def _simhash(texts: pd.Series) -> pd.Series:
-        out = np.empty(len(texts), dtype=np.int64)
-        bitpos = np.arange(31, dtype=np.int64)
-        for n, t in enumerate(texts):
-            s = _shingle_hashes_np(t, shingle)
-            h2 = (s * GOLD + 98765) % P31
-            cnt = len(s)
-            word = np.int64(0)
-            for base, h in ((0, s), (31, h2)):
-                ones = ((h[:, None] >> bitpos) & 1).sum(axis=0)  # (31,)
-                setbits = np.nonzero(2 * ones > cnt)[0]
-                for i in setbits:
-                    word |= np.int64(1) << np.int64(base + i)
-            out[n] = word
-        return pd.Series(out)
-
-    return _simhash(text_col)
-
-
-def simhash_sql_expr(text: str, shingle: int = 4) -> str:
-    """DuckDB expr: same 62-bit simhash as simhash64."""
-    sh = shingle_hashes_sql_expr(text, shingle)
-    votes1 = (
-        f"list_sum(list_transform(generate_series(0, 30), b -> "
-        f"CASE WHEN 2 * list_sum(list_transform(__sh, h -> (h >> b) & 1)) > len(__sh) "
-        f"THEN (CAST(1 AS BIGINT) << b) ELSE 0 END))"
-    )
-    votes2 = (
-        f"list_sum(list_transform(generate_series(0, 30), b -> "
-        f"CASE WHEN 2 * list_sum(list_transform(__h2, h -> (h >> b) & 1)) > len(__h2) "
-        f"THEN (CAST(1 AS BIGINT) << (b + 31)) ELSE 0 END))"
-    )
-    return (
-        f"(SELECT CAST({votes1} + {votes2} AS BIGINT) "
-        f"FROM (SELECT __sh, list_transform(__sh, s -> (s * {GOLD} + 98765) % {P31}) AS __h2 "
-        f"FROM (SELECT {sh} AS __sh)))"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Image near-dup: perceptual-hash hamming banding (images table phash column)
-# ---------------------------------------------------------------------------
-
-def phash_hamming_pairs(df: DataFrame, id_col: str = "image_id",
-                        phash_col: str = "phash", k: int = 3, bands: int = 4,
-                        max_bucket: int = 1000) -> DataFrame:
-    """Near-duplicate image pairs by 64-bit perceptual-hash hamming distance.
-
-    The image twin of minhash_lsh_candidates: web-scale image dedup keys on
-    pHash hamming <= k (re-encodes/resizes perturb a few bits), not exact
-    equality (phash_dedup covers that). Reference scope: the
-    per-tile phash dedup of the north rule generalized to cross-variant
-    near-duplicates.
-
-    Banding guarantee (pigeonhole): split the 64-bit phash into `bands`
-    disjoint bit-bands; any pair with hamming distance k < bands agrees
-    EXACTLY on at least one band, so the band equi-join is a LOSSLESS
-    candidate generator FOR BUCKETS WITHIN max_bucket — no recall loss
-    there, unlike probabilistic LSH. Shuffle is linear in rows (bands
-    copies); per-bucket pair output is capped at max_bucket^2, with the
-    hot-bucket star fallback (identical-phash cliques at web scale)
-    emitting O(B) representative pairs instead of O(B^2). Inside a hot
-    bucket only rep-connectivity is guaranteed: a pair whose every agreeing
-    band is hot is seen only as (rep, a), (rep, b) star candidates, and if
-    both are within k of each other but beyond k of the rep, the refine
-    drops it — the same bounded-recall trade minhash_lsh_candidates makes.
-    Raise max_bucket where full hot-bucket recall matters more than the
-    O(B^2) blowup. Candidates are then refined with
-    an exact popcount: every emitted pair satisfies bit_count(a XOR b) <= k
-    whichever candidate path found it.
-
-    Input must be unique per id (pre-aggregate otherwise). Output:
-    (id_a, id_b, hamming), id_a < id_b, distinct.
-
-    The slim (id, phash) projection is pinned before banding: the plan
-    below references it ~6x (band rows for sizes / both join sides / the
-    star arm), and an unpinned input re-executes its WHOLE upstream per
-    reference — for a decode-and-hash producer that is six image passes
-    per run. The pinned table is 16 bytes/row (the guide §8 proxy shape),
-    i.e. one cheap pass at any corpus size.
-    """
-    if not 1 <= k < bands:
-        raise ValueError(f"banding guarantee needs 1 <= k < bands, got k={k} bands={bands}")
-    if 64 % bands:
-        raise ValueError(f"bands must divide 64, got {bands}")
-    df = session.pin(df.select(id_col, phash_col))
-    width = 64 // bands
-    mask = (1 << width) - 1
-    # arithmetic shift + mask == unsigned bit extraction, and restates 1:1 in
-    # SQL (phash_hamming_sql) for signed phash values
-    buckets = F.array(*[
-        (F.shiftright(F.col(phash_col), i * width).bitwiseAND(F.lit(mask))
-         + F.lit(i * (mask + 1))).cast("long")
-        for i in range(bands)
-    ])
-    banded = df.select(F.col(id_col).alias("id"), F.col(phash_col).alias("ph"),
-                       F.explode(buckets).alias("bucket"))
-    sizes = banded.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("__n"), F.min("id").alias("__rep"),
-        F.min_by("ph", "id").alias("__rep_ph"))
-    ok = sizes.filter((F.col("__n") >= 2) & (F.col("__n") <= max_bucket)).select("bucket")
-    normal = banded.join(ok, on="bucket")
-    a, b = normal.alias("a"), normal.alias("b")
-    cand = (
-        a.join(b, on="bucket")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("a.ph").alias("ph_a"),
-                F.col("b.id").alias("id_b"), F.col("b.ph").alias("ph_b"))
-    )
-    hot = sizes.filter(F.col("__n") > max_bucket)
-    star = (
-        banded.join(hot, on="bucket")
-        .filter(F.col("id") != F.col("__rep"))
-        .select(F.col("__rep").alias("id_a"), F.col("__rep_ph").alias("ph_a"),
-                F.col("id").alias("id_b"), F.col("ph").alias("ph_b"))
-    )
-    cand = cand.unionByName(star)
-    # refine BEFORE the pair dedup (guide §2.3 — shuffle fewer bytes): the
-    # popcount is free codegen per candidate occurrence, so filtering
-    # hamming > k first shrinks the distinct's exchange by the refine
-    # selectivity (on real corpora most band collisions fail the refine),
-    # and projecting the hashes away first narrows the surviving rows from
-    # 4 longs to (id_a, id_b, int). Set-equal to distinct-then-refine
-    # because the input is unique per id, so ph_a/ph_b are functions of
-    # (id_a, id_b) — same pair set either way (the SQL twin keeps the
-    # distinct-first shape as an independent restatement).
-    return (
-        cand
-        .withColumn("hamming", F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))))
-        .filter(F.col("hamming") <= k)
-        .select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
-        .distinct()
-    )
-
-
-def phash_hamming_sql(src: str, k: int = 3, bands: int = 4,
-                      max_bucket: int = 1000) -> str:
-    """DuckDB twin of phash_hamming_pairs over `src`, a CTE/subquery yielding
-    (id, phash). Bit-identical band buckets, join, star fallback, refine."""
-    width = 64 // bands
-    mask = (1 << width) - 1
-    band_exprs = ", ".join(
-        f"((phash >> {i * width}) & {mask}) + {i * (mask + 1)}" for i in range(bands))
-    return f"""
-WITH __in AS ({src}),
-__b AS (SELECT id, phash AS ph, unnest([{band_exprs}]) AS bucket FROM __in),
-__sz AS (SELECT bucket, count(*) AS n, min(id) AS rep, arg_min(ph, id) AS rep_ph
-         FROM __b GROUP BY bucket),
-__f AS (SELECT __b.* FROM __b JOIN __sz USING (bucket)
-        WHERE n BETWEEN 2 AND {max_bucket}),
-__cand AS (
-  SELECT DISTINCT id_a, ph_a, id_b, ph_b FROM (
-    SELECT a.id AS id_a, a.ph AS ph_a, b.id AS id_b, b.ph AS ph_b
-    FROM __f a JOIN __f b USING (bucket) WHERE a.id < b.id
-    UNION ALL
-    SELECT __sz.rep, __sz.rep_ph, __b.id, __b.ph
-    FROM __b JOIN __sz USING (bucket)
-    WHERE n > {max_bucket} AND __b.id != __sz.rep))
-SELECT id_a, id_b, CAST(bit_count(xor(ph_a, ph_b)) AS INT) AS hamming
-FROM __cand WHERE bit_count(xor(ph_a, ph_b)) <= {k}
-"""
-
-
 # ---------------------------------------------------------------------------
 # Pairs -> clusters: connected components (transitive closure) in one task
 # ---------------------------------------------------------------------------
@@ -432,11 +255,11 @@ def _components(batches):
 def pair_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Transitive closure of a near-dup PAIR set into clusters with a
     deterministic min-id representative: (member_id, cluster_rep,
-    cluster_size). The step every candidate-pair operator here
-    (minhash_lsh_candidates, phash_hamming_pairs) needs before rows can
-    actually be dropped — pair (a,b)+(b,c) must yield ONE cluster {a,b,c}
-    with one keeper, the per-scope-complete semantics of the reference's
-    dictionary dedup (transform.rs:174-191) lifted to the whole dataset.
+    cluster_size). The step a candidate-pair operator such as
+    minhash_lsh_candidates needs before rows can actually be dropped — pair
+    (a,b)+(b,c) must yield ONE cluster {a,b,c} with one keeper, the
+    per-scope-complete semantics of the reference's dictionary dedup
+    (transform.rs:174-191) lifted to the whole dataset.
 
     One lazy pass, so building the frame runs no Spark job: the edges go
     through one exchange into a single partition, and one mapInArrow task
@@ -449,7 +272,7 @@ def pair_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> D
     Ids must be numeric (cast to long); pairs may arrive in any orientation,
     with duplicates, self-loops and null ids (the last two ignored). Nodes
     with no surviving pair do not appear — left-join from the corpus for
-    singleton handling (pair_clusters_with_corpus).
+    singleton handling.
     """
     return (pairs.select(F.col(id_a).cast("long").alias("u"),
                          F.col(id_b).cast("long").alias("v"))
@@ -457,28 +280,6 @@ def pair_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> D
             .repartition(1)
             .mapInArrow(_components,
                         "member_id long, cluster_rep long, cluster_size long"))
-
-
-def pair_clusters_with_corpus(corpus: DataFrame, pairs: DataFrame,
-                              id_col: str = "id", id_a: str = "id_a",
-                              id_b: str = "id_b") -> DataFrame:
-    """pair_clusters over the WHOLE corpus: rows with no near-dup pair come
-    back as size-1 clusters (their own rep) instead of silently vanishing —
-    the call every real dedup job makes (keep one row per cluster ==
-    `filter(member_id == cluster_rep)` keeps exactly the unique rows plus
-    one keeper per dup group). pair_clusters itself only emits nodes that
-    appear in a pair, which makes `corpus.join(clusters, ...)` without an
-    outer join a predictable row-loss mistake; this wrapper is that left
-    join done right. `id_col` values must be unique numeric row ids (the
-    same ids the pair generator used)."""
-    clusters = pair_clusters(pairs, id_a=id_a, id_b=id_b)
-    ids = corpus.select(F.col(id_col).cast("long").alias("member_id"))
-    return (ids.join(clusters, "member_id", "left")
-            .select("member_id",
-                    F.coalesce("cluster_rep", F.col("member_id"))
-                    .alias("cluster_rep"),
-                    F.coalesce("cluster_size", F.lit(1)).cast("long")
-                    .alias("cluster_size")))
 
 
 def pair_clusters_sql(pairs_src: str, id_a: str = "id_a",

@@ -72,27 +72,6 @@ class ExpressionCompileError(ValueError):
     """Raised at compile time — mirrors the reference's anyhow errors."""
 
 
-def rust_f64_display(x: float) -> str:
-    """Rust `f64::Display` formatting (shortest round-trip, never scientific).
-
-    Python repr() is also shortest-round-trip but uses exponent notation and
-    keeps a trailing `.0`; Rust prints 2.0 as "2" and 1e20 as
-    "100000000000000000000".
-    """
-    if x != x:
-        return "NaN"
-    if x in (float("inf"), float("-inf")):
-        return "inf" if x > 0 else "-inf"
-    r = repr(x)
-    if "e" in r or "E" in r:
-        # expand exponent notation without changing the digits
-        from decimal import Decimal
-
-        r = format(Decimal(r), "f")
-    if r.endswith(".0"):
-        r = r[:-2]
-    return r
-
 
 # ---------------------------------------------------------------------------
 # Compile-time (literal) values — mirrors ExpressionValue
@@ -716,26 +695,7 @@ def validate_expr(expr: Any) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Typed tag value helpers (MVT Value oneof analog as a Spark struct)
+# Typed tag value: the MVT Value oneof analog as a Spark struct
 # ---------------------------------------------------------------------------
 
 VALUE_STRUCT_DDL = "struct<t:int,s:string,i:bigint,f:double,fs:string,b:boolean>"
-TYPED_TAGS_DDL = f"map<string,{VALUE_STRUCT_DDL}>"
-
-
-def tv_string(s: str) -> dict:
-    return {"t": STRING, "s": s, "i": None, "f": None, "fs": None, "b": None}
-
-
-def tv_number(i: int) -> dict:
-    """int/uint/sint MVT values all land on Number (expression_compiler.rs:81-86)."""
-    return {"t": NUMBER, "s": None, "i": i, "f": None, "fs": None, "b": None}
-
-
-def tv_float(x: float) -> dict:
-    """float/double MVT values carry their Rust Display string."""
-    return {"t": FLOAT, "s": None, "i": None, "f": x, "fs": rust_f64_display(x), "b": None}
-
-
-def tv_bool(b: bool) -> dict:
-    return {"t": BOOL, "s": None, "i": None, "f": None, "fs": None, "b": b}

@@ -325,149 +325,3 @@ def knn_join_cells(data: DataFrame, queries: DataFrame, k: int, z: int = 7,
     return out.select(F.col("__qid").alias(query_id), "rank",
                       F.col("__did").alias("neighbor_id"), "dist2")
 
-
-def asof_join(left: DataFrame, right: DataFrame, on: str,
-              left_time: str = "ts", right_time: str | None = None,
-              value_cols: list[str] | None = None,
-              suffix: str = "_r") -> DataFrame:
-    """Backward as-of join: for every left row, attach the right row with
-    the greatest `right_time` <= `left_time` within the same `on` key
-    (inclusive ties, LEFT-join semantics — unmatched left rows keep NULL
-    value columns). The nearest-prior-event join every event pipeline needs
-    (last click before each purchase, last config before each reading) and
-    an operator Spark has no built-in for.
-
-    NOT a join under the hood: a join formulation needs an inequality
-    condition (range join -> O(n*m) explosion or a broadcast-only range
-    strategy). Instead both sides are UNIONED into one stream tagged
-    src=(0 right, 1 left), shuffled ONCE on the key, and a running
-    `last(value, ignorenulls)` window ordered by (time, src, value) fills
-    each left row with the latest right payload at or before it. Right
-    rows sort before left rows at equal times, which yields the inclusive
-    `>=` match; ordering by the value struct last makes duplicate
-    (key, time) right rows resolve deterministically (max struct wins) —
-    dedupe the right side on (key, time) upstream if a different winner is
-    wanted. Rows with NULL time sort first and so never match anything.
-
-    100 TB notes: cost is one hash shuffle of |L|+|R| rows plus a per-key
-    sort — map-side combinable nowhere, but no pair blowup and no driver
-    state. Each key's rows pass through one task: fine for the usual
-    many-keys regime; a single giant key (one global time series) instead
-    wants a range-partition + per-partition-carry variant, which this
-    operator intentionally does not pay for.
-    DuckDB twin: native `ASOF LEFT JOIN` (semantics verified identical on
-    inclusive ties by the contract query).
-    """
-    from pyspark.sql import Window
-
-    right_time = right_time or left_time
-    value_cols = value_cols or [c for c in right.columns
-                                if c not in {on, right_time}]
-    vtype = None
-    r = right.select(
-        F.col(on).alias("__k"), F.col(right_time).alias("__t"),
-        F.struct(*[F.col(c) for c in value_cols]).alias("__v"),
-        F.lit(0).alias("__src"))
-    vtype = r.schema["__v"].dataType
-    lcols = list(left.columns)
-    l_ = left.select(
-        *lcols, F.col(on).alias("__k"), F.col(left_time).alias("__t"),
-        F.lit(None).cast(vtype).alias("__v"), F.lit(1).alias("__src"))
-    r_full = r.select(
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
-        "__k", "__t", "__v", "__src")
-    u = l_.unionByName(r_full)
-    w = (Window.partitionBy("__k").orderBy("__t", "__src", "__v")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    u = u.withColumn("__m", F.last("__v", ignorenulls=True).over(w))
-    out = u.filter(F.col("__src") == 1)
-    for c in value_cols:
-        out = out.withColumn(c + suffix, F.col(f"__m.{c}"))
-    return out.drop("__k", "__t", "__v", "__src", "__m")
-
-
-# ---------------------------------------------------------------------------
-# Interval (point-in-range) join via bucketed equi-join
-# ---------------------------------------------------------------------------
-
-def interval_join(points: DataFrame, intervals: DataFrame, *,
-                  point_col: str, start_col: str, end_col: str,
-                  bucket_width: int,
-                  max_buckets_per_interval: int = 4096,
-                  overflow: str = "error") -> DataFrame:
-    """INNER join of point rows to every interval row with
-    start <= point <= end (numeric columns; cast timestamps to epoch
-    micros upstream). A 1-D tile cover, and the general-range sibling of
-    `asof_join`.
-
-    Spark's own plan for an inequality-only join is a broadcast
-    nested-loop or a full cartesian — O(|P|*|I|) at any scale. Here both
-    sides are bucketized on floor(value / bucket_width): each interval is
-    exploded to its covered buckets (slim rows), each point to exactly ONE
-    bucket, and a plain equi-join + exact range refine does the rest.
-    Because a point has one bucket, no output dedup pass is needed.
-
-    Scale shape:
-    - shuffle is |P| + sum(interval spans / bucket_width) rows on the
-      bucket key; choose bucket_width ~ the median interval length so
-      short intervals cost 1-2 cover rows.
-    - hot buckets (many points AND many intervals at the same time) are
-      output-size-bound, handled by AQE skew-join splitting.
-    - pathologically long intervals would explode the cover; the
-      assert_true guard fails fast at max_buckets_per_interval (overflow=
-      "error"). overflow="broadcast" instead routes ONLY the oversized
-      intervals through a broadcast range arm (sound for the few
-      global-span intervals real data has; the arm is a deliberate
-      BroadcastNestedLoopJoin, so a plan containing it passes the
-      no-cartesian gate only if scripts/plan_audit.py lists it in
-      CARTESIAN_OK).
-
-    Column names of `points` and `intervals` must be disjoint; both sides'
-    columns pass through to the output.
-    """
-    dup = set(points.columns) & set(intervals.columns)
-    if dup:
-        raise ValueError(f"interval_join: overlapping column names {sorted(dup)}")
-    if overflow not in ("error", "broadcast"):
-        raise ValueError("interval_join: overflow must be 'error' or 'broadcast'")
-    w = int(bucket_width)
-    if w <= 0:
-        raise ValueError("interval_join: bucket_width must be positive")
-
-    # floor(x / w) via double division: monotone (IEEE division rounds to
-    # nearest, preserving <=), and identical on both sides, so a point in
-    # [start, end] always lands inside the interval's [b0, b1] cover.
-    def _bucket(c):
-        return F.floor(c / F.lit(float(w))).cast("long")
-
-    p, s, e = F.col(point_col), F.col(start_col), F.col(end_col)
-    # NULL-endpoint intervals can never match (SQL range predicate is never
-    # true) — drop them up front: assert_true would otherwise RAISE on the
-    # NULL cap comparison with a misleading span message.
-    iv = (intervals.filter(s.isNotNull() & e.isNotNull())
-          .withColumns({"__b0": _bucket(s), "__b1": _bucket(e)}))
-    nb = F.col("__b1") - F.col("__b0") + 1
-
-    pt = points.withColumn("__b", _bucket(p))
-    refine = (s <= p) & (p <= e)
-
-    if overflow == "error":
-        guard = F.assert_true(
-            nb <= F.lit(max_buckets_per_interval),
-            F.concat(F.lit("interval_join: interval spans "), nb.cast("string"),
-                     F.lit(f" buckets > max_buckets_per_interval="
-                           f"{max_buckets_per_interval}; raise bucket_width, "
-                           "raise the cap, or use overflow='broadcast'")))
-        iv = iv.withColumn("__b0", F.when(guard.isNull(), F.col("__b0")))
-        short, long_ = iv, None
-    else:
-        short = iv.filter(nb <= F.lit(max_buckets_per_interval))
-        long_ = iv.filter(nb > F.lit(max_buckets_per_interval))
-
-    cover = short.withColumn("__b", F.explode(F.sequence("__b0", "__b1"))) \
-                 .drop("__b0", "__b1")
-    out = pt.join(cover, on="__b").filter(refine).drop("__b")
-    if long_ is not None:
-        arm = pt.drop("__b").join(F.broadcast(long_.drop("__b0", "__b1")), refine)
-        out = out.unionByName(arm)
-    return out

@@ -6,9 +6,9 @@ mechanical checks a scale-reviewer asks first:
     projection must not read 16 columns);
   * WholeStageCodegen coverage — fraction of plan operators inside codegen
     spans (Python/Arrow stages are expected exceptions, listed);
-  * red-flag scan — CartesianProduct / BroadcastNestedLoopJoin outside the
-    explicitly-labeled brute-force baselines, and driver-side collects
-    (none of the audited plans may contain them).
+  * red-flag scan — CartesianProduct / BroadcastNestedLoopJoin stages and
+    single-partition funnels (none of the audited plans may contain them,
+    bar the closure exemption below).
 
 Usage: python scripts/plan_audit.py [sf_dir]  (default /root/testdata/sf0.001)
 """
@@ -30,36 +30,18 @@ AUDIT = [
     ("pyramid_rollup", "iterative parent rollup (geometric agg chain)"),
     ("pip_join", "broadcast native PIP mask — must be zero-shuffle"),
     ("minhash_lsh", "LSH banding: explode + equi-join + star fallback"),
-    ("phash_neardup", "hamming banding: explode + equi-join + popcount refine"),
     ("tile_encode", "ordered archive sink: range partition + sorted mapInPandas"),
-    ("asof_join", "union-stream as-of join: one key shuffle, no range-join blowup"),
-    ("interval_join", "range join as bucketed equi-join — must have NO nested-loop stage"),
     ("cell_cover_join", "S2 cover join: broadcast region cells, no geometry shuffle"),
-    ("morans_i", "tile counts + 8-offset neighbor equi-join; scalar join on constant key"),
-    ("hot_tiles", "Gi*: 9-offset explode + groupBy + tile equi-join + 1-row scalar broadcast"),
     ("minhash_clusters", "minhash LSH pairs -> pair_clusters closure"),
-    ("tile_smooth", "separable 5x5 binomial: two 1-D explode+groupBy passes (10 taps, not 25)"),
 ]
 
-# queries whose plans legitimately contain a cartesian/broadcast-NLJ stage:
-# morans_i joins two ONE-ROW scalar aggregates on a constant key (Catalyst
-# folds the trivially-true condition into a 1x1 broadcast-NLJ)
-CARTESIAN_OK = {"morans_i", "hot_tiles"}
 # queries whose plans legitimately contain a SinglePartition exchange:
-# morans_i and hot_tiles combine one global scalar row from an already
-# partial-aggregated tile table (at most 4^z rows), so the data rows never
-# pass through it; morans_i produces that scalar itself, hot_tiles
-# broadcasts it into the per-tile join. minhash_clusters runs the
-# pair_clusters closure, one task by design: its single partition holds the
-# candidate edges only, 16 B per edge.
-SINGLE_PARTITION_OK = {"morans_i", "hot_tiles", "minhash_clusters"}
+# minhash_clusters runs the pair_clusters closure, one task by design: its
+# single partition holds the candidate edges only, 16 B per edge.
+SINGLE_PARTITION_OK = {"minhash_clusters"}
 # widest permitted parquet ReadSchema in an audited plan (column pruning
-# gate: every audited query projects a handful of columns). Per-query
-# overrides for queries that GENUINELY consume more: asof_join reads 5 of
-# events' 6 columns (event_id, ts, user_id, event_type, value) — still
-# pruned (props, the widest column, is dropped).
+# gate: every audited query projects a handful of columns).
 MAX_SCAN_COLS = 4
-SCAN_COLS_OK = {"asof_join": 5}
 
 
 def formatted_plan(df) -> str:
@@ -104,13 +86,11 @@ def plan_red_flags(name: str, plan: str) -> list[str]:
     clean. Shared by the audit printer and tests/test_plans.py so plan
     regressions fail CI instead of waiting for a judge."""
     flags = []
-    if (re.search(r"CartesianProduct|BroadcastNestedLoopJoin", plan)
-            and name not in CARTESIAN_OK):
-        flags.append("unexpected cartesian / broadcast-NLJ stage")
+    if re.search(r"CartesianProduct|BroadcastNestedLoopJoin", plan):
+        flags.append("cartesian / broadcast-NLJ stage")
     if "SinglePartition" in plan and name not in SINGLE_PARTITION_OK:
         flags.append("single-partition exchange (global window/sort funnel)")
-    limit = SCAN_COLS_OK.get(name, MAX_SCAN_COLS)
-    wide = [n for n in read_schema_ncols(plan) if n > limit]
+    wide = [n for n in read_schema_ncols(plan) if n > MAX_SCAN_COLS]
     if wide:
         flags.append(f"unpruned parquet scan reading {max(wide)} columns")
     return flags
@@ -135,7 +115,7 @@ def main() -> None:
         "# Physical-plan audit (generated by scripts/plan_audit.py)\n\n"
         f"Input: `{sf_dir}`. Checks: parquet scan column pruning "
         "(ReadSchema), WholeStageCodegen coverage, and a red-flag scan for "
-        "cartesian stages outside the labeled brute-force baselines. "
+        "cartesian stages. "
         "Arrow/Python stages (mapInPandas / ArrowEvalPython) are the "
         "expected codegen breaks — they carry the vectorized numpy kernels.\n")
     failures = []
@@ -156,12 +136,9 @@ def main() -> None:
         verdict = plan_red_flags(name, plan)
         if verdict:
             failures.append(name)
-        if name in CARTESIAN_OK and re.search(
-                r"CartesianProduct|BroadcastNestedLoopJoin", plan):
-            verdict.append("cartesian (labeled baseline — expected)")
         if name in SINGLE_PARTITION_OK and "SinglePartition" in plan:
-            verdict.append("single-partition exchange (a one-row global "
-                           "scalar, or the closure's edges) — expected")
+            verdict.append("single-partition exchange (the closure's "
+                           "edges) — expected")
         if not verdict:
             verdict.append("ok")
 

@@ -3,12 +3,17 @@
 Mirrors /root/reference/src/filtering/{expression_compiler.rs,executor.rs}
 one-to-one. Values are ("null"|"string"|"number"|"float"|"bool"|"array",
 payload) tuples; floats carry their Display string like the reference.
+
+Also the builders of the compiler's typed tag rows (the MVT Value oneof as a
+Spark struct), which the tests feed to the Catalyst side.
 """
 
 from __future__ import annotations
 
 import re
 from typing import Any
+
+from mvt_wrangler_spark.operators.expr import BOOL, FLOAT, NUMBER, STRING, VALUE_STRUCT_DDL
 
 Value = tuple  # (kind, payload)
 
@@ -177,3 +182,46 @@ def evaluate(expr: Any, ctx: Context) -> Value:
 
 def evaluate_bool(expr: Any, ctx: Context) -> bool:
     return to_bool(evaluate(expr, ctx))
+
+
+def rust_f64_display(x: float) -> str:
+    """Rust `f64::Display` formatting (shortest round-trip, never scientific).
+
+    Python repr() is also shortest-round-trip but uses exponent notation and
+    keeps a trailing `.0`; Rust prints 2.0 as "2" and 1e20 as
+    "100000000000000000000".
+    """
+    if x != x:
+        return "NaN"
+    if x in (float("inf"), float("-inf")):
+        return "inf" if x > 0 else "-inf"
+    r = repr(x)
+    if "e" in r or "E" in r:
+        # expand exponent notation without changing the digits
+        from decimal import Decimal
+
+        r = format(Decimal(r), "f")
+    if r.endswith(".0"):
+        r = r[:-2]
+    return r
+
+
+TYPED_TAGS_DDL = f"map<string,{VALUE_STRUCT_DDL}>"
+
+
+def tv_string(s: str) -> dict:
+    return {"t": STRING, "s": s, "i": None, "f": None, "fs": None, "b": None}
+
+
+def tv_number(i: int) -> dict:
+    """int/uint/sint MVT values all land on Number (expression_compiler.rs:81-86)."""
+    return {"t": NUMBER, "s": None, "i": i, "f": None, "fs": None, "b": None}
+
+
+def tv_float(x: float) -> dict:
+    """float/double MVT values carry their Rust Display string."""
+    return {"t": FLOAT, "s": None, "i": None, "f": x, "fs": rust_f64_display(x), "b": None}
+
+
+def tv_bool(b: bool) -> dict:
+    return {"t": BOOL, "s": None, "i": None, "f": None, "fs": None, "b": b}

@@ -9,8 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
-from mvt_wrangler_spark.functions import cells as C
-from tests.oracle.cells_oracle import s2_parent
+from tests.oracle.cells_oracle import s2_cell_id, s2_parent
 
 
 @pytest.mark.spark
@@ -18,7 +17,7 @@ def test_s2_parent_column_matches_numpy(spark):
     rng = np.random.RandomState(3)
     lat = rng.uniform(-85, 85, 300)
     lng = rng.uniform(-180, 180, 300)
-    cell12 = C.s2_cell_id(lat, lng, level=12)
+    cell12 = s2_cell_id(lat, lng, level=12)
     # faces 4-5 produce negative int64 ids — the regression this test pins
     assert (cell12 < 0).any() and (cell12 > 0).any()
     df = spark.createDataFrame(
@@ -30,7 +29,7 @@ def test_s2_parent_column_matches_numpy(spark):
         for i in range(len(cell12)):
             assert got[i] == int(want[i]), (lvl, i)
         # a parent must equal encoding the same point directly at that level
-        direct = C.s2_cell_id(lat, lng, level=lvl)
+        direct = s2_cell_id(lat, lng, level=lvl)
         assert (want == direct).all()
 
 
@@ -40,7 +39,7 @@ def test_s2_parent_sql_twin_matches():
     rng = np.random.RandomState(5)
     lat = rng.uniform(-85, 85, 200)
     lng = rng.uniform(-180, 180, 200)
-    cells = C.s2_cell_id(lat, lng, level=12)
+    cells = s2_cell_id(lat, lng, level=12)
     con = duckdb.connect()
     con.execute("CREATE TABLE t AS SELECT * FROM (VALUES "
                 + ",".join(f"({int(c)})" for c in cells) + ") v(cell)")

@@ -6,26 +6,33 @@ import numpy as np
 import pytest
 
 from mvt_wrangler_spark.functions import cells as C
-from tests.oracle.cells_oracle import h3_unpack, s2_level, s2_parent
+from tests.oracle.cells_oracle import (
+    h3_cell,
+    h3_unpack,
+    s2_cell_id,
+    s2_face_uv,
+    s2_level,
+    s2_parent,
+)
 
 
 def test_s2_faces_at_axes():
     # face = dominant axis of the direction vector (s2 cube projection)
     lat = np.array([0.0, 0.0, 90.0, 0.0, 0.0, -90.0])
     lng = np.array([0.0, 90.0, 0.0, 180.0, -90.0, 0.0])
-    face, u, v = C.s2_face_uv(lat, lng)
+    face, u, v = s2_face_uv(lat, lng)
     assert face.tolist() == [0, 1, 2, 3, 4, 5]
     assert np.allclose(u, 0, atol=1e-12) and np.allclose(v, 0, atol=1e-12)
 
 
 def test_s2_id_structure():
-    ids = C.s2_cell_id(np.array([35.68]), np.array([139.76]), level=30)
+    ids = s2_cell_id(np.array([35.68]), np.array([139.76]), level=30)
     c = int(ids[0])
     assert c & 1 == 1  # level-30 sentinel
     assert 0 <= (c >> 61) & 0x7 <= 5
     assert s2_level(c) == 30
     for lvl in (0, 5, 12, 29):
-        p = C.s2_cell_id(np.array([35.68]), np.array([139.76]), level=lvl)
+        p = s2_cell_id(np.array([35.68]), np.array([139.76]), level=lvl)
         assert s2_level(int(p[0])) == lvl
 
 
@@ -33,25 +40,25 @@ def test_s2_parent_is_prefix():
     rng = np.random.default_rng(42)
     lat = rng.uniform(-89, 89, 500)
     lng = rng.uniform(-180, 180, 500)
-    fine = C.s2_cell_id(lat, lng, level=20)
+    fine = s2_cell_id(lat, lng, level=20)
     for lvl in (0, 4, 10, 19):
-        direct = C.s2_cell_id(lat, lng, level=lvl)
+        direct = s2_cell_id(lat, lng, level=lvl)
         via_parent = s2_parent(fine, lvl)
         assert np.array_equal(direct, via_parent)
 
 
 def test_s2_locality():
     """Nearby points at coarse level share a cell; far points don't."""
-    base = C.s2_cell_id(np.array([35.68]), np.array([139.76]), level=8)
-    near = C.s2_cell_id(np.array([35.681]), np.array([139.761]), level=8)
-    far = C.s2_cell_id(np.array([-33.0]), np.array([18.0]), level=8)
+    base = s2_cell_id(np.array([35.68]), np.array([139.76]), level=8)
+    near = s2_cell_id(np.array([35.681]), np.array([139.761]), level=8)
+    far = s2_cell_id(np.array([-33.0]), np.array([18.0]), level=8)
     assert base[0] == near[0] != far[0]
 
 
 def test_s2_deterministic_known_values():
     """Pin the exact ids so any refactor that changes bits fails loudly."""
-    got = C.s2_cell_id(np.array([0.0, 35.68, -45.0]), np.array([0.0, 139.76, 170.0]), 12)
-    again = C.s2_cell_id(np.array([0.0, 35.68, -45.0]), np.array([0.0, 139.76, 170.0]), 12)
+    got = s2_cell_id(np.array([0.0, 35.68, -45.0]), np.array([0.0, 139.76, 170.0]), 12)
+    again = s2_cell_id(np.array([0.0, 35.68, -45.0]), np.array([0.0, 139.76, 170.0]), 12)
     assert np.array_equal(got, again)
     assert len(set(got.tolist())) == 3
 
@@ -61,19 +68,19 @@ def test_h3_hierarchy_and_locality():
     lat = rng.uniform(-85, 85, 1000)
     lng = rng.uniform(-180, 180, 1000)
     for res in (0, 3, 7, 13):
-        ids = C.h3_cell(lat, lng, res)
+        ids = h3_cell(lat, lng, res)
         faces = ids >> 49
         assert ((faces >= 0) & (faces < 20)).all()
         res_bits = (ids >> 45) & 0xF
         assert (res_bits == res).all()
     # finer res -> more distinct cells
-    n3 = len(np.unique(C.h3_cell(lat, lng, 3)))
-    n7 = len(np.unique(C.h3_cell(lat, lng, 7)))
+    n3 = len(np.unique(h3_cell(lat, lng, 3)))
+    n7 = len(np.unique(h3_cell(lat, lng, 7)))
     assert n7 > n3
     # locality
-    a = C.h3_cell(np.array([35.68]), np.array([139.76]), 6)
-    b = C.h3_cell(np.array([35.6801]), np.array([139.7601]), 6)
-    c = C.h3_cell(np.array([-35.0]), np.array([-60.0]), 6)
+    a = h3_cell(np.array([35.68]), np.array([139.76]), 6)
+    b = h3_cell(np.array([35.6801]), np.array([139.7601]), 6)
+    c = h3_cell(np.array([-35.0]), np.array([-60.0]), 6)
     assert a[0] == b[0] != c[0]
 
 
@@ -83,13 +90,13 @@ def test_h3_aperture7_growth():
     # sample densely inside one metro region (single face)
     lat = rng.uniform(30, 40, 20000)
     lng = rng.uniform(130, 145, 20000)
-    n = [len(np.unique(C.h3_cell(lat, lng, r))) for r in (4, 5, 6)]
+    n = [len(np.unique(h3_cell(lat, lng, r))) for r in (4, 5, 6)]
     assert 4.5 < n[1] / n[0] < 9.5
     assert 4.5 < n[2] / n[1] < 9.5
 
 
 def test_h3_unpack_roundtrip():
-    ids = C.h3_cell(np.array([51.5, -10.0]), np.array([-0.1, 100.0]), 9)
+    ids = h3_cell(np.array([51.5, -10.0]), np.array([-0.1, 100.0]), 9)
     for c in ids:
         face, res, q, r = h3_unpack(int(c))
         assert 0 <= face < 20 and res == 9
@@ -129,8 +136,8 @@ def test_fused_cells_column_matches_separate(spark):
     fused = (df.withColumn("c", C.cells_column(F.col("lat"), F.col("lon"),
                                                level=12, res=7))
              .select("id", "c.s2_cell", "c.h3_cell").collect())
-    want_s2 = C.s2_cell_id(lats, lons, 12)
-    want_h3 = C.h3_cell(lats, lons, 7)
+    want_s2 = s2_cell_id(lats, lons, 12)
+    want_h3 = h3_cell(lats, lons, 7)
     got = {r.id: (r.s2_cell, r.h3_cell) for r in fused}
     for i in range(500):
         assert got[i] == (want_s2[i], want_h3[i])

@@ -1,6 +1,6 @@
-"""Near-dup operators (MinHash, SimHash, phash hamming, pair_clusters)
-against their DuckDB twins and brute-force oracles, including the hot-bucket
-cap under adversarial (all-identical) input."""
+"""Near-dup operators (MinHash, pair_clusters) against their DuckDB twins
+and brute-force oracles, including the hot-bucket cap under adversarial
+(all-identical) input."""
 
 from __future__ import annotations
 
@@ -66,13 +66,6 @@ def test_minhash_and_simhash_similarity_behavior(spark):
     cand = {(r.id_a, r.id_b) for r in D.minhash_lsh_candidates(docs).collect()}
     assert (1, 2) in cand and (1, 3) not in cand
 
-    sh = {r.doc_id: r.s for r in
-          docs.select("doc_id", D.simhash64(F.col("text")).alias("s")).collect()}
-    d12 = bin(sh[1] ^ sh[2]).count("1")
-    d13 = bin(sh[1] ^ sh[3]).count("1")
-    assert d12 < d13
-    assert all(0 <= v < (1 << 62) for v in sh.values())
-
 
 @pytest.mark.spark
 def test_minhash_wide_band_and_unicode_match_duckdb(spark):
@@ -114,109 +107,6 @@ def test_minhash_wide_band_and_unicode_match_duckdb(spark):
         finally:
             con.close()
         assert got == want, f"num_hashes={num_hashes} bands={bands}"
-
-
-@pytest.mark.spark
-def test_simhash_unicode_matches_duckdb(spark):
-    import duckdb
-
-    rows = [(1, "über café naïve"), (2, "日本語 テスト 文書"), (3, "plain ascii words")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r.s for r in
-           docs.select("doc_id", D.simhash64(F.col("text")).alias("s")).collect()}
-    con = duckdb.connect()
-    try:
-        con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
-        con.executemany("INSERT INTO d VALUES (?, ?)", rows)
-        want = dict(con.execute(
-            f"SELECT doc_id, {D.simhash_sql_expr('text')} FROM d").fetchall())
-    finally:
-        con.close()
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# phash hamming near-dup (banding guarantee + popcount refine)
-# ---------------------------------------------------------------------------
-
-def _brute_hamming_pairs(ids, codes, k):
-    out = set()
-    for i in range(len(ids)):
-        for j in range(i + 1, len(ids)):
-            if bin((codes[i] ^ codes[j]) & ((1 << 64) - 1)).count("1") <= k:
-                a, b = sorted((ids[i], ids[j]))
-                out.add((a, b))
-    return out
-
-
-@pytest.mark.spark
-def test_phash_hamming_matches_bruteforce(spark):
-    """Lossless banding: with k < bands every hamming<=k pair must appear —
-    random signed 64-bit codes plus planted few-bit perturbations."""
-    rng = np.random.default_rng(11)
-    codes = rng.integers(-(2 ** 63), 2 ** 63, size=80, dtype=np.int64)
-    for t in range(20):  # plant near-dups at hamming 1..3 of earlier rows
-        flips = rng.choice(64, size=1 + t % 3, replace=False)
-        v = codes[t]
-        for p in flips:
-            v = np.int64(v) ^ np.int64(np.uint64(1) << np.uint64(p))
-        codes[79 - t] = v
-    ids = list(range(80))
-    df = spark.createDataFrame(
-        [(i, int(c)) for i, c in zip(ids, codes)], "image_id long, phash long")
-    got = {(r.id_a, r.id_b): r.hamming
-           for r in D.phash_hamming_pairs(df, id_col="image_id", k=3).collect()}
-    want = _brute_hamming_pairs(ids, [int(c) & ((1 << 64) - 1) for c in codes], 3)
-    assert set(got) == want
-    for (a, b), h in got.items():
-        assert h == bin((int(codes[a]) ^ int(codes[b])) & ((1 << 64) - 1)).count("1")
-
-
-@pytest.mark.spark
-def test_phash_hamming_hot_bucket_star(spark):
-    """Adversarial identical-phash clique: output stays linear (star pairs
-    against the min-id representative), every member stays connected."""
-    n = 300
-    rows = [(i, 1234567890123) for i in range(n)]
-    df = spark.createDataFrame(rows, "image_id long, phash long")
-    pairs = D.phash_hamming_pairs(df, id_col="image_id", k=3, max_bucket=50).collect()
-    assert len(pairs) == n - 1  # star, not the C(300,2)=44850 clique
-    assert all(r.id_a == 0 and r.hamming == 0 for r in pairs)
-    assert {r.id_b for r in pairs} == set(range(1, n))
-
-
-@pytest.mark.spark
-def test_phash_hamming_refine_before_dedup(spark):
-    """Pin the r07 refine-then-distinct internals: a pair that agrees on
-    SEVERAL bands yields duplicate candidate occurrences that must collapse
-    to ONE output row, and a same-band candidate beyond k must be dropped
-    by the popcount refine (it never reaches the pair dedup) — both checked
-    against brute force, which is blind to the operator's ordering."""
-    rows = []
-    for i in range(10):
-        base = (i * 0x9E3779B97F4A7C15) & ((1 << 64) - 1)
-        # hamming 2, flipped in bands 0 and 3 -> agrees on bands 1+2
-        # (duplicate candidates), survives the k=3 refine
-        near = base ^ (1 << 1) ^ (1 << 62)
-        # hamming 8 inside band 2 -> agrees on bands 0,1,3 (three candidate
-        # occurrences), all dropped by the refine
-        far = base ^ (0xFF << 40)
-        rows += [(3 * i, base), (3 * i + 1, near), (3 * i + 2, far)]
-    signed = lambda v: v - (1 << 64) if v >= (1 << 63) else v  # noqa: E731
-    df = spark.createDataFrame([(i, signed(c)) for i, c in rows],
-                               "image_id long, phash long")
-    got = {(r.id_a, r.id_b): r.hamming
-           for r in D.phash_hamming_pairs(df, id_col="image_id", k=3).collect()}
-    want = _brute_hamming_pairs([i for i, _ in rows], [c for _, c in rows], 3)
-    assert set(got) == want
-    assert all(h <= 3 for h in got.values())
-
-
-def test_phash_hamming_validates_params():
-    with pytest.raises(ValueError):
-        D.phash_hamming_pairs(None, k=4, bands=4)
-    with pytest.raises(ValueError):
-        D.phash_hamming_pairs(None, k=3, bands=5)
 
 
 # ---------------------------------------------------------------------------
@@ -316,13 +206,12 @@ def test_pair_clusters_path_and_components(spark, base):
 
 @pytest.mark.spark
 def test_pair_clusters_clique_through_star_fallback(spark):
-    """300 identical phashes through phash_hamming_pairs with a tiny
+    """300 identical texts through minhash_lsh_candidates with a tiny
     max_bucket: hot buckets emit only star pairs, and pair_clusters must
     still recover the single 300-member cluster with the min id as rep."""
-    rows = [(i, 0x0F0F0F0F) for i in range(300)]
-    ph = spark.createDataFrame(rows, "id long, phash long")
-    pairs = D.phash_hamming_pairs(ph, id_col="id", phash_col="phash",
-                                  k=3, bands=4, max_bucket=50)
+    rows = [(i, "the same caption copied across the whole batch") for i in range(300)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = D.minhash_lsh_candidates(docs, max_bucket=50)
     # star fallback keeps output linear, not 300*299/2
     n_pairs = pairs.count()
     assert n_pairs < 1000
@@ -413,10 +302,12 @@ def test_pair_clusters_with_corpus_singletons(spark):
     """Unpaired corpus rows come back as size-1 clusters (their own rep);
     keeping `member_id == cluster_rep` yields exactly uniques + one keeper
     per dup group."""
+    from tests.test_incremental import pair_clusters_with_corpus
+
     corpus = spark.createDataFrame([(i,) for i in range(10)], "id long")
     pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
                                   "id_a long, id_b long")
-    out = D.pair_clusters_with_corpus(corpus, pairs, id_col="id")
+    out = pair_clusters_with_corpus(corpus, pairs, id_col="id")
     rows = {r.member_id: (r.cluster_rep, r.cluster_size)
             for r in out.collect()}
     assert len(rows) == 10

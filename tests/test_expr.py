@@ -126,27 +126,27 @@ def test_compile_errors():
 
 
 def test_rust_f64_display():
-    assert E.rust_f64_display(2.0) == "2"
-    assert E.rust_f64_display(3.41) == "3.41"
-    assert E.rust_f64_display(0.0) == "0"
-    assert E.rust_f64_display(-0.0) == "-0"
-    assert E.rust_f64_display(1e20) == "100000000000000000000"
-    assert E.rust_f64_display(1.5e-5) == "0.000015"
+    assert O.rust_f64_display(2.0) == "2"
+    assert O.rust_f64_display(3.41) == "3.41"
+    assert O.rust_f64_display(0.0) == "0"
+    assert O.rust_f64_display(-0.0) == "-0"
+    assert O.rust_f64_display(1e20) == "100000000000000000000"
+    assert O.rust_f64_display(1.5e-5) == "0.000015"
 
 
 @pytest.mark.spark
 def test_spark_reference_cases(spark):
     """One row per (case, key-variant), all expressions evaluated in one select."""
     tags = {
-        "name": E.tv_string("Central Park"),
-        "kind": E.tv_string("park"),
-        "area": E.tv_float(3.41),
-        "public": E.tv_bool(True),
-        "capacity": E.tv_number(1000),
+        "name": O.tv_string("Central Park"),
+        "kind": O.tv_string("park"),
+        "area": O.tv_float(3.41),
+        "public": O.tv_bool(True),
+        "capacity": O.tv_number(1000),
     }
     df = spark.createDataFrame(
         [(tags, "name:en", "Polygon")],
-        f"tags {E.TYPED_TAGS_DDL}, cur_key string, geom_type string",
+        f"tags {O.TYPED_TAGS_DDL}, cur_key string, geom_type string",
     )
     ctx = E.ColumnContext(
         tags=F.col("tags"), key=F.col("cur_key"), geom_type=F.col("geom_type"), typed=True
@@ -157,7 +157,7 @@ def test_spark_reference_cases(spark):
         assert row[f"c{i}"] == want, e
 
     kdf = spark.createDataFrame([(tags, k, "Polygon") for k, _ in KEY_VARIANTS],
-                                f"tags {E.TYPED_TAGS_DDL}, cur_key string, geom_type string")
+                                f"tags {O.TYPED_TAGS_DDL}, cur_key string, geom_type string")
     out = kdf.select(F.col("cur_key"), E.compile_expr(KEEP_LIST, ctx).alias("r")).collect()
     got = {r.cur_key: r.r for r in out}
     for k, want in KEY_VARIANTS:
@@ -239,13 +239,13 @@ def test_property_spark_matches_oracle(spark):
         if r < 0.6:
             return ("number", rng.randint(-5, 5))
         if r < 0.8:
-            return ("float", E.rust_f64_display(rng.choice([0.0, 1.5, -2.25, 2.0])))
+            return ("float", O.rust_f64_display(rng.choice([0.0, 1.5, -2.25, 2.0])))
         return ("bool", rng.random() < 0.5)
 
     def to_tv(v):
         k, p = v
-        return {"string": lambda: E.tv_string(p), "number": lambda: E.tv_number(p),
-                "float": lambda: E.tv_float(float(p)), "bool": lambda: E.tv_bool(p)}[k]()
+        return {"string": lambda: O.tv_string(p), "number": lambda: O.tv_number(p),
+                "float": lambda: O.tv_float(float(p)), "bool": lambda: O.tv_bool(p)}[k]()
 
     contexts = []
     for _ in range(6):
@@ -255,7 +255,7 @@ def test_property_spark_matches_oracle(spark):
         contexts.append((props, cur, gt))
 
     rows = [({k: to_tv(v) for k, v in props.items()}, cur, gt) for props, cur, gt in contexts]
-    df = spark.createDataFrame(rows, f"tags {E.TYPED_TAGS_DDL}, cur_key string, geom_type string")
+    df = spark.createDataFrame(rows, f"tags {O.TYPED_TAGS_DDL}, cur_key string, geom_type string")
     ctx = E.ColumnContext(tags=F.col("tags"), key=F.col("cur_key"),
                           geom_type=F.col("geom_type"), typed=True)
 

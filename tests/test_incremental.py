@@ -16,6 +16,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from mvt_wrangler_spark.operators.dedup import minhash_lsh_candidates, pair_clusters
 from mvt_wrangler_spark.plans.incremental import incremental_neardup_ingest
 from mvt_wrangler_spark.sources.catalog import SnapshotTable
 
@@ -45,6 +46,22 @@ def _batch(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def pair_clusters_with_corpus(corpus, pairs, id_col="id", id_a="id_a", id_b="id_b"):
+    """pair_clusters over the WHOLE corpus, the one-shot global dedup the
+    incremental result is checked against: rows with no near-dup pair come
+    back as size-1 clusters (their own rep), so `member_id == cluster_rep`
+    keeps exactly the unique rows plus one keeper per dup group. `id_col`
+    values must be the unique numeric row ids the pair generator used."""
+    clusters = pair_clusters(pairs, id_a=id_a, id_b=id_b)
+    ids = corpus.select(F.col(id_col).cast("long").alias("member_id"))
+    return (ids.join(clusters, "member_id", "left")
+            .select("member_id",
+                    F.coalesce("cluster_rep", F.col("member_id"))
+                    .alias("cluster_rep"),
+                    F.coalesce("cluster_size", F.lit(1)).cast("long")
+                    .alias("cluster_size")))
+
+
 @pytest.mark.spark
 def test_incremental_ingest_chain_bridge_replay(spark, tables):
     docs, bands = tables
@@ -64,8 +81,6 @@ def test_incremental_ingest_chain_bridge_replay(spark, tables):
 
     # after batch 2 the result equals a one-shot GLOBAL dedup of rows 1..6
     # (no bridges yet): keepers = cluster reps = {1, 2, 3, 4}
-    from mvt_wrangler_spark.operators.dedup import (
-        minhash_lsh_candidates, pair_clusters_with_corpus)
     allrows = _batch(spark, [(1, A), (2, D1), (3, D2), (4, U), (5, B), (6, A)])
     gpairs = minhash_lsh_candidates(allrows, num_hashes=16, bands=8, shingle=5)
     gkeep = {r.member_id for r in

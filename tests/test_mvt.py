@@ -3,6 +3,39 @@
 from __future__ import annotations
 
 from mvt_wrangler_spark.functions import mvt
+from mvt_wrangler_spark.functions.mvt import CMD_CLOSE, CMD_LINE, decode_geometry_rings
+
+
+def ring_area2(ring: list[tuple[int, int]]) -> int:
+    """Twice the signed surveyor's area of an unclosed ring. In MVT screen
+    coords (y down) the spec's exterior rings are POSITIVE, holes NEGATIVE
+    (spec 4.3.4.5) — use this to split a polygon ring list into parts."""
+    n = len(ring)
+    s = 0
+    for i in range(n):
+        x0, y0 = ring[i]
+        x1, y1 = ring[(i + 1) % n]
+        s += x0 * y1 - x1 * y0
+    return -s  # y-down flips the sign convention
+
+
+def decode_geometry(ints: list[int]) -> tuple[str, list[tuple[int, int]]]:
+    """Command stream -> (type guess, flattened absolute points)."""
+    saw_close = any((c & 7) == CMD_CLOSE for c in _command_headers(ints))
+    saw_line = any((c & 7) == CMD_LINE for c in _command_headers(ints))
+    rings = decode_geometry_rings(ints)
+    pts = [pt for r in rings for pt in r]
+    gtype = "Polygon" if saw_close else ("LineString" if saw_line else "Point")
+    return gtype, pts
+
+
+def _command_headers(ints: list[int]):
+    pos = 0
+    while pos < len(ints):
+        h = ints[pos]
+        yield h
+        cmd, count = h & 7, h >> 3
+        pos += 1 + (0 if cmd == CMD_CLOSE else 2 * count)
 
 
 def test_varint_zigzag_roundtrip():
@@ -50,12 +83,12 @@ def test_value_type_roundtrip():
 
 
 def test_geometry_streams_roundtrip():
-    t, pts = mvt.decode_geometry(mvt.point_geometry(-3, 4096))
+    t, pts = decode_geometry(mvt.point_geometry(-3, 4096))
     assert t == "Point" and pts == [(-3, 4096)]
     xs, ys = [0, 10, 10, 0], [0, 0, 12, 12]
-    t, pts = mvt.decode_geometry(mvt.linestring_geometry(xs, ys))
+    t, pts = decode_geometry(mvt.linestring_geometry(xs, ys))
     assert t == "LineString" and pts == list(zip(xs, ys))
-    t, pts = mvt.decode_geometry(mvt.polygon_geometry(xs, ys))
+    t, pts = decode_geometry(mvt.polygon_geometry(xs, ys))
     assert t == "Polygon" and pts == list(zip(xs, ys))
 
 
@@ -200,7 +233,7 @@ def test_multi_geometry_families_roundtrip():
     assert [len(r) for r in rings] == [4, 4]
     assert rings[0] == list(zip(*ext))
     assert rings[1] == list(zip(*hole))
-    a0, a1 = mvt.ring_area2(rings[0]), mvt.ring_area2(rings[1])
+    a0, a1 = ring_area2(rings[0]), ring_area2(rings[1])
     assert a0 * a1 < 0, "exterior and hole must have opposite winding"
 
     # multipolygon: two separate exteriors, same winding
@@ -209,7 +242,7 @@ def test_multi_geometry_families_roundtrip():
                             [[0, 0, 10, 10], [0, 0, 10, 10]])
     r2 = mvt.decode_geometry_rings(g2)
     assert len(r2) == 2
-    assert mvt.ring_area2(r2[0]) * mvt.ring_area2(r2[1]) > 0
+    assert ring_area2(r2[0]) * ring_area2(r2[1]) > 0
 
     # multilinestring and multipoint
     mls = mvt.multi_geometry("MultiLineString", [[0, 5], [9, 9, 12]],

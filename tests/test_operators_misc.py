@@ -1,5 +1,4 @@
-"""Zonal assignment, observed metrics, CLI, as-of and interval joins, spatial
-statistics and pyramid-rollup internals."""
+"""Zonal assignment, observed metrics, CLI and pyramid-rollup internals."""
 
 from __future__ import annotations
 
@@ -96,221 +95,6 @@ def test_cli_rejects_missing_input(tmp_path):
     from mvt_wrangler_spark.cli import main
 
     assert main(["/nonexistent/x.parquet", str(tmp_path / "o")]) == 2
-
-
-@pytest.mark.spark
-def test_asof_join_semantics(spark):
-    """Backward as-of: inclusive ties, LEFT semantics, deterministic dup
-    winner (max value struct), NULL-time rows never match."""
-    from pyspark.sql import functions as F
-
-    from mvt_wrangler_spark.operators.joins import asof_join
-
-    right = spark.createDataFrame(
-        [(1, 10, 100.0), (1, 20, 200.0), (1, 20, 250.0),  # dup (key, t)
-         (2, 50, 900.0)],
-        "k long, t long, v double")
-    left = spark.createDataFrame(
-        [(1, 1, 5), (2, 1, 10), (3, 1, 20), (4, 1, 25),
-         (5, 2, 49), (6, 2, 50), (7, 3, 99), (8, 1, None)],
-        "id long, k long, t long")
-    out = {r.id: r.v_r for r in
-           asof_join(left, right, on="k", left_time="t", right_time="t",
-                     value_cols=["v"]).collect()}
-    assert out[1] is None          # before any right row
-    assert out[2] == 100.0         # inclusive >= at t=10
-    assert out[3] == 250.0         # dup (1,20): max struct wins
-    assert out[4] == 250.0
-    assert out[5] is None
-    assert out[6] == 900.0         # inclusive tie
-    assert out[7] is None          # key with no right rows at all
-    assert out[8] is None          # NULL left time matches nothing
-
-    # multiple value columns ride one struct; row count preserved (LEFT)
-    r2 = right.withColumn("w", F.col("v") * 2)
-    got = asof_join(left, r2, on="k", left_time="t", right_time="t",
-                    value_cols=["v", "w"])
-    assert got.count() == left.count()
-    row = {r.id: (r.v_r, r.w_r) for r in got.collect()}[3]
-    assert row == (250.0, 500.0)
-
-    # plan shape: ONE key-partitioned window, no SinglePartition funnel,
-    # no join node at all
-    plan = got._jdf.queryExecution().executedPlan().toString().lower()
-    assert "singlepartition" not in plan
-    assert "sortmergejoin" not in plan and "broadcasthashjoin" not in plan
-
-
-@pytest.mark.spark
-def test_interval_join_matches_bruteforce(spark):
-    """Bucketed interval join == brute-force range predicate, including
-    boundary-equal points, negative values, and bucket-edge values."""
-    import random
-
-    from mvt_wrangler_spark.operators.joins import interval_join
-
-    rng = random.Random(11)
-    pts = [(i, rng.randint(-500, 500)) for i in range(400)]
-    pts += [(1000, -100), (1001, 0), (1002, 100)]  # exact bucket edges
-    ivs = []
-    for j in range(120):
-        s = rng.randint(-500, 450)
-        ivs.append((j, s, s + rng.randint(0, 80)))
-    ivs += [(900, -100, -100), (901, 0, 0), (902, 99, 100)]  # degenerate + edge
-    p = spark.createDataFrame(pts, "pid long, t long")
-    iv = spark.createDataFrame(ivs, "iid long, lo long, hi long")
-    got = {(r.pid, r.iid) for r in interval_join(
-        p, iv, point_col="t", start_col="lo", end_col="hi",
-        bucket_width=50).collect()}
-    want = {(pid, iid) for pid, t in pts for iid, lo, hi in ivs if lo <= t <= hi}
-    assert got == want and len(want) > 500
-
-
-@pytest.mark.spark
-def test_interval_join_overflow_modes(spark):
-    from mvt_wrangler_spark.operators.joins import interval_join
-
-    p = spark.createDataFrame([(i, i * 10) for i in range(50)], "pid long, t long")
-    iv = spark.createDataFrame(
-        [(0, 40, 60), (1, -10_000, 10_000)], "iid long, lo long, hi long")
-    # error mode: the wide interval (2001 buckets at width 10) trips the cap
-    bad = interval_join(p, iv, point_col="t", start_col="lo", end_col="hi",
-                        bucket_width=10, max_buckets_per_interval=100)
-    with pytest.raises(Exception, match="max_buckets_per_interval"):
-        bad.collect()
-    # broadcast mode: wide interval routed through the broadcast arm, exact
-    got = {(r.pid, r.iid) for r in interval_join(
-        p, iv, point_col="t", start_col="lo", end_col="hi", bucket_width=10,
-        max_buckets_per_interval=100, overflow="broadcast").collect()}
-    want = {(pid, iid) for pid in range(50) for iid, lo, hi in
-            [(0, 40, 60), (1, -10_000, 10_000)] if lo <= pid * 10 <= hi}
-    assert got == want
-    # every point matches the global interval
-    assert sum(1 for _, iid in got if iid == 1) == 50
-
-
-def test_interval_join_rejects_bad_args(spark):
-    from mvt_wrangler_spark.operators.joins import interval_join
-
-    p = spark.createDataFrame([(1, 2)], "a long, t long")
-    iv = spark.createDataFrame([(1, 2, 3)], "a long, lo long, hi long")
-    with pytest.raises(ValueError, match="overlapping"):
-        interval_join(p, iv, point_col="t", start_col="lo", end_col="hi",
-                      bucket_width=10)
-    iv2 = spark.createDataFrame([(1, 2, 3)], "iid long, lo long, hi long")
-    with pytest.raises(ValueError, match="bucket_width"):
-        interval_join(p, iv2, point_col="t", start_col="lo", end_col="hi",
-                      bucket_width=0)
-
-
-@pytest.mark.spark
-def test_interval_join_null_endpoints_dropped(spark):
-    """NULL-endpoint intervals never match and must NOT trip the cap guard
-    (assert_true raises on NULL comparisons if they reach it)."""
-    from mvt_wrangler_spark.operators.joins import interval_join
-
-    p = spark.createDataFrame([(1, 50), (2, None)], "pid long, t long")
-    iv = spark.createDataFrame(
-        [(0, 40, 60), (1, None, 60), (2, 40, None), (3, None, None)],
-        "iid long, lo long, hi long")
-    got = {(r.pid, r.iid) for r in interval_join(
-        p, iv, point_col="t", start_col="lo", end_col="hi",
-        bucket_width=10, max_buckets_per_interval=5).collect()}
-    assert got == {(1, 0)}
-
-
-def test_morans_i_matches_bruteforce(spark):
-    """Operator output equals the textbook double-loop formula, and the
-    sign behaves: clustered grid -> positive, checkerboard -> negative."""
-    from mvt_wrangler_spark.operators.rollup import morans_i
-
-    def brute(cells):
-        n = len(cells)
-        m = sum(c for _, _, c in cells) / n
-        num = den = s0 = 0
-        for (x1, y1, c1) in cells:
-            den += (c1 - m) ** 2
-            for (x2, y2, c2) in cells:
-                if (x1, y1) != (x2, y2) and abs(x1 - x2) <= 1 and abs(y1 - y2) <= 1:
-                    num += (c1 - m) * (c2 - m)
-                    s0 += 1
-        return n, s0, (n / s0) * num / den
-
-    def run(cells):
-        df = spark.createDataFrame(cells, "x int, y int, cnt long")
-        r = morans_i(df).collect()[0]
-        return r["n_tiles"], r["s0"], r["morans_i"]
-
-    # clustered: a hot 2x2 block inside a cold 4x4 grid
-    clustered = [(x, y, 100 if x < 2 and y < 2 else 1)
-                 for x in range(4) for y in range(4)]
-    n, s0, i_ref = brute(clustered)
-    ng, s0g, ig = run(clustered)
-    assert (ng, s0g) == (n, s0)
-    assert abs(ig - i_ref) < 1e-6 and ig > 0
-
-    # checkerboard: alternating high/low -> negative autocorrelation
-    checker = [(x, y, 10 if (x + y) % 2 == 0 else 1)
-               for x in range(4) for y in range(4)]
-    n, s0, i_ref = brute(checker)
-    ng, s0g, ig = run(checker)
-    assert (ng, s0g) == (n, s0)
-    assert abs(ig - i_ref) < 1e-6 and ig < 0
-
-    # constant field: denominator 0 -> null, not a crash
-    flat = [(x, y, 5) for x in range(3) for y in range(3)]
-    assert run(flat)[2] is None
-
-
-def test_getis_ord_gi_matches_bruteforce(spark):
-    """Gi* per tile equals the textbook formula; the hot block scores the
-    highest z and cold corners score negative."""
-    import math
-
-    from mvt_wrangler_spark.operators.rollup import getis_ord_gi
-
-    cells = [(x, y, 100 if x < 2 and y < 2 else 1)
-             for x in range(5) for y in range(5)]
-    df = spark.createDataFrame(cells, "x int, y int, cnt long")
-    got = {(r["x"], r["y"]): r for r in getis_ord_gi(df).collect()}
-
-    n = len(cells)
-    t = sum(c for _, _, c in cells)
-    q = sum(c * c for _, _, c in cells)
-    m = t / n
-    s = math.sqrt(q / n - m * m)
-    by_xy = {(x, y): c for x, y, c in cells}
-    for (x, y, c) in cells:
-        hood = [by_xy[(x + dx, y + dy)] for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-                if (x + dx, y + dy) in by_xy]
-        w = len(hood)
-        den = s * math.sqrt((n * w - w * w) / (n - 1))
-        ref = (sum(hood) - m * w) / den
-        r = got[(x, y)]
-        assert r["w_i"] == w
-        assert abs(r["gi_star"] - ref) < 1e-6, (x, y)
-    assert got[(0, 0)]["gi_star"] == max(r["gi_star"] for r in got.values())
-    assert got[(4, 4)]["gi_star"] < 0
-
-
-def test_tile_smooth_separable_equals_dense_kernel(spark):
-    """The two-pass separable convolution equals the dense 5x5 binomial
-    kernel applied by brute force over an implicit zero grid."""
-    from collections import defaultdict
-
-    from mvt_wrangler_spark.operators.rollup import _BINOM5, tile_smooth
-
-    rows = [(10, 10, 7), (11, 10, 3), (13, 12, 1), (0, 0, 5)]
-    expected = defaultdict(int)
-    for x, y, c in rows:
-        for dx, wx in zip((-2, -1, 0, 1, 2), _BINOM5):
-            for dy, wy in zip((-2, -1, 0, 1, 2), _BINOM5):
-                expected[(x + dx, y + dy)] += c * wx * wy
-    df = spark.createDataFrame(rows, "x long, y long, cnt long")
-    got = {(r.x, r.y): r.smooth for r in tile_smooth(df).collect()}
-    assert got == dict(expected)
-    # kernel mass conservation: total smooth = 256 * total count
-    assert sum(got.values()) == 256 * sum(c for _, _, c in rows)
 
 
 @pytest.mark.spark

@@ -17,8 +17,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
 
 from plan_audit import (  # noqa: E402
     AUDIT,
-    CARTESIAN_OK,
-    SCAN_COLS_OK,
     SINGLE_PARTITION_OK,
     formatted_plan,
     plan_red_flags,
@@ -87,9 +85,7 @@ def test_every_query_has_an_oracle():
     assert names == e.oracle_sql().keys()
     listed = {
         "AUDIT": {n for n, _ in AUDIT},
-        "CARTESIAN_OK": CARTESIAN_OK,
         "SINGLE_PARTITION_OK": SINGLE_PARTITION_OK,
-        "SCAN_COLS_OK": SCAN_COLS_OK.keys(),
         "PYTHON_PASS_BUDGET": {n for n, _ in PYTHON_PASS_BUDGET},
         "PIN_PASS_QUERIES": PIN_PASS_QUERIES,
         "PIN_AUDIT_QUERIES": PIN_AUDIT_QUERIES,

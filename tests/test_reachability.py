@@ -1,7 +1,11 @@
 """Reachability guard: every module of the package must be imported, directly
 or transitively, from an entry point — the CLI, a `plans/` module, a
-perfbench workload, or the contract file `__spark_entry__.py`. A module that
-only tests import is dead library code; this fails until it is deleted."""
+perfbench workload, the contract file `__spark_entry__.py`, or the contract
+scripts `scripts/check_contract.py` and `scripts/plan_audit.py` — and every
+module-level function and class must be used on a call chain from one. A
+module or definition that only tests use is dead library code (or a test
+oracle that belongs under `tests/`); this fails until it is moved or
+deleted."""
 
 from __future__ import annotations
 
@@ -65,14 +69,75 @@ def unreachable(base: Path, pkg: str, roots: list[Path]) -> set[str]:
     return modules - seen
 
 
+def _names_used(nodes, aliases: dict[str, str]) -> set[str]:
+    """Names that the code under `nodes` reads, as bare names or attributes.
+    String constants are not references; an `import f as g` alias maps a
+    use of g back to f."""
+    used = set()
+    for root in nodes:
+        for node in ast.walk(root):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+    return used | {aliases[n] for n in used if n in aliases}
+
+
+def _aliases(tree: ast.Module) -> dict[str, str]:
+    return {a.asname: a.name.rsplit(".", 1)[-1] for node in ast.walk(tree)
+            if isinstance(node, (ast.Import, ast.ImportFrom))
+            for a in node.names if a.asname}
+
+
+def unreached_definitions(base: Path, pkg: str, roots: list[Path]) -> set[str]:
+    """Module-level functions and classes of package `pkg` that no name-level
+    call chain from the `roots` files uses. The roots are read whole; so is
+    every statement a package module runs on import (its module-level code,
+    decorators, default values and base classes), since that code runs
+    whatever an entry point calls. Matching is by name, not by module, so a
+    name used anywhere reached keeps every definition of that name."""
+    defs: dict[str, list[tuple[str, ast.AST, dict[str, str]]]] = {}
+    used: set[str] = set()
+    for path in set((base / pkg).rglob("*.py")) - set(roots):
+        tree = ast.parse(path.read_text())
+        aliases = _aliases(tree)
+        mod = _module_name(path, base)
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(node.name, []).append((f"{mod}.{node.name}", node, aliases))
+                on_import = list(node.decorator_list)
+                if isinstance(node, ast.ClassDef):
+                    on_import += node.bases + node.keywords
+                else:
+                    on_import += node.args.defaults + [
+                        d for d in node.args.kw_defaults if d is not None]
+                used |= _names_used(on_import, aliases)
+            else:
+                used |= _names_used([node], aliases)
+    for r in roots:
+        tree = ast.parse(r.read_text())
+        used |= _names_used([tree], _aliases(tree))
+    todo = list(used)
+    while todo:
+        for _, node, aliases in defs.pop(todo.pop(), []):
+            todo.extend(_names_used([node], aliases))
+    return {qual for entries in defs.values() for qual, _, _ in entries}
+
+
 def _entry_points() -> list[Path]:
-    return ([REPO / PKG / "cli.py", REPO / "__spark_entry__.py"]
+    return ([REPO / PKG / "cli.py", REPO / "__spark_entry__.py",
+             REPO / "scripts" / "check_contract.py",
+             REPO / "scripts" / "plan_audit.py"]
             + sorted((REPO / PKG / "plans").glob("*.py"))
             + sorted((REPO / "perfbench").glob("*.py")))
 
 
 def test_every_module_reachable_from_an_entry_point():
     assert unreachable(REPO, PKG, _entry_points()) == set()
+
+
+def test_every_definition_reachable_from_an_entry_point():
+    assert unreached_definitions(REPO, PKG, _entry_points()) == set()
 
 
 def test_orphan_module_is_flagged(tmp_path):
@@ -88,3 +153,24 @@ def test_orphan_module_is_flagged(tmp_path):
     (pkg / "cli.py").write_text(
         "def main():\n    from .sub import used\n    return used\n")
     assert unreachable(tmp_path, "pkg", [pkg / "cli.py"]) == {"pkg.sub.orphan"}
+
+
+def test_orphan_definition_is_flagged(tmp_path):
+    """Negative control: a function no entry point uses must be reported,
+    even when an entry point names it in a string, while a function that
+    only module-level code calls, an aliased import and a chain through a
+    class body count as reached."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "lib.py").write_text(
+        "def _table():\n    return [1]\n\n"
+        "TABLE = _table()\n\n"
+        "def helper():\n    return 1\n\n"
+        "class Runner:\n    def run(self):\n        return helper()\n\n"
+        "def renamed():\n    return 2\n\n"
+        "def orphan():\n    return 3\n")
+    (pkg / "cli.py").write_text(
+        "from .lib import Runner, renamed as r\n\n"
+        "def main():\n    print('orphan')\n    return Runner().run() + r()\n")
+    assert unreached_definitions(tmp_path, "pkg", [pkg / "cli.py"]) == {"pkg.lib.orphan"}

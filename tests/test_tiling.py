@@ -100,24 +100,6 @@ def test_hilbert_sql_matches_spark(spark):
 
 
 @pytest.mark.spark
-def test_assign_tiles_multi_matches_per_zoom(spark):
-    """One-pass multi-zoom == independent per-zoom assignment, every zoom."""
-    from mvt_wrangler_spark.sources import images as I
-
-    df = I.synthetic_images(spark, 300, with_pixels=False, partitions=2)
-    multi = {(r.image_id, r.z): (r.x, r.y, r.tile_id)
-             for r in tiling.assign_tiles_multi(df, z_min=0, z_max=9)
-             .select("image_id", "z", "x", "y", "tile_id").collect()}
-    assert len(multi) == 300 * 10
-    for z in range(0, 10):
-        per = {(r.image_id, z): (r.x, r.y, r.tile_id)
-               for r in tiling.assign_tiles(df, z=z, with_local=False)
-               .select("image_id", "x", "y", "tile_id").collect()}
-        for k, v in per.items():
-            assert multi[k] == v, (k, v, multi[k])
-
-
-@pytest.mark.spark
 def test_assign_tiles_zoom_bounds(spark):
     """The deepest supported zoom assigns exact tiles; a zoom outside
     [0, MAX_ZOOM] raises ValueError while the frame is built (z=24 used to
@@ -141,8 +123,6 @@ def test_assign_tiles_zoom_bounds(spark):
         tiling.with_hilbert_d(xy, 24)
     with pytest.raises(ValueError, match="zoom"):
         tiling.with_pmtiles_tile_id(xy, 24)
-    with pytest.raises(ValueError, match="z_max"):
-        tiling.assign_tiles_multi(df, z_min=0, z_max=24)
     for helper in (tiling.frac_tile_x, tiling.frac_tile_y, tiling.tile_x,
                    tiling.tile_y, tiling.tile_lon, tiling.tile_lat):
         for bad in (-1, 24):
@@ -151,7 +131,8 @@ def test_assign_tiles_zoom_bounds(spark):
 
 
 def test_hilbert_hierarchy_property():
-    """Parent position = d >> 2 (the property assign_tiles_multi relies on)."""
+    """Parent position = d >> 2: the Hilbert curve is hierarchical, so a
+    tile's ancestors on the curve follow from its position by shifts."""
     import random
 
     def xy2d(z, x, y):
